@@ -19,3 +19,9 @@ This package re-expresses those capabilities Spark-first:
 """
 
 __version__ = "0.1.0"
+
+# Every Python worker that runs engine code imports this package first, so
+# this is where the workers' zip imports switch to lazy invalidation.
+from hadoop_bam_spark import _zipimport_compat
+
+_zipimport_compat.install()

@@ -11,6 +11,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory holding the ``hadoop_bam_spark`` package
+IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Half the machine's physical memory in whole GiB, from 1g to 32g
+    (Spark's own 1g when the size is unknown)."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):
+            return "1g"
+    return f"{min(32, max(1, phys_bytes // 2**31))}g"
+
+
+def export_import_root() -> None:
+    """Append :data:`IMPORT_ROOT` to ``PYTHONPATH``. The JVM inherits this
+    environment and passes it to every Python worker, so planner and task
+    workers import the engine from wherever the driver found it."""
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if IMPORT_ROOT not in map(os.path.abspath, paths):
+        os.environ["PYTHONPATH"] = os.pathsep.join([*paths, IMPORT_ROOT])
+
 
 def get_spark(
     app_name: str = "hadoop_bam_spark",
@@ -22,6 +45,7 @@ def get_spark(
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    export_import_root()
 
     builder = (
         SparkSession.builder.master(master)
@@ -32,7 +56,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Python DataSource V2 filter pushdown (bam/vcf sources implement it)
