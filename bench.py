@@ -313,7 +313,7 @@ def _load_prev_bench() -> tuple[str, dict] | None:
 _CAL_SPREAD_BOUND = 1.5
 
 
-def _vs_prev(total: float, cpu: dict[str, float], sf,
+def _vs_prev(timings: dict[str, float], cpu: dict[str, float], sf,
              sentinel_block: dict | None = None) -> dict | None:
     prev = _load_prev_bench()
     if prev is None:
@@ -331,6 +331,12 @@ def _vs_prev(total: float, cpu: dict[str, float], sf,
     }
     cur_tot = sum(cpu[n] for n in common)
     prev_tot = sum(prev_cpu[n] for n in common)
+    # wall totals over the same shared queries: a headline set that grew
+    # or shrank between runs must not read as a speed-up or slow-down
+    prev_wall = data.get("queries") or {}
+    wall_common = [n for n in common if n in prev_wall]
+    cur_wall = sum(timings[n] for n in wall_common)
+    prev_wall_tot = sum(prev_wall[n] for n in wall_common)
     worst = sorted(ratios.items(), key=lambda kv: -kv[1])[:3]
     # Host CPU-accounting drift calibration: the sentinel is a FIXED query,
     # so its CPU-seconds moving between rounds measures the box (hypervisor
@@ -395,7 +401,7 @@ def _vs_prev(total: float, cpu: dict[str, float], sf,
             else None
         ),
         "wall_total_ratio": (
-            round(total / data["value"], 3) if data.get("value") else None
+            round(cur_wall / prev_wall_tot, 3) if prev_wall_tot else None
         ),
         "per_query_cpu_ratio": ratios,
         "worst_cpu_regressions": [
@@ -552,7 +558,7 @@ def main() -> None:
         "noise_sentinel": sentinel_block,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "vs_prev": _vs_prev(
-            total,
+            timings,
             cpu,
             float(sf) if sf.replace(".", "").isdigit() else sf,
             sentinel_block=sentinel_block,

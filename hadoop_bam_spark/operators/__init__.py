@@ -1,3 +1,3 @@
-"""Operator library: interval joins, as-of joins, coordinate sort, dedup,
-cluster resolution, similarity search, skew tools, sampling, text analysis,
-multimodal plumbing."""
+"""Operator library: interval joins and the interval family (merge,
+coverage, closest, shuffle...), genome prefix sweeps, as-of joins,
+consensus sequence, skew tools."""

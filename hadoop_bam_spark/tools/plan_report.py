@@ -36,7 +36,7 @@ def plan_report(sf_dir: str, names: list[str] | None = None) -> str:
         "`explain(\"formatted\")` dumps follow for the bench-flagged "
         "headline set (the repo-wide pytest plan audit enforces the hard "
         "rules — no CartesianProduct, no un-allowlisted nested-loop "
-        "joins, no executor-side Python outside the multimodal allowlist "
+        "joins, no executor-side Python "
         "— across all of them).",
         "",
         "## Summary — all registered queries",

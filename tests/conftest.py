@@ -21,7 +21,7 @@ def spark():
     # test_interval_ops alone, ~3 min across the suite. Assertions are
     # unchanged (no test asserts codegen spans); the PRODUCTION session
     # config (codegen on) keeps its own gates: tools.check_oracle runs
-    # all 152 queries against DuckDB and bench.py times them, both on
+    # every registered query against DuckDB and bench.py times them, both on
     # get_spark() defaults.
     spark = get_spark(
         "pytest",

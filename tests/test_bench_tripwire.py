@@ -137,3 +137,24 @@ class TestRegressionFlag:
         }
         got = b._regression_flag(vs, {"q": 5.0})
         assert got["regression"] is False and got["query_hits"] == []
+
+
+class TestVsPrev:
+    def test_wall_ratio_over_shared_queries_only(self, monkeypatch):
+        # the previous run timed one extra query this run no longer has;
+        # dividing this run's total by the previous headline total would
+        # report a fake 2x speed-up on identical per-query times
+        b = _bench()
+        prev = {
+            "sf": 0.1,
+            "value": 6.0,
+            "queries": {"a": 1.0, "b": 2.0, "gone": 3.0},
+            "cpu_sec": {"a": 2.0, "b": 4.0, "gone": 6.0},
+        }
+        monkeypatch.setattr(
+            b, "_load_prev_bench", lambda: ("BENCH_FULL_r01.json", prev)
+        )
+        got = b._vs_prev({"a": 1.0, "b": 2.0}, {"a": 2.0, "b": 4.0}, 0.1)
+        assert got["common_queries"] == 2
+        assert got["cpu_total_ratio"] == 1.0
+        assert got["wall_total_ratio"] == 1.0

@@ -1,8 +1,8 @@
 """Repo-wide physical-plan audit: no registered query may plan an
 un-broadcast CartesianProduct. BroadcastNestedLoopJoin is allowed only for
-queries that deliberately broadcast a tiny side (interval regions, query
-vectors, the single-row centroid array); everything else must be an
-equi-join / aggregate shape that scales out.
+queries that deliberately broadcast a tiny side (interval regions, a
+single-row aggregate); everything else must be an equi-join / aggregate
+shape that scales out.
 
 This is the guardrail form of the per-operator ``.explain`` reviews: a new
 query that accidentally goes quadratic fails CI instead of surfacing as a
@@ -17,33 +17,14 @@ from tests.conftest import SF_SMOKE
 #: (a small broadcast side × range/array predicate — the documented design).
 BNLJ_ALLOWED = {
     "interval_join_broadcast",  # broadcast regions x range predicate
-    "knn_bruteforce",           # broadcast query vectors
-    "knn_lsh_bucketed",         # broadcast query vectors
-    "knn_ivf",                  # single-row broadcast centroid array
-    "knn_ivf_kmeans",           # same, with kmeans-fitted centroids
-    "embedding_cosine_neardup", # broadcast blocked self-join
-    "tfidf_top_terms",          # single-row broadcast corpus-size aggregate
-    "semantic_dedup",           # single-row broadcast centroid array (knn_ivf pattern)
-    "corpus_mixing_weights",    # single-row broadcast corpus-total aggregate
-    "ann_recall_ivf",           # composes knn_bruteforce + knn_ivf (both above)
     "interval_jaccard_reads_regions",  # 1x1-row broadcast scalar-aggregate combine
     "interval_reldist_reads",  # single-row broadcast histogram-total combine
 }
 
 
-#: Queries whose plan intentionally evaluates Python on executors —
-#: the multimodal family's Arrow-batched binary plumbing (mapInPandas /
-#: pandas UDFs over opaque media bytes is the documented design; image
-#: libs aren't expressible as Catalyst expressions). Everything else
-#: must stay JVM-side: a row-at-a-time F.udf sneaking into a hot query
-#: is a 10-100x scale defect that should fail CI here.
-PYTHON_EVAL_ALLOWED = {
-    "multimodal_meta",
-    "multimodal_decode",
-    "multimodal_frame_sample",
-    "multimodal_resize_plan",
-}
-
+#: Python evaluation on executors: every registered query must stay
+#: JVM-side, because a row-at-a-time F.udf sneaking into a hot query is a
+#: 10-100x scale defect that should fail CI here.
 _PY_NODES = (
     "ArrowEvalPython",
     "BatchEvalPython",
@@ -91,39 +72,8 @@ def test_no_cartesian_product(spark, name):
             f"{name} plans a BroadcastNestedLoopJoin but is not in the "
             "allowlist — broadcast it deliberately or use an equi-join"
         )
-    if name not in PYTHON_EVAL_ALLOWED:
-        found = [t for t in _PY_NODES if t in plan]
-        assert not found, (
-            f"{name} evaluates Python on executors ({found}) but is not "
-            "in the allowlist — express it with built-in functions, or "
-            "allowlist it with a written justification"
-        )
-
-
-def test_cross_source_overlap_single_corpus_pass(spark):
-    """cross_source_ngram_overlap's single-pass claim, enforced by CI
-    (r18, VERDICT r17 next #6): exactly ONE documents.parquet scan in the
-    FINAL adaptive plan — the corpus is read and gram-aggregated once.
-    The r17 shape needed AQE ReusedExchange to collapse three consumer
-    subtrees (shared/ta/tb rebuilt from the collect_list barrier and
-    re-joined); since r18 the shared matrix and totals are pure array
-    expressions over the single collected row, so the plan has ONE
-    consumer by construction — no duplicate subtree to reuse, and no
-    broadcast joins after the barrier either."""
-    import re
-
-    df = _registry()["cross_source_ngram_overlap"].fn(spark, SF_SMOKE)
-    df.collect()
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    # the tree before "== Initial Plan ==" is the FINAL executed plan;
-    # the only parquet input of this query is documents.parquet
-    final = plan.split("== Initial Plan ==")[0]
-    n_scans = len(re.findall(r"Scan parquet", final))
-    assert n_scans == 1, (
-        f"{n_scans} parquet scans survive in the executed plan:\n" + final
-    )
-    assert "BroadcastHashJoin" not in final, (
-        "the totals lookup regressed to join form:\n" + final
+    found = [t for t in _PY_NODES if t in plan]
+    assert not found, (
+        f"{name} evaluates Python on executors ({found}) — express it "
+        "with built-in functions"
     )
