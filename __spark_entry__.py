@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship query on sf0.001; ``queries()`` exposes
-every implemented operator from SURVEY.md §2; ``oracle_sql()`` gives the
-DuckDB-equivalent SQL for each.
+every implemented operator from SURVEY.md §2 (plus the training-data pipeline
+layer); ``oracle_sql()`` gives the DuckDB-equivalent SQL for each.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator (SURVEY.md §2)."""
+    """One entry per implemented operator (SURVEY.md §2 + pipeline layer)."""
     from hadoop_bam_spark.queries import REGISTRY
 
     return {name: spec.fn for name, spec in REGISTRY.items()}

@@ -11,10 +11,10 @@ This package re-expresses those capabilities Spark-first:
 - ``formats/``   pure-Python codecs (BGZF, BAM, SAM, VCF, FASTQ, QSEQ, FASTA)
 - ``sources/``   PySpark DataSource V2 readers with split planning + pushdown
 - ``sinks/``     sharded part writers + driver-side byte-level mergers
-- ``operators/`` genomics operators (interval join family, coordinate
-                 sweeps, as-of join, consensus, skew tools)
+- ``operators/`` relational + genomics operators (interval join, coordinate
+                 sort, dedup family, text analysis)
 - ``functions/`` scalar column expressions (quality re-encode, Illumina ids...)
-- ``streaming/`` Structured Streaming tail sources and shard sinks
+- ``streaming/`` Structured Streaming sources (FASTQ directory tailing)
 - ``queries/``   the query corpus wired into ``__spark_entry__.py``
 """
 

@@ -1,3 +1,2 @@
-"""Operator library: interval joins and the interval family (merge,
-coverage, closest, shuffle...), genome prefix sweeps, as-of joins,
-consensus sequence, skew tools."""
+"""Operator library: interval joins, as-of joins, coordinate sort, dedup,
+cluster resolution, skew tools, text analysis."""

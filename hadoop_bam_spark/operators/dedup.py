@@ -1,6 +1,6 @@
 """Deduplication operators for large text corpora.
 
-Five strategies, all shuffle-conscious:
+Four strategies, all shuffle-conscious:
 
 - exact:          hash-groupBy on a content fingerprint (one shuffle).
 - minhash LSH:    shingle → k minhashes → band buckets → equi-join on
@@ -9,7 +9,6 @@ Five strategies, all shuffle-conscious:
 - simhash:        64-bit sign-of-weighted-bits fingerprint; near-dups have
                   small Hamming distance.
 - n-gram jaccard: exact similarity on candidate pairs (post-LSH verifier).
-- embedding cosine: near-dup via vector similarity (see similarity.py).
 
 All hashing is md5-based (first 15 hex digits → 60-bit int) so results are
 deterministic and reproducible across engines — important both for the

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -2086,16 +2086,6 @@ def interval_getfasta(
     return hits.groupBy(*intervals.columns).agg(stitched.alias(out_col))
 
 
-def hash60(c: Column) -> Column:
-    """Deterministic 60-bit integer hash of a string (md5-derived).
-
-    Portable: DuckDB equivalent is ``('0x' || substr(md5(s),1,15))::BIGINT``.
-    For a pure-speed pipeline swap in F.xxhash64 — same uniformity, no
-    cross-engine portability.
-    """
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
 def interval_shuffle(
     df: DataFrame,
     sizes: DataFrame,
@@ -2133,6 +2123,8 @@ def interval_shuffle(
     (bounded by #contigs — the .fai is a dimension table) so there is no
     join at all. All non-key columns ride along.
     """
+    from hadoop_bam_spark.operators.dedup import hash60
+
     c, s, e = keys
     ident = (
         F.col(id_col).cast("string")

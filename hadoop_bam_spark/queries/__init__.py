@@ -9,6 +9,7 @@ from hadoop_bam_spark.queries.registry import REGISTRY, QuerySpec, query
 # Import for registration side effects.
 from hadoop_bam_spark.queries import relational  # noqa: E402,F401
 from hadoop_bam_spark.queries import genomics  # noqa: E402,F401
+from hadoop_bam_spark.queries import pipeline  # noqa: E402,F401
 from hadoop_bam_spark.queries import formats_gate  # noqa: E402,F401
 
 __all__ = ["REGISTRY", "QuerySpec", "query"]

@@ -2257,7 +2257,8 @@ def coverage_outlier_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     "expressions, no UDF), count, global top-25 by TakeOrderedAndProject "
     "(no full sort). Scale shape: the k-mer space is bounded (4^6), so "
     "the count aggregation is map-side-combinable into at most 4096 "
-    "groups per partition regardless of corpus size.",
+    "groups per partition regardless of corpus size — the "
+    "token_heavy_hitters shape with a hard cardinality cap.",
 )
 def kmer_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads = reads_view(spark, sf_dir)

@@ -1,6 +1,6 @@
-"""Training-data pipeline queries: dedup family, similarity search, text
-analysis, multimodal plumbing — over the ``documents`` and ``embeddings``
-tables, each with a DuckDB oracle replicating the exact arithmetic.
+"""Training-data pipeline queries: dedup family, cluster resolution and text
+analysis over the ``documents`` table, each with a DuckDB oracle
+replicating the exact arithmetic.
 
 Dedup queries seed deterministic duplicates (a UNION ALL of shifted copies)
 so the operators have non-trivial positives to find at every scale factor.
@@ -13,12 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_bam_spark.operators import (
-    curation,
-    dedup,
-    similarity,
-    text as text_ops,
-)
+from hadoop_bam_spark.operators import dedup, text as text_ops
 from hadoop_bam_spark.queries.registry import query
 
 
@@ -250,151 +245,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Embedding similarity
-# ---------------------------------------------------------------------------
-
-_COSINE_SQL = """
-    round(
-      list_sum(list_transform(range(1, len({a}) + 1),
-                              i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))
-      / (sqrt(list_sum(list_transform(range(1, len({a}) + 1),
-                                      i -> {a}[i]::DOUBLE * {a}[i]::DOUBLE)))
-         * sqrt(list_sum(list_transform(range(1, len({b}) + 1),
-                                        i -> {b}[i]::DOUBLE * {b}[i]::DOUBLE)))), 6)
-"""
-
-
-_EMB_CORPUS_CTE = """
-emb_corpus AS (
-    SELECT vec_id, embedding, label FROM embeddings
-    UNION ALL
-    SELECT vec_id + 100000 AS vec_id,
-           list_transform(embedding, x -> (x::DOUBLE * 1.01)::FLOAT) AS embedding,
-           label
-    FROM embeddings WHERE vec_id % 100 = 0
-)
-"""
-
-
-def emb_corpus_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings with seeded near-dups (scaled copies: cosine == 1)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    copies = emb.filter(F.col("vec_id") % 100 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            F.col("embedding"), lambda x: (x.cast("double") * 1.01).cast("float")
-        ).alias("embedding"),
-        "label",
-    )
-    return emb.unionByName(copies)
-
-
-#: Sign-bit LSH dims for the near-dup blocking bucket: 8 bits -> 256 buckets.
-_NEARDUP_DIMS = (0, 4, 8, 12, 16, 20, 24, 28)
-
-_BUCKET_SQL = " + ".join(
-    f"(CASE WHEN embedding[{d + 1}]::DOUBLE > 0.0 THEN {1 << j} ELSE 0 END)"
-    for j, d in enumerate(_NEARDUP_DIMS)
-)
-
-
-@query(
-    "embedding_cosine_neardup",
-    oracle=f"""
-        WITH {_EMB_CORPUS_CTE},
-        bucketed AS (
-            SELECT vec_id, embedding, {_BUCKET_SQL} AS bucket FROM emb_corpus
-        )
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               {_COSINE_SQL.format(a='a.embedding', b='b.embedding')} AS cosine
-        FROM bucketed a JOIN bucketed b
-          ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        WHERE {_COSINE_SQL.format(a='a.embedding', b='b.embedding')} > 0.95
-    """,
-    doc="Embedding near-dup pairs blocked by a sign-bit LSH bucket (256 "
-    "random-hyperplane-style buckets): scaled near-duplicates preserve "
-    "sign patterns so they always collide, and the bucket cardinality "
-    "grows with the hash width, not the data — the standalone-scale-safe "
-    "form of cosine near-dup (equi-join on bucket, pairwise cosine only "
-    "within buckets).",
-)
-def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = emb_corpus_view(spark, sf_dir).withColumn(
-        "_bucket", similarity.signbit_bucket(F.col("embedding"), _NEARDUP_DIMS)
-    )
-    return similarity.cosine_neardup_pairs(
-        emb, threshold=0.95, block_col="_bucket"
-    )
-
-
-@query(
-    "knn_bruteforce",
-    oracle=f"""
-        WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
-                   FROM embeddings WHERE vec_id < 5),
-        scored AS (
-            SELECT q.query_id, e.vec_id AS neighbor_id,
-                   {_COSINE_SQL.format(a='q.qvec', b='e.embedding')} AS cosine
-            FROM q CROSS JOIN embeddings e
-        ),
-        ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 10
-    """,
-    doc="Exact ANN baseline: brute-force cosine top-10 for a broadcast query "
-    "set; one corpus scan, per-query ranked window.",
-    bench=True,
-)
-def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.knn_bruteforce(emb, queries, k=10)
-
-
-@query(
-    "knn_lsh_bucketed",
-    oracle=f"""
-        WITH bucketed AS (
-            SELECT vec_id, embedding,
-                   (CASE WHEN embedding[1]::DOUBLE > 0.0 THEN 1 ELSE 0 END
-                    + CASE WHEN embedding[9]::DOUBLE > 0.0 THEN 2 ELSE 0 END
-                    + CASE WHEN embedding[17]::DOUBLE > 0.0 THEN 4 ELSE 0 END
-                    + CASE WHEN embedding[25]::DOUBLE > 0.0 THEN 8 ELSE 0 END)::BIGINT
-                   AS bucket
-            FROM embeddings
-        ),
-        q AS (SELECT vec_id AS query_id, embedding AS qvec, bucket
-              FROM bucketed WHERE vec_id < 5),
-        scored AS (
-            SELECT q.query_id, e.vec_id AS neighbor_id,
-                   {_COSINE_SQL.format(a='q.qvec', b='e.embedding')} AS cosine
-            FROM q JOIN bucketed e ON q.bucket = e.bucket
-        ),
-        ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5
-    """,
-    doc="Approximate ANN: sign-bit LSH buckets (dims 0/8/16/24) restrict "
-    "scoring to the query's bucket — an equi-join, so it shuffles cleanly "
-    "instead of cross-joining.",
-)
-def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.knn_lsh(emb, queries, k=5, dims=(0, 8, 16, 24))
-
-
-# ---------------------------------------------------------------------------
 # Text analysis
 # ---------------------------------------------------------------------------
 
@@ -517,66 +367,6 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Multimodal plumbing
-# ---------------------------------------------------------------------------
-
-@query(
-    "multimodal_meta",
-    oracle="""
-        SELECT doc_id,
-               16::BIGINT AS n_bytes,
-               ('0x' || substr(md5(text), 1, 2))::BIGINT AS magic,
-               list_sum(list_transform(generate_series(1, 16),
-                   i -> ('0x' || substr(md5(text), i*2-1, 2))::BIGINT))::BIGINT
-                   % 65536 AS checksum
-        FROM documents
-    """,
-    doc="Multimodal binary-column plumbing: opaque payload bytes flow through "
-    "Arrow into a vectorized mapInPandas metadata extractor (the Spark-side "
-    "schema, batching, and UDF signature; header decode proper is "
-    "multimodal_decode).",
-)
-def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_bam_spark.operators.multimodal import attach_binary_payload, extract_media_meta
-
-    docs = _t(spark, sf_dir, "documents")
-    return extract_media_meta(attach_binary_payload(docs))
-
-
-@query(
-    "multimodal_decode",
-    oracle="""
-        SELECT doc_id,
-               CASE doc_id % 6 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-                               WHEN 2 THEN 'gif' WHEN 3 THEN 'wav'
-                               WHEN 4 THEN 'mp4' ELSE 'avi' END AS format,
-               CASE WHEN doc_id % 6 IN (3, 4) THEN NULL
-                    ELSE (doc_id * 7 % 509 + 1)::INT END AS width,
-               CASE WHEN doc_id % 6 IN (3, 4) THEN NULL
-                    ELSE (doc_id * 13 % 509 + 1)::INT END AS height,
-               CASE WHEN doc_id % 6 IN (3, 4, 5) THEN (doc_id % 1000 + 1)::BIGINT
-                    ELSE NULL END AS duration_ms
-        FROM documents
-    """,
-    doc="REAL multimodal header decode across image/audio/video: synthesize "
-    "spec-valid PNG/JPEG/GIF/WAV/MP4/AVI containers per document (dims and "
-    "durations are closed-form in doc_id), then parse them back with the "
-    "pure-stdlib header parsers (PNG IHDR, JPEG SOFn walk, GIF screen "
-    "descriptor, WAV fmt/data chunks, ISO-BMFF moov/mvhd, AVI avih) inside "
-    "a vectorized mapInPandas. The oracle recomputes the closed forms — a "
-    "parser bug anywhere breaks the value hash.",
-)
-def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_bam_spark.operators.multimodal import (
-        decode_media_meta,
-        synthesize_media_payloads,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return decode_media_meta(synthesize_media_payloads(docs))
-
-
-# ---------------------------------------------------------------------------
 # Cluster resolution (pairs -> components -> canonical corpus)
 # ---------------------------------------------------------------------------
 
@@ -668,128 +458,6 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sampling
-# ---------------------------------------------------------------------------
-
-_SAMPLE_BUCKET = "('0x' || substr(md5('sample' || ':' || doc_id::VARCHAR), 1, 15))::BIGINT % 10000"
-
-
-@query(
-    "sample_stratified",
-    oracle=f"""
-        SELECT lang, count(*) AS n_docs, sum(doc_id)::BIGINT AS sum_ids
-        FROM documents
-        WHERE {_SAMPLE_BUCKET} <
-              CASE lang WHEN 'en' THEN 2500 WHEN 'zh' THEN 10000 ELSE 5000 END
-        GROUP BY lang
-    """,
-    doc="Deterministic stratified sampling (downsample en to 25%, keep zh "
-    "at 100%, default 50%): membership is a pure hash of the doc id, so the "
-    "sample is reproducible under retries, repartitioning, and engine swaps "
-    "— one narrow scan-side filter, no shuffle, no RNG state.",
-)
-def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_bam_spark.operators.sampling import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = stratified_sample(
-        docs, {"en": 0.25, "zh": 1.0}, stratum_col="lang", default_rate=0.5
-    )
-    return kept.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("doc_id").alias("sum_ids")
-    )
-
-
-@query(
-    "sample_topn_stratum",
-    oracle=f"""
-        WITH ranked AS (
-            SELECT lang, doc_id,
-                   row_number() OVER (PARTITION BY lang
-                                      ORDER BY {_SAMPLE_BUCKET.replace('% 10000', '% 1152921504606846976')}, doc_id) AS rk
-            FROM documents
-        )
-        SELECT lang, count(*) AS n_docs, sum(doc_id)::BIGINT AS sum_ids
-        FROM ranked WHERE rk <= 20 GROUP BY lang
-    """,
-    doc="Exactly-n-per-stratum sample: rank rows inside each stratum by a "
-    "stable id-hash permutation, keep the first 20 — a deterministic "
-    "reservoir. One shuffle on the stratum key.",
-)
-def sample_topn_stratum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_bam_spark.operators.sampling import top_n_per_stratum
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = top_n_per_stratum(docs, 20, stratum_col="lang")
-    return kept.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("doc_id").alias("sum_ids")
-    )
-
-
-#: the Efraimidis-Spirakis key the weighted_sample operator computes,
-#: replicated in DuckDB: -ln(u)/w with u = (hash60(salt:id)+1)/2^60
-_ES_KEY = (
-    "-ln((('0x' || substr(md5('wsample' || ':' || doc_id::VARCHAR), 1, 15))"
-    "::BIGINT + 1) / 1152921504606846976.0) / n_chars"
-)
-
-
-@query(
-    "sample_weighted",
-    oracle=f"""
-        SELECT doc_id, lang, n_chars
-        FROM (SELECT doc_id, lang, n_chars, {_ES_KEY} AS k
-              FROM documents WHERE n_chars > 0)
-        ORDER BY k, doc_id LIMIT 40
-    """,
-    doc="Deterministic weighted sampling without replacement "
-    "(Efraimidis-Spirakis exponential race, weight = document length): "
-    "stable hash-derived uniforms make the sample reproducible across "
-    "runs/retries/engines; compiles to distributed top-n "
-    "(TakeOrderedAndProject), no full sort, no RNG state.",
-)
-def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_bam_spark.operators.sampling import weighted_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return weighted_sample(docs, 40, weight_col="n_chars").select(
-        "doc_id", "lang", "n_chars"
-    )
-
-
-@query(
-    "sample_weighted_stratum",
-    oracle=f"""
-        WITH ranked AS (
-            SELECT doc_id, lang, n_chars,
-                   row_number() OVER (PARTITION BY lang
-                                      ORDER BY {_ES_KEY}, doc_id) AS rk
-            FROM documents WHERE n_chars > 0
-        )
-        SELECT lang, count(*) AS n_docs, sum(doc_id)::BIGINT AS sum_ids,
-               sum(n_chars)::BIGINT AS sum_chars
-        FROM ranked WHERE rk <= 15 GROUP BY lang
-    """,
-    doc="Per-stratum weighted sampling without replacement: the same "
-    "exponential-race keys ranked inside each language — rebalancing "
-    "that favors long documents within every stratum. One shuffle on "
-    "the stratum key.",
-)
-def sample_weighted_stratum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_bam_spark.operators.sampling import weighted_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = weighted_sample(
-        docs, 15, weight_col="n_chars", stratum_col="lang"
-    )
-    return kept.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("doc_id").alias("sum_ids"),
-        F.sum("n_chars").alias("sum_chars"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Corpus statistics
 # ---------------------------------------------------------------------------
 
@@ -867,139 +535,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@query(
-    "knn_ivf",
-    oracle=f"""
-        WITH cent AS (
-            SELECT vec_id AS centroid_id, embedding AS cvec
-            FROM embeddings ORDER BY vec_id LIMIT 16
-        ),
-        assigned AS (
-            SELECT vec_id, embedding, centroid_id FROM (
-                SELECT e.vec_id, e.embedding, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY {_COSINE_SQL.format(a='e.embedding', b='c.cvec')} DESC,
-                                    c.centroid_id ASC) AS rk
-                FROM embeddings e CROSS JOIN cent c
-            ) WHERE rk = 1
-        ),
-        q AS (SELECT vec_id AS query_id, embedding AS qvec
-              FROM embeddings WHERE vec_id < 5),
-        probes AS (
-            SELECT query_id, qvec, centroid_id FROM (
-                SELECT q.query_id, q.qvec, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY {_COSINE_SQL.format(a='q.qvec', b='c.cvec')} DESC,
-                                    c.centroid_id ASC) AS rk
-                FROM q CROSS JOIN cent c
-            ) WHERE rk <= 4
-        ),
-        scored AS (
-            SELECT p.query_id, a.vec_id AS neighbor_id,
-                   {_COSINE_SQL.format(a='p.qvec', b='a.embedding')} AS cosine
-            FROM probes p JOIN assigned a USING (centroid_id)
-        ),
-        ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5
-    """,
-    doc="IVF approximate ANN: 16 deterministic centroids own inverted "
-    "lists (per-vector max_by assignment, no corpus shuffle); each query "
-    "probes its 4 nearest lists and scores only those — ~4/16 of the "
-    "corpus per query. The list layout kmeans_refine plugs into.",
-    bench=True,
-)
-def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.knn_ivf(emb, queries, k=5, n_centroids=16, n_probe=4)
-
-
-@query(
-    "ann_recall_ivf",
-    oracle=f"""
-        WITH cent AS (
-            SELECT vec_id AS centroid_id, embedding AS cvec
-            FROM embeddings ORDER BY vec_id LIMIT 16
-        ),
-        assigned AS (
-            SELECT vec_id, embedding, centroid_id FROM (
-                SELECT e.vec_id, e.embedding, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY {_COSINE_SQL.format(a='e.embedding', b='c.cvec')} DESC,
-                                    c.centroid_id ASC) AS rk
-                FROM embeddings e CROSS JOIN cent c
-            ) WHERE rk = 1
-        ),
-        q AS (SELECT vec_id AS query_id, embedding AS qvec
-              FROM embeddings WHERE vec_id < 5),
-        probes AS (
-            SELECT query_id, qvec, centroid_id FROM (
-                SELECT q.query_id, q.qvec, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY {_COSINE_SQL.format(a='q.qvec', b='c.cvec')} DESC,
-                                    c.centroid_id ASC) AS rk
-                FROM q CROSS JOIN cent c
-            ) WHERE rk <= 4
-        ),
-        ivf AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT p.query_id, a.vec_id AS neighbor_id,
-                       row_number() OVER (
-                           PARTITION BY p.query_id
-                           ORDER BY {_COSINE_SQL.format(a='p.qvec', b='a.embedding')} DESC,
-                                    a.vec_id) AS rank
-                FROM probes p JOIN assigned a USING (centroid_id)
-            ) WHERE rank <= 5
-        ),
-        exact AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT q.query_id, e.vec_id AS neighbor_id,
-                       row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY {_COSINE_SQL.format(a='q.qvec', b='e.embedding')} DESC,
-                                    e.vec_id) AS rank
-                FROM q CROSS JOIN embeddings e
-            ) WHERE rank <= 5
-        )
-        SELECT e.query_id,
-               count(*) AS n_exact,
-               sum(CASE WHEN i.neighbor_id IS NOT NULL
-                        THEN 1 ELSE 0 END)::BIGINT AS n_hit,
-               round(sum(CASE WHEN i.neighbor_id IS NOT NULL
-                              THEN 1 ELSE 0 END) / count(*), 6) AS recall
-        FROM exact e
-        LEFT JOIN ivf i USING (query_id, neighbor_id)
-        GROUP BY 1
-    """,
-    doc="ANN recall audit: recall@5 of the IVF index (16 deterministic "
-    "centroids, 4 probes) against the exact brute-force baseline, per "
-    "query — the measurement a pipeline owner runs on a query sample "
-    "before trusting an approximate index at corpus scale. One corpus "
-    "scan per side, then a k x |queries| join: the audit itself costs "
-    "nothing. The oracle recomputes both sides and the overlap in SQL.",
-)
-def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = similarity.knn_bruteforce(emb, queries, k=5)
-    approx = similarity.knn_ivf(
-        emb, queries, k=5, n_centroids=16, n_probe=4
-    )
-    return similarity.ann_recall(exact, approx, k=5)
-
-
 # ---------------------------------------------------------------------------
 # Decontamination & repetition quality
 # ---------------------------------------------------------------------------
@@ -1068,151 +603,6 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "embedding_quantize_error",
-    oracle="""
-        WITH per AS (
-            SELECT label,
-                   list_transform(embedding, v -> v::DOUBLE) AS x,
-                   127.0 / greatest(
-                       list_max(list_transform(embedding, v -> abs(v::DOUBLE))),
-                       1e-30) AS scale
-            FROM embeddings
-        ),
-        err AS (
-            SELECT label,
-                   list_sum(list_transform(range(1, len(x) + 1),
-                       i -> pow(x[i] - trunc(x[i] * scale)::DOUBLE / scale, 2)))
-                       / len(x) AS mse,
-                   list_max(list_transform(range(1, len(x) + 1),
-                       i -> abs(x[i] - trunc(x[i] * scale)::DOUBLE / scale))) AS maxe
-            FROM per
-        )
-        SELECT label, count(*) AS n_vecs,
-               round(avg(mse), 9) AS avg_mse,
-               round(max(maxe), 9) AS max_abs_err
-        FROM err GROUP BY label
-    """,
-    doc="Int8 scalar-quantization reconstruction error per label: symmetric "
-    "per-vector scale, truncation-toward-zero quantize (identical CAST/"
-    "trunc semantics on both engines), MSE + worst component error. One "
-    "corpus pass, group-cardinality shuffle — the SQ ingredient of a "
-    "compressed ANN index.",
-)
-def embedding_quantize_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.quantize_int8_error(_t(spark, sf_dir, "embeddings"))
-
-
-def _kmeans_oracle() -> str:
-    """cent0 -> (assign -> mean) x2 -> IVF probe/score — the full fitted-
-    index oracle. Means round to 6 decimals before the FLOAT cast, matching
-    kmeans_refine (double summation order differs between engines)."""
-    cos = _COSINE_SQL
-    assign = """
-        {out} AS (
-            SELECT vec_id, embedding, centroid_id FROM (
-                SELECT e.vec_id, e.embedding, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY {c} DESC, c.centroid_id ASC) AS rk
-                FROM embeddings e CROSS JOIN {cent} c
-            ) WHERE rk = 1
-        )"""
-    mean = """
-        {out} AS (
-            SELECT centroid_id, list(m ORDER BY d) AS cvec
-            FROM (
-                SELECT a.centroid_id, t.i AS d,
-                       round(avg(a.embedding[t.i]::DOUBLE), 6)::FLOAT AS m
-                FROM {assign} a,
-                     unnest(range(1, len(a.embedding) + 1)) AS t(i)
-                GROUP BY a.centroid_id, t.i
-            ) GROUP BY centroid_id
-        )"""
-    steps = ",".join(
-        [
-            """
-        cent0 AS (
-            SELECT vec_id AS centroid_id, embedding AS cvec
-            FROM embeddings ORDER BY vec_id LIMIT 16
-        )""",
-            assign.format(
-                out="assign0",
-                cent="cent0",
-                c=cos.format(a="e.embedding", b="c.cvec"),
-            ),
-            mean.format(out="cent1", assign="assign0"),
-            assign.format(
-                out="assign1",
-                cent="cent1",
-                c=cos.format(a="e.embedding", b="c.cvec"),
-            ),
-            mean.format(out="cent2", assign="assign1"),
-        ]
-    )
-    return f"""
-        WITH {steps},
-        assigned AS (
-            SELECT vec_id, embedding, centroid_id FROM (
-                SELECT e.vec_id, e.embedding, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY {cos.format(a='e.embedding', b='c.cvec')} DESC,
-                                    c.centroid_id ASC) AS rk
-                FROM embeddings e CROSS JOIN cent2 c
-            ) WHERE rk = 1
-        ),
-        q AS (SELECT vec_id AS query_id, embedding AS qvec
-              FROM embeddings WHERE vec_id < 5),
-        probes AS (
-            SELECT query_id, qvec, centroid_id FROM (
-                SELECT q.query_id, q.qvec, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY {cos.format(a='q.qvec', b='c.cvec')} DESC,
-                                    c.centroid_id ASC) AS rk
-                FROM q CROSS JOIN cent2 c
-            ) WHERE rk <= 4
-        ),
-        scored AS (
-            SELECT p.query_id, a.vec_id AS neighbor_id,
-                   {cos.format(a='p.qvec', b='a.embedding')} AS cosine
-            FROM probes p JOIN assigned a USING (centroid_id)
-        ),
-        ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5
-    """
-
-
-@query(
-    "knn_ivf_kmeans",
-    oracle=_kmeans_oracle(),
-    doc="IVF ANN over a k-means-FITTED centroid set: two Lloyd iterations "
-    "(broadcast-array assignment with no corpus shuffle, per-dimension "
-    "mean recompute as one aggregation per round), then the same "
-    "assign/probe/score pipeline as knn_ivf. The oracle replays both "
-    "iterations in SQL — iterative model fitting, hash-verified.",
-)
-def knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    cent0 = (
-        emb.orderBy("vec_id")
-        .limit(16)
-        .select(F.col("vec_id").alias("centroid_id"), "embedding")
-    )
-    refined = similarity.kmeans_refine(emb, cent0, iterations=2)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.knn_ivf(
-        emb, queries, k=5, n_probe=4, centroids=refined
-    )
-
-
-@query(
     "text_normalize",
     oracle="""
         SELECT doc_id,
@@ -1242,7 +632,7 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-4 additions: paragraph dedup, PII scrub, sequence packing, semdedup
+# Round-4 additions: paragraph dedup, PII scrub
 # ---------------------------------------------------------------------------
 
 # Documents carry no newlines, so the paragraph pass segments them first:
@@ -1345,45 +735,6 @@ def boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text", F.regexp_replace("text", *_PARA_SEG_SPARK)
     )
     return text_ops.remove_boilerplate(docs)
-
-
-@query(
-    "label_centroids",
-    oracle="""
-        WITH dims AS (
-            SELECT label, i - 1 AS dim, embedding[i] AS x
-            FROM embeddings,
-                 unnest(generate_series(1, len(embedding))) AS t(i)
-        ),
-        means AS (
-            SELECT label, dim, round(avg(x), 6) AS m, count(*) AS n
-            FROM dims GROUP BY 1, 2
-        )
-        SELECT label, max(n)::BIGINT AS n_vectors,
-               round(sqrt(sum(m * m)), 6) AS centroid_norm,
-               round(sum(abs(m)), 6) AS centroid_l1
-        FROM means GROUP BY 1
-    """,
-    doc="Per-label embedding centroids: posexplode dimensions, one keyed "
-    "(label, dim) mean, then per-label norm summaries of the centroid "
-    "vector — the class-prototype aggregation recommendation/clustering "
-    "pipelines run over embedding columns. Means round at 1e-6 before the "
-    "norms so double-summation order (nondeterministic across partitions) "
-    "cannot leak into the hash.",
-)
-def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    dims = emb.select(
-        "label", F.posexplode("embedding").alias("dim", "x")
-    )
-    means = dims.groupBy("label", "dim").agg(
-        F.round(F.avg("x"), 6).alias("m"), F.count(F.lit(1)).alias("n")
-    )
-    return means.groupBy("label").agg(
-        F.max("n").cast("long").alias("n_vectors"),
-        F.round(F.sqrt(F.sum(F.col("m") * F.col("m"))), 6).alias("centroid_norm"),
-        F.round(F.sum(F.abs(F.col("m"))), 6).alias("centroid_l1"),
-    )
 
 
 @query(
@@ -1542,47 +893,6 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKENS_SQL = (
-    "len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''))::BIGINT"
-)
-
-_PACK_BUDGET = 512
-
-
-@query(
-    "pack_sequences",
-    oracle=f"""
-        WITH toks AS (
-            SELECT doc_id, {_TOKENS_SQL} AS n_tokens FROM documents
-        ),
-        binned AS (
-            SELECT doc_id, n_tokens,
-                   floor((sum(n_tokens) OVER (ORDER BY doc_id
-                              ROWS UNBOUNDED PRECEDING) - n_tokens)
-                         / {_PACK_BUDGET})::BIGINT AS bin
-            FROM toks
-        )
-        SELECT bin, count(*) AS n_docs, sum(n_tokens)::BIGINT AS total_tokens,
-               min(doc_id) AS first_id, max(doc_id) AS last_id,
-               round(sum(n_tokens) / {_PACK_BUDGET}.0, 4) AS fill_ratio
-        FROM binned GROUP BY 1
-    """,
-    doc="Sequence packing: contiguous-fill assignment of documents to fixed "
-    "token-budget training bins (bin = floor(exclusive running total / "
-    "budget)). The oracle-checkable form uses one global window for a "
-    "deterministic corpus-wide layout; operators/packing.py documents the "
-    "per-range-partition form used at scale (pass by=...).",
-)
-def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_bam_spark.operators import packing
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", text_ops.token_count(F.col("text")).alias("n_tokens")
-    )
-    return packing.pack_sequences(toks, budget=_PACK_BUDGET)
-
-
 #: deterministic URL seeding (documents.parquet has no URLs): every third
 #: doc gains one URL whose domain cycles a 5-entry set, two of which are
 #: blocklisted
@@ -1661,52 +971,6 @@ def url_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "semantic_dedup",
-    oracle=f"""
-        WITH {_EMB_CORPUS_CTE.strip()},
-        cents AS (
-            SELECT vec_id AS cid, embedding AS cvec
-            FROM emb_corpus ORDER BY vec_id LIMIT 16
-        ),
-        scored AS (
-            SELECT e.vec_id, e.embedding, c.cid,
-                   {_COSINE_SQL.format(a='e.embedding', b='c.cvec')} AS cos
-            FROM emb_corpus e CROSS JOIN cents c
-        ),
-        assigned AS (
-            SELECT vec_id, embedding, cid AS centroid_id FROM (
-                SELECT *, row_number() OVER (PARTITION BY vec_id
-                                             ORDER BY cos DESC, cid) AS rn
-                FROM scored
-            ) WHERE rn = 1
-        ),
-        dropped AS (
-            SELECT DISTINCT a.centroid_id, a.vec_id
-            FROM assigned a JOIN assigned b
-              ON a.centroid_id = b.centroid_id AND b.vec_id < a.vec_id
-            WHERE {_COSINE_SQL.format(a='a.embedding', b='b.embedding')} >= 0.95
-        )
-        SELECT a.centroid_id, count(*) AS n_vectors,
-               sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-                   AS n_dropped,
-               min(CASE WHEN d.vec_id IS NULL THEN a.vec_id END)
-                   AS min_kept_id
-        FROM assigned a LEFT JOIN dropped d
-          ON a.centroid_id = d.centroid_id AND a.vec_id = d.vec_id
-        GROUP BY 1
-    """,
-    doc="SemDeDup-style semantic dedup: broadcast-centroid assignment (the "
-    "knn_ivf pattern — corpus never shuffled for it), then within-cluster "
-    "cosine pruning via an equi-join on centroid_id (never all-pairs); "
-    "the lowest id of each semantic group survives.",
-)
-def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.semantic_dedup(
-        emb_corpus_view(spark, sf_dir), n_centroids=16, threshold=0.95
-    )
-
-
-@query(
     "dedup_exact_substring",
     oracle=f"""
         WITH {_CORPUS_CTE},
@@ -1750,70 +1014,6 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.count()
         caches.unpersist()
     return out
-
-
-@query(
-    "multimodal_frame_sample",
-    oracle="""
-        SELECT doc_id,
-               (doc_id % 1000 + 1)::BIGINT AS n_frames,
-               ((doc_id % 1000 + 1) + 9) // 10 AS n_sampled,
-               0::BIGINT AS first_idx,
-               ((doc_id % 1000) // 10 * 10)::BIGINT AS last_idx,
-               range(0, (doc_id % 1000 + 1)::BIGINT, 10) AS sample_indices
-        FROM documents WHERE doc_id % 6 = 5
-    """,
-    doc="Video frame-sampling plan: decode the AVI containers' headers "
-    "(1 frame/ms in the synth corpus), emit every-10th frame index per "
-    "video via a real mapInPandas stage (schema, Arrow batch shape, "
-    "array column); the pixel-level frame decode stays a documented "
-    "PIL/av-gated stub. Oracle recomputes the plan closed-form incl. "
-    "the full index array.",
-)
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_bam_spark.operators.multimodal import (
-        frame_sample_plan,
-        synthesize_media_payloads,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return frame_sample_plan(synthesize_media_payloads(docs), every=10)
-
-
-@query(
-    "multimodal_resize_plan",
-    oracle="""
-        WITH img AS (
-            SELECT doc_id,
-                   CASE doc_id % 6 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-                                   ELSE 'gif' END AS format,
-                   (doc_id * 7 % 509 + 1)::INT AS width,
-                   (doc_id * 13 % 509 + 1)::INT AS height
-            FROM documents WHERE doc_id % 6 IN (0, 1, 2)
-        )
-        SELECT doc_id, format, width, height,
-               CASE WHEN greatest(width, height) > 224
-                    THEN greatest(width * 224 // greatest(width, height), 1)
-                    ELSE width END::INT AS out_w,
-               CASE WHEN greatest(width, height) > 224
-                    THEN greatest(height * 224 // greatest(width, height), 1)
-                    ELSE height END::INT AS out_h,
-               greatest(width, height) > 224 AS downscaled
-        FROM img
-    """,
-    doc="Aspect-preserving fit-into-224 resize plan over decoded image "
-    "headers — integer math so the Spark plan and the oracle agree "
-    "bit-for-bit; the pixel resample itself is the PIL-gated stub. Real "
-    "mapInPandas plumbing over the decoded-metadata stage.",
-)
-def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_bam_spark.operators.multimodal import (
-        resize_plan,
-        synthesize_media_payloads,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return resize_plan(synthesize_media_payloads(docs), box=224)
 
 
 @query(
@@ -1949,186 +1149,6 @@ def quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_q6"
         ),
     )
-
-
-@query(
-    "repetition_ratios",
-    oracle=r"""
-        WITH w AS (
-            SELECT doc_id, t.w
-            FROM documents,
-                 unnest(list_filter(
-                     string_split_regex(trim(lower(text)), '\s+'),
-                     x -> x <> '')) AS t(w)
-        ),
-        g AS (SELECT doc_id, w, count(*) AS c FROM w GROUP BY 1, 2),
-        wc AS (
-            SELECT doc_id, sum(c)::BIGINT AS n_words,
-                   count(*)::BIGINT AS d_words, max(c)::BIGINT AS top_n
-            FROM g GROUP BY 1
-        ),
-        l AS (
-            SELECT doc_id, t.ln
-            FROM documents,
-                 unnest(list_filter(string_split(text, chr(10)),
-                                    x -> trim(x) <> '')) AS t(ln)
-        ),
-        lc AS (
-            SELECT doc_id, count(*)::BIGINT AS n_lines,
-                   count(DISTINCT ln)::BIGINT AS d_lines,
-                   sum(len(ln))::BIGINT AS lchars
-            FROM l GROUP BY 1
-        ),
-        ldc AS (
-            SELECT doc_id, sum(len(ln))::BIGINT AS dchars
-            FROM (SELECT DISTINCT doc_id, ln FROM l) GROUP BY 1
-        )
-        SELECT d.doc_id,
-               coalesce(lc.n_lines, 0) AS n_lines,
-               coalesce(round((lc.n_lines - lc.d_lines)::DOUBLE
-                              / lc.n_lines, 6), 0.0) AS dup_line_ratio,
-               coalesce(round((lc.lchars - ldc.dchars)::DOUBLE
-                              / lc.lchars, 6), 0.0) AS dup_line_char_ratio,
-               coalesce(round(wc.top_n::DOUBLE / wc.n_words, 6), 0.0)
-                   AS top_word_ratio,
-               coalesce(round((wc.n_words - wc.d_words)::DOUBLE
-                              / wc.n_words, 6), 0.0) AS dup_word_ratio
-        FROM documents d
-        LEFT JOIN lc USING (doc_id)
-        LEFT JOIN ldc USING (doc_id)
-        LEFT JOIN wc USING (doc_id)
-    """,
-    doc="Gopher-style per-document repetition signals (dup-line ratio by "
-    "occurrence and by characters, top-word mass, dup-word ratio) as "
-    "map-only array expressions — no explode, no shuffle; Catalyst fuses "
-    "the whole thing into the scan stage.",
-    bench=True,
-)
-def repetition_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return curation.repetition_ratios(_t(spark, sf_dir, "documents"))
-
-
-@query(
-    "pii_scan_redact",
-    oracle=r"""
-        WITH pii AS (
-            SELECT doc_id,
-                   text || CASE doc_id % 3
-                       WHEN 0 THEN ' contact user' || doc_id::VARCHAR
-                                   || '@example.com'
-                       WHEN 1 THEN ' call +1 415 555 0'
-                                   || lpad((doc_id % 100)::VARCHAR, 3, '0')
-                       ELSE ' host 10.0.' || (doc_id % 256)::VARCHAR || '.7'
-                   END AS text
-            FROM documents
-        ),
-        counted AS (
-            SELECT doc_id,
-                   len(regexp_extract_all(text,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'
-                   ))::BIGINT AS n_email,
-                   len(regexp_extract_all(text,
-                       '\+?[0-9][0-9()\-\. ]{7,14}[0-9]'
-                   ))::BIGINT AS n_phone,
-                   len(regexp_extract_all(text,
-                       '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b'
-                   ))::BIGINT AS n_ipv4,
-                   len(regexp_extract_all(text,
-                       '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b'
-                   ))::BIGINT AS n_ssn,
-                   len(regexp_replace(
-                       regexp_replace(
-                           regexp_replace(
-                               regexp_replace(text,
-                                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                                   '[PII]', 'g'),
-                               '\+?[0-9][0-9()\-\. ]{7,14}[0-9]',
-                               '[PII]', 'g'),
-                           '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b',
-                           '[PII]', 'g'),
-                       '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b', '[PII]', 'g'
-                   ))::BIGINT AS redacted_len
-            FROM pii
-        )
-        SELECT doc_id, n_email, n_phone, n_ipv4, n_ssn,
-               n_email + n_phone + n_ipv4 + n_ssn AS n_pii,
-               redacted_len
-        FROM counted
-    """,
-    doc="PII scan + redaction over a deterministically PII-seeded corpus "
-    "(one email / phone / IPv4 per document, derived from doc_id on both "
-    "engines): per-category regexp_count plus the redacted text length, "
-    "all JVM regex inside whole-stage codegen, map-only. The patterns are "
-    "RE2-safe so the exact same regex text runs on Spark and DuckDB.",
-)
-def pii_scan_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(
-                    F.lit(" contact user"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@example.com"),
-                ),
-            )
-            .when(
-                F.col("doc_id") % 3 == 1,
-                F.concat(
-                    F.lit(" call +1 415 555 0"),
-                    F.lpad((F.col("doc_id") % 100).cast("string"), 3, "0"),
-                ),
-            )
-            .otherwise(
-                F.concat(
-                    F.lit(" host 10.0."),
-                    (F.col("doc_id") % 256).cast("string"),
-                    F.lit(".7"),
-                )
-            ),
-        ).alias("text"),
-    )
-    scanned = curation.pii_scan(docs)
-    redacted = curation.pii_redact(docs).select(
-        "doc_id", F.length("text").cast("long").alias("redacted_len")
-    )
-    return scanned.join(redacted, "doc_id")
-
-
-@query(
-    "paragraph_dedup",
-    oracle=r"""
-        WITH s AS (
-            SELECT doc_id, string_split_regex(text, '\n\s*\n') AS ps
-            FROM documents
-        ),
-        p AS (
-            SELECT doc_id, i - 1 AS para_idx,
-                   regexp_replace(trim(ps[i]), '\s+', ' ', 'g') AS norm
-            FROM s, unnest(generate_series(1, len(ps))) AS g(i)
-        ),
-        q AS (
-            SELECT doc_id, para_idx::BIGINT AS para_idx, md5(norm) AS md5
-            FROM p WHERE len(norm) >= 20
-        ),
-        r AS (
-            SELECT *, row_number() OVER (
-                PARTITION BY md5 ORDER BY doc_id, para_idx) AS rn
-            FROM q
-        )
-        SELECT doc_id, para_idx, md5, rn = 1 AS keep FROM r
-    """,
-    doc="Exact paragraph-level dedup (Lee et al.): blank-line paragraphs, "
-    "whitespace-normalized, first occurrence per content hash kept. "
-    "Spark plan: explode + md5 + ONE min_by aggregate per hash "
-    "(map-side partials, AQE-splittable — pinned no-window) + hash "
-    "join-back; paragraph text never shuffles, only 32-byte hashes.",
-    bench=True,
-)
-def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return curation.paragraph_dedup(_t(spark, sf_dir, "documents"))
 
 
 @query(

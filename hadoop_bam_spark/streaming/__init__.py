@@ -1,7 +1,7 @@
 """Structured Streaming layer.
 
-The reference is batch-only (SURVEY.md §2.9) — this module is a
-beyond-reference surface: streaming ingest of the same formats
+The reference is batch-only (SURVEY.md §2.9) — this module is part of the
+beyond-reference pipeline surface: streaming ingest of the same formats
 (``fastq_stream``, ``vcf_stream``, ``bam_stream``, ``bcf_stream``,
 ``cram_stream`` directory-tail sources), streaming shard sinks for
 BAM/VCF/CRAM/BCF
@@ -14,6 +14,11 @@ join, conversion funnel — each with batch-parity tests against the
 green batch queries).
 """
 
+from hadoop_bam_spark.streaming.documents import (  # noqa: F401
+    dedup_exact_stream,
+    quality_filter_stream,
+    read_documents_stream,
+)
 from hadoop_bam_spark.streaming.events import (  # noqa: F401
     asof_join_stream,
     funnel_stream,

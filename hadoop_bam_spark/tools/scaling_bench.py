@@ -20,11 +20,11 @@ queries remain scheduling floor, and are reported with the absolute
 times so the floor is visible rather than inferred.
 
 ``--isolate`` runs each query in its OWN subprocess per core count
-(14 JVM startups for the default 7-query list) instead of one shared
+(28 JVM startups for the default 14-query list) instead of one shared
 session per core count. The shared session is cheaper but allocation-
 heavy queries poison their successors' timings with GC pressure — the
 first r18 shared-session run measured one query at 15.1 s on 32 cores
-right after an allocation-heavy aggregate, vs 2.2 s isolated.
+right after cross_source's gram aggregate, vs 2.2 s isolated.
 Receipts that feed scaling claims must use --isolate.
 """
 
@@ -39,7 +39,7 @@ import tempfile
 _REPO = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
 
 #: scan-bound representatives of every benched family (TPC-H aggregates,
-#: events, interval sweeps, liftover).
+#: events, interval sweeps, dedup/LSH, text stats, liftover).
 _DEFAULT = [
     "q1_pricing_summary",
     "events_hourly_rollup",
@@ -47,6 +47,13 @@ _DEFAULT = [
     "coverage_histogram",
     "pileup_depth_histogram",
     "interval_multiinter_sets",
+    "dedup_exact",
+    "dedup_minhash_lsh",
+    "dedup_clusters",
+    "token_heavy_hitters",
+    "tfidf_top_terms",
+    "decontaminate_benchmark",
+    "cross_source_ngram_overlap",
     "chain_liftover_roundtrip",
 ]
 

@@ -175,6 +175,73 @@ class TestFastqStreaming:
             )
 
 
+class TestDocumentStreaming:
+    def test_stream_dedup_first_seen_wins(self, spark):
+        from hadoop_bam_spark.streaming import dedup_exact_stream, read_documents_stream
+        from hadoop_bam_spark.streaming.events import run_available_now
+
+        out = run_available_now(
+            dedup_exact_stream(read_documents_stream(spark, SF)),
+            "t_docdedup",
+            "append",
+        )
+        docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+        # the documents table has no duplicate texts, so dedup must be a
+        # no-op pass-through of every doc exactly once
+        assert out.count() == docs.count()
+        assert out.select("doc_id").distinct().count() == docs.count()
+
+    def test_stream_dedup_drops_replayed_duplicates(self, spark, tmp_path):
+        from hadoop_bam_spark.streaming import dedup_exact_stream
+        from hadoop_bam_spark.streaming.documents import DOCUMENTS_SCHEMA
+        from hadoop_bam_spark.streaming.events import run_available_now
+
+        docs = spark.read.parquet(os.path.join(SF, "documents.parquet")).limit(50)
+        land = str(tmp_path / "docs")
+        # two files with identical texts under different doc_ids: the second
+        # micro-batch's rows are all within-watermark duplicates
+        docs.coalesce(1).write.parquet(os.path.join(land, "batch1"))
+        docs.withColumn("doc_id", F.col("doc_id") + 10_000).coalesce(1).write.parquet(
+            os.path.join(land, "batch2")
+        )
+        stream = (
+            spark.readStream.schema(DOCUMENTS_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(land + "/*")
+            .withColumn(
+                "ingest_time",
+                F.timestamp_micros(F.col("doc_id") * 1_000_000 + 86_400_000_000),
+            )
+        )
+        out = run_available_now(dedup_exact_stream(stream), "t_docdedup2", "append")
+        n = docs.count()
+        assert out.count() == n
+        # first-seen wins: all surviving ids are from the original batch
+        assert out.filter(F.col("doc_id") >= 10_000).count() == 0
+
+    def test_quality_filter_matches_batch(self, spark):
+        from hadoop_bam_spark.operators.text import quality_score
+        from hadoop_bam_spark.streaming import (
+            quality_filter_stream,
+            read_documents_stream,
+        )
+        from hadoop_bam_spark.streaming.events import run_available_now
+
+        got = run_available_now(
+            quality_filter_stream(read_documents_stream(spark, SF)),
+            "t_quality",
+            "append",
+        )
+        docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+        want = docs.withColumn(
+            "quality", F.round(quality_score(F.col("text")), 6)
+        ).filter(F.col("quality") >= 0.5)
+        assert got.count() == want.count()
+        assert {r.doc_id for r in got.select("doc_id").collect()} == {
+            r.doc_id for r in want.select("doc_id").collect()
+        }
+
+
 class TestVCFStreaming:
     def test_directory_tail(self, spark, tmp_path):
         from hadoop_bam_spark.streaming.vcf_stream import VCFStreamDataSource
