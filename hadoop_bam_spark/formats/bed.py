@@ -46,8 +46,6 @@ BED_SCHEMA = StructType(
     ]
 )
 
-BED_COLS = [f.name for f in BED_SCHEMA.fields]
-
 #: lines starting with these are headers/annotations, not records
 #: (UCSC track format; '#' comments per the tabix meta default)
 _SKIP_PREFIXES = ("#", "track", "browser")
@@ -98,10 +96,6 @@ def format_bed_line(row: tuple) -> str:
     while tail and tail[-1] == "." and not (rest or []):
         tail.pop()
     return "\t".join(cols + tail)
-
-
-#: lines per vectorized chunk (same sizing as the VCF/SAM chunk parsers)
-VEC_CHUNK_LINES = 16384
 
 
 def parse_bed_chunk(lines) -> Optional[dict]:
@@ -181,7 +175,7 @@ def parse_bed_chunk(lines) -> Optional[dict]:
 
 
 def format_bed_chunk(batch) -> bytes:
-    """Arrow RecordBatch (BED_COLS order) -> newline-terminated BED
+    """Arrow RecordBatch (BED_SCHEMA order) -> newline-terminated BED
     bytes, byte-identical to ``format_bed_line`` per row (property-
     tested): 1-based back to 0-based, NULLs to '.', and trailing
     '.'-placeholder groups trimmed exactly like the scalar formatter

@@ -37,8 +37,6 @@ BEDGRAPH_SCHEMA = StructType(
     ]
 )
 
-BEDGRAPH_COLS = [f.name for f in BEDGRAPH_SCHEMA.fields]
-
 _SKIP_PREFIXES = ("#", "track", "browser")
 
 
@@ -86,10 +84,6 @@ def format_bedgraph_line(row: tuple) -> str:
     return "\t".join(
         [contig, str(int(start) - 1), str(int(end)), _value_text(value)]
     )
-
-
-#: lines per vectorized chunk (same sizing as the other text parsers)
-VEC_CHUNK_LINES = 16384
 
 
 def parse_bedgraph_chunk(lines) -> Optional[dict]:

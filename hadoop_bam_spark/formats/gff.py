@@ -43,8 +43,6 @@ GFF_SCHEMA = StructType(
     ]
 )
 
-GFF_COLS = [f.name for f in GFF_SCHEMA.fields]
-
 
 def is_header_line(line: str) -> bool:
     """``##`` directives, ``#`` comments, blanks; a ``>`` starts the
@@ -121,10 +119,6 @@ def format_gff_line(row: tuple) -> str:
             attr_s,
         ]
     )
-
-
-#: lines per vectorized chunk
-VEC_CHUNK_LINES = 16384
 
 
 def parse_gff_chunk(lines) -> Optional[dict]:

@@ -41,6 +41,7 @@ from hadoop_bam_spark.formats.bam import reg2bin
 TBI_MAGIC = b"TBI\x01"
 
 #: format codes (tabix spec)
+FMT_GENERIC = 0
 FMT_SAM = 1
 FMT_VCF = 2
 FMT_ZERO_BASED = 0x10000

@@ -1363,7 +1363,7 @@ def vcf_sharded_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # BED (tabix-indexable interval text — not a reference format, but the
-# tabix/BGZF text machinery is format-agnostic; sources/bed_source.py)
+# tabix/BGZF text machinery is format-agnostic; sources/tabix_text.py)
 # ---------------------------------------------------------------------------
 
 _BED_ORACLE_CTE = """
@@ -1530,7 +1530,7 @@ def bed_annotate_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# GFF3 (second interval-text binding; sources/gff_source.py)
+# GFF3 (second interval-text binding; sources/tabix_text.py)
 # ---------------------------------------------------------------------------
 
 _GFF_ORACLE_CTE = """

@@ -606,9 +606,10 @@ def write_vcf(
     """Write a VCF_SCHEMA DataFrame as one valid VCF (.vcf or BGZF .vcf.bgz —
     default by extension, reference KeyIgnoringVCFOutputFormat.java:93-114).
 
-    ``index_tbi=True`` (BGZF output only) builds a ``.tbi`` tabix index with
-    one post-merge pass (meaningful when ``df`` is coordinate-sorted) so
-    interval reads prune splits at plan time (formats/tabix.py).
+    ``index_tbi=True`` (BGZF output only) builds a ``.tbi`` tabix index from
+    per-part stats accumulated in the executors, with no post-merge re-read
+    (meaningful when ``df`` is coordinate-sorted), so interval reads prune
+    splits at plan time (formats/tabix.py).
 
     ``sharded=True``: ``path`` becomes a DIRECTORY of complete standalone
     VCFs (``part-NNNNN.vcf`` / ``.vcf.bgz`` — own header, own BGZF EOF,
@@ -626,15 +627,21 @@ def write_vcf(
     header = _ensure_vcf_samples(df, header)
     samples = header.samples
 
-    if sharded and index_tbi:
-        _write_vcf_shards_indexed(df, path, header.text, samples)
-        return
-    if index_tbi:
-        _write_vcf_parts_indexed(df, path, header.text, samples)
-        return
-
     def line(r):
         return format_vcf_line(tuple(r), samples)
+
+    if index_tbi:
+        from hadoop_bam_spark.formats.tabix import FMT_VCF
+
+        def span(r):
+            beg0 = int(r[1]) - 1
+            return r[0], beg0, beg0 + max(len(r[4] or "N"), 1)  # pos + len(ref)
+
+        _write_tabix_text_indexed(
+            df, VCF_COLS, path, sharded, line, ".vcf.bgz", span,
+            (FMT_VCF, 1, 2, 0), header=header.text, fmt="vcf",
+        )
+        return
 
     def chunk(b):
         from hadoop_bam_spark.formats import vcf_vec
@@ -676,98 +683,6 @@ def _vcf_batch_rows(batch):
             if gts is not None
             else None,
         )
-
-
-def _write_vcf_shards_indexed(df: DataFrame, path: str, header_text: str,
-                              samples: list[str]) -> None:
-    """Sharded BGZF VCF with a per-shard ``.tbi`` built in-task: the shard
-    includes its own header through the same BGZF writer, so the stats'
-    voffsets are file-absolute and no offset shifting is needed."""
-    from hadoop_bam_spark.formats.bai import PartIndexStats, merge_part_stats
-    from hadoop_bam_spark.formats.tabix import FMT_VCF, TabixIndex, write_tabix
-
-    parts_dir = path + ".__parts__"
-
-    def write_part(idx: int, rows):
-        part_path = fs.join(parts_dir, f"part-{idx:05d}.vcf.bgz")
-        stats = PartIndexStats()
-        nrec = 0
-        with fs.open_file(part_path, "wb") as f:
-            w = bgzf.BGZFWriter(f, write_terminator=True)
-            w.write(header_text.encode())
-            for r in rows:
-                at = w.tell_voffset()
-                w.write((format_vcf_line(tuple(r), samples) + "\n").encode())
-                beg0 = int(r[1]) - 1
-                end0 = beg0 + max(len(r[4] or "N"), 1)
-                stats.add(r[0], beg0, end0, True, at, w.tell_voffset())
-                nrec += 1
-            w.close()
-        size = fs.file_size(part_path)
-        names = list(stats.order)
-        merged = merge_part_stats([(stats, size)], 0, names)
-        merged.pop("__n_no_coor__")
-        idx_t = TabixIndex(
-            names, [merged[n] for n in names], FMT_VCF, 1, 2, 0, ord("#"), 0, 0
-        )
-        write_tabix(idx_t, part_path + ".tbi")
-        return (idx, part_path, nrec)
-
-    parts = _collect_parts(df, VCF_COLS, parts_dir, write_part)
-    _commit_shards(path, parts_dir, [p for _, p, _ in parts], [".tbi"],
-                   records=[n for _, _, n in parts], fmt="vcf")
-
-
-def _write_vcf_parts_indexed(df: DataFrame, path: str, header_text: str,
-                             samples: list[str]) -> None:
-    """BGZF VCF write with the .tbi built from per-part stats accumulated in
-    the executors (part-local voffsets, driver offset-shift merge) — no
-    post-merge re-read of the output (formats/bai.py merge machinery)."""
-    from hadoop_bam_spark.formats.bai import PartIndexStats, merge_part_stats
-    from hadoop_bam_spark.formats.tabix import FMT_VCF, TabixIndex, write_tabix
-
-    parts_dir = path + ".__parts__"
-
-    def write_part(idx: int, rows):
-        part_path = fs.join(parts_dir, f"part-{idx:05d}")
-        stats = PartIndexStats()
-        with fs.open_file(part_path, "wb") as f:
-            w = bgzf.BGZFWriter(f, write_terminator=False)
-            for r in rows:
-                at = w.tell_voffset()
-                w.write((format_vcf_line(tuple(r), samples) + "\n").encode())
-                beg0 = int(r[1]) - 1
-                end0 = beg0 + max(len(r[4] or "N"), 1)  # pos + len(ref)
-                stats.add(r[0], beg0, end0, True, at, w.tell_voffset())
-            w.close()
-        return (idx, part_path, fs.file_size(part_path), stats)
-
-    parts = _collect_parts(df, VCF_COLS, parts_dir, write_part)
-    with fs.open_file(path, "wb") as out:
-        w = bgzf.BGZFWriter(out, write_terminator=False)
-        w.write(header_text.encode())
-        w.close()
-        header_len = out.tell()
-        for _, part_path, _, _ in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        out.write(bgzf.BGZF_EOF)
-    fs.remove_tree(parts_dir)
-    names: list[str] = []
-    seen = set()
-    for _, _, _, st in parts:
-        for k in st.order:
-            if k not in seen:
-                seen.add(k)
-                names.append(k)
-    merged = merge_part_stats(
-        [(st, size) for _, _, size, st in parts], header_len, names
-    )
-    merged.pop("__n_no_coor__")
-    idx = TabixIndex(
-        names, [merged[n] for n in names], FMT_VCF, 1, 2, 0, ord("#"), 0, 0
-    )
-    write_tabix(idx, path + ".tbi")
 
 
 def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
@@ -982,9 +897,6 @@ def _fastq_chunk(batch) -> bytes:
     return (blob + "\n").encode("utf-8", "surrogateescape")
 
 
-BED_COLS = ["contig", "start", "end", "name", "score", "strand", "rest"]
-
-
 def write_bed(
     df: DataFrame, path: str, compress: bool | None = None,
     index_tbi: bool = False, sharded: bool = False,
@@ -998,47 +910,99 @@ def write_bed(
     re-read shape as ``write_vcf``. ``sharded=True`` emits a directory
     of standalone shards (per-shard ``.tbi`` when requested) plus a
     manifest; no output byte funnels through the driver."""
-    from hadoop_bam_spark.formats.bed import format_bed_line
+    from hadoop_bam_spark.sources.tabix_text import BED
+
+    _write_tabix_text(df, BED, path, compress, index_tbi, sharded)
+
+
+def write_bedgraph(
+    df: DataFrame, path: str, compress: bool | None = None,
+    index_tbi: bool = False, sharded: bool = False,
+) -> None:
+    """Write a BEDGRAPH_SCHEMA DataFrame as bedGraph text (.bedgraph or
+    BGZF .bedgraph.bgz — default by extension), converting the engine's
+    1-based inclusive intervals back to 0-based half-open on the rim
+    (formats/bedgraph.py). ``index_tbi`` and ``sharded`` as in
+    ``write_bed``."""
+    from hadoop_bam_spark.sources.tabix_text import BEDGRAPH
+
+    _write_tabix_text(df, BEDGRAPH, path, compress, index_tbi, sharded)
+
+
+def write_gff(
+    df: DataFrame, path: str, compress: bool | None = None,
+    index_tbi: bool = False, sharded: bool = False,
+) -> None:
+    """Write a GFF_SCHEMA DataFrame as GFF3 text (.gff3 or BGZF
+    .gff3.bgz — default by extension; emits the ``##gff-version 3``
+    directive). ``index_tbi=True`` builds a ``.tbi`` with the GFF
+    preset (generic/1-based, columns 1/4/5); ``index_tbi`` and
+    ``sharded`` otherwise as in ``write_bed``."""
+    from hadoop_bam_spark.sources.tabix_text import GFF
+
+    _write_tabix_text(df, GFF, path, compress, index_tbi, sharded)
+
+
+def _write_tabix_text(df: DataFrame, spec, path: str, compress: bool | None,
+                      index_tbi: bool, sharded: bool) -> None:
+    """One writer for every tabix-text spec (sources/tabix_text.py). The
+    tabix preset is derived from the spec: its columns are the coordinate
+    columns + 1, plus the zero-based flag."""
+    from hadoop_bam_spark.formats.tabix import FMT_GENERIC, FMT_ZERO_BASED
 
     if sharded and compress is None:
-        compress = True
+        compress = True  # directory path carries no extension signal
     if compress is None:
         compress = path.endswith((".gz", ".bgz"))
     if index_tbi and not compress:
+        # fail fast, before any part is written
         raise ValueError("tabix index requires BGZF-compressed output")
-    if index_tbi:
-        _write_bed_indexed(df, path, sharded)
-        return
 
     def line(r):
-        return format_bed_line(tuple(r))
+        return spec.format_row(tuple(r))
 
-    def chunk(b):
-        from hadoop_bam_spark.formats.bed import format_bed_chunk
+    if index_tbi:
+        c, s, e = spec.coords
 
-        return format_bed_chunk(b)
+        def span(r):
+            beg0 = int(r[s]) - 1
+            # zero-length features (end == start-1, insertion points) bin
+            # as length 1, the tabix convention
+            return r[c], beg0, max(int(r[e]), beg0 + 1)
 
-    _write_text_parts(df, BED_COLS, path, path + ".__parts__", "", line,
-                      compress, chunk_fn=chunk,
-                      shard_ext=(".bed.bgz" if compress else ".bed")
+        preset = (FMT_ZERO_BASED if spec.zero_based else FMT_GENERIC,
+                  c + 1, s + 1, e + 1)
+        _write_tabix_text_indexed(
+            df, spec.cols, path, sharded, line, spec.shard_ext + ".bgz",
+            span, preset, header=spec.header, fmt=spec.name,
+        )
+        return
+    _write_text_parts(df, spec.cols, path, path + ".__parts__", spec.header,
+                      line, compress, chunk_fn=spec.format_chunk,
+                      shard_ext=spec.shard_ext + (".bgz" if compress else "")
                       if sharded else None)
 
 
 def _write_tabix_text_indexed(
     df: DataFrame, cols, path: str, sharded: bool, line_fn, shard_ext: str,
-    tbi_factory, add_fn, header: str = "", fmt: str = "",
+    span_fn, preset: tuple, header: str = "", fmt: str = "",
 ) -> None:
-    """Shared BGZF + ``.tbi`` text write (BED / bedGraph / GFF bindings):
+    """Shared BGZF + ``.tbi`` text write (VCF and the tabix-text specs):
     executor part files accumulate PartIndexStats while writing; sharded
     mode commits standalone shards each with its own ``.tbi``, merged
     mode concatenates the part bytes and offset-shifts the merged stats
-    — never a post-merge re-read. ``tbi_factory(names, merged)`` builds
-    the preset-specific TabixIndex; ``add_fn(stats, row, at, end)``
-    records one row's span."""
+    — never a post-merge re-read. ``span_fn(row)`` gives one row's
+    ``(contig, beg0, end0)``, 0-based half-open; ``preset`` is the
+    index's ``(format, col_seq, col_beg, col_end)``."""
     from hadoop_bam_spark.formats.bai import PartIndexStats, merge_part_stats
-    from hadoop_bam_spark.formats.tabix import write_tabix
+    from hadoop_bam_spark.formats.tabix import TabixIndex, write_tabix
 
     parts_dir = path + ".__parts__"
+
+    def tbi(names, merged):
+        return TabixIndex(
+            names, [merged[n] for n in names], *preset, ord("#"), 0, 0
+        )
 
     if sharded:
         def write_part(idx: int, rows):
@@ -1052,14 +1016,14 @@ def _write_tabix_text_indexed(
                 for r in rows:
                     at = w.tell_voffset()
                     w.write((line_fn(r) + "\n").encode())
-                    add_fn(stats, r, at, w.tell_voffset())
+                    stats.add(*span_fn(r), True, at, w.tell_voffset())
                     nrec += 1
                 w.close()
             size = fs.file_size(part_path)
             names = list(stats.order)
             merged = merge_part_stats([(stats, size)], 0, names)
             merged.pop("__n_no_coor__")
-            write_tabix(tbi_factory(names, merged), part_path + ".tbi")
+            write_tabix(tbi(names, merged), part_path + ".tbi")
             return (idx, part_path, nrec)
 
         parts = _collect_parts(df, cols, parts_dir, write_part)
@@ -1075,7 +1039,7 @@ def _write_tabix_text_indexed(
             for r in rows:
                 at = w.tell_voffset()
                 w.write((line_fn(r) + "\n").encode())
-                add_fn(stats, r, at, w.tell_voffset())
+                stats.add(*span_fn(r), True, at, w.tell_voffset())
             w.close()
         return (idx, part_path, fs.file_size(part_path), stats)
 
@@ -1103,104 +1067,7 @@ def _write_tabix_text_indexed(
         [(st, size) for _, _, size, st in parts], header_len, names
     )
     merged.pop("__n_no_coor__")
-    write_tabix(tbi_factory(names, merged), path + ".tbi")
-
-
-def _zero_based_tbi_factory(names, merged):
-    """BED/bedGraph tabix preset: generic format, 0-based half-open,
-    columns 1/2/3."""
-    from hadoop_bam_spark.formats.tabix import FMT_ZERO_BASED, TabixIndex
-
-    return TabixIndex(
-        names, [merged[n] for n in names], FMT_ZERO_BASED,
-        1, 2, 3, ord("#"), 0, 0,
-    )
-
-
-def _zero_based_add(stats, r, at, end_v):
-    beg0 = int(r[1]) - 1
-    # zero-length features (end == start-1, insertion points) bin as
-    # length 1, the tabix convention
-    end0 = max(int(r[2]), beg0 + 1)
-    stats.add(r[0], beg0, end0, True, at, end_v)
-
-
-def _write_bed_indexed(df: DataFrame, path: str, sharded: bool) -> None:
-    """BGZF BED write with executor-accumulated tabix stats (the shared
-    _write_tabix_text_indexed machinery with the 0-based preset)."""
-    from hadoop_bam_spark.formats.bed import format_bed_line
-
-    _write_tabix_text_indexed(
-        df, BED_COLS, path, sharded,
-        lambda r: format_bed_line(tuple(r)), ".bed.bgz",
-        _zero_based_tbi_factory, _zero_based_add, fmt="bed",
-    )
-
-
-GFF_COLS = ["contig", "source", "type", "start", "end", "score",
-            "strand", "phase", "attributes"]
-
-
-def write_gff(
-    df: DataFrame, path: str, compress: bool | None = None,
-    index_tbi: bool = False, sharded: bool = False,
-) -> None:
-    """Write a GFF_SCHEMA DataFrame as GFF3 text (.gff3 or BGZF
-    .gff3.bgz — default by extension; emits the ``##gff-version 3``
-    directive). ``index_tbi=True`` builds a ``.tbi`` with the GFF
-    preset (generic/1-based, columns 1/4/5) from executor-accumulated
-    stats; ``sharded=True`` writes a directory of standalone shards —
-    same shapes as ``write_bed``."""
-    from hadoop_bam_spark.formats.gff import format_gff_line
-
-    if sharded and compress is None:
-        compress = True
-    if compress is None:
-        compress = path.endswith((".gz", ".bgz"))
-    if index_tbi and not compress:
-        raise ValueError("tabix index requires BGZF-compressed output")
-    header = "##gff-version 3\n"
-
-    def line(r):
-        return format_gff_line(_gff_row(r))
-
-    if index_tbi:
-        _write_gff_indexed(df, path, header, sharded)
-        return
-    _write_text_parts(df, GFF_COLS, path, path + ".__parts__", header, line,
-                      compress,
-                      shard_ext=(".gff3.bgz" if compress else ".gff3")
-                      if sharded else None)
-
-
-def _gff_row(r) -> tuple:
-    """Spark Row -> GFF tuple (map column arrives as a dict already via
-    the Row path; guard None)."""
-    t = tuple(r)
-    return t[:8] + (dict(t[8]) if t[8] else {},)
-
-
-def _write_gff_indexed(df: DataFrame, path: str, header: str,
-                       sharded: bool) -> None:
-    """BGZF GFF3 write with executor-accumulated tabix stats (the shared
-    _write_tabix_text_indexed machinery with the GFF preset: generic
-    format, 1-based inclusive, cols 1/4/5)."""
-    from hadoop_bam_spark.formats.gff import format_gff_line
-    from hadoop_bam_spark.formats.tabix import TabixIndex
-
-    def _tbi(names, merged):
-        return TabixIndex(
-            names, [merged[n] for n in names], 0, 1, 4, 5, ord("#"), 0, 0
-        )
-
-    def _add(stats, r, at, end_v):
-        stats.add(r[0], int(r[3]) - 1, int(r[4]), True, at, end_v)
-
-    _write_tabix_text_indexed(
-        df, GFF_COLS, path, sharded,
-        lambda r: format_gff_line(_gff_row(r)), ".gff3.bgz",
-        _tbi, _add, header=header, fmt="gff",
-    )
+    write_tabix(tbi(names, merged), path + ".tbi")
 
 
 def write_fastq(df: DataFrame, path: str, sharded: bool = False) -> None:
@@ -1436,51 +1303,4 @@ def write_parquet_reads(
         .write.mode("overwrite")
         .partitionBy(partition_col)
         .parquet(path)
-    )
-
-
-BEDGRAPH_COLS = ["contig", "start", "end", "value"]
-
-
-def write_bedgraph(
-    df: DataFrame, path: str, compress: bool | None = None,
-    index_tbi: bool = False, sharded: bool = False,
-) -> None:
-    """Write a BEDGRAPH_SCHEMA DataFrame as bedGraph text (.bedgraph or
-    BGZF .bedgraph.bgz — default by extension), converting the engine's
-    1-based inclusive intervals back to 0-based half-open on the rim
-    (formats/bedgraph.py). ``index_tbi=True`` (BGZF only) builds a
-    ``.tbi`` with the BED tabix preset (0-based flag, columns 1/2/3)
-    from executor-accumulated stats; ``sharded=True`` writes a directory
-    of standalone shards — same shapes as ``write_bed``."""
-    from hadoop_bam_spark.formats.bedgraph import format_bedgraph_line
-
-    if sharded and compress is None:
-        compress = True
-    if compress is None:
-        compress = path.endswith((".gz", ".bgz"))
-    if index_tbi and not compress:
-        raise ValueError("tabix index requires BGZF-compressed output")
-    if index_tbi:
-        _write_bedgraph_indexed(df, path, sharded)
-        return
-
-    def line(r):
-        return format_bedgraph_line(tuple(r))
-
-    _write_text_parts(df, BEDGRAPH_COLS, path, path + ".__parts__", "", line,
-                      compress,
-                      shard_ext=(".bedgraph.bgz" if compress else ".bedgraph")
-                      if sharded else None)
-
-
-def _write_bedgraph_indexed(df: DataFrame, path: str, sharded: bool) -> None:
-    """BGZF bedGraph write with executor-accumulated tabix stats (the
-    shared _write_tabix_text_indexed machinery, 0-based preset)."""
-    from hadoop_bam_spark.formats.bedgraph import format_bedgraph_line
-
-    _write_tabix_text_indexed(
-        df, BEDGRAPH_COLS, path, sharded,
-        lambda r: format_bedgraph_line(tuple(r)), ".bedgraph.bgz",
-        _zero_based_tbi_factory, _zero_based_add, fmt="bedgraph",
     )

@@ -31,9 +31,11 @@ def register_all(spark: SparkSession) -> None:
     from hadoop_bam_spark.sources.fastq_source import FastqDataSource
     from hadoop_bam_spark.sources.qseq_source import QseqDataSource
     from hadoop_bam_spark.sources.fasta_source import FastaDataSource
-    from hadoop_bam_spark.sources.bed_source import BEDDataSource
-    from hadoop_bam_spark.sources.bedgraph_source import BedGraphDataSource
-    from hadoop_bam_spark.sources.gff_source import GFFDataSource
+    from hadoop_bam_spark.sources.tabix_text import (
+        BEDDataSource,
+        BedGraphDataSource,
+        GFFDataSource,
+    )
 
     for ds in (
         AnySAMDataSource,
@@ -188,12 +190,13 @@ def list_format_files(path: str, *exts: str) -> list[str]:
 MAX_COORD = (1 << 31) - 2
 
 
-def collect_pushed_range(filters, name_attr: str, pos_attr: str):
-    """Shared Catalyst-filter collection for the genomic sources' pushdown:
-    returns (contig_names | None, lo, hi | None) from EqualTo/In on
-    ``name_attr`` and range predicates on ``pos_attr``. Callers synthesize
-    an interval from it (pruning only — every filter is re-applied by
-    Catalyst as the residual, so this can never change semantics).
+def pushed_intervals(filters, name_attr: str, pos_attr: str):
+    """Shared Catalyst-filter pushdown of the genomic sources: returns
+    (names | None, intervals | None) from EqualTo/In on ``name_attr`` and
+    range predicates on ``pos_attr``. ``intervals`` is one
+    ``(name, lo, hi)`` per pushed name, sorted, and None when no name was
+    pushed. Sources use it for pruning only — every filter is re-applied
+    by Catalyst as the residual, so this can never change semantics.
 
     ``lo`` starts at 0, not 1: when no lower bound is pushed the synthesized
     interval must admit coordinate-unset rows (VCF telomeric POS=0, BAM
@@ -211,7 +214,7 @@ def collect_pushed_range(filters, name_attr: str, pos_attr: str):
     )
 
     names = None
-    lo, hi = 0, None
+    lo, hi = 0, MAX_COORD
     for f in filters:
         attr = getattr(f, "attribute", None)  # Not/composites have none
         if isinstance(f, EqualTo) and attr == (name_attr,):
@@ -225,7 +228,9 @@ def collect_pushed_range(filters, name_attr: str, pos_attr: str):
             elif isinstance(f, GreaterThanOrEqual):
                 lo = max(lo, f.value)
             elif isinstance(f, LessThan):
-                hi = min(hi if hi is not None else MAX_COORD, f.value - 1)
+                hi = min(hi, f.value - 1)
             elif isinstance(f, LessThanOrEqual):
-                hi = min(hi if hi is not None else MAX_COORD, f.value)
-    return names, lo, hi
+                hi = min(hi, f.value)
+    if not names:
+        return names, None
+    return names, [(n, lo, hi) for n in sorted(names)]

@@ -30,23 +30,13 @@ import os
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from hadoop_bam_spark import fs
 from hadoop_bam_spark.formats import bam, bgzf
 from hadoop_bam_spark.formats.sam import SAM_SCHEMA
 from hadoop_bam_spark.formats.splitting_index import SplittingIndex
-from hadoop_bam_spark.sources import list_format_files
+from hadoop_bam_spark.sources import list_format_files, pushed_intervals
 
 DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
 
@@ -151,9 +141,6 @@ class BAMReader(DataSourceReader):
             size = fs.file_size(f)
             self._files.append((f, refs, first_voffset, size))
 
-    #: max 1-based SAM coordinate (htsjdk GenomicIndexUtil bound)
-    _MAX_POS = (1 << 31) - 2
-
     def pushFilters(self, filters):
         """Derive planning-time pruning from Catalyst filters; everything is
         returned as unsupported so Catalyst re-applies it (safe residual).
@@ -164,34 +151,11 @@ class BAMReader(DataSourceReader):
           same BAI chunk-span split pruning as ``option("intervals", ...)``.
           The interval selects every record whose alignment overlaps it — a
           superset of the pos-predicate rows — and Catalyst's residual
-          closes the gap, so this is pruning only, never semantics.
-          ``lo`` starts at 0 (not 1) so the synthesized interval — which
-          also feeds the reader's row-level overlap residual — keeps
-          RNAME-set/POS-unset records a bare equality filter selects."""
-        rnames: Optional[set] = None
-        lo, hi = 0, None
-        for f in filters:
-            attr = getattr(f, "attribute", None)  # Not/composites have none
-            if isinstance(f, EqualTo) and attr == ("rname",):
-                rnames = {f.value} if rnames is None else rnames & {f.value}
-            elif isinstance(f, In) and attr == ("rname",):
-                vals = set(f.value)
-                rnames = vals if rnames is None else rnames & vals
-            elif attr == ("pos",):
-                if isinstance(f, GreaterThan):
-                    lo = max(lo, f.value + 1)
-                elif isinstance(f, GreaterThanOrEqual):
-                    lo = max(lo, f.value)
-                elif isinstance(f, LessThan):
-                    hi = min(hi if hi is not None else self._MAX_POS, f.value - 1)
-                elif isinstance(f, LessThanOrEqual):
-                    hi = min(hi if hi is not None else self._MAX_POS, f.value)
-        self._rname_eq = rnames
-        if rnames and self._intervals is None:
-            self._intervals = [
-                (r, lo, hi if hi is not None else self._MAX_POS)
-                for r in sorted(rnames)
-            ]
+          closes the gap, so this is pruning only, never semantics
+          (``sources.pushed_intervals``)."""
+        self._rname_eq, pushed = pushed_intervals(filters, "rname", "pos")
+        if pushed and self._intervals is None:
+            self._intervals = pushed
         return filters
 
     @staticmethod

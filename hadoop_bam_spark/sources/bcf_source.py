@@ -316,22 +316,16 @@ class BCFReader(DataSourceReader):
             hdr, header_end = read_header(f, kind)
             self._files[f] = (kind, hdr, header_end)
 
-    #: max 1-based coordinate the binning scheme supports (int32 bound)
-    _MAX_POS = (1 << 31) - 2
-
     def pushFilters(self, filters):
         """Same Catalyst-filter pushdown policy as the VCF/BAM sources:
         contig/start predicates synthesize an interval for CSI/split
         pruning; all filters are returned unsupported (Catalyst residual
         keeps semantics exact)."""
-        from hadoop_bam_spark.sources import collect_pushed_range
+        from hadoop_bam_spark.sources import pushed_intervals
 
-        contigs, lo, hi = collect_pushed_range(filters, "contig", "start")
-        if contigs and self._intervals is None:
-            self._intervals = [
-                (c, lo, hi if hi is not None else self._MAX_POS)
-                for c in sorted(contigs)
-            ]
+        _, pushed = pushed_intervals(filters, "contig", "start")
+        if pushed and self._intervals is None:
+            self._intervals = pushed
         return filters
 
     def partitions(self):

@@ -125,19 +125,14 @@ class CRAMReader(DataSourceReader):
             )
             self._files.append((f, major, refs, rgs))
 
-    _MAX_POS = (1 << 31) - 2
-
     def pushFilters(self, filters):
         """rname/pos predicates -> container pruning (same policy as the
         BAM source: pruning only, every filter returned as residual)."""
-        from hadoop_bam_spark.sources import collect_pushed_range
+        from hadoop_bam_spark.sources import pushed_intervals
 
-        names, lo, hi = collect_pushed_range(filters, "rname", "pos")
-        if names and self._intervals is None:
-            self._pushed = [
-                (n, lo, hi if hi is not None else self._MAX_POS)
-                for n in sorted(names)
-            ]
+        _, pushed = pushed_intervals(filters, "rname", "pos")
+        if pushed and self._intervals is None:
+            self._pushed = pushed
         return filters
 
     def _entries(self, path: str):

@@ -13,8 +13,9 @@ tail → transform → land pipelines chain with exactly-once semantics at
 every hop, now including the interval-text family.
 
 ``TextStreamWriter`` is parameterized by (columns, line formatter,
-shard extension, optional per-shard header); the three formats bind it
-from their batch DataSources' ``streamWriter``.
+shard extension, optional per-shard header). ``text_stream_writer``
+binds it from a tabix-text spec for the BED / bedGraph / GFF3 batch
+DataSources' ``streamWriter``; the VCF sink binds it directly.
 """
 
 from __future__ import annotations
@@ -91,30 +92,10 @@ class TextStreamWriter(DataSourceStreamWriter):
         abort_shards(self._dir, messages)
 
 
-def bed_stream_writer(options) -> TextStreamWriter:
-    from hadoop_bam_spark.formats.bed import BED_COLS, format_bed_line
-
+def text_stream_writer(spec, options) -> TextStreamWriter:
+    """The stream sink of one tabix-text spec
+    (:mod:`hadoop_bam_spark.sources.tabix_text`): BGZF shards named
+    ``*<spec.shard_ext>.bgz``, each opening with the spec's header."""
     return TextStreamWriter(
-        options, BED_COLS, format_bed_line, ".bed.bgz", "bed")
-
-
-def bedgraph_stream_writer(options) -> TextStreamWriter:
-    from hadoop_bam_spark.formats.bedgraph import (
-        BEDGRAPH_COLS,
-        format_bedgraph_line,
-    )
-
-    return TextStreamWriter(
-        options, BEDGRAPH_COLS, format_bedgraph_line, ".bedgraph.bgz",
-        "bedgraph")
-
-
-def gff_stream_writer(options) -> TextStreamWriter:
-    from hadoop_bam_spark.formats.gff import GFF_COLS, format_gff_line
-
-    def line(row: tuple) -> str:
-        return format_gff_line(row[:8] + (dict(row[8]) if row[8] else {},))
-
-    return TextStreamWriter(
-        options, GFF_COLS, line, ".gff3.bgz", "gff",
-        header="##gff-version 3\n")
+        options, spec.cols, spec.format_row, spec.shard_ext + ".bgz",
+        spec.name, header=spec.header)

@@ -1,15 +1,20 @@
-"""Shared machinery for streaming tabix-text tail sources.
+"""Streaming tabix-text tail sources: ``spark.readStream.format("bed_stream"
+| "bedgraph_stream" | "gff_stream")``.
 
-``make_text_stream_source(name, schema, exts, parse_line)`` builds a
-``spark.readStream.format(name)`` DataSource that tails a landing
-directory for new files of the given extensions — the
+``make_text_stream_source(spec)`` builds, from a tabix-text spec
+(:mod:`hadoop_bam_spark.sources.tabix_text`), a
+``spark.readStream.format(spec.name + "_stream")`` DataSource that tails
+a landing directory for new files with the spec's extensions — the same
+tuple the batch ``format(spec.name)`` source lists. This is the
 continuously-delivered feed pattern (annotation drops, freshly-called
-peaks, coverage-track updates) joined downstream against record
-streams. Contract shared with ``vcf_stream``:
+peaks, coverage-track updates, this engine's own shard-sink output)
+joined downstream against record streams. Contract shared with
+``vcf_stream``:
 
 - offsets are the sorted processed-file list → exactly-once per file;
 - ``option("intervals", ...)`` prunes WHOLE deliveries through a
-  ``.tbi`` sidecar before any byte parses, with a per-row residual;
+  ``.tbi`` sidecar before any byte parses, with a per-row residual on
+  the spec's coordinate columns;
 - ``option("stringency", ...)`` governs malformed rows exactly like the
   batch sources (STRICT raises — and keeps raising on restart, since
   the file is already in the offsets; LENIENT warns and skips; SILENT
@@ -18,72 +23,69 @@ streams. Contract shared with ``vcf_stream``:
 - a shard-sink output directory is tailed through its commit
   manifests, so half-committed batches are never consumed.
 
-BED (``bed_stream``), bedGraph (``bedgraph_stream``) and GFF3/GTF
-(``gff_stream``) bind this with their line parsers; the parser must
-return None for header lines, and ``coords`` names the tuple indexes of
-(contig, start_1based, end_1based) for the interval residual (default
-(0, 1, 2); GFF passes (0, 3, 4)).
+``BEDStreamDataSource``, ``BedGraphStreamDataSource`` and
+``GFFStreamDataSource`` are the three bindings.
 """
 
 from __future__ import annotations
 
 import gzip
 import os
-from typing import Callable, Iterator, Optional, Sequence
+from typing import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from hadoop_bam_spark.sources import local_path
+from hadoop_bam_spark.sources.tabix_text import BED, BEDGRAPH, GFF, TabixTextSpec
 from hadoop_bam_spark.streaming.lazyrows import LazyFileRows
 from hadoop_bam_spark.streaming.vcf_stream import _tbi_says_empty
 
 
-def _iter_text_rows(parse_line: Callable[[str], Optional[tuple]], fmt: str,
-                    coords=(0, 1, 2)):
-    ci, si, ei = coords
+def iter_text_rows(path: str, spec: TabixTextSpec, intervals=None,
+                   stringency: str = "strict") -> Iterator[tuple]:
+    """Rows of one delivered file, overlap-filtered on ``spec.coords``."""
+    from hadoop_bam_spark.sources import apply_stringency
 
-    def it(path: str, intervals=None, stringency: str = "strict") -> Iterator[tuple]:
-        from hadoop_bam_spark.sources import apply_stringency
-
-        if _tbi_says_empty(path, intervals):
-            return
-        with open(path, "rb") as probe:
-            magic = probe.read(2)
-        fh = (gzip.open(path, "rt", encoding="utf-8") if magic == b"\x1f\x8b"
-              else open(path, "rt", encoding="utf-8"))
-        with fh:
-            for line in fh:
-                try:
-                    row = parse_line(line.rstrip("\r\n"))
-                except ValueError as e:
-                    # One malformed row must not permanently kill the
-                    # query (the file is already in the offsets, so a
-                    # strict failure would re-raise on every restart —
-                    # that is strict's documented contract; lenient/
-                    # silent skip and keep the stream alive).
-                    apply_stringency(stringency, e, fmt)
-                    continue
-                if row is None:
-                    continue
-                if intervals is None or any(
-                    c == row[ci] and row[si] <= stop and lo <= row[ei]
-                    for c, lo, stop in intervals
-                ):
-                    yield row
-    return it
+    if _tbi_says_empty(path, intervals):
+        return
+    ci, si, ei = spec.coords
+    fmt = f"{spec.name}_stream"
+    with open(path, "rb") as probe:
+        magic = probe.read(2)
+    fh = (gzip.open(path, "rt", encoding="utf-8") if magic == b"\x1f\x8b"
+          else open(path, "rt", encoding="utf-8"))
+    with fh:
+        for line in fh:
+            try:
+                row = spec.parse_line(line.rstrip("\r\n"))
+            except ValueError as e:
+                # One malformed row must not permanently kill the
+                # query (the file is already in the offsets, so a
+                # strict failure would re-raise on every restart —
+                # that is strict's documented contract; lenient/
+                # silent skip and keep the stream alive).
+                apply_stringency(stringency, e, fmt)
+                continue
+            if row is None:
+                continue
+            if intervals is None or any(
+                c == row[ci] and row[si] <= stop and lo <= row[ei]
+                for c, lo, stop in intervals
+            ):
+                yield row
 
 
 class TextTailReader(SimpleDataSourceStreamReader):
-    """Directory-tail reader parameterized by extensions + line parser."""
+    """Directory-tail reader over one tabix-text spec."""
 
-    def __init__(self, options, exts: Sequence[str], iter_rows, fmt: str):
+    def __init__(self, options, spec: TabixTextSpec):
+        self._fmt = f"{spec.name}_stream"
         path = options.get("path")
         if not path:
-            raise ValueError(f"{fmt} source requires a path (directory)")
+            raise ValueError(f"{self._fmt} source requires a path (directory)")
         self._dir = local_path(path)
-        self._exts = tuple(exts)
-        self._iter_rows = iter_rows
-        self._fmt = fmt
+        self._spec = spec
+        self._exts = spec.extensions
         from hadoop_bam_spark.sources import stringency_option
 
         self._stringency = stringency_option(options)
@@ -117,8 +119,8 @@ class TextTailReader(SimpleDataSourceStreamReader):
         new = [f for f in self._list() if f not in seen]
         rows = LazyFileRows(
             [os.path.join(self._dir, n) for n in new],
-            self._iter_rows,
-            (self._intervals, self._stringency),
+            iter_text_rows,
+            (self._spec, self._intervals, self._stringency),
         )
         return rows, {"processed": sorted(seen | set(new))}
 
@@ -134,16 +136,17 @@ class TextTailReader(SimpleDataSourceStreamReader):
                     "missing on disk; restore the file (or reset the "
                     "checkpoint) to keep exactly-once semantics"
                 )
-            yield from self._iter_rows(full, self._intervals, self._stringency)
+            yield from iter_text_rows(
+                full, self._spec, self._intervals, self._stringency)
 
     def commit(self, end: dict) -> None:
         pass
 
 
-def make_text_stream_source(name: str, schema, exts: Sequence[str],
-                            parse_line, coords=(0, 1, 2)) -> type:
-    """Build a DataSource class tailing ``exts`` files with ``parse_line``."""
-    iter_rows = _iter_text_rows(parse_line, name, coords)
+def make_text_stream_source(spec: TabixTextSpec) -> type:
+    """Build the ``<spec.name>_stream`` DataSource class tailing the
+    spec's files."""
+    name = f"{spec.name}_stream"
 
     class _TextStreamDataSource(DataSource):
         @classmethod
@@ -151,10 +154,15 @@ def make_text_stream_source(name: str, schema, exts: Sequence[str],
             return name
 
         def schema(self):  # noqa: D102
-            return schema
+            return spec.schema
 
         def simpleStreamReader(self, schema) -> TextTailReader:
-            return TextTailReader(self.options, exts, iter_rows, name)
+            return TextTailReader(self.options, spec)
 
     _TextStreamDataSource.__name__ = f"{name}_DataSource"
     return _TextStreamDataSource
+
+
+BEDStreamDataSource = make_text_stream_source(BED)
+BedGraphStreamDataSource = make_text_stream_source(BEDGRAPH)
+GFFStreamDataSource = make_text_stream_source(GFF)

@@ -1,5 +1,5 @@
 """BED source/sink: codec edges, split invariance, tabix pruning,
-stringency, sharding, projection (sources/bed_source.py, formats/bed.py,
+stringency, sharding, projection (sources/tabix_text.py, formats/bed.py,
 sinks.write_bed). Tabix machinery reference: VCFInputFormat.java:388-472
 applied format-agnostically."""
 

@@ -131,16 +131,19 @@ class TestSourceSink:
 
     def test_tabix_pushdown_prunes_and_matches(self, bg_spark, tmp_path):
         from hadoop_bam_spark import sinks
-        from hadoop_bam_spark.sources.bedgraph_source import BedGraphReader
+        from hadoop_bam_spark.sources.tabix_text import (
+            BEDGRAPH,
+            TabixTextReader,
+        )
 
         rows = self._big_rows(seed=11)
         p = str(tmp_path / "idx.bedgraph.bgz")
         sinks.write_bedgraph(_df(bg_spark, rows), p, index_tbi=True)
 
         iv = "chr2:200000-400000"
-        r_all = BedGraphReader({"path": p, "split_size": "8192"})
-        r_pruned = BedGraphReader(
-            {"path": p, "split_size": "8192", "intervals": iv})
+        r_all = TabixTextReader(BEDGRAPH, {"path": p, "split_size": "8192"})
+        r_pruned = TabixTextReader(
+            BEDGRAPH, {"path": p, "split_size": "8192", "intervals": iv})
         assert len(r_pruned.partitions()) < len(r_all.partitions())
 
         got = _collect(

@@ -1,4 +1,4 @@
-"""GFF3 source/sink (sources/gff_source.py, formats/gff.py,
+"""GFF3 source/sink (sources/tabix_text.py, formats/gff.py,
 sinks.write_gff) — the shared tabix text stack's second binding; the
 split/pruning machinery itself is exhaustively covered in test_bed.py
 and test_foreign_indexes.py."""

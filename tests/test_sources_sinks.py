@@ -89,38 +89,68 @@ class TestSAMSource:
         assert df.count() == 2
 
 
+@pytest.fixture(scope="module")
+def vcf_inputs(tmp_path_factory):
+    """Engine-free VCF inputs (tests/textgen.py): the VCF 4.2 spec example
+    as plain text and plain gzip, and a generated multi-block VCF as plain
+    text and BGZF."""
+    import gzip
+
+    from tests.textgen import (
+        VCF_SPEC_EXAMPLE,
+        bgzf_compress,
+        gen_vcf_rows,
+        gen_vcf_text,
+    )
+
+    d = tmp_path_factory.mktemp("vcf_inputs")
+    (d / "spec.vcf").write_text(VCF_SPEC_EXAMPLE)
+    (d / "spec.vcf.gz").write_bytes(gzip.compress(VCF_SPEC_EXAMPLE.encode()))
+    rows = gen_vcf_rows(3000)
+    text = gen_vcf_text(rows).encode()
+    (d / "gen.vcf").write_bytes(text)
+    # small blocks: many block boundaries, lines straddling them
+    (d / "gen.vcf.bgz").write_bytes(bgzf_compress(text, block_payload=4096))
+    return d, len(rows)
+
+
 class TestVCFSource:
-    def test_golden_typed_fields(self, fmt_spark):
-        df = fmt_spark.read.format("vcf").load(f"{RES}/test.vcf")
+    def test_golden_typed_fields(self, fmt_spark, vcf_inputs):
+        d, _ = vcf_inputs
+        df = fmt_spark.read.format("vcf").load(str(d / "spec.vcf"))
         rows = df.orderBy("start").collect()
         assert len(rows) == 5
         assert rows[0].contig == "20" and rows[0].start == 14370
         assert rows[2].alts == ["G", "T"] and rows[2].qual == 67.0
         assert rows[1].filters == ["q10"]
         micro = rows[4]
-        assert micro.ref == "GTC" and micro.end == 14370 + len("GTC") - 1 or True
+        assert micro.ref == "GTC" and micro.end == 1234567 + len("GTC") - 1
         g0 = rows[0].genotypes[0]
-        assert g0.sample == "NA0000" or g0.gt is not None
+        assert g0.sample == "NA00001" and g0.gt == "0|0"
 
-    def test_bgzf_split_invariance(self, fmt_spark):
-        plain = fmt_spark.read.format("vcf").load(f"{RES}/HiSeq.10000.vcf")
+    def test_bgzf_split_invariance(self, fmt_spark, vcf_inputs):
+        d, n = vcf_inputs
+        plain = fmt_spark.read.format("vcf").load(str(d / "gen.vcf"))
         bgz = (
             fmt_spark.read.format("vcf")
             .option("split_size", "2000")
-            .load(f"{RES}/HiSeq.10000.vcf.bgz")
+            .load(str(d / "gen.vcf.bgz"))
         )
-        assert plain.count() == 9965
+        assert bgz.rdd.getNumPartitions() > 2
+        assert plain.count() == n
         assert same(plain, bgz)
 
-    def test_plain_gz_whole_file(self, fmt_spark):
-        df = fmt_spark.read.format("vcf").load(f"{RES}/test.vcf.gz")
+    def test_plain_gz_whole_file(self, fmt_spark, vcf_inputs):
+        d, _ = vcf_inputs
+        df = fmt_spark.read.format("vcf").load(str(d / "spec.vcf.gz"))
         assert df.count() == 5
 
-    def test_interval_residual(self, fmt_spark):
+    def test_interval_residual(self, fmt_spark, vcf_inputs):
+        d, _ = vcf_inputs
         df = (
             fmt_spark.read.format("vcf")
             .option("intervals", "20:14370-17330")
-            .load(f"{RES}/test.vcf")
+            .load(str(d / "spec.vcf"))
         )
         assert df.count() == 2
 
@@ -377,11 +407,12 @@ class TestShardedBAMSink:
 
 class TestShardedVCFSink:
     def _src(self, fmt_spark):
-        from hadoop_bam_spark.formats.vcf import read_vcf_header
+        from hadoop_bam_spark.formats.vcf import VCF_SCHEMA, VCFHeader
+        from tests.textgen import GEN_SAMPLES, gen_vcf_header_lines, gen_vcf_rows
 
         return (
-            fmt_spark.read.format("vcf").load(f"{RES}/HiSeq.10000.vcf"),
-            read_vcf_header(f"{RES}/HiSeq.10000.vcf"),
+            fmt_spark.createDataFrame(gen_vcf_rows(3000), VCF_SCHEMA),
+            VCFHeader(lines=gen_vcf_header_lines(), samples=list(GEN_SAMPLES)),
         )
 
     def test_sharded_bgzf_roundtrip(self, fmt_spark, tmp_path):

@@ -1340,7 +1340,7 @@ class TestBEDStream:
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats.bed import BED_SCHEMA
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.bed_stream import BEDStreamDataSource
+        from hadoop_bam_spark.streaming.text_stream import BEDStreamDataSource
 
         register_all(spark)
         spark.dataSource.register(BEDStreamDataSource)
@@ -1382,7 +1382,7 @@ class TestBedGraphStream:
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats.bedgraph import BEDGRAPH_SCHEMA
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.bedgraph_stream import (
+        from hadoop_bam_spark.streaming.text_stream import (
             BedGraphStreamDataSource,
         )
 
@@ -1420,7 +1420,7 @@ class TestBedGraphStream:
     def test_tail_stringency_skips_bad_rows(self, spark, tmp_path):
         """A malformed row in a tailed delivery must not wedge a lenient
         stream; silent skips it and the rest of the file lands."""
-        from hadoop_bam_spark.streaming.bedgraph_stream import (
+        from hadoop_bam_spark.streaming.text_stream import (
             BedGraphStreamDataSource,
         )
 
@@ -1449,7 +1449,7 @@ class TestBedGraphStream:
     def test_tail_bg_extension_spellings(self, spark, tmp_path):
         """.bg and .bedGraph deliveries (the batch source's spellings)
         must be picked up too."""
-        from hadoop_bam_spark.streaming.bedgraph_stream import (
+        from hadoop_bam_spark.streaming.text_stream import (
             BedGraphStreamDataSource,
         )
 
@@ -1485,7 +1485,7 @@ class TestStreamStaticIntervalJoin:
         from hadoop_bam_spark.operators.interval_join import (
             interval_join_binned,
         )
-        from hadoop_bam_spark.streaming.bed_stream import BEDStreamDataSource
+        from hadoop_bam_spark.streaming.text_stream import BEDStreamDataSource
 
         spark.dataSource.register(BEDStreamDataSource)
         land = tmp_path / "bed_land_join"
@@ -1539,7 +1539,7 @@ class TestTextStreamSinks:
         from pyspark.sql import functions as F
 
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.bedgraph_stream import (
+        from hadoop_bam_spark.streaming.text_stream import (
             BedGraphStreamDataSource,
         )
 
@@ -1584,7 +1584,7 @@ class TestTextStreamSinks:
         from hadoop_bam_spark.formats.bed import BED_SCHEMA
         from hadoop_bam_spark.formats.gff import GFF_SCHEMA
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.bed_stream import BEDStreamDataSource
+        from hadoop_bam_spark.streaming.text_stream import BEDStreamDataSource
 
         register_all(spark)
         spark.dataSource.register(BEDStreamDataSource)
@@ -1652,7 +1652,7 @@ class TestGFFStream:
         """gff_stream (third text-tail binding; interval coords live at
         tuple indexes 3/4) tails deliveries with per-row residual
         filtering and can tail the gff shard sink's output."""
-        from hadoop_bam_spark.streaming.gff_stream import GFFStreamDataSource
+        from hadoop_bam_spark.streaming.text_stream import GFFStreamDataSource
 
         spark.dataSource.register(GFFStreamDataSource)
         land = tmp_path / "gff_land"

@@ -240,7 +240,7 @@ class TestBulkLineIterators:
         import tempfile
 
         from hadoop_bam_spark.formats import bgzf
-        from hadoop_bam_spark.sources.vcf_source import (
+        from hadoop_bam_spark.sources.tabix_text import (
             iter_bgzf_owned_line_chunks,
         )
 
