@@ -316,6 +316,99 @@ class PartIndexStats:
             if prev is None or at < prev:
                 r.linear[w] = at
 
+    def add_batch(self, rid, pos0, end0, mapped, at, end_v):
+        """Vector form of :meth:`add` over one batch of records written in
+        file order (numpy arrays; ``at``/``end_v`` are each record's
+        part-local start and end voffsets, with end_v >= at). Records with
+        no coordinate (rid < 0 or pos0 < 0) count toward ``n_no_coor``, as
+        in :meth:`add_sam_row`. Leaves the state per-record ``add`` would.
+
+        Chunks: records are stably grouped by (reference, bin). A record
+        opens a new chunk when its start block is past the block of the
+        running max of end_v before it in its bin — ``add``'s rule, as a
+        chunk's end IS that running max when every end_v >= its at. The
+        last chunk of each bin carries into the next batch."""
+        import numpy as np
+
+        from hadoop_bam_spark.formats.bam_venc import reg2bin_vec
+
+        rid, pos0, end0, at, end_v = (
+            np.asarray(x, dtype=np.int64) for x in (rid, pos0, end0, at, end_v))
+        mapped = np.asarray(mapped, dtype=bool)
+        placed = (rid >= 0) & (pos0 >= 0)
+        if not bool(placed.all()):
+            self.n_no_coor += int(len(placed) - placed.sum())
+            rid, pos0, end0, mapped, at, end_v = (
+                x[placed] for x in (rid, pos0, end0, mapped, at, end_v))
+        if not len(rid):
+            return
+
+        # per-reference counters; new keys in first-appearance order
+        keys, first, inv = np.unique(rid, return_index=True, return_inverse=True)
+        n_map = np.bincount(inv, weights=mapped, minlength=len(keys))
+        n_all = np.bincount(inv, minlength=len(keys))
+        last_end = np.full(len(keys), -1, dtype=np.int64)
+        np.maximum.at(last_end, inv, end_v)
+        for j in np.argsort(first).tolist():
+            key = int(keys[j])
+            r = self.refs.get(key)
+            if r is None:
+                r = self.refs[key] = _PartRef()
+                self.order.append(key)
+            r.n_mapped += int(n_map[j])
+            r.n_unmapped += int(n_all[j] - n_map[j])
+            if r.off_beg < 0:
+                r.off_beg = int(at[first[j]])
+            r.off_end = max(r.off_end, int(last_end[j]))
+
+        # chunks per (reference, bin)
+        kb = (rid << 16) | reg2bin_vec(pos0, end0)
+        order = np.argsort(kb, kind="stable")
+        kb, a, e = kb[order], at[order], end_v[order]
+        seg_start = np.ones(len(kb), dtype=bool)
+        seg_start[1:] = kb[1:] != kb[:-1]
+        seg = np.cumsum(seg_start) - 1
+        seg_keys = kb[seg_start].tolist()
+        carry = np.array(
+            [self.refs[k >> 16].bins.get(k & 0xFFFF, [(-1, -1)])[-1][1]
+             for k in seg_keys], dtype=np.int64)
+        # segmented running max of end_v: dense ranks offset per segment
+        # keep np.maximum.accumulate from crossing segment boundaries
+        uniq, rank = np.unique(e, return_inverse=True)
+        stride = len(uniq)
+        run_max = uniq[np.maximum.accumulate(seg * stride + rank) - seg * stride]
+        prior = np.empty_like(e)
+        prior[0] = -1
+        prior[1:] = run_max[:-1]
+        prior[seg_start] = -1
+        prior = np.maximum(prior, carry[seg])
+        opens = (prior < 0) | ((a >> 16) > (prior >> 16))
+        run_start = np.flatnonzero(seg_start | opens)
+        run_end = np.maximum.reduceat(e, run_start)
+        for i, mx in zip(run_start.tolist(), run_end.tolist()):
+            k = seg_keys[seg[i]]
+            bl = self.refs[k >> 16].bins.setdefault(k & 0xFFFF, [])
+            if opens[i]:
+                bl.append((int(a[i]), mx))
+            else:
+                bl[-1] = (bl[-1][0], max(bl[-1][1], mx))
+
+        # linear index: min start voffset per (reference, 16 kb window)
+        fw = pos0 >> LINEAR_SHIFT
+        nw = (np.maximum(pos0, end0 - 1) >> LINEAR_SHIFT) - fw + 1
+        rec = np.repeat(np.arange(len(rid)), nw)
+        first_of = np.cumsum(nw) - nw
+        win = fw[rec] + np.arange(len(rec)) - first_of[rec]
+        wkeys, winv = np.unique((rid[rec] << 32) | win, return_inverse=True)
+        wmin = np.full(len(wkeys), np.iinfo(np.int64).max, dtype=np.int64)
+        np.minimum.at(wmin, winv, at[rec])
+        for k, v in zip(wkeys.tolist(), wmin.tolist()):
+            lin = self.refs[k >> 32].linear
+            w = k & 0xFFFFFFFF
+            prev = lin.get(w)
+            if prev is None or v < prev:
+                lin[w] = v
+
     def add_sam_row(self, row: tuple, ref_index: dict, at: int, end_v: int):
         """Accumulate one SAM_SCHEMA row being written at [at, end_v)."""
         rname, pos, flag, cigar = row[2], row[3], row[1], row[5]

@@ -549,30 +549,22 @@ class BAMBatchDecoder:
         return _string_array(vals, offsets, null_mask=null)
 
     def _tags_column(self, buf, arr, tag_start, rec_end):
-        """Aux tags -> map<string,string>.
+        """Aux tags -> map<string,string>, in wire order.
 
-        Fast path: real BAMs overwhelmingly carry the SAME tag structure on
-        every record (same tags, same wire types, fixed widths — e.g.
-        ``NM:i MD:Z`` from one aligner). When every record's tag block has
-        equal length and fixed-width-only types matching the first record's
-        layout, values extract as matrix columns with one vectorized
-        int->str conversion per tag. Anything else (Z/H/B strings, mixed
-        layouts) falls back to the per-record parser."""
+        The tag blocks are gathered into one buffer and walked column-wise
+        by :func:`_walk_tags`, for any mix of tag layouts across the batch
+        (tag-less unmapped reads, ``MD:Z``/``RG:Z`` strings, arrays). Only a
+        batch that :func:`_walk_tags` declines (a malformed block, a repeated
+        tag, non-ASCII text) takes the per-record ``_decode_tags`` loop,
+        which raises the row codec's exact errors."""
+        tlen = np.maximum(rec_end - tag_start, 0)
+        tb, toff = _gather(arr, tag_start, tlen)
+        walked = _walk_tags(tb, toff)
+        if walked is not None:
+            return walked
         import pyarrow as pa
 
         n = len(tag_start)
-        tlen = rec_end - tag_start
-        if n == 0 or int(tlen.max()) == 0:
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            return pa.MapArray.from_arrays(
-                pa.array(offsets, type=pa.int32()),
-                pa.array([], type=pa.string()),
-                pa.array([], type=pa.string()),
-            )
-        if bool((tlen == tlen[0]).all()):
-            fast = self._tags_fixed_fast(arr, tag_start, int(tlen[0]), n)
-            if fast is not None:
-                return fast
         keys: list = []
         vals: list = []
         offsets = np.zeros(n + 1, dtype=np.int32)
@@ -590,51 +582,180 @@ class BAMBatchDecoder:
             pa.array(vals, type=pa.string()),
         )
 
-    _FIXED_TAG_WIDTH = {"c": 1, "C": 1, "s": 2, "S": 2, "i": 4, "I": 4}
-    _FIXED_TAG_DTYPE = {"c": "<i1", "C": "<u1", "s": "<i2", "S": "<u2",
-                        "i": "<i4", "I": "<u4"}
 
-    def _tags_fixed_fast(self, arr, tag_start, L, n):
-        """Vectorized tag decode for a constant fixed-width layout, or None
-        when the layout doesn't qualify / rows disagree with row 0."""
-        import pyarrow as pa
+#: Aux value width by wire type byte: the fixed types carry their width,
+#: Z/H are NUL-terminated (0), B is a counted array (-1), anything else is
+#: an unknown type (-2).
+_TAG_WIDTH = np.full(256, -2, dtype=np.int64)
+for _c, _w in zip("AcCsSiIf", (1, 1, 1, 2, 2, 4, 4, 4)):
+    _TAG_WIDTH[ord(_c)] = _w
+_TAG_WIDTH[ord("Z")] = _TAG_WIDTH[ord("H")] = 0
+_TAG_WIDTH[ord("B")] = -1
 
-        mat = arr[tag_start[:, None].astype(np.int32)
-                  + np.arange(L, dtype=np.int32)]
-        row0 = bytes(mat[0])
-        fields = []  # (tag, typ, value_offset)
-        p = 0
-        while p + 3 <= L:
-            typ = chr(row0[p + 2])
-            w = self._FIXED_TAG_WIDTH.get(typ)
-            if w is None or p + 3 + w > L:
+#: B-array element width by subtype byte (0 = not a valid subtype).
+_B_ELEM_WIDTH = np.zeros(256, dtype=np.int64)
+for _c, _w in zip("cCsSiIf", (1, 1, 2, 2, 4, 4, 4)):
+    _B_ELEM_WIDTH[ord(_c)] = _w
+
+_INT_TAG_DTYPES = {ord("c"): "<i1", ord("C"): "<u1", ord("s"): "<i2",
+                   ord("S"): "<u2", ord("i"): "<i4", ord("I"): "<u4"}
+
+#: Z strings the bare tag encoder would re-type, so tag_value_repr gives
+#: them a ``Z:`` prefix: guess_tag_encoding's prefix, int, array and float
+#: rules (formats/sam.py) in RE2 spelling. Python's ``$`` also matches
+#: before one trailing newline, hence ``\n?$``.
+_Z_RETYPED = (
+    r"^(?:[AcCsSiIfZH]:|[cCsSiIf],|[-+]?[0-9]+\n?$"
+    r"|[-+]?(?:(?:[0-9]+\.[0-9]*|\.[0-9]+)(?:[eE][-+]?[0-9]+)?"
+    r"|[0-9]+[eE][-+]?[0-9]+)\n?$)"
+)
+
+
+def _walk_tags(tb: np.ndarray, toff: np.ndarray):
+    """Column-wise aux-tag decode of the tag blocks tb[toff[i]:toff[i+1]].
+
+    One cursor per record; each step reads every active record's 3-byte
+    tag header at once, sizes its value from the type tables (Z/H through
+    one ``searchsorted`` over the buffer's NUL positions) and advances,
+    until no record has a full header left. Values come out per type in
+    bulk: integers through one Arrow cast, A/Z/H through one variable-slice
+    gather plus one regex pass for the ``Z:`` prefix rule; only f and B
+    entries are formatted one by one, with the row codec's own code.
+
+    Returns a map<string,string> array, or None when the row codec must
+    decide: a malformed block (unknown type, overrun, missing NUL), a
+    repeated tag, or non-ASCII bytes in a key or text value."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(toff) - 1
+    end = toff[1:]
+    cur = toff[:-1].copy()
+    nul = np.flatnonzero(tb == 0)
+    walked = []  # per step: (active rows, header positions, value ends)
+    act = np.flatnonzero(end - cur >= 3)
+    while act.size:
+        p, e = cur[act], end[act]
+        w = _TAG_WIDTH[tb[p + 2]]
+        if bool((w == -2).any()):
+            return None
+        vend = p + 3 + np.maximum(w, 0)
+        nxt = vend.copy()
+        s = w == 0
+        if bool(s.any()):
+            k = np.searchsorted(nul, p[s] + 3)
+            if bool((k >= len(nul)).any()):
                 return None
-            fields.append((row0[p : p + 2].decode("latin-1"), typ, p + 3))
-            p += 3 + w
-        if p != L or not fields:
+            z = nul[k]
+            if bool((z >= e[s]).any()):
+                return None
+            vend[s], nxt[s] = z, z + 1
+        b = w == -1
+        if bool(b.any()):
+            pb = p[b]
+            if bool((pb + 8 > e[b]).any()):
+                return None
+            ew = _B_ELEM_WIDTH[tb[pb + 3]]
+            cnt = (tb[(pb + 4)[:, None] + np.arange(4)].copy()
+                   .view("<i4").reshape(-1).astype(np.int64))
+            if bool((ew == 0).any()) or bool((cnt < 0).any()):
+                return None
+            vend[b] = nxt[b] = pb + 8 + cnt * ew
+        if bool((nxt > e).any()):
             return None
-        # every row must share row 0's tag headers byte-for-byte
-        hdr_pos = np.array(
-            [off - 3 + j for _, _, off in fields for j in range(3)],
-            dtype=np.int32,
-        )
-        if not bool((mat[:, hdr_pos] == mat[0, hdr_pos]).all()):
-            return None
-        k = len(fields)
-        val_cols = np.empty((n, k), dtype=object)
-        for j, (_, typ, off) in enumerate(fields):
-            w = self._FIXED_TAG_WIDTH[typ]
-            sub = np.ascontiguousarray(mat[:, off : off + w])
-            v = sub.view(self._FIXED_TAG_DTYPE[typ]).reshape(-1)
-            # plain decimal strings always re-encode as ints -> no prefix
-            # needed (formats/sam.py tag_value_repr contract)
-            val_cols[:, j] = v.astype("U11").astype(object)
-        keys_flat = np.tile(
-            np.array([t for t, _, _ in fields], dtype=object), n
-        )
-        offsets = np.arange(0, (n + 1) * k, k, dtype=np.int32)
+        walked.append((act, p, vend))
+        cur[act] = nxt
+        act = act[end[act] - nxt >= 3]
+
+    # a record takes part in steps 0..count-1, so its entry of step j sits
+    # at map offset + j: wire order without a sort
+    counts = np.zeros(n, dtype=np.int64)
+    for act, _, _ in walked:
+        counts[act] += 1
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(counts, out=offsets[1:])
+    m = int(offsets[-1])
+    if m == 0:
         return pa.MapArray.from_arrays(
-            pa.array(offsets, type=pa.int32()),
-            pa.array(keys_flat, type=pa.string()),
-            pa.array(val_cols.reshape(-1), type=pa.string()),
-        )
+            pa.array(offsets.astype(np.int32)), pa.array([], pa.string()),
+            pa.array([], pa.string()))
+    hdr = np.empty(m, dtype=np.int64)
+    vend = np.empty(m, dtype=np.int64)
+    for j, (act, p, ve) in enumerate(walked):
+        at = offsets[act] + j
+        hdr[at], vend[at] = p, ve
+    row = np.repeat(np.arange(n, dtype=np.int64), counts)
+    k0, k1 = tb[hdr], tb[hdr + 1]
+    if int(k0.max()) >= 128 or int(k1.max()) >= 128:
+        return None
+    code = np.sort((row << 16) | (k0.astype(np.int64) << 8) | k1)
+    if bool((code[1:] == code[:-1]).any()):
+        return None  # repeated tag: the row codec's dict keeps the last
+    kb = np.empty(2 * m, dtype=np.uint8)
+    kb[0::2], kb[1::2] = k0, k1
+    keys = pa.StringArray.from_buffers(
+        m, pa.py_buffer(np.arange(0, 2 * m + 1, 2, dtype=np.int32)),
+        pa.py_buffer(kb))
+
+    typ = tb[hdr + 2]
+    vstart = hdr + 3
+    parts, placed = [], np.empty(m, dtype=np.int64)
+    base = 0
+
+    is_int = np.isin(typ, list(_INT_TAG_DTYPES))
+    if bool(is_int.any()):
+        sel = np.flatnonzero(is_int)
+        ints = np.empty(len(sel), dtype=np.int64)
+        for t, dt in _INT_TAG_DTYPES.items():
+            hit = typ[sel] == t
+            if bool(hit.any()):
+                wd = np.dtype(dt).itemsize
+                at = vstart[sel[hit]]
+                ints[hit] = (tb[at[:, None] + np.arange(wd)].copy()
+                             .view(dt).reshape(-1))
+        parts.append(pc.cast(pa.array(ints), pa.string()))
+        placed[sel] = base + np.arange(len(sel))
+        base += len(sel)
+
+    is_txt = (typ == ord("Z")) | (typ == ord("A")) | (typ == ord("H"))
+    if bool(is_txt.any()):
+        sel = np.flatnonzero(is_txt)
+        vals, voff = _gather(tb, vstart[sel], vend[sel] - vstart[sel])
+        if vals.size and int(vals.max()) >= 128:
+            return None
+        txt = pa.StringArray.from_buffers(
+            len(sel), pa.py_buffer(voff.astype(np.int32)),
+            pa.py_buffer(vals))
+        ttyp = typ[sel]
+        need = ttyp != ord("Z")
+        z = ~need
+        if bool(z.any()):
+            need[z] = pc.match_substring_regex(
+                txt.filter(pa.array(z)), _Z_RETYPED).to_numpy(
+                    zero_copy_only=False)
+        if bool(need.any()):
+            prefix = pa.StringArray.from_buffers(
+                len(sel), pa.py_buffer(np.arange(len(sel) + 1, dtype=np.int32)),
+                pa.py_buffer(np.ascontiguousarray(ttyp)))
+            txt = pc.if_else(pa.array(need),
+                             pc.binary_join_element_wise(prefix, txt, ":"),
+                             txt)
+        parts.append(txt)
+        placed[sel] = base + np.arange(len(sel))
+        base += len(sel)
+
+    other = np.flatnonzero(~is_int & ~is_txt)  # f and B
+    if len(other):
+        scalar = []
+        try:
+            for h, v in zip(hdr[other].tolist(), vend[other].tolist()):
+                (val,) = _decode_tags(tb[h:v].tobytes()).values()
+                scalar.append(val)
+        except (ValueError, OverflowError):
+            return None
+        parts.append(pa.array(scalar, type=pa.string()))
+        placed[other] = base + np.arange(len(other))
+
+    values = pa.concat_arrays(parts).take(pa.array(placed))
+    return pa.MapArray.from_arrays(
+        pa.array(offsets.astype(np.int32)), keys, values)

@@ -258,6 +258,23 @@ class BGZFWriter:
             self.block_coffsets[u // MAX_BLOCK_PAYLOAD], u % MAX_BLOCK_PAYLOAD
         )
 
+    def voffsets_of_u(self, u):
+        """Vector form of :meth:`voffset_of_u`: int64 virtual offsets of
+        the uncompressed positions ``u`` (each <= u_total)."""
+        import numpy as np
+
+        u = np.asarray(u, dtype=np.int64)
+        tail = u >= self._u_flushed
+        out = (self._coffset << 16) + (u - self._u_flushed)
+        if not bool(tail.all()):
+            head = ~tail
+            blk = u[head] // MAX_BLOCK_PAYLOAD
+            lo = int(blk.min())
+            table = np.array(self.block_coffsets[lo : int(blk.max()) + 1],
+                             dtype=np.int64)
+            out[head] = (table[blk - lo] << 16) | (u[head] % MAX_BLOCK_PAYLOAD)
+        return out
+
     def write(self, data: bytes) -> None:
         self._buf += data
         while len(self._buf) >= MAX_BLOCK_PAYLOAD:

@@ -133,8 +133,9 @@ def write_bam(
 
         Record voffsets (splitting-index granularity anchors, BAI chunk
         spans) are recovered analytically AFTER each bulk write via the
-        writer's block table (BGZFWriter.voffset_of_u) instead of a tell
-        per record — the per-record cost is gone from the hot path."""
+        writer's block table (BGZFWriter.voffsets_of_u), and the BAI stats
+        accumulate once per batch (PartIndexStats.add_batch): no per-record
+        Python on the hot path."""
         import numpy as np
 
         from hadoop_bam_spark.formats.bam_venc import BAMBatchEncoder
@@ -168,20 +169,13 @@ def write_bam(
                 )
                 if index_granularity:
                     first = (-nrec) % index_granularity
-                    for i in range(first, len(rec_lens), index_granularity):
-                        offsets.append(w.voffset_of_u(int(u_starts[i])))
+                    offsets.extend(w.voffsets_of_u(
+                        u_starts[first::index_granularity]).tolist())
                 if stats is not None:
-                    u_ends = u_starts + rec_lens
-                    for i in range(len(rec_lens)):
-                        if rid[i] < 0 or pos0[i] < 0:
-                            stats.n_no_coor += 1
-                            continue
-                        stats.add(
-                            int(rid[i]), int(pos0[i]), int(end0[i]),
-                            bool(mapped[i]),
-                            w.voffset_of_u(int(u_starts[i])),
-                            w.voffset_of_u(int(u_ends[i])),
-                        )
+                    stats.add_batch(
+                        rid, pos0, end0, mapped, w.voffsets_of_u(u_starts),
+                        w.voffsets_of_u(u_starts + rec_lens),
+                    )
                 nrec += len(rec_lens)
             w.close()
         size = fs.file_size(part_path)
@@ -757,15 +751,12 @@ def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
                         u_starts = u0 + np.concatenate(
                             [[0], np.cumsum(rec_lens[:-1])]
                         )
-                        u_ends = u_starts + rec_lens
                         bins = reg2bin_vec(beg0, end0)
+                        begs = w.voffsets_of_u(u_starts).tolist()
+                        ends = w.voffsets_of_u(u_starts + rec_lens).tolist()
                         add = stats.add
-                        vof = w.voffset_of_u
                         for i in range(len(rec_lens)):
-                            add(
-                                int(rid[i]), int(bins[i]),
-                                vof(int(u_starts[i])), vof(int(u_ends[i])),
-                            )
+                            add(int(rid[i]), int(bins[i]), begs[i], ends[i])
                 except VecUnsupported:
                     for row in _vcf_batch_rows(batch):
                         u0 = w.u_total

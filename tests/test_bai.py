@@ -344,3 +344,101 @@ def test_intervals_option_plus_catalyst_filter(spark, indexed_bam):
         and r[3] >= 1_100_000
     )
     assert got == want
+
+
+def _written_records(seed: int, n: int):
+    """Coordinate-sorted records with placed-unmapped reads and an unplaced
+    tail, written through a BGZFWriter in uneven batches: yields each
+    batch's (rid, pos0, end0, mapped, at, end_v) arrays."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    rid = np.sort(rng.integers(0, 3, n))
+    pos0 = np.concatenate([
+        np.sort(rng.integers(0, 3_000_000, int((rid == r).sum())))
+        for r in range(3)])
+    span = rng.choice([1, 100, 150, 5000, 40000], n,
+                      p=[0.05, 0.7, 0.15, 0.07, 0.03])
+    mapped = rng.random(n) > 0.05
+    end0 = pos0 + np.where(mapped, span, 1)
+    tail = n // 20
+    rid = np.concatenate([rid, np.full(tail, -1)])
+    pos0 = np.concatenate([pos0, np.full(tail, -1)])
+    end0 = np.concatenate([end0, np.zeros(tail, np.int64)])
+    mapped = np.concatenate([mapped, np.zeros(tail, bool)])
+    lens = rng.integers(150, 800, len(rid))
+    w = bgzf.BGZFWriter(io.BytesIO())
+    i = 0
+    while i < len(rid):
+        sl = slice(i, i + int(rng.integers(1, 3000)))
+        u0 = w.u_total
+        w.write(b"\x00" * int(lens[sl].sum()))
+        u_starts = u0 + np.concatenate([[0], np.cumsum(lens[sl][:-1])])
+        yield (rid[sl], pos0[sl], end0[sl], mapped[sl],
+               w.voffsets_of_u(u_starts), w.voffsets_of_u(u_starts + lens[sl]))
+        i = sl.stop
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_part_stats_add_batch_equals_per_record_add(seed):
+    """add_batch over uneven batches (bins carry chunks across batch
+    edges) leaves exactly the state per-record add does."""
+    rows, batched = bai.PartIndexStats(), bai.PartIndexStats()
+    for rid, pos0, end0, mapped, at, end_v in _written_records(seed, 20000):
+        batched.add_batch(rid, pos0, end0, mapped, at, end_v)
+        for r, p, e, m, a, ev in zip(rid.tolist(), pos0.tolist(),
+                                     end0.tolist(), mapped.tolist(),
+                                     at.tolist(), end_v.tolist()):
+            if r < 0 or p < 0:
+                rows.n_no_coor += 1
+            else:
+                rows.add(r, p, e, m, a, ev)
+    assert batched.order == rows.order == [0, 1, 2]
+    assert batched.n_no_coor == rows.n_no_coor == 1000
+    for key, want in rows.refs.items():
+        got = batched.refs[key]
+        assert got.bins == want.bins
+        assert got.linear == want.linear
+        assert (got.off_beg, got.off_end, got.n_mapped, got.n_unmapped) == (
+            want.off_beg, want.off_end, want.n_mapped, want.n_unmapped)
+    # chunks did cross batch edges: some bins hold several chunks
+    assert max(len(c) for r in rows.refs.values() for c in r.bins.values()) > 1
+
+
+def test_write_bam_index_bytes_pinned(spark, tmp_path):
+    """write_bam(index_bai=True) with several Arrow batches per partition:
+    the .bam, .bai and .sbi bytes are pinned to those of the per-record
+    index accumulator the batch path replaced."""
+    import hashlib
+
+    from hadoop_bam_spark import sinks
+    from hadoop_bam_spark.formats.sam import SAM_SCHEMA, parse_header
+    from tests import textgen
+
+    r = bgzf.BGZFReader(io.BytesIO(
+        textgen.bam_file(textgen.gen_bam_records(3000, seed=5))))
+    _, refs, start = bam.read_header(r)
+    rows = list(bam.iter_records(r, refs, start))
+    hdr = parse_header(textgen.gen_bam_header_text().splitlines())
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+                               SAM_SCHEMA)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "128")  # ~8 Arrow batches per partition
+    try:
+        path = str(tmp_path / "pinned.bam")
+        sinks.write_bam(df, path, hdr, index_granularity=64, index_bai=True)
+    finally:
+        spark.conf.set(key, old)
+    digest = {
+        ext: hashlib.sha256(open(path + ext, "rb").read()).hexdigest()
+        for ext in ("", ".bai", ".sbi")
+    }
+    assert digest == PINNED_WRITE_BAM_SHA256
+
+
+PINNED_WRITE_BAM_SHA256 = {
+    "": "e7a5c1d121db98b4b3d279ef2a0ce0fbbc2501747d0d6f8e2ce6f718a3ce33eb",
+    ".bai": "bbc3701fd94f032d4e9f3c6c8660a1f648d9da63e3b5bd77aaa6250ce89df391",
+    ".sbi": "88c7d6a73139b95ad230af14d393e25896c97d104b7cf1cc788d3ced0ff28b7d",
+}

@@ -11,6 +11,7 @@ from __future__ import annotations
 import io
 import struct
 
+import numpy as np
 import pytest
 
 from hadoop_bam_spark.formats import bam, bam_vec, bgzf
@@ -236,3 +237,69 @@ def test_columnar_non_ascii_qname_fallback():
     data = _write_bam_bytes(rows)
     cols, _, _ = _scan_columnar(data)
     assert cols["qname"].to_pylist() == ["n\xe9"]
+
+
+def _tag_lists(bodies) -> list:
+    dec = bam_vec.BAMBatchDecoder(REFS, fields=["tags"])
+    return dec.decode(bodies)["tags"].to_pylist()
+
+
+@pytest.mark.parametrize("repeat_tag,non_ascii", [
+    (False, False), (True, False), (False, True), (True, True)])
+def test_tags_column_matches_row_codec_in_wire_order(repeat_tag, non_ascii):
+    """One batch mixing bwa-like NM/MD/AS/XS/RG blocks, tag-less reads,
+    numeric-looking and empty Z strings and every A/H/f/B type (plus, per
+    case, a repeated tag and a latin-1 Z) decodes to the row codec's map
+    entries, compared as ORDERED lists so wire order is pinned too."""
+    from tests import textgen
+
+    bodies = textgen.gen_bam_records(600, seed=9, repeat_tag=repeat_tag,
+                                     non_ascii=non_ascii)
+    want = [list(bam._decode_tags(textgen.bam_aux_block(b)).items())
+            for b in bodies]
+    assert _tag_lists(bodies) == want
+    # the columnar walker decides the batch unless it holds a layout the
+    # row codec must resolve (a repeated tag keeps its last value)
+    blocks = [textgen.bam_aux_block(b) for b in bodies]
+    tb = np.frombuffer(b"".join(blocks), dtype=np.uint8)
+    toff = np.concatenate([[0], np.cumsum([len(b) for b in blocks])])
+    walked = bam_vec._walk_tags(tb, toff)
+    assert (walked is None) == (repeat_tag or non_ascii)
+    if repeat_tag:
+        assert dict(want[10])["NM"] == "99"
+
+
+def test_tags_column_numeric_looking_z_prefix():
+    """The ``Z:`` prefix rule (formats/sam.py tag_value_repr) on strings at
+    the edges of its int, float, prefix and array patterns, including
+    Python's ``$`` matching before a trailing newline."""
+    from tests.textgen import bam_aux
+
+    zs = ["123", "1.5e3", "i:7", "c,1", "", "12\n", "1.", ".5", "1e5",
+          " 5", "1_0", "A:x", "q:x", "f,", "x,1", "-", "+3"]
+    blocks = [bam_aux("XZ", "Z", z) + bam_aux("XA", "A", "7")
+              + bam_aux("XH", "H", "") for z in zs]
+    tb = np.frombuffer(b"".join(blocks), dtype=np.uint8)
+    toff = np.concatenate([[0], np.cumsum([len(b) for b in blocks])])
+    got = bam_vec._walk_tags(tb, toff).to_pylist()
+    assert got == [list(bam._decode_tags(b).items()) for b in blocks]
+
+
+@pytest.mark.parametrize("bad", [
+    b"NMi\x05\x00",            # truncated fixed-width value
+    b"XXq\x01",                # unknown wire type
+    b"MDZ12A",                 # Z without its NUL
+    b"XBBi\x03\x00\x00\x00\x01\x00\x00\x00",  # B array shorter than count
+    b"XBBq\x01\x00\x00\x00\x01",              # unknown B subtype
+])
+def test_tags_column_malformed_raises_row_codec_error(bad):
+    from tests import textgen
+
+    bodies = textgen.gen_bam_records(40, seed=3)
+    with pytest.raises(ValueError) as row_err:
+        bam._decode_tags(bad)
+    bodies[17] = bodies[17][:len(bodies[17]) - len(
+        textgen.bam_aux_block(bodies[17]))] + bad
+    with pytest.raises(ValueError) as col_err:
+        _tag_lists(bodies)
+    assert str(col_err.value) == str(row_err.value)

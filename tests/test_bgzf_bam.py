@@ -1,9 +1,10 @@
 """Unit tests for the BGZF and BAM codecs (no Spark).
 
-Test strategy mirrors the reference's (SURVEY.md §5): golden files from
-/root/reference/src/test/resources (read-only test DATA), exhaustive
-guesser scans (reference TestBAMSplitGuesser / TestBGZFSplitGuesser run the
-guesser from every byte offset), round-trips, and index equivalence.
+Test strategy mirrors the reference's (SURVEY.md §5): exhaustive guesser
+scans (reference TestBAMSplitGuesser / TestBGZFSplitGuesser run the guesser
+from every byte offset), round-trips, and index equivalence. Inputs are the
+seeded engine-free BAM and BGZF writers in tests/textgen.py; only the
+htsjdk-written golden file's record counts need the reference checkout.
 """
 
 import bisect
@@ -16,18 +17,29 @@ import pytest
 from hadoop_bam_spark.formats import bam, bgzf
 from hadoop_bam_spark.formats.sam import parse_sam_line, format_sam_line
 from hadoop_bam_spark.formats.splitting_index import SplittingIndex
+from tests import textgen
 
 RES = "/root/reference/src/test/resources"
+has_ref = os.path.isdir(RES)
+
+
+def _decode_bam(raw: bytes):
+    r = bgzf.BGZFReader(io.BytesIO(raw))
+    header, refs, start = bam.read_header(r)
+    recs = list(bam.iter_records(r, refs, start))
+    return raw, header, refs, start, recs
 
 
 @pytest.fixture(scope="module")
 def golden_bam():
     with open(f"{RES}/test.bam", "rb") as f:
-        raw = f.read()
-    r = bgzf.BGZFReader(io.BytesIO(raw))
-    header, refs, start = bam.read_header(r)
-    recs = list(bam.iter_records(r, refs, start))
-    return raw, header, refs, start, recs
+        return _decode_bam(f.read())
+
+
+@pytest.fixture(scope="module")
+def gen_bam():
+    """3000 seeded records over ~10 BGZF blocks, mixed tag layouts."""
+    return _decode_bam(textgen.bam_file(textgen.gen_bam_records()))
 
 
 class TestBGZF:
@@ -43,11 +55,12 @@ class TestBGZF:
         assert r.read(len(data) + 10) == data
 
     def test_golden_bgz_matches_plain(self):
-        with open(f"{RES}/test.vcf.bgz", "rb") as f:
-            raw = f.read()
+        plain = textgen.gen_vcf_text(textgen.gen_vcf_rows(3000)).encode()
+        raw = textgen.bgzf_compress(plain)
         assert bgzf.is_bgzf(raw)
-        payload = b"".join(p for _, p in bgzf.iter_blocks(io.BytesIO(raw)))
-        assert payload == open(f"{RES}/test.vcf", "rb").read()
+        blocks = list(bgzf.iter_blocks(io.BytesIO(raw)))
+        assert len(blocks) > 2
+        assert b"".join(p for _, p in blocks) == plain
 
     def test_plain_gzip_is_not_bgzf(self):
         import gzip
@@ -82,8 +95,23 @@ class TestBGZF:
         r = bgzf.BGZFReader(io.BytesIO(merged))
         assert r.read(80000) == b"a" * 70000 + b"b" * 10
 
+    def test_voffsets_of_u_matches_scalar(self):
+        """The vector form agrees with voffset_of_u at every position of
+        the stream so far: flushed blocks, block edges, buffered tail."""
+        import numpy as np
+
+        w = bgzf.BGZFWriter(io.BytesIO())
+        for n in (1000, 70000, 3, 65280 - 1003, 131000):
+            w.write(os.urandom(n))
+            u = np.arange(w.u_total + 1)
+            want = [w.voffset_of_u(x) for x in range(w.u_total + 1)]
+            assert w.voffsets_of_u(u).tolist() == want
+            assert w.voffsets_of_u(u[::-7]).tolist() == want[::-7]
+        assert len(w.block_coffsets) == 4
+
 
 class TestBAMCodec:
+    @pytest.mark.skipif(not has_ref, reason="reference fixtures absent")
     def test_golden_decode(self, golden_bam):
         _, header, refs, _, recs = golden_bam
         assert len(recs) == 2277
@@ -92,8 +120,8 @@ class TestBAMCodec:
         qname, flag, rname, pos, mapq, cigar = recs[0][:6]
         assert rname == "1" and pos == 1581001 and isinstance(flag, int)
 
-    def test_encode_roundtrip(self, golden_bam):
-        _, header, refs, _, recs = golden_bam
+    def test_encode_roundtrip(self, gen_bam):
+        _, header, refs, _, recs = gen_bam
         buf = io.BytesIO()
         bam.write_bam(buf, header, recs, refs=refs)
         buf.seek(0)
@@ -102,14 +130,14 @@ class TestBAMCodec:
         assert refs2 == refs
         assert list(bam.iter_records(r2, refs2, s2)) == recs
 
-    def test_sam_text_equivalence(self, golden_bam):
+    def test_sam_text_equivalence(self, gen_bam):
         """BAM rows -> SAM text -> parse == identity (the reference emits the
         same SAMRecord from both input formats)."""
-        _, _, _, _, recs = golden_bam
+        _, _, _, _, recs = gen_bam
         assert all(parse_sam_line(format_sam_line(r)) == r for r in recs)
 
-    def test_guesser_grid(self, golden_bam):
-        raw, _, refs, start, _ = golden_bam
+    def test_guesser_grid(self, gen_bam):
+        raw, _, refs, start, _ = gen_bam
         r = bgzf.BGZFReader(io.BytesIO(raw))
         true_offsets = []
         r.seek_voffset(start)
@@ -138,12 +166,12 @@ class TestBAMCodec:
         enc = bam.encode_record(row, {})
         assert bam.decode_record(enc[4:], []) == row
 
-    def test_guesser_no_false_positives_replicated(self, golden_bam):
-        """Regression: on a BAM built by replicating the golden records, the
+    def test_guesser_no_false_positives_replicated(self, gen_bam):
+        """Regression: on a BAM built by replicating the input records, the
         plausibility-chain guesser used to return offsets that are NOT true
         record starts (~0.05% of boundary guesses), crashing or corrupting
         the partition scan. Every guess must now land on a true start."""
-        _, header, refs, _, recs = golden_bam
+        _, header, refs, _, recs = gen_bam
         buf = io.BytesIO()
         bam.write_bam(buf, header, recs * 8, refs=refs)
         raw = buf.getvalue()

@@ -1,7 +1,8 @@
-"""Engine-free text inputs for the source/sink tests: a BGZF block writer
-(zlib only, per the SAM/BAM spec's BGZF section), the VCF 4.2 spec's
-example file, and a seeded VCF generator whose records the tests can count
-and compare without reading them through the engine."""
+"""Engine-free inputs for the codec, source and sink tests: a BGZF block
+writer (zlib only, per the SAM/BAM spec's BGZF section), the VCF 4.2 spec's
+example file, a seeded VCF generator, and a seeded BAM record writer with
+mixed aux-tag layouts. Tests can count and compare what these produce
+without reading it through the engine."""
 
 from __future__ import annotations
 
@@ -130,3 +131,161 @@ def gen_vcf_text(rows: list[tuple]) -> str:
             + [":".join(f[k] for k in keys) for _, _, f in gts]
         ))
     return "\n".join(lines) + "\n"
+
+
+# ---------------------------------------------------------------------------
+# BAM (SAM spec section 4.2), struct + zlib only
+# ---------------------------------------------------------------------------
+
+GEN_BAM_REFS = [("chr1", 1_000_000), ("chr2", 500_000)]
+
+_CIGAR_CODE = {op: i for i, op in enumerate("MIDNSHP=X")}
+_INT_FMT = {"c": "<b", "C": "<B", "s": "<h", "S": "<H", "i": "<i", "I": "<I"}
+_ARRAY_FMT = {"c": "b", "C": "B", "s": "h", "S": "H", "i": "i", "I": "I",
+              "f": "f"}
+_ARRAY_VALUES = {"c": [-5, 0, 7], "C": [0, 200], "s": [-300, 12],
+                 "S": [65000, 1], "i": [-70000, 3, 0], "I": [4000000000],
+                 "f": [0.5, -2.0, 1.25]}
+
+
+def bam_aux(key: str, typ: str, value) -> bytes:
+    """One aux field: ``value`` is an int (cCsSiI), a float (f), a str
+    (A/Z/H, latin-1), or a (subtype, list) pair (B)."""
+    head = key.encode() + typ.encode()
+    if typ in _INT_FMT:
+        return head + struct.pack(_INT_FMT[typ], value)
+    if typ == "f":
+        return head + struct.pack("<f", value)
+    if typ == "A":
+        return head + value.encode("latin-1")
+    if typ in "ZH":
+        return head + value.encode("latin-1") + b"\x00"
+    sub, vals = value
+    return (head + sub.encode() + struct.pack("<i", len(vals))
+            + struct.pack(f"<{len(vals)}{_ARRAY_FMT[sub]}", *vals))
+
+
+def _reg2bin(beg: int, end: int) -> int:
+    end -= 1
+    for shift, base in ((14, 4681), (17, 585), (20, 73), (23, 9), (26, 1)):
+        if beg >> shift == end >> shift:
+            return base + (beg >> shift)
+    return 0
+
+
+def _gen_cigar(rng: random.Random, l_seq: int) -> list[tuple[int, str]]:
+    a = rng.randint(10, l_seq - 10)
+    return rng.choice([
+        [(l_seq, "M")],
+        [(a, "M"), (3, "I"), (l_seq - a - 3, "M")],
+        [(a, "M"), (5, "D"), (l_seq - a, "M")],
+        [(4, "S"), (l_seq - 4, "M")],
+    ])
+
+
+def _gen_tags(rng: random.Random, i: int, unplaced: bool) -> bytes:
+    """The aux block of record ``i``: tag-less unplaced reads, a bwa-like
+    NM/MD/AS/XS/RG layout, numeric-looking and empty Z strings, and the
+    A/H/f/B types (the B subtype cycles over all seven)."""
+    if unplaced:
+        return b""
+    layout = i % 5
+    if layout == 0:
+        return b"".join([
+            bam_aux("NM", "i", rng.randint(0, 4)),
+            bam_aux("MD", "Z", rng.choice(["100", "37A62", "12^AC88", "0T99"])),
+            bam_aux("AS", "i", rng.randint(50, 100)),
+            bam_aux("XS", "i", rng.randint(0, 40)),
+            bam_aux("RG", "Z", rng.choice(["grp1", "grp2"])),
+        ])
+    if layout == 1:
+        return b""
+    if layout == 2:
+        z = ["123", "1.5e3", "i:7", "c,1", "", "-4", "+.5", "Z:x", "text"]
+        return bam_aux("NM", "c", -1) + bam_aux("XZ", "Z", z[i // 5 % len(z)])
+    if layout == 3:
+        sub = "cCsSiIf"[i // 5 % 7]
+        return b"".join([
+            bam_aux("XA", "A", rng.choice("QR")),
+            bam_aux("XH", "H", rng.choice(["1AFF", "", "00"])),
+            bam_aux("XF", "f", rng.choice([1.5, 3.0, -0.25])),
+            bam_aux("XB", "B", (sub, _ARRAY_VALUES[sub])),
+        ])
+    return bam_aux("NM", "C", rng.randint(0, 9)) + bam_aux("AS", "S", 300)
+
+
+def gen_bam_records(n: int = 3000, seed: int = 5, repeat_tag: bool = False,
+                    non_ascii: bool = False) -> list[bytes]:
+    """``n`` coordinate-sorted BAM record bodies (no block_size prefix)
+    over GEN_BAM_REFS, ending in an unplaced-unmapped tail. Every tenth
+    placed read is unmapped (placed at its mate). ``repeat_tag`` gives one
+    record a second NM field and ``non_ascii`` one record a latin-1 Z
+    string, the two layouts the columnar tag decoder hands back to the row
+    codec."""
+    rng = random.Random(seed)
+    n_tail = n // 20
+    placed = sorted(
+        (rng.randrange(len(GEN_BAM_REFS)),
+         rng.randrange(GEN_BAM_REFS[0][1] // 2))
+        for _ in range(n - n_tail)
+    )
+    bodies = []
+    for i in range(n):
+        unplaced = i >= n - n_tail
+        rid, pos = placed[i] if not unplaced else (-1, -1)
+        l_seq = rng.randint(40, 120)
+        unmapped = unplaced or i % 10 == 9
+        cigar = [] if unmapped else _gen_cigar(rng, l_seq)
+        ref_len = sum(c for c, op in cigar if op in "MDN=X") or 1
+        flag = 0x1 | (0x40 if i % 2 else 0x80)
+        if unmapped:
+            flag |= 0x4
+        else:
+            flag |= 0x2 | (0x10 if rng.random() < 0.5 else 0x20)
+        name = f"gen{seed}:{i}".encode() + b"\x00"
+        seq = [rng.randrange(1, 16) for _ in range(l_seq)]
+        if l_seq % 2:
+            seq.append(0)
+        packed = bytes(seq[k] << 4 | seq[k + 1] for k in range(0, len(seq), 2))
+        qual = (b"\xff" * l_seq if i % 17 == 3
+                else bytes(rng.randint(2, 40) for _ in range(l_seq)))
+        tags = _gen_tags(rng, i, unplaced)
+        if repeat_tag and i == 10:
+            tags += bam_aux("NM", "i", 99)
+        if non_ascii and i == 15:
+            tags += bam_aux("XN", "Z", "caf\xe9")
+        body = struct.pack(
+            "<iiBBHHHiiii", rid, pos, len(name), 0 if unmapped else 60,
+            _reg2bin(max(pos, 0), max(pos, 0) + ref_len) if pos >= 0 else 4680,
+            len(cigar), flag, l_seq, rid, pos + 150 if pos >= 0 else -1,
+            0 if unmapped else 300 - 600 * (i % 2),
+        ) + name + b"".join(
+            struct.pack("<I", c << 4 | _CIGAR_CODE[op]) for c, op in cigar
+        ) + packed + qual + tags
+        bodies.append(body)
+    return bodies
+
+
+def bam_aux_block(body: bytes) -> bytes:
+    """The aux-tag bytes of one record body."""
+    l_name, n_cigar, l_seq = (body[8], struct.unpack_from("<H", body, 12)[0],
+                              struct.unpack_from("<i", body, 16)[0])
+    return body[32 + l_name + 4 * n_cigar + (l_seq + 1) // 2 + l_seq:]
+
+
+def gen_bam_header_text() -> str:
+    return "@HD\tVN:1.6\tSO:coordinate\n" + "".join(
+        f"@SQ\tSN:{name}\tLN:{ln}\n" for name, ln in GEN_BAM_REFS)
+
+
+def bam_file(bodies: list[bytes]) -> bytes:
+    """A complete BGZF-compressed BAM: header, then the record bodies."""
+    text = gen_bam_header_text().encode()
+    out = bytearray(b"BAM\x01" + struct.pack("<i", len(text)) + text)
+    out += struct.pack("<i", len(GEN_BAM_REFS))
+    for name, ln in GEN_BAM_REFS:
+        out += struct.pack("<i", len(name) + 1) + name.encode() + b"\x00"
+        out += struct.pack("<i", ln)
+    for body in bodies:
+        out += struct.pack("<i", len(body)) + body
+    return bgzf_compress(bytes(out))
