@@ -135,6 +135,7 @@ def makedirs(path: str) -> None:
 
 
 def remove_tree(path: str) -> None:
+    """Delete a directory and everything under it (missing is fine)."""
     if _is_mem(path):
         prefix = path.rstrip("/") + "/"
         for k in [k for k in _MEM if k.startswith(prefix) or k == path]:
@@ -149,7 +150,8 @@ def remove_tree(path: str) -> None:
     import fsspec
 
     fs, p = fsspec.core.url_to_fs(path)
-    fs.rm(p, recursive=True)
+    if fs.exists(p):
+        fs.rm(p, recursive=True)
 
 
 def remove(path: str) -> None:

@@ -1,13 +1,30 @@
-"""Distributed sinks: executors write headerless part files, the driver
-byte-concatenates them behind a fresh header and appends the format
-terminator — the reference's sharded-writer + merger contract
+"""Distributed sinks: executors write part files, the driver publishes them
+— the reference's sharded-writer + merger contract
 (KeyIgnoringBAMOutputFormat.java:48-93, util/SAMFileMerger.java:46-149,
 util/VCFFileMerger.java:45-135, util/SAMOutputPreparer.java:61-128).
 
-Why this shape scales: each task writes its shard sequentially with no
-coordination; the merge is a driver-side byte copy (or FileSystem.concat
-where the DFS supports it) because BGZF streams are concatenatable when
-writers suppress the EOF terminator (BAMRecordWriter.java:128-140).
+Every sink commits through :mod:`hadoop_bam_spark.commit`:
+
+- Each task attempt writes its part under an attempt-unique name in a
+  dot-prefixed staging directory; nothing a task writes is visible to
+  readers, and a task that raises removes its file.
+- ``sharded=True``: ``path`` is a directory of complete standalone files
+  (``part-NNNNN<ext>``, own header and terminator, per-shard sidecars)
+  listed by ``_manifest.json``. The commit renames the shards in,
+  replaces the manifest, then deletes every earlier ``part-*`` shard and
+  sidecar the new manifest does not name. The sources read a directory
+  through its manifest. No output byte moves after the executor write,
+  so write throughput is not capped by one process.
+- Single file: the driver byte-concatenates the headerless parts behind
+  a fresh header and appends the format terminator (BGZF streams
+  concatenate when writers suppress the EOF block,
+  BAMRecordWriter.java:128-140). It writes a hidden temporary file next
+  to ``path`` and builds the sidecar indexes from that file or from
+  per-part stats. The commit deletes every sidecar of ``path``, renames
+  the data file over ``path``, then renames the new sidecars: a reader
+  can meet new data with no index, never new data with an old index.
+- On any failure the staging directory and the temporary files are
+  removed and the earlier output is left as it was.
 
 BAM sinks also build the ``.sbi`` splitting index inline during the write
 (one voffset every G records, reference SplittingBAMIndexer piggyback mode
@@ -18,16 +35,23 @@ shifting (SAMFileMerger.mergeSplittingBaiFiles, SAMFileMerger.java:105-149)
 
 from __future__ import annotations
 
-import os
+import io
+import posixpath
 import shutil
 from typing import Optional
 
 from pyspark.sql import DataFrame
 
 from hadoop_bam_spark import fs
-
+from hadoop_bam_spark.commit import (
+    STAGING,
+    ShardCommit,
+    commit_shards,
+    publish_file,
+    staged_part,
+)
 from hadoop_bam_spark.formats import bam, bgzf
-from hadoop_bam_spark.formats.sam import SAMHeader, format_sam_line
+from hadoop_bam_spark.formats.sam import SAMHeader
 from hadoop_bam_spark.formats.splitting_index import DEFAULT_GRANULARITY, SplittingIndex
 from hadoop_bam_spark.formats.vcf import VCFHeader, format_vcf_line
 
@@ -41,54 +65,80 @@ VCF_COLS = [
 ]
 
 
-def _collect_parts_arrow(pre: DataFrame, parts_dir: str, write_part_batches):
-    """Arrow-batch variant of :func:`_collect_parts` for sinks with a
-    columnar encoder: ``write_part_batches(idx, arrow_batches) -> result``
-    runs per partition via ``mapInArrow`` (no Row materialization at all),
-    with the result shipped back as one pickled binary cell.
-
-    This supersedes the historical note below for the BAM path: the earlier
-    Arrow attempt lost because it still ran the per-record encoder over
-    ``to_pylist`` rows; with the tags map pre-split into key/value list
-    columns (JVM-side) and a vectorized batch encoder (formats/bam_venc.py)
-    the Arrow transfer is strictly a win."""
+def _run_parts(df: DataFrame, staging: str, ext: str, write_part,
+               arrow: bool = True) -> list:
+    """Executor side of every sink: ``write_part(part_path, it)`` runs once
+    per partition on its attempt-staged path and returns a picklable
+    result. ``it`` is Arrow batches through ``mapInArrow`` when ``arrow``
+    (no Row materialization; the result comes back as one pickled binary
+    cell), else Rows. Returns ``[(part_path, result)]`` in partition
+    order."""
     import pickle
 
     import pyarrow as pa
 
-    fs.makedirs(parts_dir)
+    fs.makedirs(staging)  # also the parents of ``path``, before any task
 
-    def fn(batches):
+    def run(it):
         from pyspark import TaskContext
 
-        idx = TaskContext.get().partitionId()
-        res = write_part_batches(idx, batches)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([pickle.dumps(res)], pa.binary())], ["res"]
+        with staged_part(staging, ext) as part:
+            return TaskContext.get().partitionId(), part, write_part(part, it)
+
+    if arrow:
+        def fn(batches):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([pickle.dumps(run(batches))], pa.binary())], ["res"]
+            )
+
+        out = [pickle.loads(bytes(r["res"]))
+               for r in df.mapInArrow(fn, "res binary").collect()]
+    else:
+        out = df.rdd.mapPartitions(lambda it: [run(it)]).collect()
+    return [(part, res) for _, part, res in sorted(out, key=lambda t: t[0])]
+
+
+def _publish(df: DataFrame, path: str, sharded: bool, ext: str, write_part,
+             merge, arrow: bool = True, fmt: str = "") -> None:
+    """Run ``write_part`` on every partition and commit the result.
+
+    Sharded: every part is a complete shard and ``write_part`` returns its
+    record count (None when the sink does not count), which goes to the
+    manifest. Single file: ``merge(tmp, parts)`` writes the merged file and
+    its sidecars at ``tmp`` from the ``_run_parts`` results."""
+    if not sharded:
+        with publish_file(path) as (staging, tmp):
+            merge(tmp, _run_parts(df, staging, "", write_part, arrow))
+        return
+    staging = fs.join(path, STAGING)
+    try:
+        parts = _run_parts(df, staging, ext, write_part, arrow)
+        commit_shards(
+            path, [ShardCommit(posixpath.basename(p), n) for p, n in parts],
+            None, ext, fmt=fmt,
         )
+    finally:
+        fs.remove_tree(staging)
 
-    out = pre.mapInArrow(fn, "res binary").collect()
-    return sorted(pickle.loads(bytes(r["res"])) for r in out)
+
+def _merge_parts(dst: str, head: bytes, parts, tail: bytes) -> None:
+    """Write ``dst`` as ``head``, the part files' bytes in order, then
+    ``tail``."""
+    with fs.open_file(dst, "wb") as out:
+        out.write(head)
+        for part, _ in parts:
+            with fs.open_file(part, "rb") as f:
+                shutil.copyfileobj(f, out)
+        out.write(tail)
 
 
-def _collect_parts(df: DataFrame, cols: list[str], parts_dir: str, write_part):
-    """Run ``write_part(idx, rows_iter) -> result`` on every partition and
-    return results ordered by partition index.
-
-    Transfer format, measured: an Arrow ``mapInArrow`` variant (batches +
-    per-type pylist conversion for the map/struct columns the encoders
-    need as dicts/tuples) was benchmarked against this Row path on a 600k
-    record BAM write and lost — 1.6 s vs 0.6 s warm — because pyarrow's
-    map-column ``to_pylist`` + dict rebuild costs more than Spark's batched
-    Row pickling. The per-record cost of a bespoke binary writer is the
-    encoder itself (struct.pack per record), not the JVM->Python transfer,
-    so Rows stay."""
-    fs.makedirs(parts_dir)
-    rdd = df.select(*cols).rdd
-    results = rdd.mapPartitionsWithIndex(
-        lambda idx, it: iter([write_part(idx, it)])
-    ).collect()
-    return sorted(results)
+def _bgzf(data: bytes) -> bytes:
+    """``data`` as terminator-less BGZF blocks (empty for empty data)."""
+    buf = io.BytesIO()
+    w = bgzf.BGZFWriter(buf, write_terminator=False)
+    w.write(data)
+    w.close()
+    return buf.getvalue()
 
 
 def write_bam(
@@ -126,9 +176,30 @@ def write_bam(
     if refs is None:
         ordered = sorted(header.sequences.items(), key=lambda kv: kv[1][0])
         refs = [(name, ln) for name, (_, ln) in ordered]
-    parts_dir = path + ".__parts__"
 
-    def write_part_batches(idx: int, batches):
+    def sidecars(dst: str, parts, header_len: int) -> None:
+        """``.sbi`` (+ ``.splitting-bai``, ``.bai``) of ``dst`` from the
+        ``(size, offsets, stats)`` of its parts, shifted past the header."""
+        sbi = SplittingIndex.merge(
+            [(offs, size) for size, offs, _ in parts], header_len,
+            index_granularity,
+        )
+        with fs.open_file(dst + ".sbi", "wb") as f:
+            sbi.write(f)
+        if index_splitting_bai:
+            with fs.open_file(dst + ".splitting-bai", "wb") as f:
+                sbi.write_reference_layout(f)
+        if index_bai:
+            from hadoop_bam_spark.formats.bai import bai_from_part_stats
+
+            bai = bai_from_part_stats(
+                [(stats, size) for size, _, stats in parts], header_len,
+                len(refs),
+            )
+            with fs.open_file(dst + ".bai", "wb") as f:
+                bai.write(f)
+
+    def write_part(part_path: str, batches):
         """Columnar part write: Arrow batches -> bam_venc blobs -> BGZF.
 
         Record voffsets (splitting-index granularity anchors, BAI chunk
@@ -140,9 +211,6 @@ def write_bam(
 
         from hadoop_bam_spark.formats.bam_venc import BAMBatchEncoder
 
-        part_path = fs.join(
-            parts_dir, f"part-{idx:05d}.bam" if sharded else f"part-{idx:05d}"
-        )
         stats = None
         if index_bai:
             from hadoop_bam_spark.formats.bai import PartIndexStats
@@ -178,65 +246,23 @@ def write_bam(
                     )
                 nrec += len(rec_lens)
             w.close()
-        size = fs.file_size(part_path)
+        info = (fs.file_size(part_path), offsets, stats)
         if sharded:
-            # per-shard sidecars, written in-task: voffsets are already
-            # file-absolute (header went through the same writer)
-            sbi = SplittingIndex(index_granularity, offsets, size)
-            with fs.open_file(part_path + ".sbi", "wb") as f2:
-                sbi.write(f2)
-            if index_splitting_bai:
-                with fs.open_file(part_path + ".splitting-bai", "wb") as f2:
-                    sbi.write_reference_layout(f2)
-            if index_bai:
-                from hadoop_bam_spark.formats.bai import bai_from_part_stats
+            sidecars(part_path, [info], 0)
+            return nrec
+        return info
 
-                bai = bai_from_part_stats([(stats, size)], 0, len(refs))
-                with fs.open_file(part_path + ".bai", "wb") as f2:
-                    bai.write(f2)
-        return (idx, part_path, size, offsets, stats, nrec)
+    def merge(tmp: str, parts) -> None:
+        head = _bgzf(bam.encode_header(header, refs))
+        _merge_parts(tmp, head, parts, bgzf.BGZF_EOF)
+        sidecars(tmp, [info for _, info in parts], len(head))
 
     pre = df.selectExpr(
         *SAM_COLS[:-1],
         "map_keys(tags) as tag_keys",
         "map_values(tags) as tag_vals",
     )
-    parts = _collect_parts_arrow(pre, parts_dir, write_part_batches)
-    if sharded:
-        sidecars = [".sbi"] + ([".splitting-bai"] if index_splitting_bai else []) \
-            + ([".bai"] if index_bai else [])
-        _commit_shards(path, parts_dir, [p for _, p, _, _, _, _ in parts],
-                       sidecars, records=[n for _, _, _, _, _, n in parts],
-                       fmt="bam")
-        return
-    with fs.open_file(path, "wb") as out:
-        w = bgzf.BGZFWriter(out, write_terminator=False)
-        w.write(bam.encode_header(header, refs))
-        w.close()
-        header_len = out.tell()
-        for _, part_path, _, _, _, _ in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        out.write(bgzf.BGZF_EOF)
-    sbi = SplittingIndex.merge(
-        [(offs, size) for _, _, size, offs, _, _ in parts], header_len, index_granularity
-    )
-    with fs.open_file(path + ".sbi", "wb") as f:
-        sbi.write(f)
-    if index_splitting_bai:
-        with fs.open_file(path + ".splitting-bai", "wb") as f:
-            sbi.write_reference_layout(f)
-    if index_bai:
-        # merge the per-part stats accumulated during the executor writes —
-        # no post-merge re-read of the output (formats/bai.py)
-        from hadoop_bam_spark.formats.bai import bai_from_part_stats
-
-        bai = bai_from_part_stats(
-            [(stats, size) for _, _, size, _, stats, _ in parts], header_len, len(refs)
-        )
-        with fs.open_file(path + ".bai", "wb") as f:
-            bai.write(f)
-    fs.remove_tree(parts_dir)
+    _publish(pre, path, sharded, ".bam", write_part, merge, fmt="bam")
 
 
 def write_cram(
@@ -299,10 +325,21 @@ def write_cram(
     if refs is None:
         ordered = sorted(header.sequences.items(), key=lambda kv: kv[1][0])
         refs = [(name, ln) for name, (_, ln) in ordered]
-    parts_dir = path + ".__parts__"
     ref_index = {name: i for i, (name, _) in enumerate(refs)}
 
-    def write_part_batches(idx: int, batches):
+    def crai_sidecar(dst: str) -> None:
+        """``.crai`` from a header-only container walk of ``dst`` (the
+        public CRAM index; the source plans splits and prunes intervals
+        from it without touching the data file)."""
+        from hadoop_bam_spark.formats import crai as crai_mod
+
+        crai_mod.write_crai(
+            crai_mod.build_crai(dst, open_fn=fs.open_file),
+            dst + ".crai",
+            open_fn=fs.open_file,
+        )
+
+    def write_part(part_path: str, batches):
         """Columnar part write (both reference modes): Arrow batches
         accumulate to ``records_per_container`` rows, each container
         encodes through the vectorized cram_venc column encoder — RR=true
@@ -319,9 +356,6 @@ def write_cram(
             VecUnsupported,
         )
 
-        part_path = fs.join(
-            parts_dir, f"part-{idx:05d}.cram" if sharded else f"part-{idx:05d}"
-        )
         ref_fasta = (
             cram.FastaRef(reference, open_fn=fs.open_file)
             if reference
@@ -376,48 +410,23 @@ def write_cram(
             if sharded:
                 f.write(cram.EOF_CONTAINER_V3)
         if sharded and index_crai:
-            _crai_sidecar(part_path)
-        return (idx, part_path, counter)
+            crai_sidecar(part_path)
+        return counter
 
-    def _crai_sidecar(part_path):
-        from hadoop_bam_spark.formats import crai as crai_mod
-
-        crai_mod.write_crai(
-            crai_mod.build_crai(part_path, open_fn=fs.open_file),
-            part_path + ".crai",
-            open_fn=fs.open_file,
-        )
+    def merge(tmp: str, parts) -> None:
+        head = io.BytesIO()
+        cram.write_file_definition(head)
+        head.write(cram.encode_header_container(header.text))
+        _merge_parts(tmp, head.getvalue(), parts, cram.EOF_CONTAINER_V3)
+        if index_crai:
+            crai_sidecar(tmp)
 
     pre = df.selectExpr(
         *SAM_COLS[:-1],
         "map_keys(tags) as tag_keys",
         "map_values(tags) as tag_vals",
     )
-    parts = _collect_parts_arrow(pre, parts_dir, write_part_batches)
-    if sharded:
-        _commit_shards(path, parts_dir, [p for _, p, _ in parts],
-                       [".crai"] if index_crai else [],
-                       records=[n for _, _, n in parts], fmt="cram")
-        return
-    with fs.open_file(path, "wb") as out:
-        cram.write_file_definition(out)
-        out.write(cram.encode_header_container(header.text))
-        for _, part_path, _ in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        out.write(cram.EOF_CONTAINER_V3)
-    fs.remove_tree(parts_dir)
-    if index_crai:
-        # .crai sidecar from a header-only container walk of the merged
-        # output (the public CRAM index; the source plans splits and prunes
-        # intervals from it without touching the data file)
-        from hadoop_bam_spark.formats import crai as crai_mod
-
-        crai_mod.write_crai(
-            crai_mod.build_crai(path, open_fn=fs.open_file),
-            path + ".crai",
-            open_fn=fs.open_file,
-        )
+    _publish(pre, path, sharded, ".cram", write_part, merge, fmt="cram")
 
 
 def write_any_sam(
@@ -451,112 +460,37 @@ def write_any_sam(
         )
 
 
-def _write_text_parts(df: DataFrame, cols, path, parts_dir, header_text: str,
-                      line_fn, compress: bool, chunk_fn=None,
-                      shard_ext: str | None = None) -> None:
-    """``chunk_fn`` (RecordBatch -> newline-terminated bytes) switches the
-    partition write to the vectorized Arrow path (no Row materialization);
-    ``line_fn`` stays as the per-row formatter otherwise.
+def _write_text_parts(df: DataFrame, path: str, header_text: str,
+                      compress: bool, shard_ext: str | None, chunk_fn=None,
+                      line_fn=None) -> None:
+    """Text write of ``df``'s columns, plain or BGZF: ``chunk_fn``
+    (RecordBatch -> newline-terminated bytes) formats Arrow batches with no
+    Row materialization; without it ``line_fn`` formats one Row per line.
 
     ``shard_ext`` (e.g. ``".vcf.bgz"``) switches to sharded output: every
-    part becomes a complete standalone file (own header, own BGZF EOF)
-    committed into the ``path`` directory by rename — no driver merge."""
+    part becomes a complete standalone file (own header, own BGZF EOF)."""
     sharded = shard_ext is not None
+    arrow = chunk_fn is not None
+    if not arrow:
+        def chunk_fn(r):
+            return (line_fn(r) + "\n").encode()
 
-    def _open_part(idx):
-        name = f"part-{idx:05d}{shard_ext}" if sharded else f"part-{idx:05d}"
-        return fs.join(parts_dir, name)
+    def write_part(part_path: str, it) -> None:
+        with fs.open_file(part_path, "wb") as f:
+            w = bgzf.BGZFWriter(f, write_terminator=sharded) if compress else f
+            if sharded:
+                w.write(header_text.encode())
+            for x in it:
+                w.write(chunk_fn(x))
+            if compress:
+                w.close()
 
-    if chunk_fn is not None:
-        def write_part_batches(idx: int, batches):
-            part_path = _open_part(idx)
-            with fs.open_file(part_path, "wb") as f:
-                if compress:
-                    w = bgzf.BGZFWriter(f, write_terminator=sharded)
-                    if sharded:
-                        w.write(header_text.encode())
-                    for b in batches:
-                        w.write(chunk_fn(b))
-                    w.close()
-                else:
-                    if sharded:
-                        f.write(header_text.encode())
-                    for b in batches:
-                        f.write(chunk_fn(b))
-            return (idx, part_path)
+    def merge(tmp: str, parts) -> None:
+        head = header_text.encode()
+        _merge_parts(tmp, _bgzf(head) if compress else head, parts,
+                     bgzf.BGZF_EOF if compress else b"")
 
-        parts = _collect_parts_arrow(
-            df.select(*cols), parts_dir, write_part_batches
-        )
-    else:
-        def write_part(idx: int, rows):
-            part_path = _open_part(idx)
-            with fs.open_file(part_path, "wb") as f:
-                if compress:
-                    w = bgzf.BGZFWriter(f, write_terminator=sharded)
-                    if sharded:
-                        w.write(header_text.encode())
-                    for r in rows:
-                        w.write((line_fn(r) + "\n").encode())
-                    w.close()
-                else:
-                    if sharded:
-                        f.write(header_text.encode())
-                    for r in rows:
-                        f.write((line_fn(r) + "\n").encode())
-            return (idx, part_path)
-
-        parts = _collect_parts(df, cols, parts_dir, write_part)
-    if sharded:
-        _commit_shards(path, parts_dir, [p for _, p in parts], [])
-        return
-    _merge_text_parts(path, parts_dir, parts, header_text, compress)
-
-
-def _commit_shards(path: str, parts_dir: str, shard_paths: list[str],
-                   sidecar_exts: list[str], records: list[int] | None = None,
-                   fmt: str = "") -> None:
-    """Rename executor-written complete shards (+ sidecars) into ``path``
-    and write ``_manifest.json``. Rename is a metadata operation on every
-    supported filesystem, so the commit moves no data bytes."""
-    import json
-
-    fs.makedirs(path)
-    manifest = []
-    for i, part_path in enumerate(shard_paths):
-        name = part_path.rsplit("/", 1)[-1]
-        fs.rename(part_path, fs.join(path, name))
-        for ext in sidecar_exts:
-            fs.rename(part_path + ext, fs.join(path, name + ext))
-        entry = {"shard": name, "bytes": fs.file_size(fs.join(path, name))}
-        if records is not None:
-            entry["records"] = records[i]
-        manifest.append(entry)
-    body = {"shards": manifest}
-    if fmt:
-        body["format"] = fmt
-    if records is not None:
-        body["records"] = sum(records)
-    with fs.open_file(fs.join(path, "_manifest.json"), "wb") as f:
-        f.write(json.dumps(body, indent=1).encode())
-    fs.remove_tree(parts_dir)
-
-
-def _merge_text_parts(path, parts_dir, parts, header_text: str,
-                      compress: bool) -> None:
-    with fs.open_file(path, "wb") as out:
-        if compress:
-            w = bgzf.BGZFWriter(out, write_terminator=False)
-            w.write(header_text.encode())
-            w.close()
-        else:
-            out.write(header_text.encode())
-        for _, part_path in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        if compress:
-            out.write(bgzf.BGZF_EOF)
-    fs.remove_tree(parts_dir)
+    _publish(df, path, sharded, shard_ext, write_part, merge, arrow=arrow)
 
 
 def write_sam(df: DataFrame, path: str, header: SAMHeader,
@@ -564,10 +498,8 @@ def write_sam(df: DataFrame, path: str, header: SAMHeader,
     from hadoop_bam_spark.formats import sam_vec
 
     _write_text_parts(
-        df, SAM_COLS, path, path + ".__parts__", header.text,
-        lambda r: format_sam_line(tuple(r)), compress=False,
-        chunk_fn=sam_vec.format_sam_chunk,
-        shard_ext=".sam" if sharded else None,
+        df.select(*SAM_COLS), path, header.text, False,
+        ".sam" if sharded else None, chunk_fn=sam_vec.format_sam_chunk,
     )
 
 
@@ -621,11 +553,11 @@ def write_vcf(
     header = _ensure_vcf_samples(df, header)
     samples = header.samples
 
-    def line(r):
-        return format_vcf_line(tuple(r), samples)
-
     if index_tbi:
         from hadoop_bam_spark.formats.tabix import FMT_VCF
+
+        def line(r):
+            return format_vcf_line(tuple(r), samples)
 
         def span(r):
             beg0 = int(r[1]) - 1
@@ -647,10 +579,9 @@ def write_vcf(
             ).encode("utf-8", "surrogateescape")
         return out
 
-    _write_text_parts(df, VCF_COLS, path, path + ".__parts__", header.text, line,
-                      compress, chunk_fn=chunk,
-                      shard_ext=(".vcf.bgz" if compress else ".vcf")
-                      if sharded else None)
+    _write_text_parts(df.select(*VCF_COLS), path, header.text, compress,
+                      (".vcf.bgz" if compress else ".vcf") if sharded else None,
+                      chunk_fn=chunk)
 
 
 def _vcf_batch_rows(batch):
@@ -661,9 +592,7 @@ def _vcf_batch_rows(batch):
     A null per-genotype fields map becomes ``{}``: ``format_vcf_line``
     iterates ``g[2]`` directly (None would TypeError), and the BCF
     ``encode_indiv`` treats None and ``{}`` identically (``g[2] or {}``),
-    so the substitution is byte-neutral there. (r9: this function was
-    accidentally defined twice with the two semantics; the None-mapping
-    copy shadowed this one and left the text fallback crashable.)"""
+    so the substitution is byte-neutral there."""
     cols = [batch.column(i).to_pylist() for i in range(batch.num_columns)]
     for t in zip(*cols):
         (contig, start, end, vid, ref, alts, qual, filters, info, gts) = t
@@ -686,9 +615,10 @@ def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
     block, BGZF terminator appended last (reference BCFRecordWriter close
     semantics, BCFRecordWriter.java:165-193).
 
-    ``index_csi=True`` builds a ``.csi`` binning index from one pass over
-    the merged output (meaningful when ``df`` is coordinate-sorted) so
-    interval reads prune BGZF splits at plan time (formats/csi.py).
+    ``index_csi=True`` builds a ``.csi`` binning index from per-part stats
+    accumulated in the executors (meaningful when ``df`` is
+    coordinate-sorted) so interval reads prune BGZF splits at plan time
+    (formats/csi.py).
 
     ``sharded=True``: ``path`` becomes a DIRECTORY of complete standalone
     BCFs (own header block + BGZF EOF, per-shard ``.csi`` when
@@ -698,9 +628,16 @@ def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
 
     header = _ensure_vcf_samples(df, header)
     bhdr = bcfmod.parse_bcf_header_text(header.text)
-    parts_dir = path + ".__parts__"
 
-    def write_part_batches(idx: int, batches):
+    def csi_sidecar(dst: str, parts, header_len: int) -> None:
+        """``.csi`` of ``dst`` from its parts' ``(stats, record-stream
+        bytes)``, shifted past the header."""
+        from hadoop_bam_spark.formats import csi as csi_mod
+
+        idx = csi_mod.csi_from_part_stats(parts, header_len, len(bhdr.contigs))
+        csi_mod.write_csi(idx, dst + ".csi", open_fn=fs.open_file)
+
+    def write_part(part_path: str, batches):
         """Columnar part write: Arrow batches -> bcf_venc blobs -> BGZF.
 
         A batch whose shape falls outside the vectorized fast path
@@ -708,8 +645,7 @@ def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
         that batch only — same contract as the BCF read path. With
         ``index_csi`` the per-record CSI stats accumulate INLINE from the
         encoder's (rid, beg0, end0) arrays and the writer's analytic
-        voffsets — no post-merge re-decode of the output (the r5 path
-        spent ~13x the write time re-reading it)."""
+        voffsets — no post-merge re-decode of the output."""
         import numpy as np
 
         from hadoop_bam_spark.formats.bam_venc import reg2bin_vec
@@ -718,9 +654,6 @@ def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
             VecUnsupported,
         )
 
-        part_path = fs.join(
-            parts_dir, f"part-{idx:05d}.bcf" if sharded else f"part-{idx:05d}"
-        )
         enc = BCFBatchEncoder(bhdr)
         stats = None
         if index_csi:
@@ -736,9 +669,7 @@ def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
                 # stream so records begin on a block boundary (the reader
                 # and the part-stats CSI rebase both assume it), and the
                 # EOF terminator is appended after the record stream
-                hw = bgzf.BGZFWriter(f, write_terminator=False)
-                hw.write(bcfmod.encode_header(bhdr))
-                hw.close()
+                f.write(_bgzf(bcfmod.encode_header(bhdr)))
                 hdr_len = f.tell()
             w = bgzf.BGZFWriter(f, write_terminator=False)
             for batch in batches:
@@ -778,44 +709,20 @@ def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
             size -= hdr_len + len(bgzf.BGZF_EOF)  # record-stream length only
         if stats is not None:
             stats.remap_part_end(pend, size << 16)
-        if sharded and index_csi:
-            from hadoop_bam_spark.formats import csi as csi_mod
+        if sharded:
+            if index_csi:
+                csi_sidecar(part_path, [(stats, size)], hdr_len)
+            return nrec
+        return stats, size
 
-            idx_c = csi_mod.csi_from_part_stats(
-                [(stats, size)], hdr_len, len(bhdr.contigs)
-            )
-            csi_mod.write_csi(idx_c, part_path + ".csi", open_fn=fs.open_file)
-        return (idx, part_path, size, stats, nrec)
+    def merge(tmp: str, parts) -> None:
+        head = _bgzf(bcfmod.encode_header(bhdr))
+        _merge_parts(tmp, head, parts, bgzf.BGZF_EOF)
+        if index_csi:
+            csi_sidecar(tmp, [info for _, info in parts], len(head))
 
-    parts = _collect_parts_arrow(
-        df.select(*VCF_COLS), parts_dir, write_part_batches
-    )
-    if sharded:
-        _commit_shards(path, parts_dir, [p for _, p, _, _, _ in parts],
-                       [".csi"] if index_csi else [],
-                       records=[n for _, _, _, _, n in parts], fmt="bcf")
-        return
-    with fs.open_file(path, "wb") as out:
-        w = bgzf.BGZFWriter(out, write_terminator=False)
-        w.write(bcfmod.encode_header(bhdr))
-        w.close()
-        header_len = out.tell()
-        for _, part_path, _, _, _ in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        out.write(bgzf.BGZF_EOF)
-    fs.remove_tree(parts_dir)
-    if index_csi:
-        from hadoop_bam_spark.formats import csi as csi_mod
-
-        idx = csi_mod.csi_from_part_stats(
-            [(stats, size) for _, _, size, stats, _ in parts],
-            header_len,
-            len(bhdr.contigs),
-        )
-        csi_mod.write_csi(idx, path + ".csi", open_fn=fs.open_file)
-
-
+    _publish(df.select(*VCF_COLS), path, sharded, ".bcf", write_part, merge,
+             fmt="bcf")
 
 
 def _synthesize_name(r) -> str:
@@ -968,10 +875,10 @@ def _write_tabix_text(df: DataFrame, spec, path: str, compress: bool | None,
             span, preset, header=spec.header, fmt=spec.name,
         )
         return
-    _write_text_parts(df, spec.cols, path, path + ".__parts__", spec.header,
-                      line, compress, chunk_fn=spec.format_chunk,
-                      shard_ext=spec.shard_ext + (".bgz" if compress else "")
-                      if sharded else None)
+    _write_text_parts(df.select(*spec.cols), path, spec.header, compress,
+                      spec.shard_ext + (".bgz" if compress else "")
+                      if sharded else None,
+                      chunk_fn=spec.format_chunk, line_fn=line)
 
 
 def _write_tabix_text_indexed(
@@ -988,86 +895,47 @@ def _write_tabix_text_indexed(
     from hadoop_bam_spark.formats.bai import PartIndexStats, merge_part_stats
     from hadoop_bam_spark.formats.tabix import TabixIndex, write_tabix
 
-    parts_dir = path + ".__parts__"
-
-    def tbi(names, merged):
-        return TabixIndex(
+    def tbi_sidecar(dst: str, parts, header_len: int) -> None:
+        """``.tbi`` of ``dst`` from its parts' ``(stats, size)``, shifted
+        past the header; contigs in first-seen order."""
+        names = list(dict.fromkeys(k for st, _ in parts for k in st.order))
+        merged = merge_part_stats(parts, header_len, names)
+        merged.pop("__n_no_coor__")
+        write_tabix(TabixIndex(
             names, [merged[n] for n in names], *preset, ord("#"), 0, 0
-        )
+        ), dst + ".tbi")
 
-    if sharded:
-        def write_part(idx: int, rows):
-            part_path = fs.join(parts_dir, f"part-{idx:05d}{shard_ext}")
-            stats = PartIndexStats()
-            nrec = 0
-            with fs.open_file(part_path, "wb") as f:
-                w = bgzf.BGZFWriter(f, write_terminator=True)
-                if header:
-                    w.write(header.encode())
-                for r in rows:
-                    at = w.tell_voffset()
-                    w.write((line_fn(r) + "\n").encode())
-                    stats.add(*span_fn(r), True, at, w.tell_voffset())
-                    nrec += 1
-                w.close()
-            size = fs.file_size(part_path)
-            names = list(stats.order)
-            merged = merge_part_stats([(stats, size)], 0, names)
-            merged.pop("__n_no_coor__")
-            write_tabix(tbi(names, merged), part_path + ".tbi")
-            return (idx, part_path, nrec)
-
-        parts = _collect_parts(df, cols, parts_dir, write_part)
-        _commit_shards(path, parts_dir, [p for _, p, _ in parts], [".tbi"],
-                       records=[n for _, _, n in parts], fmt=fmt)
-        return
-
-    def write_part(idx: int, rows):
-        part_path = fs.join(parts_dir, f"part-{idx:05d}")
+    def write_part(part_path: str, rows):
         stats = PartIndexStats()
+        nrec = 0
         with fs.open_file(part_path, "wb") as f:
-            w = bgzf.BGZFWriter(f, write_terminator=False)
+            w = bgzf.BGZFWriter(f, write_terminator=sharded)
+            if sharded:
+                w.write(header.encode())
             for r in rows:
                 at = w.tell_voffset()
                 w.write((line_fn(r) + "\n").encode())
                 stats.add(*span_fn(r), True, at, w.tell_voffset())
+                nrec += 1
             w.close()
-        return (idx, part_path, fs.file_size(part_path), stats)
+        info = (stats, fs.file_size(part_path))
+        if sharded:
+            tbi_sidecar(part_path, [info], 0)
+            return nrec
+        return info
 
-    parts = _collect_parts(df, cols, parts_dir, write_part)
-    with fs.open_file(path, "wb") as out:
-        header_len = 0
-        if header:
-            w = bgzf.BGZFWriter(out, write_terminator=False)
-            w.write(header.encode())
-            w.close()
-            header_len = out.tell()
-        for _, part_path, _, _ in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-        out.write(bgzf.BGZF_EOF)
-    fs.remove_tree(parts_dir)
-    names: list[str] = []
-    seen = set()
-    for _, _, _, st in parts:
-        for k in st.order:
-            if k not in seen:
-                seen.add(k)
-                names.append(k)
-    merged = merge_part_stats(
-        [(st, size) for _, _, size, st in parts], header_len, names
-    )
-    merged.pop("__n_no_coor__")
-    write_tabix(tbi(names, merged), path + ".tbi")
+    def merge(tmp: str, parts) -> None:
+        head = _bgzf(header.encode())
+        _merge_parts(tmp, head, parts, bgzf.BGZF_EOF)
+        tbi_sidecar(tmp, [info for _, info in parts], len(head))
+
+    _publish(df.select(*cols), path, sharded, shard_ext, write_part, merge,
+             arrow=False, fmt=fmt)
 
 
 def write_fastq(df: DataFrame, path: str, sharded: bool = False) -> None:
-    def line(r):
-        return f"@{_synthesize_name(r)}\n{r.sequence}\n+\n{r.quality}"
-
-    _write_text_parts(df, FASTQ_COLS, path, path + ".__parts__", "", line, False,
-                      chunk_fn=_fastq_chunk,
-                      shard_ext=".fastq" if sharded else None)
+    _write_text_parts(df.select(*FASTQ_COLS), path, "", False,
+                      ".fastq" if sharded else None, chunk_fn=_fastq_chunk)
 
 
 _P33_TO_P64 = bytes(
@@ -1084,11 +952,9 @@ def write_fasta(df: DataFrame, path: str, index_fai: bool = True) -> None:
     arbitrary — FASTA imposes none). ``index_fai=True`` adds a faidx sidecar
     so the fasta source plans one split per contig (requires the fixed line
     width faidx assumes; reference model ReferenceFragment.java:36-41)."""
-    parts_dir = path + ".__parts__"
     prepared = df.repartition("contig").sortWithinPartitions("contig", "pos")
 
-    def write_part(idx: int, rows):
-        part_path = fs.join(parts_dir, f"part-{idx:05d}")
+    def write_part(part_path: str, rows) -> None:
         with fs.open_file(part_path, "wb") as f:
             cur = None
             for r in rows:
@@ -1096,16 +962,14 @@ def write_fasta(df: DataFrame, path: str, index_fai: bool = True) -> None:
                     f.write(f">{r.contig}\n".encode())
                     cur = r.contig
                 f.write((r.seq + "\n").encode())
-        return (idx, part_path)
 
-    parts = _collect_parts(prepared, ["contig", "pos", "seq"], parts_dir, write_part)
-    with fs.open_file(path, "wb") as out:
-        for _, part_path in parts:
-            with fs.open_file(part_path, "rb") as f:
-                shutil.copyfileobj(f, out)
-    fs.remove_tree(parts_dir)
-    if index_fai:
-        build_fai(path, path + ".fai")
+    def merge(tmp: str, parts) -> None:
+        _merge_parts(tmp, b"", parts, b"")
+        if index_fai:
+            build_fai(tmp, tmp + ".fai")
+
+    _publish(prepared.select("contig", "pos", "seq"), path, False, "",
+             write_part, merge, arrow=False)
 
 
 def scan_fai_entries(
@@ -1241,28 +1105,8 @@ def _qseq_chunk(batch) -> bytes:
 def write_qseq(df: DataFrame, path: str, sharded: bool = False) -> None:
     """Inverse of the qseq source: N->'.', Sanger->Illumina quality
     (reference QseqOutputFormat.java:98-157)."""
-
-    def line(r):
-        qual = (r.quality or "").encode("latin-1").translate(_P33_TO_P64).decode("latin-1")
-        return "\t".join(
-            [
-                r.instrument or "",
-                str(r.run_number or 0),
-                str(r.lane or 0),
-                str(r.tile or 0),
-                str(r.xpos or 0),
-                str(r.ypos or 0),
-                r.index_sequence or "0",
-                str(r.read or 1),
-                (r.sequence or "").replace("N", "."),
-                qual,
-                "1" if r.filter_passed else "0",
-            ]
-        )
-
-    _write_text_parts(df, FASTQ_COLS, path, path + ".__parts__", "", line, False,
-                      chunk_fn=_qseq_chunk,
-                      shard_ext=".qseq" if sharded else None)
+    _write_text_parts(df.select(*FASTQ_COLS), path, "", False,
+                      ".qseq" if sharded else None, chunk_fn=_qseq_chunk)
 
 
 def write_parquet_reads(

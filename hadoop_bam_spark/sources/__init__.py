@@ -169,21 +169,32 @@ def local_path(path: str) -> str:
 
 def list_format_files(path: str, *exts: str) -> list[str]:
     """A path is one file, a comma-joined list, or a directory of files with
-    the given suffixes (index sidecars are skipped — reference
-    BAMInputFormat.java:201-209). Directory listing goes through the
-    filesystem seam, so s3://... directories work when fsspec is present."""
+    the given suffixes. A directory a sink wrote lists through its
+    manifests (:func:`hadoop_bam_spark.commit.committed_shards`): only
+    committed shards, never a staged, half-committed or superseded one.
+    Any other directory lists raw. Names starting with ``_`` or ``.``
+    (manifests, markers, staging, hidden files) are never data, and index
+    sidecars are skipped by suffix (reference BAMInputFormat.java:201-209).
+    Listing goes through the filesystem seam, so s3://... directories work
+    when fsspec is present."""
     from hadoop_bam_spark import fs
+    from hadoop_bam_spark.commit import committed_shards
 
     if "," in path:
         return [f for p in path.split(",") for f in list_format_files(p, *exts)]
     p = local_path(path)
-    if fs.is_dir(p):
-        return sorted(
-            fs.join(p, f)
-            for f in fs.listdir(p)
-            if f.endswith(exts) and not f.startswith("_") and not f.startswith(".")
-        )
-    return [p]
+    if not fs.is_dir(p):
+        return [p]
+    committed = committed_shards(p, exts)
+    if committed is not None:
+        # a replay or overwrite may delete a shard between the manifest
+        # read and here
+        return sorted(q for n in committed if fs.exists(q := fs.join(p, n)))
+    return sorted(
+        fs.join(p, f)
+        for f in fs.listdir(p)
+        if f.endswith(exts) and not f.startswith(("_", "."))
+    )
 
 
 #: max 1-based coordinate the genomic binning schemes support (int32 bound)

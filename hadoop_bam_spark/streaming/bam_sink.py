@@ -14,17 +14,12 @@ Options:
               dictionary) every shard carries (required — a standalone
               BAM is meaningless without one).
 
-Write protocol: tasks write to ``<path>/.staging/`` under attempt-unique
-names (removed on task failure) and return the staged name in their
-commit message; ``commit`` (driver, once per batch, with the batchId)
-runs the shared replay-safe protocol in
-:mod:`hadoop_bam_spark.streaming.shard_commit` — supersede any earlier
-attempt of the same batchId, rename winners into place, atomically
-replace the per-batch ``_manifest-{batchId:05d}.jsonl``, sweep stale
-staging attempts; ``abort`` discards the batch's staged files. A re-run
-of a failed or replayed batch therefore never leaves a half-visible,
-duplicated, or stale shard — visibility is the rename, same as the
-batch sharded sinks.
+Write protocol: :class:`hadoop_bam_spark.commit.ShardStreamWriter` — tasks
+write attempt-staged shards, and ``commit`` (driver, once per batch, with
+the batchId) runs the shared replay-safe protocol of
+:mod:`hadoop_bam_spark.commit`. A re-run of a failed or replayed batch
+therefore never leaves a half-visible, duplicated, or stale shard —
+visibility is the rename, same as the batch sharded sinks.
 
 The reference has no streaming surface at all (SURVEY.md §2.9); this is
 engine surface beyond it.
@@ -32,18 +27,9 @@ engine surface beyond it.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import DataSourceStreamWriter, WriterCommitMessage
-
 from hadoop_bam_spark import fs
+from hadoop_bam_spark.commit import ShardStreamWriter
 from hadoop_bam_spark.sources import local_path
-
-
-@dataclass
-class BamShardCommit(WriterCommitMessage):
-    staged: str | None  # name inside .staging, None for an empty partition
-    records: int
 
 
 def _load_header(path: str):
@@ -71,7 +57,7 @@ def _load_header(path: str):
     return hdr, refs
 
 
-class BAMStreamWriter(DataSourceStreamWriter):
+class BAMStreamWriter(ShardStreamWriter):
     def __init__(self, options):
         path = options.get("path")
         if not path:
@@ -83,20 +69,12 @@ class BAMStreamWriter(DataSourceStreamWriter):
                 "path>): every shard is a standalone BAM and must carry "
                 "the header + reference dictionary"
             )
-        self._dir = local_path(path)
+        super().__init__(local_path(path), ".bam")
         self._header, self._refs = _load_header(header_src)
 
-    # -- executors ---------------------------------------------------------
-    def write(self, iterator) -> BamShardCommit:
-        from pyspark import TaskContext
-
+    def _write_shard(self, f, iterator) -> int:
         from hadoop_bam_spark.formats import bam
 
-        ctx = TaskContext.get()
-        staging = fs.join(self._dir, ".staging")
-        fs.makedirs(staging)
-        name = f"attempt-{ctx.taskAttemptId()}-p{ctx.partitionId():05d}.bam"
-        tmp = fs.join(staging, name)
         n = 0
 
         def rows():
@@ -109,24 +87,5 @@ class BAMStreamWriter(DataSourceStreamWriter):
                     r["qual"], dict(r["tags"] or {}),
                 )
 
-        try:
-            with fs.open_file(tmp, "wb") as f:
-                bam.write_bam(f, self._header, rows(), refs=self._refs)
-        except BaseException:
-            fs.remove(tmp)  # no orphaned attempt files on task failure
-            raise
-        if n == 0:
-            fs.remove(tmp)
-            return BamShardCommit(staged=None, records=0)
-        return BamShardCommit(staged=name, records=n)
-
-    # -- driver ------------------------------------------------------------
-    def commit(self, messages, batchId: int) -> None:
-        from hadoop_bam_spark.streaming.shard_commit import commit_shards
-
-        commit_shards(self._dir, messages, batchId, ".bam")
-
-    def abort(self, messages, batchId: int) -> None:
-        from hadoop_bam_spark.streaming.shard_commit import abort_shards
-
-        abort_shards(self._dir, messages)
+        bam.write_bam(f, self._header, rows(), refs=self._refs)
+        return n

@@ -16,21 +16,11 @@ Options:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import DataSourceStreamWriter, WriterCommitMessage
-
-from hadoop_bam_spark import fs
+from hadoop_bam_spark.commit import ShardStreamWriter
 from hadoop_bam_spark.sources import local_path
 
 
-@dataclass
-class BcfShardCommit(WriterCommitMessage):
-    staged: str | None
-    records: int
-
-
-class BCFStreamWriter(DataSourceStreamWriter):
+class BCFStreamWriter(ShardStreamWriter):
     def __init__(self, options):
         path = options.get("path")
         if not path:
@@ -43,58 +33,31 @@ class BCFStreamWriter(DataSourceStreamWriter):
         from hadoop_bam_spark.formats.bcf import parse_bcf_header_text
         from hadoop_bam_spark.formats.vcf import read_vcf_header
 
-        self._dir = local_path(path)
+        super().__init__(local_path(path), ".bcf")
         hdr = read_vcf_header(local_path(header_src))
         self._bhdr = parse_bcf_header_text(hdr.text)
 
-    # -- executors ---------------------------------------------------------
-    def write(self, iterator) -> BcfShardCommit:
-        from pyspark import TaskContext
-
+    def _write_shard(self, f, iterator) -> int:
         from hadoop_bam_spark.formats import bcf as bcfmod
         from hadoop_bam_spark.formats import bgzf
 
-        ctx = TaskContext.get()
-        staging = fs.join(self._dir, ".staging")
-        fs.makedirs(staging)
-        name = f"attempt-{ctx.taskAttemptId()}-p{ctx.partitionId():05d}.bcf"
-        tmp = fs.join(staging, name)
         n = 0
-        try:
-            with fs.open_file(tmp, "wb") as f:
-                hw = bgzf.BGZFWriter(f, write_terminator=False)
-                hw.write(bcfmod.encode_header(self._bhdr))
-                hw.close()
-                w = bgzf.BGZFWriter(f, write_terminator=False)
-                for r in iterator:
-                    row = (
-                        r["contig"], r["start"], r["end"], r["id"], r["ref"],
-                        r["alts"], r["qual"], r["filters"],
-                        dict(r["info"] or {}),
-                        [
-                            (g["sample"], g["gt"], dict(g["fields"] or {}))
-                            for g in (r["genotypes"] or [])
-                        ] or None,
-                    )
-                    w.write(bcfmod.encode_record(row, self._bhdr))
-                    n += 1
-                w.close()
-                f.write(bgzf.BGZF_EOF)
-        except BaseException:
-            fs.remove(tmp)  # no orphaned attempt files on task failure
-            raise
-        if n == 0:
-            fs.remove(tmp)
-            return BcfShardCommit(staged=None, records=0)
-        return BcfShardCommit(staged=name, records=n)
-
-    # -- driver ------------------------------------------------------------
-    def commit(self, messages, batchId: int) -> None:
-        from hadoop_bam_spark.streaming.shard_commit import commit_shards
-
-        commit_shards(self._dir, messages, batchId, ".bcf")
-
-    def abort(self, messages, batchId: int) -> None:
-        from hadoop_bam_spark.streaming.shard_commit import abort_shards
-
-        abort_shards(self._dir, messages)
+        hw = bgzf.BGZFWriter(f, write_terminator=False)
+        hw.write(bcfmod.encode_header(self._bhdr))
+        hw.close()
+        w = bgzf.BGZFWriter(f, write_terminator=False)
+        for r in iterator:
+            row = (
+                r["contig"], r["start"], r["end"], r["id"], r["ref"],
+                r["alts"], r["qual"], r["filters"],
+                dict(r["info"] or {}),
+                [
+                    (g["sample"], g["gt"], dict(g["fields"] or {}))
+                    for g in (r["genotypes"] or [])
+                ] or None,
+            )
+            w.write(bcfmod.encode_record(row, self._bhdr))
+            n += 1
+        w.close()
+        f.write(bgzf.BGZF_EOF)
+        return n

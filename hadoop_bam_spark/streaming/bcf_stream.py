@@ -15,7 +15,7 @@ from typing import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from hadoop_bam_spark.sources import local_path
+from hadoop_bam_spark.sources import list_format_files, local_path
 from hadoop_bam_spark.streaming.lazyrows import LazyFileRows
 
 
@@ -69,24 +69,8 @@ class BcfStreamReader(SimpleDataSourceStreamReader):
     def _list(self) -> list[str]:
         if not os.path.isdir(self._dir):
             return []
-        from hadoop_bam_spark.streaming.shard_commit import committed_shards
-
-        # a shard-sink output directory is tailed THROUGH its per-batch
-        # manifests (committed batches only, listed shards only) — a raw
-        # listing could consume a not-yet-committed or about-to-be-
-        # superseded shard (at-least-once); plain drop directories (no
-        # manifests) keep the raw listing
-        committed = committed_shards(self._dir, (".bcf",))
-        if committed is not None:
-            return sorted(
-                n for n in committed
-                if os.path.exists(os.path.join(self._dir, n))
-            )
-        return sorted(
-            f
-            for f in os.listdir(self._dir)
-            if f.endswith(".bcf") and not f.startswith((".", "_"))
-        )
+        return [os.path.basename(f)
+                for f in list_format_files(self._dir, ".bcf")]
 
     def initialOffset(self) -> dict:
         return {"processed": []}

@@ -1,12 +1,10 @@
 """Streaming CRAM sink: ``df.writeStream.format("cram")``.
 
 Third member of the streaming shard-sink family (see
-:mod:`hadoop_bam_spark.streaming.bam_sink` for the staging +
-rename-commit protocol, shared verbatim): each micro-batch lands as one
-complete standalone CRAM 3.0 per non-empty partition
-(``batch-{batchId:05d}-{i:05d}.cram`` — own file definition, header
-container and EOF) plus the shared replay-safe per-batch manifest protocol (see
-:mod:`hadoop_bam_spark.streaming.shard_commit`). RR=false
+:mod:`hadoop_bam_spark.commit` for the shared replay-safe commit
+protocol): each micro-batch lands as one complete standalone CRAM 3.0 per
+non-empty partition (``batch-{batchId:05d}-{i:05d}.cram`` — own file
+definition, header container and EOF) plus a per-batch manifest. RR=false
 (verbatim sequences) by default, so no reference FASTA is needed on
 executors; pass ``reference`` for reference-compressed shards.
 
@@ -29,21 +27,12 @@ Options:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import DataSourceStreamWriter, WriterCommitMessage
-
 from hadoop_bam_spark import fs
+from hadoop_bam_spark.commit import ShardStreamWriter
 from hadoop_bam_spark.sources import local_path
 
 
-@dataclass
-class CramShardCommit(WriterCommitMessage):
-    staged: str | None
-    records: int
-
-
-class CRAMStreamWriter(DataSourceStreamWriter):
+class CRAMStreamWriter(ShardStreamWriter):
     def __init__(self, options):
         path = options.get("path")
         if not path:
@@ -56,7 +45,7 @@ class CRAMStreamWriter(DataSourceStreamWriter):
             )
         from hadoop_bam_spark.streaming.bam_sink import _load_header
 
-        self._dir = local_path(path)
+        super().__init__(local_path(path), ".cram")
         self._header, self._refs = _load_header(header_src)
         self._rpc = int(options.get("records_per_container", 30000))
         self._rps = int(options.get("records_per_slice", 10000))
@@ -73,61 +62,31 @@ class CRAMStreamWriter(DataSourceStreamWriter):
         #: qual/flag series, same contract as write_cram(codecs=)
         self._codecs = options.get("codecs", "gzip")
 
-    # -- executors ---------------------------------------------------------
-    def write(self, iterator) -> CramShardCommit:
-        from pyspark import TaskContext
-
+    def _write_shard(self, f, iterator) -> int:
         from hadoop_bam_spark.formats import cram
 
-        ctx = TaskContext.get()
-        staging = fs.join(self._dir, ".staging")
-        fs.makedirs(staging)
-        name = f"attempt-{ctx.taskAttemptId()}-p{ctx.partitionId():05d}.cram"
-        tmp = fs.join(staging, name)
         n = 0
-        try:
-            with fs.open_file(tmp, "wb") as f:
-                cram.write_file_definition(f)
-                f.write(cram.encode_header_container(self._header.text))
-                w = cram.CRAMWriter(
-                    f, self._refs, bare=True,
-                    records_per_container=self._rpc,
-                    records_per_slice=self._rps,
-                    ref_fasta=(
-                        cram.FastaRef(
-                            local_path(self._reference),
-                            open_fn=fs.open_file,
-                        )
-                        if self._reference
-                        else None
-                    ),
-                    embed_reference=self._embed,
-                    codecs=self._codecs,
-                )
-                for r in iterator:
-                    w.write((
-                        r["qname"], r["flag"], r["rname"], r["pos"], r["mapq"],
-                        r["cigar"], r["rnext"], r["pnext"], r["tlen"], r["seq"],
-                        r["qual"], dict(r["tags"] or {}),
-                    ))
-                    n += 1
-                w.close(write_eof=False)
-                f.write(cram.EOF_CONTAINER_V3)
-        except BaseException:
-            fs.remove(tmp)  # no orphaned attempt files on task failure
-            raise
-        if n == 0:
-            fs.remove(tmp)
-            return CramShardCommit(staged=None, records=0)
-        return CramShardCommit(staged=name, records=n)
-
-    # -- driver ------------------------------------------------------------
-    def commit(self, messages, batchId: int) -> None:
-        from hadoop_bam_spark.streaming.shard_commit import commit_shards
-
-        commit_shards(self._dir, messages, batchId, ".cram")
-
-    def abort(self, messages, batchId: int) -> None:
-        from hadoop_bam_spark.streaming.shard_commit import abort_shards
-
-        abort_shards(self._dir, messages)
+        cram.write_file_definition(f)
+        f.write(cram.encode_header_container(self._header.text))
+        w = cram.CRAMWriter(
+            f, self._refs, bare=True,
+            records_per_container=self._rpc,
+            records_per_slice=self._rps,
+            ref_fasta=(
+                cram.FastaRef(local_path(self._reference), open_fn=fs.open_file)
+                if self._reference
+                else None
+            ),
+            embed_reference=self._embed,
+            codecs=self._codecs,
+        )
+        for r in iterator:
+            w.write((
+                r["qname"], r["flag"], r["rname"], r["pos"], r["mapq"],
+                r["cigar"], r["rnext"], r["pnext"], r["tlen"], r["seq"],
+                r["qual"], dict(r["tags"] or {}),
+            ))
+            n += 1
+        w.close(write_eof=False)
+        f.write(cram.EOF_CONTAINER_V3)
+        return n

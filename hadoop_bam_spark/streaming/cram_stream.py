@@ -10,7 +10,7 @@ Same contracts as :mod:`hadoop_bam_spark.streaming.bam_stream`:
 offsets are the sorted processed-file list (exactly-once per file,
 missing-on-replay raises rather than silently dropping rows), rows are
 lazy and copyable, and a shard-sink output directory is tailed THROUGH
-its per-batch manifests (``shard_commit.committed_shards``) so a
+its per-batch manifests (``sources.list_format_files``) so a
 half-committed or about-to-be-superseded shard is never consumed.
 
 Options:
@@ -28,7 +28,7 @@ from typing import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from hadoop_bam_spark.sources import local_path
+from hadoop_bam_spark.sources import list_format_files, local_path
 from hadoop_bam_spark.streaming.lazyrows import LazyFileRows
 
 
@@ -65,19 +65,8 @@ class CramStreamReader(SimpleDataSourceStreamReader):
     def _list(self) -> list[str]:
         if not os.path.isdir(self._dir):
             return []
-        from hadoop_bam_spark.streaming.shard_commit import committed_shards
-
-        committed = committed_shards(self._dir, (".cram",))
-        if committed is not None:
-            return sorted(
-                n for n in committed
-                if os.path.exists(os.path.join(self._dir, n))
-            )
-        return sorted(
-            f
-            for f in os.listdir(self._dir)
-            if f.endswith(".cram") and not f.startswith((".", "_"))
-        )
+        return [os.path.basename(f)
+                for f in list_format_files(self._dir, ".cram")]
 
     def initialOffset(self) -> dict:
         return {"processed": []}

@@ -35,7 +35,7 @@ from typing import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from hadoop_bam_spark.sources import local_path
+from hadoop_bam_spark.sources import list_format_files, local_path
 from hadoop_bam_spark.sources.tabix_text import BED, BEDGRAPH, GFF, TabixTextSpec
 from hadoop_bam_spark.streaming.lazyrows import LazyFileRows
 from hadoop_bam_spark.streaming.vcf_stream import _tbi_says_empty
@@ -98,18 +98,8 @@ class TextTailReader(SimpleDataSourceStreamReader):
     def _list(self) -> list:
         if not os.path.isdir(self._dir):
             return []
-        from hadoop_bam_spark.streaming.shard_commit import committed_shards
-
-        committed = committed_shards(self._dir, self._exts)
-        if committed is not None:
-            return sorted(
-                n for n in committed
-                if os.path.exists(os.path.join(self._dir, n))
-            )
-        return sorted(
-            f for f in os.listdir(self._dir)
-            if f.endswith(self._exts) and not f.startswith(".")
-        )
+        return [os.path.basename(f)
+                for f in list_format_files(self._dir, *self._exts)]
 
     def initialOffset(self) -> dict:
         return {"processed": []}

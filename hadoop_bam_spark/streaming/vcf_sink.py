@@ -6,8 +6,7 @@ staging + rename-commit protocol): each micro-batch lands as one
 complete standalone BGZF ``.vcf.bgz`` per non-empty partition,
 committed into the target directory as
 ``batch-{batchId:05d}-{i:05d}.vcf.bgz`` under the shared replay-safe
-per-batch manifest protocol (see
-:mod:`hadoop_bam_spark.streaming.shard_commit`).
+commit protocol (see :mod:`hadoop_bam_spark.commit`).
 The batch ``vcf`` source reads the resulting directory natively
 and ``vcf_stream`` can tail it.
 
@@ -25,13 +24,7 @@ Options:
 from __future__ import annotations
 
 from hadoop_bam_spark.sources import local_path
-from hadoop_bam_spark.streaming.text_sink import (
-    TextShardCommit,
-    TextStreamWriter,
-)
-
-#: kept as an alias for callers/tests that imported the old name
-VcfShardCommit = TextShardCommit
+from hadoop_bam_spark.streaming.text_sink import TextStreamWriter
 
 _VCF_COLS = ("contig", "start", "end", "id", "ref", "alts", "qual",
              "filters", "info", "genotypes")

@@ -22,6 +22,26 @@ def fmt_spark(spark):
     return spark
 
 
+@pytest.fixture(scope="module")
+def gen_bam_path(tmp_path_factory):
+    """The engine-free seeded BAM of tests/textgen.py, on disk."""
+    from tests import textgen
+
+    path = tmp_path_factory.mktemp("gen") / "gen.bam"
+    path.write_bytes(textgen.bam_file(textgen.gen_bam_records()))
+    return str(path)
+
+
+@pytest.fixture(scope="module")
+def gen_vcf_path(tmp_path_factory):
+    """A seeded 3000-record VCF written by tests/textgen.py."""
+    from tests import textgen
+
+    path = tmp_path_factory.mktemp("gen") / "gen.vcf"
+    path.write_text(textgen.gen_vcf_text(textgen.gen_vcf_rows(3000)))
+    return str(path)
+
+
 def canon(df):
     cols = []
     for f in df.schema.fields:
@@ -212,12 +232,12 @@ class TestFastqQseq:
 
 
 class TestSinks:
-    def test_bam_write_merge_read(self, fmt_spark, tmp_path):
+    def test_bam_write_merge_read(self, fmt_spark, tmp_path, gen_bam_path):
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats import bam, bgzf
 
-        src = fmt_spark.read.format("bam").load(f"{RES}/test.bam")
-        with open(f"{RES}/test.bam", "rb") as f:
+        src = fmt_spark.read.format("bam").load(gen_bam_path)
+        with open(gen_bam_path, "rb") as f:
             r = bgzf.BGZFReader(f)
             header, refs, _ = bam.read_header(r)
         out = str(tmp_path / "out.bam")
@@ -228,12 +248,13 @@ class TestSinks:
         )
         assert same(src, back)
 
-    def test_vcf_write_bgzf_merge_read(self, fmt_spark, tmp_path):
+    def test_vcf_write_bgzf_merge_read(self, fmt_spark, tmp_path,
+                                       gen_vcf_path):
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats.vcf import read_vcf_header
 
-        src = fmt_spark.read.format("vcf").load(f"{RES}/HiSeq.10000.vcf")
-        hdr = read_vcf_header(f"{RES}/HiSeq.10000.vcf")
+        src = fmt_spark.read.format("vcf").load(gen_vcf_path)
+        hdr = read_vcf_header(gen_vcf_path)
         out = str(tmp_path / "out.vcf.bgz")
         sinks.write_vcf(src.repartition(4), out, hdr)
         back = (
@@ -241,12 +262,12 @@ class TestSinks:
         )
         assert same(src, back)
 
-    def test_sam_fastq_sinks(self, fmt_spark, tmp_path):
+    def test_sam_fastq_sinks(self, fmt_spark, tmp_path, gen_bam_path):
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats import bam, bgzf
 
-        src = fmt_spark.read.format("bam").load(f"{RES}/test.bam")
-        with open(f"{RES}/test.bam", "rb") as f:
+        src = fmt_spark.read.format("bam").load(gen_bam_path)
+        with open(gen_bam_path, "rb") as f:
             header, _, _ = bam.read_header(bgzf.BGZFReader(f))
         out_sam = str(tmp_path / "o.sam")
         sinks.write_sam(src, out_sam, header)
@@ -338,21 +359,21 @@ class TestShardedBAMSink:
     """sharded=True: directory of complete standalone BAMs, no driver-side
     byte merge — the write path that scales past one machine's bandwidth."""
 
-    def _src(self, fmt_spark):
+    def _src(self, fmt_spark, path):
         from hadoop_bam_spark.formats import bam, bgzf
 
-        src = fmt_spark.read.format("bam").load(f"{RES}/test.bam")
-        with open(f"{RES}/test.bam", "rb") as f:
+        src = fmt_spark.read.format("bam").load(path)
+        with open(path, "rb") as f:
             header, refs, _ = bam.read_header(bgzf.BGZFReader(f))
         return src, header, refs
 
-    def test_sharded_write_dir_read(self, fmt_spark, tmp_path):
+    def test_sharded_write_dir_read(self, fmt_spark, tmp_path, gen_bam_path):
         import json
 
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats import bam as bam_fmt
 
-        src, header, refs = self._src(fmt_spark)
+        src, header, refs = self._src(fmt_spark, gen_bam_path)
         out = str(tmp_path / "sharded_bam")
         sinks.write_bam(
             src.repartition(4), out, header, refs=refs,
@@ -384,11 +405,12 @@ class TestShardedBAMSink:
         data = open(one, "rb").read()
         assert data.endswith(bgzf_fmt.BGZF_EOF)
 
-    def test_sharded_interval_pushdown(self, fmt_spark, tmp_path):
+    def test_sharded_interval_pushdown(self, fmt_spark, tmp_path,
+                                       gen_bam_path):
         """Per-shard .bai pruning must survive the directory layout."""
         from hadoop_bam_spark import sinks
 
-        src, header, refs = self._src(fmt_spark)
+        src, header, refs = self._src(fmt_spark, gen_bam_path)
         out = str(tmp_path / "sharded_itv")
         sinks.write_bam(
             src.repartition(3), out, header, refs=refs,
@@ -461,14 +483,14 @@ class TestShardedVCFSink:
 
 
 class TestShardedBCFSink:
-    def test_sharded_csi_roundtrip(self, fmt_spark, tmp_path):
+    def test_sharded_csi_roundtrip(self, fmt_spark, tmp_path, gen_vcf_path):
         import json
 
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats.vcf import read_vcf_header
 
-        vcf = fmt_spark.read.format("vcf").load(f"{RES}/HiSeq.10000.vcf")
-        hdr = read_vcf_header(f"{RES}/HiSeq.10000.vcf")
+        vcf = fmt_spark.read.format("vcf").load(gen_vcf_path)
+        hdr = read_vcf_header(gen_vcf_path)
         # compare against the merged single-file BCF (known-good path) so
         # BCF's float32 QUAL semantics cancel out of the comparison
         merged = str(tmp_path / "merged.bcf")
@@ -559,12 +581,12 @@ class TestAdversarialBCFSink:
 
 
 class TestShardedTextSinks:
-    def test_sharded_sam_fastq(self, fmt_spark, tmp_path):
+    def test_sharded_sam_fastq(self, fmt_spark, tmp_path, gen_bam_path):
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats import bam, bgzf
 
-        src = fmt_spark.read.format("bam").load(f"{RES}/test.bam")
-        with open(f"{RES}/test.bam", "rb") as f:
+        src = fmt_spark.read.format("bam").load(gen_bam_path)
+        with open(gen_bam_path, "rb") as f:
             header, _, _ = bam.read_header(bgzf.BGZFReader(f))
         out = str(tmp_path / "sh_sam")
         sinks.write_sam(src.repartition(2), out, header, sharded=True)

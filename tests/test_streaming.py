@@ -473,7 +473,7 @@ class TestBamStreamSink:
         assert shards, "no shards written"
         assert all(f.startswith("batch-") for f in shards)
         # manifest records every shard with counts
-        from hadoop_bam_spark.streaming.shard_commit import read_manifest
+        from hadoop_bam_spark.commit import read_manifest
         lines = read_manifest(str(out))
         assert sum(e["records"] for e in lines) == 30
         assert sorted(e["shard"] for e in lines) == shards
@@ -495,12 +495,15 @@ class TestVcfStreamSink:
 
         register_all(spark)
         spark.dataSource.register(VCFStreamDataSource)
-        RES = "/root/reference/src/test/resources"
+        from tests import textgen
+
+        gen_vcf = tmp_path / "gen.vcf"
+        gen_vcf.write_text(textgen.gen_vcf_text(textgen.gen_vcf_rows(500)))
         land = tmp_path / "vcf_landing"
         land.mkdir()
         import shutil as _sh
 
-        _sh.copy(f"{RES}/test.vcf", land / "a.vcf")
+        _sh.copy(str(gen_vcf), land / "a.vcf")
 
         out = tmp_path / "vcf_out"
         ck = tmp_path / "ck_vcf"
@@ -509,7 +512,7 @@ class TestVcfStreamSink:
             .load(str(land))
             .writeStream.format("vcf")
             .option("path", str(out))
-            .option("header", f"{RES}/test.vcf")
+            .option("header", str(gen_vcf))
             .option("checkpointLocation", str(ck))
             .trigger(availableNow=True)
             .start()
@@ -517,9 +520,9 @@ class TestVcfStreamSink:
         q.awaitTermination()
         shards = sorted(f for f in os.listdir(out) if f.endswith(".vcf.bgz"))
         assert shards
-        from hadoop_bam_spark.streaming.shard_commit import read_manifest
+        from hadoop_bam_spark.commit import read_manifest
         lines = read_manifest(str(out))
-        src = spark.read.format("vcf").load(f"{RES}/test.vcf")
+        src = spark.read.format("vcf").load(str(gen_vcf))
         assert sum(e["records"] for e in lines) == src.count()
         back = spark.read.format("vcf").load(str(out))
         assert back.count() == src.count()
@@ -550,10 +553,8 @@ class TestManifestDrivenTail:
     def test_replay_supersedes_mid_tail_total_exact(self, tmp_path):
         import copy
 
-        from hadoop_bam_spark.streaming.bam_sink import (
-            BamShardCommit as M,
-            BAMStreamWriter,
-        )
+        from hadoop_bam_spark.commit import ShardCommit as M
+        from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter
         from hadoop_bam_spark.streaming.bam_stream import BamStreamReader
 
         rows = [
@@ -677,42 +678,42 @@ class TestStreamSinkCommitProtocol:
     def test_commit_renames_and_manifests(self, tmp_path):
         import json
 
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit
+        from hadoop_bam_spark.commit import ShardCommit
 
         w, out = self._writer(tmp_path)
         self._stage(out, "attempt-1-p00000.bam", b"A")
         self._stage(out, "attempt-2-p00001.bam", b"B")
         msgs = [
-            BamShardCommit(staged="attempt-1-p00000.bam", records=3),
+            ShardCommit(staged="attempt-1-p00000.bam", records=3),
             None,  # lost task slot
-            BamShardCommit(staged=None, records=0),  # empty partition
-            BamShardCommit(staged="attempt-2-p00001.bam", records=4),
+            ShardCommit(staged=None, records=0),  # empty partition
+            ShardCommit(staged="attempt-2-p00001.bam", records=4),
         ]
         w.commit(msgs, batchId=7)
         files = sorted(os.listdir(out))
         assert "batch-00007-00000.bam" in files
         assert "batch-00007-00001.bam" in files
         assert not any((out / ".staging").iterdir())
-        from hadoop_bam_spark.streaming.shard_commit import read_manifest
+        from hadoop_bam_spark.commit import read_manifest
         man = read_manifest(str(out))
         assert sum(e["records"] for e in man) == 7
         assert all(e["batch"] == 7 for e in man)
         # a later batch adds its OWN per-batch manifest (union grows)
         self._stage(out, "attempt-9-p00000.bam", b"C")
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit as M
+        from hadoop_bam_spark.commit import ShardCommit as M
 
         w.commit([M(staged="attempt-9-p00000.bam", records=1)], batchId=8)
         man2 = read_manifest(str(out))
         assert len(man2) == len(man) + 1
 
     def test_abort_discards_staged_only(self, tmp_path):
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit
+        from hadoop_bam_spark.commit import ShardCommit
 
         w, out = self._writer(tmp_path)
         (out / "batch-00001-00000.bam").write_bytes(b"KEEP")
         self._stage(out, "attempt-5-p00000.bam")
         w.abort(
-            [BamShardCommit(staged="attempt-5-p00000.bam", records=2), None],
+            [ShardCommit(staged="attempt-5-p00000.bam", records=2), None],
             batchId=2,
         )
         assert not (out / ".staging" / "attempt-5-p00000.bam").exists()
@@ -723,8 +724,8 @@ class TestStreamSinkCommitProtocol:
         replays the SAME batchId. A replay with FEWER non-empty
         partitions must not strand the first attempt's extra shard or
         duplicate manifest lines (VERDICT r7 #1b)."""
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit as M
-        from hadoop_bam_spark.streaming.shard_commit import read_manifest
+        from hadoop_bam_spark.commit import ShardCommit as M
+        from hadoop_bam_spark.commit import read_manifest
 
         w, out = self._writer(tmp_path)
         self._stage(out, "attempt-1-p00000.bam", b"A")
@@ -748,8 +749,8 @@ class TestStreamSinkCommitProtocol:
     def test_replay_empty_batch_supersedes(self, tmp_path):
         """A replay that yields NO rows must remove the first attempt's
         shards and its manifest."""
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit as M
-        from hadoop_bam_spark.streaming.shard_commit import read_manifest
+        from hadoop_bam_spark.commit import ShardCommit as M
+        from hadoop_bam_spark.commit import read_manifest
 
         w, out = self._writer(tmp_path)
         self._stage(out, "attempt-1-p00000.bam", b"A")
@@ -765,8 +766,8 @@ class TestStreamSinkCommitProtocol:
         import pytest as _pytest
 
         from hadoop_bam_spark import fs as fsmod
-        from hadoop_bam_spark.streaming.bam_sink import BamShardCommit as M
-        from hadoop_bam_spark.streaming.shard_commit import read_manifest
+        from hadoop_bam_spark.commit import ShardCommit as M
+        from hadoop_bam_spark.commit import read_manifest
 
         w, out = self._writer(tmp_path)
         self._stage(out, "attempt-1-p00000.bam", b"A")
@@ -812,7 +813,8 @@ class TestStreamSinkCommitProtocol:
     def test_replay_safe_all_four_sinks(self, tmp_path, fmt):
         """Every member of the sink family delegates to the shared
         replay-safe protocol with its own extension."""
-        from hadoop_bam_spark.streaming.shard_commit import read_manifest
+        from hadoop_bam_spark.commit import ShardCommit as Msg
+        from hadoop_bam_spark.commit import read_manifest
 
         sam_hdr = tmp_path / "h.sam"
         sam_hdr.write_text("@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:100\n")
@@ -825,31 +827,19 @@ class TestStreamSinkCommitProtocol:
         out = tmp_path / f"out_{fmt}"
         out.mkdir()
         if fmt == "bam":
-            from hadoop_bam_spark.streaming.bam_sink import (
-                BamShardCommit as Msg,
-                BAMStreamWriter as W,
-            )
+            from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter as W
 
             hdr, ext = sam_hdr, ".bam"
         elif fmt == "vcf":
-            from hadoop_bam_spark.streaming.vcf_sink import (
-                VcfShardCommit as Msg,
-                VCFStreamWriter as W,
-            )
+            from hadoop_bam_spark.streaming.vcf_sink import VCFStreamWriter as W
 
             hdr, ext = vcf_hdr, ".vcf.bgz"
         elif fmt == "cram":
-            from hadoop_bam_spark.streaming.cram_sink import (
-                CramShardCommit as Msg,
-                CRAMStreamWriter as W,
-            )
+            from hadoop_bam_spark.streaming.cram_sink import CRAMStreamWriter as W
 
             hdr, ext = sam_hdr, ".cram"
         else:
-            from hadoop_bam_spark.streaming.bcf_sink import (
-                BcfShardCommit as Msg,
-                BCFStreamWriter as W,
-            )
+            from hadoop_bam_spark.streaming.bcf_sink import BCFStreamWriter as W
 
             hdr, ext = vcf_hdr, ".bcf"
         w = W({"path": str(out), "header": str(hdr)})
@@ -884,7 +874,7 @@ class TestMidFlightCommitWindow:
 
     @staticmethod
     def _probe_fs(monkeypatch, probe):
-        """Wrap shard_commit's fs.rename/fs.remove so ``probe(tag)``
+        """Wrap the commit module's fs.rename/fs.remove so ``probe(tag)``
         runs before and after each mutation. A reentrancy flag keeps
         the polling reader's own fs traffic from recursing."""
         from hadoop_bam_spark import fs as fsmod
@@ -925,10 +915,8 @@ class TestMidFlightCommitWindow:
 
         from hadoop_bam_spark.formats import bam as bammod
         from hadoop_bam_spark.formats.sam import SAMHeader
-        from hadoop_bam_spark.streaming.bam_sink import (
-            BamShardCommit as M,
-            BAMStreamWriter,
-        )
+        from hadoop_bam_spark.commit import ShardCommit as M
+        from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter
         from hadoop_bam_spark.streaming.bam_stream import BamStreamReader
 
         def bam_bytes(rows):
@@ -1005,7 +993,7 @@ class TestMidFlightCommitWindow:
         from hadoop_bam_spark.streaming.fastq_stream import (
             FastqStreamReader,
         )
-        from hadoop_bam_spark.streaming.shard_commit import commit_shards
+        from hadoop_bam_spark.commit import commit_shards
         from hadoop_bam_spark.streaming.vcf_stream import VCFStreamReader
 
         rdr_cls, ext = {
@@ -1113,7 +1101,7 @@ class TestCramStreamSink:
         q.awaitTermination()
         shards = sorted(f for f in os.listdir(out) if f.endswith(".cram"))
         assert shards
-        from hadoop_bam_spark.streaming.shard_commit import read_manifest
+        from hadoop_bam_spark.commit import read_manifest
         man = read_manifest(str(out))
         assert sum(e["records"] for e in man) == 80
         back = spark.read.format("cram").load(str(out))
@@ -1277,11 +1265,14 @@ class TestBcfStreaming:
 
         register_all(spark)
         spark.dataSource.register(BcfStreamDataSource)
-        RES = "/root/reference/src/test/resources"
-        src = spark.read.format("vcf").load(f"{RES}/test.vcf")
+        from tests import textgen
+
+        gen_vcf = tmp_path / "gen.vcf"
+        gen_vcf.write_text(textgen.gen_vcf_text(textgen.gen_vcf_rows(500)))
+        src = spark.read.format("vcf").load(str(gen_vcf))
         from hadoop_bam_spark.formats.vcf import read_vcf_header
 
-        hdr = read_vcf_header(f"{RES}/test.vcf")
+        hdr = read_vcf_header(str(gen_vcf))
         # land a sharded BCF directory (the batch sink), tail it, and land
         # the stream back out through the streaming BCF sink
         land = str(tmp_path / "bcf_landing")
@@ -1292,7 +1283,7 @@ class TestBcfStreaming:
             .load(land)
             .writeStream.format("bcf")
             .option("path", str(out))
-            .option("header", f"{RES}/test.vcf")
+            .option("header", str(gen_vcf))
             .option("checkpointLocation", str(tmp_path / "ck_bcf"))
             .trigger(availableNow=True)
             .start()
@@ -1300,7 +1291,7 @@ class TestBcfStreaming:
         q.awaitTermination()
         shards = sorted(f for f in os.listdir(out) if f.endswith(".bcf"))
         assert shards
-        from hadoop_bam_spark.streaming.shard_commit import read_manifest
+        from hadoop_bam_spark.commit import read_manifest
         man = read_manifest(str(out))
         assert sum(e["records"] for e in man) == src.count()
         back = spark.read.format("bcf").load(str(out))
@@ -1564,7 +1555,7 @@ class TestTextStreamSinks:
         q.awaitTermination()
         shards = [f for f in os.listdir(out) if f.endswith(".bedgraph.bgz")]
         assert shards and all(f.startswith("batch-") for f in shards)
-        from hadoop_bam_spark.streaming.shard_commit import read_manifest
+        from hadoop_bam_spark.commit import read_manifest
 
         assert sum(e["records"] for e in read_manifest(str(out))) == 3
         back = spark.read.format("bedgraph").load(str(out))

@@ -81,6 +81,7 @@ def gen_vcf_header_lines() -> list[str]:
         + [f"##contig=<ID={c},length={n}>" for c, n in GEN_CONTIGS]
         + [
             '##INFO=<ID=DP,Number=1,Type=Integer,Description="Depth">',
+            '##FILTER=<ID=q10,Description="Quality below 10">',
             '##FORMAT=<ID=GT,Number=1,Type=String,Description="Genotype">',
             '##FORMAT=<ID=DP,Number=1,Type=Integer,Description="Depth">',
             '##FORMAT=<ID=GQ,Number=1,Type=Integer,Description="Quality">',
