@@ -50,7 +50,7 @@ def write_crai(entries: list[CRAIEntry], path: str, open_fn=open) -> None:
         for e in entries
     )
     with open_fn(path, "wb") as fh:
-        fh.write(gzip.compress(text.encode("ascii")))
+        fh.write(gzip.compress(text.encode("ascii"), mtime=0))
 
 
 def read_crai(path: str, open_fn=open) -> list[CRAIEntry]:

@@ -48,6 +48,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from hadoop_bam_spark import fs
 from hadoop_bam_spark.formats import cram
+from hadoop_bam_spark.formats.bam import cigar_ref_length
 from hadoop_bam_spark.formats.sam import SAM_SCHEMA
 from hadoop_bam_spark.sources import list_format_files
 
@@ -328,27 +329,14 @@ class CRAMReader(DataSourceReader):
                                 yield row
 
 
-_CIGAR_REF_RE = None
-
-
 def _overlaps_intervals(row: tuple, intervals) -> bool:
     """Row-level overlap residual (reference bounded-traversal semantics:
     alignment span [pos, pos + ref-consumed - 1] vs interval; unmapped rows
     never match a coordinate interval)."""
-    global _CIGAR_REF_RE
     rname, pos = row[2], row[3]
     if rname is None or pos <= 0:
         return False
-    if _CIGAR_REF_RE is None:
-        import re
-
-        _CIGAR_REF_RE = re.compile(r"(\d+)([MIDNSHP=X])")
-    cigar = row[5]
-    span = 1
-    if cigar:
-        span = sum(
-            int(n) for n, op in _CIGAR_REF_RE.findall(cigar) if op in "MDN=X"
-        ) or 1
+    span = cigar_ref_length(row[5])
     end = pos + span - 1
     return any(
         c == rname and pos <= stop and start <= end

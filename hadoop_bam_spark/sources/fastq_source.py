@@ -76,14 +76,6 @@ def fastq_record(name_line: str, seq: str, qual: str) -> tuple:
     return (name, seq, qual, instr, run, fc, lane, tile, x, y, read, filt, ctrl, idx)
 
 
-def iter_fastq_records(path: str, start: int, end: int,
-                       stringency: str = "strict") -> Iterator[tuple]:
-    """Fully parsed records (scalar name-metadata parse); see
-    :func:`iter_fastq_raw` for the boundary rules."""
-    for name, seq, qual in iter_fastq_raw(path, start, end, stringency):
-        yield fastq_record(name, seq, qual)
-
-
 def iter_fastq_raw(path: str, start: int, end: int,
                    stringency: str = "strict") -> Iterator[tuple]:
     """(name_line, sequence, quality) of records whose FIRST line starts in

@@ -15,7 +15,7 @@ through :func:`plan_text_partitions` and :func:`partition_line_chunks` too.
 A :class:`TabixTextSpec` holds every decision that differs between the
 interval-text formats, and every binding is built from it: the batch
 source here (``spark.read.format("bed"|"bedgraph"|"gff")``), the tail
-sources (streaming/text_stream.py), the stream sink
+sources (streaming/tail.py), the stream sink
 (streaming/text_sink.py) and the batch writers (sinks.py, whose tabix
 preset is the coordinate columns + 1 plus the zero-based flag). A new
 tabix-indexed text format is one spec.

@@ -2,10 +2,13 @@
 
 The reference is batch-only (SURVEY.md §2.9) — this module is part of the
 beyond-reference pipeline surface: streaming ingest of the same formats
-(``fastq_stream``, ``vcf_stream``, ``bam_stream``, ``bcf_stream``,
-``cram_stream`` directory-tail sources), streaming shard sinks for
-BAM/VCF/CRAM/BCF
-(``writeStream.format("bam"|"vcf"|"cram"|"bcf")`` — rename-committed
+(``bam_stream``, ``bcf_stream``, ``cram_stream``, ``fastq_stream``,
+``vcf_stream``, ``bed_stream``, ``bedgraph_stream``, ``gff_stream``
+directory-tail sources, :mod:`hadoop_bam_spark.streaming.tail`: each
+micro-batch is planned on the driver and decoded on executors by the batch
+source of its format, with that source's options), streaming shard sinks for
+BAM/VCF/CRAM/BCF/BED/bedGraph/GFF3
+(``writeStream.format("bam"|"vcf"|"cram"|"bcf"|...)`` — rename-committed
 standalone shards, the producer side of the tail sources), and
 stateful/windowed processing of event streams,
 expressed with watermarks + windowed aggregation and

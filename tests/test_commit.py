@@ -185,8 +185,8 @@ def test_tail_and_batch_list_the_same_files(fmt_spark, tmp_path):
     the batch source and the tail source alike."""
     import copy
 
-    from hadoop_bam_spark.sources.tabix_text import BED
-    from hadoop_bam_spark.streaming.text_stream import TextTailReader
+    from hadoop_bam_spark.streaming.tail import BEDStreamDataSource
+    from tests.test_streaming import tail_rows
 
     land = tmp_path / "land"
     land.mkdir()
@@ -199,7 +199,7 @@ def test_tail_and_batch_list_the_same_files(fmt_spark, tmp_path):
         (r.contig, r.start, r.end, r.name)
         for r in fmt_spark.read.format("bed").load(str(land)).collect()
     )
-    rdr = TextTailReader({"path": str(land)}, BED)
-    rows, _ = rdr.read(rdr.initialOffset())
+    rdr = BEDStreamDataSource({"path": str(land)}).streamReader(None)
+    rows, _ = tail_rows(rdr, rdr.initialOffset())
     tail = sorted(r[:4] for r in copy.copy(rows))
     assert batch == tail == [("chr1", 11, 20, "a"), ("chr2", 6, 9, "b")]

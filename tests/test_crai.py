@@ -189,6 +189,25 @@ def test_sink_writes_crai(spark, tmp_path):
     ]
 
 
+def test_sink_crai_is_reproducible(spark, tmp_path):
+    """Two writes of the same rows give byte-identical .crai files: the
+    gzip member header carries no write time (MTIME, bytes 4-8, is 0)."""
+    from hadoop_bam_spark import sinks
+    from hadoop_bam_spark.formats.sam import SAM_SCHEMA
+
+    refs = [("chr1", 100_000_000), ("chr2", 100_000_000)]
+    df = spark.createDataFrame(_sorted_rows(n=600), schema=SAM_SCHEMA)
+    crais = []
+    for name in ("a.cram", "b.cram"):
+        out = str(tmp_path / name)
+        sinks.write_cram(df, out, _header(), refs=refs,
+                         records_per_container=200, index_crai=True)
+        with open(out + ".crai", "rb") as f:
+            crais.append(f.read())
+    assert crais[0] == crais[1]
+    assert crais[0][4:8] == b"\x00\x00\x00\x00"
+
+
 def test_unmapped_traversal(spark, tmp_path):
     """option('unmapped') plans only the -1/-2 containers and returns only
     unplaced-unmapped records (BAM source parity, queryUnmapped semantics)."""

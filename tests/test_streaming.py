@@ -9,6 +9,26 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
+def tail_rows(rdr, start):
+    """One micro-batch of a tail reader from offset ``start``, run as
+    Spark runs it: ``latestOffset`` and ``partitions`` on ``rdr``, then
+    ``read`` of each pickled partition. Returns (row tuples, end offset)."""
+    import pickle
+
+    import pyarrow as pa
+    from pyspark import cloudpickle
+
+    end = rdr.latestOffset()
+    rows = []
+    for p in rdr.partitions(start, end):
+        for item in rdr.read(pickle.loads(cloudpickle.dumps(p))):
+            if isinstance(item, pa.RecordBatch):
+                rows.extend(zip(*(c.to_pylist() for c in item.columns)))
+            else:
+                rows.append(tuple(item))
+    return rows, end
+
+
 class TestEventsStreaming:
     def test_hourly_rollup_matches_batch(self, spark):
         from hadoop_bam_spark.streaming import (
@@ -105,7 +125,7 @@ class TestEventsStreaming:
 
 class TestFastqStreaming:
     def test_directory_tail(self, spark, tmp_path):
-        from hadoop_bam_spark.streaming.fastq_stream import FastqStreamDataSource
+        from hadoop_bam_spark.streaming.tail import FastqStreamDataSource
 
         spark.dataSource.register(FastqStreamDataSource)
         land = tmp_path / "landing"
@@ -127,26 +147,22 @@ class TestFastqStreaming:
         assert spark.table("t_fastq_stream").count() == 25
 
     def test_read_is_lazy_and_copy_safe(self, spark, tmp_path):
-        """read() must hand back a lazy, copy.copy()-restartable iterator
-        (the prefetch-cache contract), not a prebuilt list — a multi-GB
-        sequencer drop must stream through the batch (r5 VERDICT item 7,
-        parity with the r5 vcf_stream fix)."""
-        import copy
-
-        from hadoop_bam_spark.streaming.fastq_stream import FastqStreamReader
-        from hadoop_bam_spark.streaming.lazyrows import LazyFileRows
+        """The driver only plans a delivery, it never iterates its rows: a
+        multi-GB sequencer drop is decoded on executors, split for split
+        as the batch source would read it."""
+        from hadoop_bam_spark.sources.fastq_source import FastqDataSource
+        from hadoop_bam_spark.streaming.tail import FastqStreamDataSource
 
         land = tmp_path / "lz"
         land.mkdir()
         rec = "@r{i}/1\nACGT\n+\nIIII\n"
         (land / "a.fastq").write_text("".join(rec.format(i=i) for i in range(7)))
-        reader = FastqStreamReader({"path": str(land)})
-        rows, end = reader.read({"processed": []})
-        assert isinstance(rows, LazyFileRows)
+        reader = FastqStreamDataSource({"path": str(land)}).streamReader(None)
+        rows, end = tail_rows(reader, {"processed": []})
+        batch = FastqDataSource({"path": str(land)}).reader(None).partitions()
+        assert [p.part for p in reader.partitions({"processed": []}, end)] == batch
         assert end == {"processed": ["a.fastq"]}
-        first = list(rows)
-        again = list(copy.copy(rows))
-        assert len(first) == 7 and first == again
+        assert len(rows) == 7
 
     def test_replay_missing_file_raises(self, spark, tmp_path):
         """A file recorded in the offset log but deleted from disk must
@@ -154,25 +170,17 @@ class TestFastqStreaming:
         contract; parity with vcf_stream)."""
         import pytest
 
-        from hadoop_bam_spark.streaming.fastq_stream import FastqStreamReader
+        from hadoop_bam_spark.streaming.tail import FastqStreamDataSource
 
         land = tmp_path / "rp"
         land.mkdir()
         (land / "a.fastq").write_text("@r1/1\nACGT\n+\nIIII\n")
-        reader = FastqStreamReader({"path": str(land)})
-        ok = list(
-            reader.readBetweenOffsets(
-                {"processed": []}, {"processed": ["a.fastq"]}
-            )
-        )
+        reader = FastqStreamDataSource({"path": str(land)}).streamReader(None)
+        ok, _ = tail_rows(reader, {"processed": []})
         assert len(ok) == 1
         (land / "a.fastq").unlink()
         with pytest.raises(FileNotFoundError, match="exactly-once"):
-            list(
-                reader.readBetweenOffsets(
-                    {"processed": []}, {"processed": ["a.fastq"]}
-                )
-            )
+            reader.partitions({"processed": []}, {"processed": ["a.fastq"]})
 
 
 class TestDocumentStreaming:
@@ -244,7 +252,7 @@ class TestDocumentStreaming:
 
 class TestVCFStreaming:
     def test_directory_tail(self, spark, tmp_path):
-        from hadoop_bam_spark.streaming.vcf_stream import VCFStreamDataSource
+        from hadoop_bam_spark.streaming.tail import VCFStreamDataSource
 
         spark.dataSource.register(VCFStreamDataSource)
         land = tmp_path / "vland"
@@ -291,10 +299,8 @@ class TestVCFStreaming:
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats.vcf import VCF_SCHEMA, VCFHeader
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.vcf_stream import (
-            VCFStreamDataSource,
-            _iter_vcf_rows,
-        )
+        from hadoop_bam_spark.sources.bam_source import EmptyPartition
+        from hadoop_bam_spark.streaming.tail import VCFStreamDataSource
 
         register_all(spark)
         spark.dataSource.register(VCFStreamDataSource)
@@ -345,11 +351,15 @@ class TestVCFStreaming:
         )
         assert got == want and len(got) == 11
 
-        # .tbi proves b.vcf.bgz has no c1 rows: the file is skipped whole
-        it = _iter_vcf_rows(
-            str(land / "b.vcf.bgz"), [("c1", 1000, 2000)]
+        # .tbi proves b.vcf.bgz has no c1 rows: nothing is planned for it
+        rdr = VCFStreamDataSource(
+            {"path": str(land), "intervals": "c1:1000-2000"}
+        ).streamReader(None)
+        parts = rdr.partitions(
+            {"processed": ["a.vcf.bgz"]},
+            {"processed": ["a.vcf.bgz", "b.vcf.bgz"]},
         )
-        assert list(it) == []
+        assert [p.part for p in parts] == [EmptyPartition()]
 
 
 class TestBamStreaming:
@@ -372,9 +382,9 @@ class TestBamStreaming:
         return rows
 
     def test_tail_sharded_sink_output(self, spark, tmp_path):
-        from hadoop_bam_spark.streaming.bam_stream import BamStreamDataSource
+        from hadoop_bam_spark.streaming.tail import BAMStreamDataSource
 
-        spark.dataSource.register(BamStreamDataSource)
+        spark.dataSource.register(BAMStreamDataSource)
         out = str(tmp_path / "landing_bam")
         rows = self._mk_shards(spark, out)
         q = (
@@ -396,18 +406,21 @@ class TestBamStreaming:
         import copy
         import os as _os
 
-        from hadoop_bam_spark.streaming.bam_stream import BamStreamReader
-        from hadoop_bam_spark.streaming.lazyrows import LazyFileRows
+        from hadoop_bam_spark.sources.bam_source import BAMDataSource
+        from hadoop_bam_spark.streaming.tail import BAMStreamDataSource
 
         out = str(tmp_path / "landing2")
         self._mk_shards(spark, out)
-        rdr = BamStreamReader({"path": out})
-        rows, off = rdr.read(rdr.initialOffset())
-        assert isinstance(rows, LazyFileRows)  # lazy, not a prebuilt list
+        rdr = BAMStreamDataSource({"path": out}).streamReader(None)
+        rows, off = tail_rows(rdr, rdr.initialOffset())
+        # planned as the batch source plans the same shards
+        parts = rdr.partitions(rdr.initialOffset(), off)
+        assert [p.part for p in parts] == (
+            BAMDataSource({"path": out}).reader(None).partitions())
         n1 = sum(1 for _ in copy.copy(rows))
         assert n1 == 60
         # second read from the new offset: nothing new
-        rows2, off2 = rdr.read(off)
+        rows2, off2 = tail_rows(rdr, off)
         assert sum(1 for _ in copy.copy(rows2)) == 0
         assert off2 == off
         # manifest/dotfiles never enter offsets
@@ -418,7 +431,7 @@ class TestBamStreaming:
         import pytest as _pytest
 
         with _pytest.raises(FileNotFoundError):
-            list(rdr.readBetweenOffsets(rdr.initialOffset(), off))
+            rdr.partitions(rdr.initialOffset(), off)
 
 
 class TestBamStreamSink:
@@ -429,7 +442,7 @@ class TestBamStreamSink:
         import json
 
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.fastq_stream import FastqStreamDataSource
+        from hadoop_bam_spark.streaming.tail import FastqStreamDataSource
 
         register_all(spark)
         spark.dataSource.register(FastqStreamDataSource)
@@ -491,7 +504,7 @@ class TestVcfStreamSink:
         import json
 
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.vcf_stream import VCFStreamDataSource
+        from hadoop_bam_spark.streaming.tail import VCFStreamDataSource
 
         register_all(spark)
         spark.dataSource.register(VCFStreamDataSource)
@@ -555,7 +568,7 @@ class TestManifestDrivenTail:
 
         from hadoop_bam_spark.commit import ShardCommit as M
         from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter
-        from hadoop_bam_spark.streaming.bam_stream import BamStreamReader
+        from hadoop_bam_spark.streaming.tail import BAMStreamDataSource
 
         rows = [
             (f"r{i}", 0, "chr1", 1 + i, 60, "4M", None, 0, 0, "ACGT",
@@ -569,7 +582,7 @@ class TestManifestDrivenTail:
         staging = out / ".staging"
         staging.mkdir()
         w = BAMStreamWriter({"path": str(out), "header": str(hdr)})
-        rdr = BamStreamReader({"path": str(out)})
+        rdr = BAMStreamDataSource({"path": str(out)}).streamReader(None)
 
         # attempt 1 of batch 0 is MID-COMMIT: one shard already renamed
         # final, the second still staging, manifest not yet written. A raw
@@ -578,7 +591,7 @@ class TestManifestDrivenTail:
         (out / "batch-00000-00000.bam").write_bytes(
             self._bam_bytes(tmp_path, "a1.bam", rows[:4])
         )
-        r0, off0 = rdr.read(rdr.initialOffset())
+        r0, off0 = tail_rows(rdr, rdr.initialOffset())
         assert sum(1 for _ in copy.copy(r0)) == 0
         assert off0.get("processed", []) == []
 
@@ -595,13 +608,13 @@ class TestManifestDrivenTail:
              M(staged="attempt-6-p1.bam", records=3)],
             batchId=0,
         )
-        r1, off1 = rdr.read(off0)
+        r1, off1 = tail_rows(rdr, off0)
         got = [t for t in copy.copy(r1)]
         qnames = sorted(t[0] for t in got)
         # total exact: every record exactly once, no attempt-1 leftovers
         assert qnames == sorted(r[0] for r in rows)
         # nothing new on the next tick
-        r2, off2 = rdr.read(off1)
+        r2, off2 = tail_rows(rdr, off1)
         assert sum(1 for _ in copy.copy(r2)) == 0
         assert off2 == off1
 
@@ -612,25 +625,25 @@ class TestManifestDrivenTail:
         invisible; once a manifest names it, it lists."""
         import json as _json
 
-        from hadoop_bam_spark.streaming.bcf_stream import BcfStreamReader
-        from hadoop_bam_spark.streaming.cram_stream import CramStreamReader
-        from hadoop_bam_spark.streaming.fastq_stream import (
-            FastqStreamReader,
+        from hadoop_bam_spark.streaming.tail import (
+            BCFStreamDataSource,
+            CRAMStreamDataSource,
+            FastqStreamDataSource,
+            VCFStreamDataSource,
         )
-        from hadoop_bam_spark.streaming.vcf_stream import VCFStreamReader
 
-        rdr_cls, ext = {
-            "vcf": (VCFStreamReader, ".vcf"),
-            "bcf": (BcfStreamReader, ".bcf"),
-            "fastq": (FastqStreamReader, ".fastq"),
-            "cram": (CramStreamReader, ".cram"),
+        ds_cls, ext = {
+            "vcf": (VCFStreamDataSource, ".vcf"),
+            "bcf": (BCFStreamDataSource, ".bcf"),
+            "fastq": (FastqStreamDataSource, ".fastq"),
+            "cram": (CRAMStreamDataSource, ".cram"),
         }[fmt]
         d = tmp_path / f"sink_{fmt}"
         d.mkdir()
         (d / ".staging").mkdir()
         shard = f"batch-00000-00000{ext}"
         (d / shard).write_bytes(b"xx")  # listing-level test: content unread
-        rdr = rdr_cls({"path": str(d)})
+        rdr = ds_cls({"path": str(d)}).streamReader(None)
         assert rdr._list() == []
         (d / "_manifest-00000.jsonl").write_text(
             _json.dumps({"shard": shard, "records": 1, "batch": 0}) + "\n"
@@ -642,7 +655,7 @@ class TestManifestDrivenTail:
         sink output; the tail falls back to the raw listing."""
         import copy
 
-        from hadoop_bam_spark.streaming.bam_stream import BamStreamReader
+        from hadoop_bam_spark.streaming.tail import BAMStreamDataSource
 
         out = tmp_path / "drop"
         out.mkdir()
@@ -651,8 +664,8 @@ class TestManifestDrivenTail:
         (out / "delivery.bam").write_bytes(
             self._bam_bytes(tmp_path, "d.bam", rows)
         )
-        rdr = BamStreamReader({"path": str(out)})
-        r, off = rdr.read(rdr.initialOffset())
+        rdr = BAMStreamDataSource({"path": str(out)}).streamReader(None)
+        r, off = tail_rows(rdr, rdr.initialOffset())
         assert sum(1 for _ in copy.copy(r)) == 1
         assert off["processed"] == ["delivery.bam"]
 
@@ -907,7 +920,7 @@ class TestMidFlightCommitWindow:
         monkeypatch.setattr(fsmod, "remove", wrap("remove"))
 
     def test_bam_rows_never_partial_mid_commit(self, tmp_path, monkeypatch):
-        """Row-level: poll a BamStreamReader from a fixed offset at every
+        """Row-level: poll a bam_stream reader from a fixed offset at every
         mutation inside a live commit. Every poll yields [] or the FULL
         6-record batch — never a subset — and visibility is monotonic
         (once full, stays full through the staging sweep)."""
@@ -917,7 +930,7 @@ class TestMidFlightCommitWindow:
         from hadoop_bam_spark.formats.sam import SAMHeader
         from hadoop_bam_spark.commit import ShardCommit as M
         from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter
-        from hadoop_bam_spark.streaming.bam_stream import BamStreamReader
+        from hadoop_bam_spark.streaming.tail import BAMStreamDataSource
 
         def bam_bytes(rows):
             hdr = SAMHeader()
@@ -941,12 +954,12 @@ class TestMidFlightCommitWindow:
         staging = out / ".staging"
         staging.mkdir()
         w = BAMStreamWriter({"path": str(out), "header": str(hdr_p)})
-        rdr = BamStreamReader({"path": str(out)})
+        rdr = BAMStreamDataSource({"path": str(out)}).streamReader(None)
 
         # batch 0 committed cleanly; the reader has consumed it
         (staging / "attempt-1-p0.bam").write_bytes(bam_bytes(rows[:4]))
         w.commit([M(staged="attempt-1-p0.bam", records=4)], batchId=0)
-        r0, off0 = rdr.read(rdr.initialOffset())
+        r0, off0 = tail_rows(rdr, rdr.initialOffset())
         assert sum(1 for _ in copy.copy(r0)) == 4
 
         # batch 1 (rows 4-9, split 3+3) commits WHILE we poll
@@ -956,7 +969,7 @@ class TestMidFlightCommitWindow:
         observations = []
 
         def probe(tag):
-            got, _ = rdr.read(off0)
+            got, _ = tail_rows(rdr, off0)
             qnames = sorted(t[0] for t in copy.copy(got))
             observations.append((tag, qnames))
             assert qnames in ([], want), (tag, qnames)
@@ -975,9 +988,9 @@ class TestMidFlightCommitWindow:
         assert False in states and True in states
         assert states == sorted(states), observations  # monotonic
         # exact totals after commit, nothing new on the next tick
-        r1, off1 = rdr.read(off0)
+        r1, off1 = tail_rows(rdr, off0)
         assert sorted(t[0] for t in copy.copy(r1)) == want
-        r2, off2 = rdr.read(off1)
+        r2, off2 = tail_rows(rdr, off1)
         assert sum(1 for _ in copy.copy(r2)) == 0
         assert off2 == off1
 
@@ -988,26 +1001,26 @@ class TestMidFlightCommitWindow:
         commit every ``_list()`` poll returns [] or the full committed
         shard set — a lone renamed shard is never visible without its
         manifest."""
-        from hadoop_bam_spark.streaming.bcf_stream import BcfStreamReader
-        from hadoop_bam_spark.streaming.cram_stream import CramStreamReader
-        from hadoop_bam_spark.streaming.fastq_stream import (
-            FastqStreamReader,
-        )
         from hadoop_bam_spark.commit import commit_shards
-        from hadoop_bam_spark.streaming.vcf_stream import VCFStreamReader
+        from hadoop_bam_spark.streaming.tail import (
+            BCFStreamDataSource,
+            CRAMStreamDataSource,
+            FastqStreamDataSource,
+            VCFStreamDataSource,
+        )
 
-        rdr_cls, ext = {
-            "vcf": (VCFStreamReader, ".vcf"),
-            "bcf": (BcfStreamReader, ".bcf"),
-            "fastq": (FastqStreamReader, ".fastq"),
-            "cram": (CramStreamReader, ".cram"),
+        ds_cls, ext = {
+            "vcf": (VCFStreamDataSource, ".vcf"),
+            "bcf": (BCFStreamDataSource, ".bcf"),
+            "fastq": (FastqStreamDataSource, ".fastq"),
+            "cram": (CRAMStreamDataSource, ".cram"),
         }[fmt]
         d = tmp_path / f"sink_{fmt}"
         d.mkdir()
         (d / ".staging").mkdir()
         (d / ".staging" / f"attempt-1-p0{ext}").write_bytes(b"A")
         (d / ".staging" / f"attempt-2-p1{ext}").write_bytes(b"BB")
-        rdr = rdr_cls({"path": str(d)})
+        rdr = ds_cls({"path": str(d)}).streamReader(None)
         full = [f"batch-00000-00000{ext}", f"batch-00000-00001{ext}"]
         observations = []
 
@@ -1068,10 +1081,10 @@ class TestCramStreamSink:
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats.sam import SAM_SCHEMA, SAMHeader
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.bam_stream import BamStreamDataSource
+        from hadoop_bam_spark.streaming.tail import BAMStreamDataSource
 
         register_all(spark)
-        spark.dataSource.register(BamStreamDataSource)
+        spark.dataSource.register(BAMStreamDataSource)
         # produce a landing dir of BAM shards, tail it, land CRAM shards
         rows = [
             (f"c{i}", 0, "chr1", 1 + i, 60, "6M", None, 0, 0, "ACGTAC",
@@ -1110,11 +1123,11 @@ class TestCramStreamSink:
 
         # r9: the cram_stream tail source closes the loop — it consumes
         # the streaming CRAM sink's own output THROUGH the manifests
-        from hadoop_bam_spark.streaming.cram_stream import (
-            CramStreamDataSource,
+        from hadoop_bam_spark.streaming.tail import (
+            CRAMStreamDataSource,
         )
 
-        spark.dataSource.register(CramStreamDataSource)
+        spark.dataSource.register(CRAMStreamDataSource)
         q2 = (
             spark.readStream.format("cram_stream")
             .load(str(out))
@@ -1133,15 +1146,15 @@ class TestCramStreamSink:
 
     def test_cram_stream_exactly_once_and_manifest_gate(self, spark,
                                                         tmp_path):
-        """Direct reader contract: lazy rows, exactly-once offsets, and
+        """Direct reader contract: batch planning, exactly-once offsets, and
         manifest-gated listing (a visible shard without its manifest is
         not consumed)."""
         import copy
 
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats.sam import SAM_SCHEMA, SAMHeader
-        from hadoop_bam_spark.streaming.cram_stream import CramStreamReader
-        from hadoop_bam_spark.streaming.lazyrows import LazyFileRows
+        from hadoop_bam_spark.sources.cram_source import CRAMDataSource
+        from hadoop_bam_spark.streaming.tail import CRAMStreamDataSource
 
         rows = [
             (f"x{i}", 0, "chr1", 1 + i, 60, "4M", None, 0, 0, "ACGT",
@@ -1154,11 +1167,13 @@ class TestCramStreamSink:
         land = str(tmp_path / "cram_landing")
         df = spark.createDataFrame(rows, SAM_SCHEMA).repartition(2)
         sinks.write_cram(df, land, hdr, sharded=True)
-        rdr = CramStreamReader({"path": land})
-        got, off = rdr.read(rdr.initialOffset())
-        assert isinstance(got, LazyFileRows)
+        rdr = CRAMStreamDataSource({"path": land}).streamReader(None)
+        got, off = tail_rows(rdr, rdr.initialOffset())
+        parts = rdr.partitions(rdr.initialOffset(), off)
+        assert [p.part for p in parts] == (
+            CRAMDataSource({"path": land}).reader(None).partitions())
         assert sum(1 for _ in copy.copy(got)) == 30
-        again, off2 = rdr.read(off)
+        again, off2 = tail_rows(rdr, off)
         assert sum(1 for _ in copy.copy(again)) == 0 and off2 == off
         # manifest gate: a sink dir (.staging present) with an orphan
         # shard and no manifest reads as empty
@@ -1171,8 +1186,8 @@ class TestCramStreamSink:
             f for f in os.listdir(land) if f.endswith(".cram")
         )
         shutil.copy(os.path.join(land, src), gated / "batch-00000-00000.cram")
-        r2 = CramStreamReader({"path": str(gated)})
-        empty, _ = r2.read(r2.initialOffset())
+        r2 = CRAMStreamDataSource({"path": str(gated)}).streamReader(None)
+        empty, _ = tail_rows(r2, r2.initialOffset())
         assert sum(1 for _ in copy.copy(empty)) == 0
 
     def test_stream_cram_reference_compressed(self, spark, tmp_path):
@@ -1183,10 +1198,10 @@ class TestCramStreamSink:
         from hadoop_bam_spark.formats import cram
         from hadoop_bam_spark.formats.sam import SAM_SCHEMA, SAMHeader
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.bam_stream import BamStreamDataSource
+        from hadoop_bam_spark.streaming.tail import BAMStreamDataSource
 
         register_all(spark)
-        spark.dataSource.register(BamStreamDataSource)
+        spark.dataSource.register(BAMStreamDataSource)
         contig = ("ACGT" * 1500)[:5000]
         fasta = tmp_path / "ref.fa"
         with open(fasta, "w") as f:
@@ -1261,10 +1276,10 @@ class TestBcfStreaming:
 
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.bcf_stream import BcfStreamDataSource
+        from hadoop_bam_spark.streaming.tail import BCFStreamDataSource
 
         register_all(spark)
-        spark.dataSource.register(BcfStreamDataSource)
+        spark.dataSource.register(BCFStreamDataSource)
         from tests import textgen
 
         gen_vcf = tmp_path / "gen.vcf"
@@ -1307,19 +1322,36 @@ class TestBcfStreaming:
 def test_bcf_stream_plain_uncompressed(spark, tmp_path):
     """The tail source must decode plain (non-BGZF) BCF2 files too — the
     sniff routes both kinds (reference VCFFormat content sniff)."""
-    import shutil as _sh
+    import gzip
 
-    from hadoop_bam_spark.streaming.bcf_stream import _iter_bcf_file
-
-    RES = "/root/reference/src/test/resources"
-    land = tmp_path / "plain_bcf"
-    land.mkdir()
-    _sh.copy(f"{RES}/test.uncompressed.bcf", land / "a.bcf")
-    rows = list(_iter_bcf_file(str(land / "a.bcf")))
+    from hadoop_bam_spark import sinks
+    from hadoop_bam_spark.formats.vcf import read_vcf_header
     from hadoop_bam_spark.sources import register_all
+    from hadoop_bam_spark.streaming.tail import BCFStreamDataSource
+    from tests import textgen
 
     register_all(spark)
-    want = spark.read.format("bcf").load(f"{RES}/test.uncompressed.bcf").count()
+    spark.dataSource.register(BCFStreamDataSource)
+    gen_vcf = tmp_path / "gen.vcf"
+    gen_vcf.write_text(textgen.gen_vcf_text(textgen.gen_vcf_rows(300)))
+    bgzf_bcf = tmp_path / "gen.bcf"
+    sinks.write_bcf(spark.read.format("vcf").load(str(gen_vcf)),
+                    str(bgzf_bcf), read_vcf_header(str(gen_vcf)))
+    land = tmp_path / "plain_bcf"
+    land.mkdir()
+    # BGZF is multi-member gzip: decompressing it whole gives plain BCF2
+    (land / "a.bcf").write_bytes(gzip.decompress(bgzf_bcf.read_bytes()))
+    q = (
+        spark.readStream.format("bcf_stream")
+        .load(str(land))
+        .writeStream.format("memory")
+        .queryName("t_bcf_plain")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    rows = spark.table("t_bcf_plain").collect()
+    want = spark.read.format("bcf").load(str(bgzf_bcf)).count()
     assert len(rows) == want > 0
 
 
@@ -1331,7 +1363,7 @@ class TestBEDStream:
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats.bed import BED_SCHEMA
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.text_stream import BEDStreamDataSource
+        from hadoop_bam_spark.streaming.tail import BEDStreamDataSource
 
         register_all(spark)
         spark.dataSource.register(BEDStreamDataSource)
@@ -1373,7 +1405,7 @@ class TestBedGraphStream:
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats.bedgraph import BEDGRAPH_SCHEMA
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.text_stream import (
+        from hadoop_bam_spark.streaming.tail import (
             BedGraphStreamDataSource,
         )
 
@@ -1411,7 +1443,7 @@ class TestBedGraphStream:
     def test_tail_stringency_skips_bad_rows(self, spark, tmp_path):
         """A malformed row in a tailed delivery must not wedge a lenient
         stream; silent skips it and the rest of the file lands."""
-        from hadoop_bam_spark.streaming.text_stream import (
+        from hadoop_bam_spark.streaming.tail import (
             BedGraphStreamDataSource,
         )
 
@@ -1440,7 +1472,7 @@ class TestBedGraphStream:
     def test_tail_bg_extension_spellings(self, spark, tmp_path):
         """.bg and .bedGraph deliveries (the batch source's spellings)
         must be picked up too."""
-        from hadoop_bam_spark.streaming.text_stream import (
+        from hadoop_bam_spark.streaming.tail import (
             BedGraphStreamDataSource,
         )
 
@@ -1476,7 +1508,7 @@ class TestStreamStaticIntervalJoin:
         from hadoop_bam_spark.operators.interval_join import (
             interval_join_binned,
         )
-        from hadoop_bam_spark.streaming.text_stream import BEDStreamDataSource
+        from hadoop_bam_spark.streaming.tail import BEDStreamDataSource
 
         spark.dataSource.register(BEDStreamDataSource)
         land = tmp_path / "bed_land_join"
@@ -1530,7 +1562,7 @@ class TestTextStreamSinks:
         from pyspark.sql import functions as F
 
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.text_stream import (
+        from hadoop_bam_spark.streaming.tail import (
             BedGraphStreamDataSource,
         )
 
@@ -1575,7 +1607,7 @@ class TestTextStreamSinks:
         from hadoop_bam_spark.formats.bed import BED_SCHEMA
         from hadoop_bam_spark.formats.gff import GFF_SCHEMA
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.streaming.text_stream import BEDStreamDataSource
+        from hadoop_bam_spark.streaming.tail import BEDStreamDataSource
 
         register_all(spark)
         spark.dataSource.register(BEDStreamDataSource)
@@ -1643,7 +1675,7 @@ class TestGFFStream:
         """gff_stream (third text-tail binding; interval coords live at
         tuple indexes 3/4) tails deliveries with per-row residual
         filtering and can tail the gff shard sink's output."""
-        from hadoop_bam_spark.streaming.text_stream import GFFStreamDataSource
+        from hadoop_bam_spark.streaming.tail import GFFStreamDataSource
 
         spark.dataSource.register(GFFStreamDataSource)
         land = tmp_path / "gff_land"
@@ -1668,3 +1700,125 @@ class TestGFFStream:
         rows = spark.table("t_gff_tail").collect()
         assert [(r.contig, r.start, r.end, dict(r.attributes)["ID"])
                 for r in rows] == [("chr1", 100, 200, "g1")]
+
+
+#: stream format -> (batch format, a ``columns`` projection)
+TAIL_FORMATS = {
+    "bam_stream": ("bam", "qname,rname,pos"),
+    "bcf_stream": ("bcf", "contig,start,id"),
+    "cram_stream": ("cram", "qname,rname,pos"),
+    "fastq_stream": ("fastq", "name,sequence,lane"),
+    "vcf_stream": ("vcf", "contig,start,id"),
+    "bed_stream": ("bed", "contig,start,name"),
+    "bedgraph_stream": ("bedgraph", "contig,end,value"),
+    "gff_stream": ("gff", "contig,type,attributes"),
+}
+
+
+@pytest.fixture(scope="module")
+def tail_landings(spark, tmp_path_factory):
+    """A two-file landing directory per tail format, built from
+    tests/textgen.py and the engine's sinks."""
+    import random
+
+    from hadoop_bam_spark import sinks
+    from hadoop_bam_spark.formats.bed import BED_SCHEMA
+    from hadoop_bam_spark.formats.bedgraph import BEDGRAPH_SCHEMA
+    from hadoop_bam_spark.formats.sam import parse_header
+    from hadoop_bam_spark.formats.vcf import read_vcf_header
+    from hadoop_bam_spark.sources import register_all
+    from hadoop_bam_spark.sources.tabix_text import GFF
+    from hadoop_bam_spark.streaming import tail
+    from tests import textgen
+
+    register_all(spark)
+    for name in dir(tail):
+        if name.endswith("StreamDataSource"):
+            spark.dataSource.register(getattr(tail, name))
+    root = tmp_path_factory.mktemp("tail_parity")
+    land = {fmt: root / fmt for fmt in TAIL_FORMATS}
+    for d in land.values():
+        d.mkdir()
+    src = root / "src"
+    src.mkdir()
+
+    sam_hdr = parse_header(textgen.gen_bam_header_text().splitlines())
+    for seed, name in ((1, "a"), (2, "b")):
+        bam = land["bam_stream"] / f"{name}.bam"
+        bam.write_bytes(textgen.bam_file(textgen.gen_bam_records(600, seed)))
+        sinks.write_cram(spark.read.format("bam").load(str(bam)),
+                         str(land["cram_stream"] / f"{name}.cram"), sam_hdr,
+                         refs=textgen.GEN_BAM_REFS)
+
+    vcf_text = [textgen.gen_vcf_text(textgen.gen_vcf_rows(300, seed))
+                for seed in (1, 2)]
+    (land["vcf_stream"] / "a.vcf").write_text(vcf_text[0])
+    (land["vcf_stream"] / "b.vcf.bgz").write_bytes(
+        textgen.bgzf_compress(vcf_text[1].encode()))
+    vcf_hdr = read_vcf_header(str(land["vcf_stream"] / "a.vcf"))
+    for i, name in enumerate("ab"):
+        (src / f"{name}.vcf").write_text(vcf_text[i])
+        sinks.write_bcf(spark.read.format("vcf").load(str(src / f"{name}.vcf")),
+                        str(land["bcf_stream"] / f"{name}.bcf"), vcf_hdr)
+
+    rng = random.Random(3)
+    for name, ext in (("a", ".fastq"), ("b", ".fq")):
+        (land["fastq_stream"] / f"{name}{ext}").write_text("".join(
+            f"@M1:7:FC{name}:{rng.randint(1, 8)}:1101:{i}:{rng.randint(1, 999)}"
+            f" 1:N:0:ACGT\n{seq}\n+\n{'I' * len(seq)}\n"
+            for i in range(200)
+            for seq in ["".join(rng.choice("ACGTN") for _ in range(30))]
+        ))
+
+    feats = textgen.gen_vcf_rows(400, seed=4)
+    halves = {"a": feats[::2], "b": feats[1::2]}
+    for name, ext, idx in (("a", "", False), ("b", ".bgz", True)):
+        rows = halves[name]
+        sinks.write_bed(spark.createDataFrame(
+            [(r[0], r[1], r[2] + 20, r[3], int(r[6]), "+-"[i % 2], [])
+             for i, r in enumerate(rows)], BED_SCHEMA),
+            str(land["bed_stream"] / f"{name}.bed{ext}"), index_tbi=idx)
+        sinks.write_bedgraph(spark.createDataFrame(
+            [(r[0], r[1], r[1] + 5, r[6] / 4) for r in rows], BEDGRAPH_SCHEMA),
+            str(land["bedgraph_stream"] / f"{name}.bedgraph{ext}"),
+            index_tbi=idx)
+        sinks.write_gff(spark.createDataFrame(
+            [(r[0], "gen", "gene" if i % 3 else "exon", r[1], r[2] + 50,
+              r[6], "+", None if i % 3 else 0, {"ID": f"{name}{i}"})
+             for i, r in enumerate(rows)], GFF.schema),
+            str(land["gff_stream"] / f"{name}.gff3{ext}"), index_tbi=idx)
+    return land
+
+
+def _canon(rows):
+    import json
+
+    return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True,
+                             default=str) for r in rows)
+
+
+@pytest.mark.parametrize("projected", [False, True], ids=["all", "columns"])
+@pytest.mark.parametrize("fmt", sorted(TAIL_FORMATS))
+def test_tail_matches_batch_read(spark, tail_landings, tmp_path, fmt,
+                                 projected):
+    """Every tail source returns what its batch source reads from the same
+    landing directory: the same rows and the same columns, with and
+    without the batch source's ``columns`` option."""
+    batch_fmt, columns = TAIL_FORMATS[fmt]
+    opts = {"columns": columns} if projected else {}
+    land = str(tail_landings[fmt])
+    name = f"t_parity_{batch_fmt}_{int(projected)}"
+    q = (
+        spark.readStream.format(fmt).options(**opts).load(land)
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = spark.table(name)
+    want = spark.read.format(batch_fmt).options(**opts).load(land)
+    assert got.dtypes == want.dtypes
+    want_rows = want.collect()
+    assert len(want_rows) > 0
+    assert _canon(got.collect()) == _canon(want_rows)

@@ -1,6 +1,6 @@
 """One extension tuple per tabix-text format: the batch source and the
 tail source of BED, bedGraph and GFF3 pick up the same file names
-(sources/tabix_text.py, streaming/text_stream.py)."""
+(sources/tabix_text.py, streaming/tail.py)."""
 
 import gzip
 
@@ -37,7 +37,7 @@ def _canon(rows):
 @pytest.mark.parametrize("fmt", sorted(CASES))
 def test_batch_and_stream_read_the_same_spellings(spark, tmp_path, fmt):
     from hadoop_bam_spark.sources import register_all
-    from hadoop_bam_spark.streaming import text_stream
+    from hadoop_bam_spark.streaming import tail
 
     names, lines = CASES[fmt]
     land = tmp_path / f"{fmt}_land"
@@ -48,9 +48,9 @@ def test_batch_and_stream_read_the_same_spellings(spark, tmp_path, fmt):
     (land / bgz).write_bytes(bgzf_compress((lines[2] + "\n").encode()))
 
     register_all(spark)
-    for ds in (text_stream.BEDStreamDataSource,
-               text_stream.BedGraphStreamDataSource,
-               text_stream.GFFStreamDataSource):
+    for ds in (tail.BEDStreamDataSource,
+               tail.BedGraphStreamDataSource,
+               tail.GFFStreamDataSource):
         spark.dataSource.register(ds)
     batch = spark.read.format(fmt).load(str(land)).collect()
     q = (
