@@ -29,9 +29,6 @@ import pyarrow.compute as pc
 
 from hadoop_bam_spark.formats.sam import SAM_SCHEMA  # noqa: F401  (parity anchor)
 
-#: data lines per vectorized chunk
-VEC_CHUNK_LINES = 16384
-
 # anchored spec regexes, same as sam._SAM_INT_RE / _SAM_FLOAT_RE
 _INT_RE = r"^[-+]?[0-9]+$"
 _FLOAT_RE = (

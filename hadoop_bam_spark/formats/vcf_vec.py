@@ -40,10 +40,6 @@ import pyarrow.csv as pacsv
 
 from hadoop_bam_spark.formats.vcf import VCF_SCHEMA
 
-#: data lines per vectorized chunk (bigger than the row-path batch: the
-#: whole point is amortizing per-batch kernel dispatch)
-VEC_CHUNK_LINES = 16384
-
 _FIXED = 8  # CHROM POS ID REF ALT QUAL FILTER INFO
 
 
@@ -301,46 +297,6 @@ def parse_vcf_chunk(
     return out
 
 
-def _conform(arr: pa.Array, t: pa.DataType) -> pa.Array:
-    """Cast to the exact Spark-bridge type, tolerating nullability-only
-    mismatches in nested fields (Arrow refuses nullable->non-nullable casts
-    even when no value is null, e.g. the genotype struct's sample field)."""
-    if arr.type.equals(t):
-        return arr
-    if arr.null_count == len(arr):
-        return pa.nulls(len(arr), t)
-    if pa.types.is_list(t) and pa.types.is_list(arr.type):
-        out = pa.ListArray.from_arrays(
-            arr.offsets, _conform(arr.values, t.value_type)
-        )
-        return out if out.type.equals(t) else out.cast(t)
-    if pa.types.is_struct(t) and pa.types.is_struct(arr.type):
-        children = [
-            _conform(arr.field(i), t.field(i).type) for i in range(t.num_fields)
-        ]
-        return pa.StructArray.from_arrays(children, fields=list(t))
-    return arr.cast(t)
-
-
-def chunk_to_batch(
-    arrays: dict,
-    target_schema: pa.Schema,
-    interval_mask: Optional[np.ndarray] = None,
-) -> pa.RecordBatch:
-    """Assemble (and optionally filter) the pruned RecordBatch.
-
-    Casts each column to the exact field type Spark's Arrow bridge expects
-    (list/map child field names differ between kernels' output and
-    ``to_arrow_schema``)."""
-    cols = []
-    for f in target_schema:
-        cols.append(_conform(arrays[f.name], f.type))
-    batch = pa.RecordBatch.from_arrays(cols, schema=target_schema)
-    if interval_mask is not None:
-        batch = batch.filter(pa.array(interval_mask))
-    return batch
-
-
 def _join_or_dot(col: pa.Array, sep: str) -> pa.Array:
     """list<string> -> sep-joined string; null/EMPTY lists -> '.' (the
     scalar formatter's `",".join(x) if x else "."`)."""
@@ -482,19 +438,3 @@ def format_vcf_chunk(batch, samples) -> Optional[bytes]:
         pa.scalar("\n"),
     )[0].as_py()
     return (blob + "\n").encode("utf-8", "surrogateescape")
-
-
-def interval_mask(
-    arrays: dict, intervals, n: int
-) -> Optional[np.ndarray]:
-    """Vectorized residual overlap filter over (contig, start, end)."""
-    if intervals is None:
-        return None
-    contig = arrays["contig"]
-    start = arrays["start"].to_numpy(zero_copy_only=False)
-    end = arrays["end"].to_numpy(zero_copy_only=False)
-    mask = np.zeros(n, dtype=bool)
-    for c, s, stop in intervals:
-        cm = pc.equal(contig, c).to_numpy(zero_copy_only=False)
-        mask |= cm & (start <= stop) & (s <= end)
-    return mask

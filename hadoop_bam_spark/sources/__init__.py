@@ -2,16 +2,34 @@
 
 Planning (driver): list files, align byte-range splits to record boundaries
 via sidecar index or heuristic guesser — the Spark-native equivalent of the
-reference's ``getSplits`` planners (BAMInputFormat.java:227-271).
+reference's ``getSplits`` planners (BAMInputFormat.java:227-271). A reader
+that plans nothing returns ``[EmptyPartition()]``.
 Execution (executors): each InputPartition re-opens its file and iterates
 records in its virtual-offset span (BAMRecordReader.java:122-235).
+
+Shared here: the one decode loop of the line-oriented readers
+(:func:`decode_chunks`: vectorized chunk parse, scalar fallback under
+``option("stringency")``, residual mask), the one Arrow batch builder
+(:func:`to_batch`, and :func:`row_batches` for row tuples), projection
+(:func:`pruned_schema`), the interval residual (:func:`interval_mask`) and
+Catalyst interval pushdown (:func:`pushed_intervals`).
 
 Register with :func:`register_all`.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import SparkSession
+from pyspark.sql.datasource import InputPartition
+
+
+@dataclass
+class EmptyPartition(InputPartition):
+    """What a reader plans when it finds nothing to read: Spark calls
+    ``read(None)`` when ``partitions()`` returns ``[]``. Reading it yields
+    no rows."""
 
 
 def register_all(spark: SparkSession) -> None:
@@ -106,16 +124,13 @@ def pruned_schema(full_schema, options):
     return StructType([full_schema.fields[i] for i in keep]), keep
 
 
-def project_rows(rows, keep):
-    """Prune full-width row tuples down to the kept schema positions."""
-    if keep is None:
-        return rows
-    return (tuple(row[i] for i in keep) for row in rows)
-
-
-#: Rows per Arrow batch handed to Spark. Large enough to amortize the
-#: Python->JVM transfer, small enough to keep per-batch memory modest.
+#: Rows per Arrow batch built from row tuples. Large enough to amortize
+#: the Python->JVM transfer, small enough to keep per-batch memory modest.
 ARROW_BATCH_ROWS = 4096
+
+#: Data items (text lines, FASTQ records) per vectorized parse: big enough
+#: to amortize per-chunk kernel dispatch, one Arrow batch out.
+CHUNK_LINES = 16384
 
 _ARROW_SCHEMA_CACHE: dict = {}
 
@@ -132,31 +147,142 @@ def arrow_schema(spark_schema):
     return cached
 
 
-def arrow_batches(rows, spark_schema, batch_rows: int = ARROW_BATCH_ROWS):
-    """Pack a tuple iterator into ``pyarrow.RecordBatch``es.
-
-    Python DataSource readers that yield Arrow batches move data to the JVM
-    via Arrow IPC instead of per-row pickling — the hottest path of every
-    source at scale (SURVEY.md §4: 'Arrow record batches mandatory'). Rows
-    must match ``spark_schema`` positionally; nested structs may be tuples,
-    maps dicts (pyarrow converts both)."""
+def _conform(arr, t):
+    """Cast to the exact Spark-bridge type, tolerating nullability-only
+    mismatches in nested fields (Arrow refuses nullable->non-nullable casts
+    even when no value is null, e.g. the genotype struct's sample field)."""
     import pyarrow as pa
 
-    cached = arrow_schema(spark_schema)
-    types = [f.type for f in cached]
+    if arr.type.equals(t):
+        return arr
+    if arr.null_count == len(arr):
+        return pa.nulls(len(arr), t)
+    if pa.types.is_list(t) and pa.types.is_list(arr.type):
+        out = pa.ListArray.from_arrays(
+            arr.offsets, _conform(arr.values, t.value_type)
+        )
+        return out if out.type.equals(t) else out.cast(t)
+    if pa.types.is_struct(t) and pa.types.is_struct(arr.type):
+        children = [
+            _conform(arr.field(i), t.field(i).type) for i in range(t.num_fields)
+        ]
+        return pa.StructArray.from_arrays(children, fields=list(t))
+    return arr.cast(t)
 
-    def make(buf):
-        arrays = [pa.array(list(c), type=t) for c, t in zip(zip(*buf), types)]
-        return pa.RecordBatch.from_arrays(arrays, schema=cached)
 
-    buf = []
-    for row in rows:
-        buf.append(row)
-        if len(buf) >= batch_rows:
-            yield make(buf)
-            buf = []
+def to_batch(arrays, target, mask=None):
+    """``{column: pyarrow.Array}`` -> the ``target`` (pruned) RecordBatch,
+    keeping the rows where the boolean ``mask`` is true.
+
+    Python DataSource readers that yield Arrow batches move data to the JVM
+    via Arrow IPC instead of per-row pickling. Each column is cast to the
+    exact field type Spark's Arrow bridge expects (list/map child field
+    names differ between kernels' output and ``to_arrow_schema``); columns
+    the target does not name are ignored."""
+    import pyarrow as pa
+
+    cols = [_conform(arrays[f.name], f.type) for f in target]
+    batch = pa.RecordBatch.from_arrays(cols, schema=target)
+    if mask is not None:
+        batch = batch.filter(pa.array(mask))
+    return batch
+
+
+def interval_mask(arrays, intervals, n: int):
+    """Residual overlap filter over the (contig, start, end) columns: true
+    where the row overlaps any 1-based inclusive ``(contig, lo, hi)``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    contig = arrays["contig"]
+    start = arrays["start"].to_numpy(zero_copy_only=False)
+    end = arrays["end"].to_numpy(zero_copy_only=False)
+    mask = np.zeros(n, dtype=bool)
+    for c, s, stop in intervals:
+        cm = pc.equal(contig, c).to_numpy(zero_copy_only=False)
+        mask |= cm & (start <= stop) & (s <= end)
+    return mask
+
+
+class _RowColumns(dict):
+    """``{column: pyarrow.Array}`` over full-schema row tuples; a column is
+    built the first time it is read, so unprojected fields cost nothing."""
+
+    def __init__(self, rows, schema):
+        super().__init__()
+        self._rows, self._schema = rows, schema
+
+    def __missing__(self, name):
+        import pyarrow as pa
+
+        i = self._schema.get_field_index(name)
+        col = self[name] = pa.array(
+            [r[i] for r in self._rows], type=self._schema.field(i).type
+        )
+        return col
+
+
+def row_batches(rows, full_schema, schema, mask=None):
+    """Full-schema row tuples -> Arrow batches of ``schema`` (``full_schema``
+    pruned by :func:`pruned_schema`), ``ARROW_BATCH_ROWS`` rows at a time,
+    filtered by ``mask(arrays, n)`` when given. Nested structs may be
+    tuples, maps dicts (pyarrow converts both)."""
+    from itertools import islice
+
+    full = arrow_schema(full_schema)
+    target = arrow_schema(schema)
+    rows = iter(rows)
+    while buf := list(islice(rows, ARROW_BATCH_ROWS)):
+        arrays = _RowColumns(buf, full)
+        yield to_batch(
+            arrays, target, None if mask is None else mask(arrays, len(buf))
+        )
+
+
+def _rechunk(chunks, size: int):
+    """Lists of any length -> lists of ``size`` items (the last shorter)."""
+    buf: list = []
+    for chunk in chunks:
+        buf.extend(chunk)
+        while len(buf) >= size:
+            yield buf[:size]
+            del buf[:size]
     if buf:
-        yield make(buf)
+        yield buf
+
+
+def decode_chunks(chunks, full_schema, schema, parse_chunk, parse_line,
+                  stringency: str, what: str, mask=None):
+    """The one decode loop of the line-oriented sources: lists of data
+    items (lines, or FASTQ record tuples) -> Arrow batches of ``schema``.
+
+    Items are re-chunked to :data:`CHUNK_LINES` and handed to the vectorized
+    ``parse_chunk(items) -> {column: Array} | None``. On None (something in
+    the chunk is irregular) each item goes through the scalar
+    ``parse_line(item) -> full-schema tuple | None``, and a ``ValueError``
+    there follows the ``stringency`` policy; the surviving rows become
+    columns. Both paths then run the same ``mask(arrays, n)`` residual
+    (interval overlap, QC filter) and the same :func:`to_batch`, so the
+    fallback swaps only the parser."""
+    target = arrow_schema(schema)
+    for items in _rechunk(chunks, CHUNK_LINES):
+        arrays = parse_chunk(items)
+        if arrays is not None:
+            yield to_batch(
+                arrays, target,
+                None if mask is None else mask(arrays, len(items)),
+            )
+            continue
+        rows = []
+        for item in items:
+            try:
+                row = parse_line(item)
+            except ValueError as e:
+                apply_stringency(stringency, e, what)
+                continue
+            if row is not None:
+                rows.append(row)
+        yield from row_batches(rows, full_schema, schema, mask)
 
 
 def local_path(path: str) -> str:

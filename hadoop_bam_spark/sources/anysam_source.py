@@ -98,7 +98,7 @@ class AnySAMReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        from hadoop_bam_spark.sources.bam_source import EmptyPartition
+        from hadoop_bam_spark.sources import EmptyPartition
 
         parts = []
         for sub in (self._bam, self._sam, self._cram):

@@ -26,7 +26,6 @@ Options:
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Optional
 
@@ -36,7 +35,11 @@ from hadoop_bam_spark import fs
 from hadoop_bam_spark.formats import bam, bgzf
 from hadoop_bam_spark.formats.sam import SAM_SCHEMA
 from hadoop_bam_spark.formats.splitting_index import SplittingIndex
-from hadoop_bam_spark.sources import list_format_files, pushed_intervals
+from hadoop_bam_spark.sources import (
+    EmptyPartition,
+    list_format_files,
+    pushed_intervals,
+)
 
 DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
 
@@ -88,12 +91,6 @@ class RawBAMPartition(InputPartition):
     end: int
 
 
-@dataclass
-class EmptyPartition(InputPartition):
-    """Sentinel when planning prunes everything — Spark expects at least one
-    partition object (read(None) is called otherwise)."""
-
-
 class BAMDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -129,7 +126,7 @@ class BAMReader(DataSourceReader):
         # columns (the Spark-side analog of the reference's lazy decode,
         # LazyBAMRecordFactory.java:53-111); interval residuals evaluate on
         # cigar OPS arrays without ever building cigar strings.
-        self._schema, self._keep = pruned_schema(SAM_SCHEMA, options)
+        self._schema = pruned_schema(SAM_SCHEMA, options)[0]
         self._rname_eq: Optional[set] = None
         # header/refs per file, read once on the driver
         # (reference util/SAMHeaderReader.java:48-75)
@@ -329,6 +326,7 @@ class BAMReader(DataSourceReader):
         if not isinstance(partition, (BAMPartition, RawBAMPartition)):
             return
         from hadoop_bam_spark.formats import bam_vec
+        from hadoop_bam_spark.sources import arrow_schema, to_batch
 
         refs, first_voffset, size = next(
             (r, fv, sz) for p, r, fv, sz in self._files if p == partition.path
@@ -344,6 +342,7 @@ class BAMReader(DataSourceReader):
         decoder = bam_vec.BAMBatchDecoder(
             refs, fields=[f.name for f in self._schema.fields]
         )
+        target = arrow_schema(self._schema)
         with fs.open_file(partition.path, "rb") as fh:
             if isinstance(partition, RawBAMPartition):
                 # executor-side realignment of both edges (deterministic;
@@ -369,23 +368,6 @@ class BAMReader(DataSourceReader):
                 for span_buf, starts, lens in bam_vec.iter_body_batches(
                     fh, vbeg, vend, self.BATCH_RECORDS
                 ):
-                    rb = self._make_batch(decoder, span_buf, starts, lens, flt)
-                    if rb is not None:
-                        yield rb
-
-    def _make_batch(self, decoder, span_buf, starts, lens, flt):
-        import pyarrow as pa
-
-        from hadoop_bam_spark.sources import arrow_schema
-
-        cols = decoder.decode_span(span_buf, starts, lens, **flt)
-        if cols is None:
-            return None
-        schema = arrow_schema(self._schema)
-        arrays = []
-        for field in schema:
-            a = cols[field.name]
-            if a.type != field.type:
-                a = a.cast(field.type)
-            arrays.append(a)
-        return pa.RecordBatch.from_arrays(arrays, schema=schema)
+                    cols = decoder.decode_span(span_buf, starts, lens, **flt)
+                    if cols is not None:
+                        yield to_batch(cols, target)

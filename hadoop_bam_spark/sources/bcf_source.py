@@ -11,17 +11,16 @@ multi-format VCF scan (VCFInputFormat.getFormat, VCFFormat.java:49-82).
 
 from __future__ import annotations
 
-import os
 import struct
 from dataclasses import dataclass
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from hadoop_bam_spark import fs
 from hadoop_bam_spark.formats import bcf, bgzf
 from hadoop_bam_spark.formats.vcf import VCF_SCHEMA
-from hadoop_bam_spark.sources import list_format_files
+from hadoop_bam_spark.sources import EmptyPartition, list_format_files
 from hadoop_bam_spark.sources.bam_source import parse_intervals
 
 DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
@@ -122,77 +121,15 @@ class _BgzfByteFeed:
         self._fh.close()
 
 
-def _iter_plain(
-    partition: BCFPlainPartition, hdr: bcf.BCFHeader, header_end: int
-) -> Iterator[tuple]:
-    size = fs.file_size(partition.path)
-    with fs.open_file(partition.path, "rb") as fh:
-        if partition.start <= header_end:
-            start = header_end
-        else:
-            fh.seek(partition.start)
-            window = fh.read(_GUESS_WINDOW)
-            rel = bcf.guess_next_record_offset(window, hdr)
-            if rel is None:
-                return
-            start = partition.start + rel
-        fh.seek(start)
-        buf = fh.read(max(0, min(size, partition.end + _GUESS_WINDOW) - start))
-    off = 0
-    while start + off < size and off + 8 <= len(buf):
-        if start + off >= partition.end:
-            return
-        l_shared, l_indiv = struct.unpack_from("<II", buf, off)
-        need = off + 8 + l_shared + l_indiv
-        if need > len(buf):  # record straddles our overshoot window: extend
-            with fs.open_file(partition.path, "rb") as fh:
-                fh.seek(start)
-                buf = fh.read(need + _GUESS_WINDOW)
-        row, off = bcf.decode_record(buf, off, hdr)
-        yield row
-
-
-def _iter_bgzf(
-    partition: BCFBgzfPartition, hdr: bcf.BCFHeader, header_ulen: int
-) -> Iterator[tuple]:
-    feed = _BgzfByteFeed(partition.path, partition.start_coffset)
-    try:
-        if partition.start_coffset == 0:
-            if not feed.ensure(header_ulen):
-                return
-            feed.drop(header_ulen)
-        else:
-            feed.ensure(_GUESS_WINDOW)
-            rel = bcf.guess_next_record_offset(bytes(feed.buf), hdr)
-            if rel is None:
-                return
-            feed.drop(rel)
-        while True:
-            # a record is owned by this split iff its first byte sits in a
-            # block that starts before end_coffset (virtual-offset ownership,
-            # FileVirtualSplit semantics)
-            if not feed.ensure(8):
-                return
-            if feed.block_of(feed.base) >= partition.end_coffset:
-                return
-            l_shared, l_indiv = struct.unpack_from("<II", feed.buf, 0)
-            total = 8 + l_shared + l_indiv
-            if not feed.ensure(total):
-                return
-            row, _ = bcf.decode_record(bytes(feed.buf[:total]), 0, hdr)
-            feed.drop(total)
-            yield row
-    finally:
-        feed.close()
-
-
 def _iter_plain_spans(
     partition: BCFPlainPartition, hdr: bcf.BCFHeader, header_end: int,
     batch: int = 8192,
 ):
     """(buffer, record-start offsets) batches for an uncompressed-BCF
-    split — same boundary walk and split-ownership rule as _iter_plain,
-    but no per-record decode (the vectorized decoder consumes batches)."""
+    split: the first split starts after the header, a later one at the
+    guesser's first record boundary, and a record belongs to the split its
+    first byte is in. No per-record decode (the vectorized decoder
+    consumes batches)."""
     import numpy as np
 
     size = fs.file_size(partition.path)
@@ -232,8 +169,10 @@ def _iter_bgzf_spans(
     partition: BCFBgzfPartition, hdr: bcf.BCFHeader, header_ulen: int,
     batch: int = 8192,
 ):
-    """(buffer, record-start offsets) batches for a BGZF-BCF split —
-    virtual-offset ownership identical to _iter_bgzf."""
+    """(buffer, record-start offsets) batches for a BGZF-BCF split. A
+    record is owned by this split iff its first byte sits in a block that
+    starts before end_coffset (virtual-offset ownership, FileVirtualSplit
+    semantics)."""
     import numpy as np
 
     feed = _BgzfByteFeed(partition.path, partition.start_coffset)
@@ -303,7 +242,7 @@ class BCFReader(DataSourceReader):
             raise ValueError("bcf source requires a path")
         from hadoop_bam_spark.sources import pruned_schema
 
-        self._schema, self._keep = pruned_schema(VCF_SCHEMA, options)
+        self._schema = pruned_schema(VCF_SCHEMA, options)[0]
         self._split_size = int(options.get("split_size", DEFAULT_SPLIT_SIZE))
         self._intervals = (
             parse_intervals(options["intervals"]) if options.get("intervals") else None
@@ -351,7 +290,7 @@ class BCFReader(DataSourceReader):
                 if self._intervals is not None and fs.exists(f + ".csi"):
                     splits = self._filter_splits_by_csi(f, hdr, splits)
                 parts.extend(splits)
-        return parts
+        return parts or [EmptyPartition()]
 
     def _filter_splits_by_csi(self, path, hdr, splits):
         """Drop BGZF splits whose block range cannot contain a record
@@ -380,15 +319,16 @@ class BCFReader(DataSourceReader):
         """Vectorized: record-span batches decode straight into Arrow
         RecordBatches (formats/bcf_vec.py, the bam_vec treatment — ~6x the
         scalar decode). Batches with shapes the vectorized decoder doesn't
-        cover fall back to the scalar path, so semantics never depend on
-        the fast path."""
-        import pyarrow as pa
-
+        cover fall back to the scalar record decoder, with the same
+        interval residual, so semantics never depend on the fast path."""
+        if isinstance(partition, EmptyPartition):
+            return
         from hadoop_bam_spark.formats import bcf_vec
         from hadoop_bam_spark.sources import (
-            arrow_batches,
             arrow_schema,
-            project_rows,
+            interval_mask,
+            row_batches,
+            to_batch,
         )
 
         kind, hdr, header_end = self._files[partition.path]
@@ -396,63 +336,28 @@ class BCFReader(DataSourceReader):
             spans = _iter_plain_spans(partition, hdr, header_end)
         else:
             spans = _iter_bgzf_spans(partition, hdr, header_end)
-        by_rid = None
-        if self._intervals is not None:
+        by_rid = mask = None
+        intervals = self._intervals
+        if intervals is not None:
             name_to_id = {c: i for i, c in enumerate(hdr.contigs)}
             by_rid = [
                 (name_to_id[c], lo, hi)
-                for c, lo, hi in self._intervals
+                for c, lo, hi in intervals
                 if c in name_to_id
             ]
+
+            def mask(arrays, n):
+                return interval_mask(arrays, intervals, n)
+
         fields = [f.name for f in self._schema.fields]
         decoder = bcf_vec.BCFBatchDecoder(hdr, fields=fields)
-        schema = arrow_schema(self._schema)
+        target = arrow_schema(self._schema)
         for buf, starts in spans:
             try:
                 cols = decoder.decode(buf, starts, intervals_by_rid=by_rid)
             except bcf_vec.VecUnsupported:
-                rows = self._scalar_batch_rows(buf, starts, hdr)
-                yield from arrow_batches(
-                    project_rows(rows, self._keep), self._schema
-                )
+                rows = (bcf.decode_record(buf, int(off), hdr)[0] for off in starts)
+                yield from row_batches(rows, VCF_SCHEMA, self._schema, mask)
                 continue
-            if cols is None:
-                continue
-            arrays = []
-            for field in schema:
-                a = cols[field.name]
-                if a.type != field.type:
-                    a = a.cast(field.type)
-                arrays.append(a)
-            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
-
-    def _scalar_batch_rows(self, buf, starts, hdr):
-        intervals = self._intervals
-        for off in starts:
-            row, _ = bcf.decode_record(buf, int(off), hdr)
-            if intervals is not None:
-                contig, start, end = row[0], row[1], row[2]
-                if not any(
-                    c == contig and start <= stop and s <= end
-                    for c, s, stop in intervals
-                ):
-                    continue
-            yield row
-
-    def _rows(self, partition) -> Iterator[tuple]:
-        if isinstance(partition, BCFPlainPartition):
-            kind, hdr, header_end = self._files[partition.path]
-            rows = _iter_plain(partition, hdr, header_end)
-        else:
-            kind, hdr, header_end = self._files[partition.path]
-            rows = _iter_bgzf(partition, hdr, header_end)
-        intervals = self._intervals
-        for row in rows:
-            if intervals is not None:
-                contig, start, end = row[0], row[1], row[2]
-                if not any(
-                    c == contig and start <= stop and s <= end
-                    for c, s, stop in intervals
-                ):
-                    continue
-            yield row
+            if cols is not None:
+                yield to_batch(cols, target)

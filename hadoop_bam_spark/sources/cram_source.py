@@ -50,7 +50,7 @@ from hadoop_bam_spark import fs
 from hadoop_bam_spark.formats import cram
 from hadoop_bam_spark.formats.bam import cigar_ref_length
 from hadoop_bam_spark.formats.sam import SAM_SCHEMA
-from hadoop_bam_spark.sources import list_format_files
+from hadoop_bam_spark.sources import EmptyPartition, list_format_files
 
 #: compressed container-body read-ahead per rANS batch-decode call —
 #: sized to swallow a whole default 32 MB split in one batch (peak task
@@ -99,7 +99,7 @@ class CRAMReader(DataSourceReader):
             raise ValueError("cram source requires a path")
         from hadoop_bam_spark.sources import pruned_schema
 
-        self._schema, self._keep = pruned_schema(SAM_SCHEMA, options)
+        self._schema = pruned_schema(SAM_SCHEMA, options)[0]
         self._split_size = int(options.get("split_size", DEFAULT_SPLIT_SIZE))
         self._records_per_split = int(
             options.get("records_per_split", DEFAULT_RECORDS_PER_SPLIT)
@@ -226,7 +226,7 @@ class CRAMReader(DataSourceReader):
                 CRAMPartition(path, bounds[i], bounds[i + 1])
                 for i in range(len(bounds) - 1)
             )
-        return parts or [CRAMPartition("", 0, 0)]
+        return parts or [EmptyPartition()]
 
     def _density_counts(
         self, path: str, major: int, offsets: list[int]
@@ -264,15 +264,13 @@ class CRAMReader(DataSourceReader):
             return None
 
     def read(self, partition: CRAMPartition):
-        from hadoop_bam_spark.sources import arrow_batches, project_rows
+        if isinstance(partition, EmptyPartition):
+            return iter(())
+        from hadoop_bam_spark.sources import row_batches
 
-        return arrow_batches(
-            project_rows(self._rows(partition), self._keep), self._schema
-        )
+        return row_batches(self._rows(partition), SAM_SCHEMA, self._schema)
 
     def _rows(self, partition: CRAMPartition) -> Iterator[tuple]:
-        if not partition.path:
-            return
         major, refs, rgs = next(
             (m, r, g) for p, m, r, g in self._files if p == partition.path
         )

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from hadoop_bam_spark import fs
-from hadoop_bam_spark.sources import list_format_files
+from hadoop_bam_spark.sources import EmptyPartition, list_format_files
 
 FASTA_SCHEMA = T.StructType(
     [
@@ -96,7 +96,7 @@ class FastaReader(DataSourceReader):
             raise ValueError("fasta source requires a path")
         from hadoop_bam_spark.sources import pruned_schema, stringency_option
 
-        self._schema, self._keep = pruned_schema(FASTA_SCHEMA, options)
+        self._schema = pruned_schema(FASTA_SCHEMA, options)[0]
         self._files = list_format_files(path, ".fa", ".fasta", ".fna")
         self._contig_eq: Optional[set] = None
         self._stringency = stringency_option(options)
@@ -154,24 +154,16 @@ class FastaReader(DataSourceReader):
                 for name, _len, offset, _lb, _lw in entries
                 if self._contig_eq is None or name in self._contig_eq
             )
-        if not parts:
-            from hadoop_bam_spark.sources.bam_source import EmptyPartition
-
-            return [EmptyPartition()]
-        return parts
+        return parts or [EmptyPartition()]
 
     def read(self, partition: FastaPartition):
-        from hadoop_bam_spark.sources import arrow_batches, project_rows
+        if isinstance(partition, EmptyPartition):
+            return iter(())
+        from hadoop_bam_spark.sources import row_batches
 
-        return arrow_batches(
-            project_rows(self._rows(partition), self._keep), self._schema
-        )
+        return row_batches(self._rows(partition), FASTA_SCHEMA, self._schema)
 
     def _rows(self, partition: FastaPartition) -> Iterator[tuple]:
-        from hadoop_bam_spark.sources.bam_source import EmptyPartition
-
-        if isinstance(partition, EmptyPartition):
-            return
         if partition.offset >= 0 and partition.contig is not None:
             yield from iter_contig_lines(partition.path, partition.offset, partition.contig)
         else:

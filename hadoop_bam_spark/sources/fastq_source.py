@@ -19,12 +19,14 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from typing import Iterator, Optional
+from itertools import islice
+from typing import Iterator
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from hadoop_bam_spark import fs
+from hadoop_bam_spark.sources import CHUNK_LINES, EmptyPartition, decode_chunks
 from hadoop_bam_spark.sources.sam_source import plan_text_splits
 
 FASTQ_SCHEMA = T.StructType(
@@ -110,7 +112,7 @@ def iter_fastq_raw(path: str, start: int, end: int,
                     return
                 queue.append(line)
             if rec_start > end:  # boundary-start records belong to the
-                return           # EARLIER split (see sam_source.iter_lines)
+                return           # EARLIER split (see sam_source.iter_line_chunks)
             name_l, seq_l, plus_l, qual_l = queue[:4]
             del queue[:4]
             if name_l[:1] != b"@" or plus_l[:1] != b"+":
@@ -131,10 +133,6 @@ def iter_fastq_raw(path: str, start: int, end: int,
                 qual_l.decode().rstrip("\r\n"),
             )
             rec_start = fh.tell() - sum(len(l) for l in queue)
-
-
-#: records per vectorized metadata-parse chunk
-VEC_CHUNK_RECORDS = 16384
 
 # RE2 form of _CASAVA_RE / _SLASH_RE for pyarrow extract_regex
 _CASAVA_RE2 = (
@@ -250,53 +248,34 @@ class FastqReader(DataSourceReader):
         return [
             FastqPartition(p.path, p.start, p.end)
             for p in plan_text_splits(self._path, self._split_size, (".fastq", ".fq"))
-        ]
+        ] or [EmptyPartition()]
 
     def read(self, partition: FastqPartition):
-        from hadoop_bam_spark.sources import arrow_schema
-
-        wanted = self._wanted
-        if self._filter_failed and wanted is not None:
-            wanted = wanted | {"filter_passed"}
-        target = arrow_schema(self._schema)
-        buf: list[tuple] = []
-        for rec in iter_fastq_raw(partition.path, partition.start, partition.end,
-                                  self._stringency):
-            buf.append(rec)
-            if len(buf) >= VEC_CHUNK_RECORDS:
-                yield from self._chunk_batches(buf, wanted, target)
-                buf = []
-        if buf:
-            yield from self._chunk_batches(buf, wanted, target)
-
-    @property
-    def _wanted(self):
-        if self._keep is None:
-            return None
-        return frozenset(FASTQ_SCHEMA.fields[i].name for i in self._keep)
-
-    def _chunk_batches(self, chunk, wanted, target):
-        import pyarrow as pa
-
-        from hadoop_bam_spark.formats.vcf_vec import chunk_to_batch
-
-        arrays = parse_fastq_chunk(chunk, wanted)
-        if arrays is not None:
-            mask = None
+        if isinstance(partition, EmptyPartition):
+            return iter(())
+        wanted = None
+        if self._keep is not None:
+            wanted = frozenset(FASTQ_SCHEMA.fields[i].name for i in self._keep)
             if self._filter_failed:
-                # QC-fail drop (reference FastqInputFormat.java:313-316)
-                import pyarrow.compute as pc
-
-                mask = pc.fill_null(
-                    pc.not_equal(arrays["filter_passed"], False), True
-                ).to_numpy(zero_copy_only=False)
-            yield chunk_to_batch(arrays, target, mask)
-            return
-        from hadoop_bam_spark.sources import arrow_batches, project_rows
-
-        rows = (
-            rec
-            for rec in (fastq_record(*t) for t in chunk)
-            if not (self._filter_failed and rec[11] is False)
+                wanted = wanted | {"filter_passed"}
+        records = iter_fastq_raw(
+            partition.path, partition.start, partition.end, self._stringency
         )
-        yield from arrow_batches(project_rows(rows, self._keep), self._schema)
+        return decode_chunks(
+            iter(lambda: list(islice(records, CHUNK_LINES)), []),
+            FASTQ_SCHEMA, self._schema,
+            lambda recs: parse_fastq_chunk(recs, wanted),
+            lambda rec: fastq_record(*rec),
+            self._stringency, "fastq",
+            qc_mask if self._filter_failed else None,
+        )
+
+
+def qc_mask(arrays, n):
+    """``option("filter_failed_qc")``: keep reads whose ``filter_passed``
+    is not false (reference FastqInputFormat.java:313-316)."""
+    import pyarrow.compute as pc
+
+    return pc.fill_null(
+        pc.not_equal(arrays["filter_passed"], False), True
+    ).to_numpy(zero_copy_only=False)

@@ -10,11 +10,10 @@ same pipelines.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql.datasource import DataSource, DataSourceReader
 
-from hadoop_bam_spark.sources.fastq_source import FASTQ_SCHEMA
+from hadoop_bam_spark.sources import EmptyPartition, decode_chunks
+from hadoop_bam_spark.sources.fastq_source import FASTQ_SCHEMA, qc_mask
 from hadoop_bam_spark.sources.sam_source import (
     TextRangePartition,
     iter_line_chunks,
@@ -40,10 +39,6 @@ def parse_qseq_line(line: str, recode_quality: bool) -> tuple:
         int(x), int(y), int(read), filt == "1", None,
         index if index not in ("", "0") else None,
     )
-
-
-#: lines per vectorized chunk
-VEC_CHUNK_LINES = 16384
 
 
 def translate_string_array(col, table: bytes):
@@ -160,57 +155,24 @@ class QseqReader(DataSourceReader):
         self._schema, self._keep = pruned_schema(FASTQ_SCHEMA, options)
 
     def partitions(self):
-        return plan_text_splits(self._path, self._split_size, (".qseq", ".txt"))
+        return plan_text_splits(
+            self._path, self._split_size, (".qseq", ".txt")
+        ) or [EmptyPartition()]
 
     def read(self, partition: TextRangePartition):
-        from hadoop_bam_spark.sources import arrow_schema
-
+        if isinstance(partition, EmptyPartition):
+            return iter(())
         wanted = None
         if self._keep is not None:
             wanted = frozenset(FASTQ_SCHEMA.fields[i].name for i in self._keep)
             if self._filter_failed:
                 wanted = wanted | {"filter_passed"}
-        target = arrow_schema(self._schema)
-        buf: list[str] = []
-        for chunk in iter_line_chunks(partition):
-            buf.extend(l for l in chunk if l)
-            while len(buf) >= VEC_CHUNK_LINES:
-                yield from self._chunk_batches(buf[:VEC_CHUNK_LINES], wanted, target)
-                buf = buf[VEC_CHUNK_LINES:]
-        if buf:
-            yield from self._chunk_batches(buf, wanted, target)
-
-    def _chunk_batches(self, chunk, wanted, target):
-        from hadoop_bam_spark.formats.vcf_vec import chunk_to_batch
-
-        arrays = parse_qseq_chunk(chunk, self._recode, wanted)
-        if arrays is not None:
-            mask = None
-            if self._filter_failed:
-                import pyarrow.compute as pc
-
-                mask = pc.equal(
-                    arrays["filter_passed"], True
-                ).to_numpy(zero_copy_only=False)
-            yield chunk_to_batch(arrays, target, mask)
-            return
-        yield from self._scalar_chunk(chunk)
-
-    def _scalar_chunk(self, chunk):
-        from hadoop_bam_spark.sources import (
-            apply_stringency,
-            arrow_batches,
-            project_rows,
+        recode = self._recode
+        return decode_chunks(
+            ([l for l in chunk if l] for chunk in iter_line_chunks(partition)),
+            FASTQ_SCHEMA, self._schema,
+            lambda lines: parse_qseq_chunk(lines, recode, wanted),
+            lambda line: parse_qseq_line(line, recode),
+            self._stringency, "qseq",
+            qc_mask if self._filter_failed else None,
         )
-
-        rows = []
-        for line in chunk:
-            try:
-                rec = parse_qseq_line(line, self._recode)
-            except ValueError as e:
-                apply_stringency(self._stringency, e, "qseq")
-                continue
-            if self._filter_failed and rec[11] is False:
-                continue
-            rows.append(rec)
-        yield from arrow_batches(project_rows(iter(rows), self._keep), self._schema)

@@ -12,7 +12,6 @@ Malformed lines: ``option("stringency", "strict"|"lenient"|"silent")``
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -20,7 +19,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from hadoop_bam_spark import fs
 from hadoop_bam_spark.formats.sam import SAM_SCHEMA, parse_sam_line
-from hadoop_bam_spark.sources import list_format_files
+from hadoop_bam_spark.sources import EmptyPartition, list_format_files
 
 DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
 
@@ -45,13 +44,6 @@ def plan_text_splits(path: str, split_size: int, exts: tuple[str, ...]) -> list[
             for i in range(n)
         )
     return parts
-
-
-def iter_lines(partition: TextRangePartition) -> Iterator[str]:
-    """Lines owned by the split, one at a time (see iter_line_chunks for
-    the ownership rule — this is its flattening wrapper)."""
-    for chunk in iter_line_chunks(partition):
-        yield from chunk
 
 
 def iter_line_chunks(
@@ -130,43 +122,25 @@ class SAMReader(DataSourceReader):
         )
 
     def partitions(self):
-        return plan_text_splits(self._path, self._split_size, (".sam",))
+        return plan_text_splits(self._path, self._split_size, (".sam",)) or [
+            EmptyPartition()
+        ]
 
     def read(self, partition: TextRangePartition):
-        """Chunked columnar decode (formats.sam_vec); chunks the vectorized
-        parser rejects re-parse per-line with the scalar path, which applies
-        ValidationStringency exactly as before."""
+        """Chunked columnar decode (formats.sam_vec) through the shared
+        loop; chunks the vectorized parser rejects re-parse per line with
+        the scalar path under ValidationStringency."""
+        if isinstance(partition, EmptyPartition):
+            return iter(())
         from hadoop_bam_spark.formats import sam_vec
-        from hadoop_bam_spark.sources import arrow_schema
+        from hadoop_bam_spark.sources import decode_chunks
 
-        target = arrow_schema(self._schema)
-        buf: list[str] = []
-        size = sam_vec.VEC_CHUNK_LINES
-        for chunk in iter_line_chunks(partition):
-            buf.extend(l for l in chunk if l and not l.startswith("@"))
-            while len(buf) >= size:
-                yield from self._chunk_batches(buf[:size], target)
-                buf = buf[size:]
-        if buf:
-            yield from self._chunk_batches(buf, target)
-
-    def _chunk_batches(self, chunk, target):
-        from hadoop_bam_spark.formats import sam_vec, vcf_vec
-
-        arrays = sam_vec.parse_sam_chunk(chunk, self._wanted)
-        if arrays:
-            yield vcf_vec.chunk_to_batch(arrays, target)
-            return
-        from hadoop_bam_spark.sources import (
-            apply_stringency,
-            arrow_batches,
-            project_rows,
+        return decode_chunks(
+            (
+                [l for l in chunk if l and not l.startswith("@")]
+                for chunk in iter_line_chunks(partition)
+            ),
+            SAM_SCHEMA, self._schema,
+            lambda lines: sam_vec.parse_sam_chunk(lines, self._wanted),
+            parse_sam_line, self._stringency, "sam",
         )
-
-        rows = []
-        for line in chunk:
-            try:
-                rows.append(parse_sam_line(line))
-            except ValueError as e:
-                apply_stringency(self._stringency, e, "sam")
-        yield from arrow_batches(project_rows(iter(rows), self._keep), self._schema)

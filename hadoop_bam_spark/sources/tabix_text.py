@@ -39,12 +39,15 @@ from pyspark.sql.types import StructType
 from hadoop_bam_spark import fs
 from hadoop_bam_spark.formats import bed, bedgraph, bgzf, gff
 from hadoop_bam_spark.sources import (
+    EmptyPartition,
+    decode_chunks,
+    interval_mask,
     list_format_files,
     pruned_schema,
     pushed_intervals,
     stringency_option,
 )
-from hadoop_bam_spark.sources.bam_source import EmptyPartition, parse_intervals
+from hadoop_bam_spark.sources.bam_source import parse_intervals
 from hadoop_bam_spark.sources.sam_source import (
     TextRangePartition,
     iter_line_chunks,
@@ -52,9 +55,6 @@ from hadoop_bam_spark.sources.sam_source import (
 )
 
 DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
-
-#: lines per vectorized parse (same sizing as the VCF/SAM chunk parsers)
-VEC_CHUNK_LINES = 16384
 
 
 @dataclass
@@ -76,11 +76,11 @@ def iter_bgzf_owned_line_chunks(
     [start_coffset, end_coffset), in BULK lists (one decode+split per
     block instead of per line).
 
-    Ownership mirrors the plain-text rule (sam_source.iter_lines) at block
-    granularity: a non-first split always skips its leading line, so this
-    split reads lines whose start block is < end, then finishes the line
-    straddling the boundary — and when its last line ends EXACTLY at the
-    block boundary it additionally owns the first line of the boundary
+    Ownership mirrors the plain-text rule (sam_source.iter_line_chunks) at
+    block granularity: a non-first split always skips its leading line, so
+    this split reads lines whose start block is < end, then finishes the
+    line straddling the boundary — and when its last line ends EXACTLY at
+    the block boundary it additionally owns the first line of the boundary
     block (the next split can't see backwards to claim it). Inside the
     range every complete line is owned, so whole blocks decode in one
     pass; only the boundary block (at most one line yielded) walks
@@ -368,7 +368,7 @@ class TabixTextReader(DataSourceReader):
             parse_intervals(options["intervals"]) if options.get("intervals") else None
         )
         self._stringency = stringency_option(options)
-        self._schema, self._keep = pruned_schema(spec.schema, options)
+        self._schema = pruned_schema(spec.schema, options)[0]
         self._files = list_format_files(path, *spec.extensions)
 
     def pushFilters(self, filters):
@@ -390,66 +390,17 @@ class TabixTextReader(DataSourceReader):
     def read(self, partition) -> Iterator:
         if isinstance(partition, EmptyPartition):
             return iter(())
-        return self._batches(partition_line_chunks(partition))
-
-    def _batches(self, chunks):
-        from hadoop_bam_spark.sources import arrow_schema
-
-        target = arrow_schema(self._schema)
-        is_header = self._spec.is_header_line
-        buf: list[str] = []
-        for chunk in chunks:
-            buf.extend(l for l in chunk if not is_header(l))
-            while len(buf) >= VEC_CHUNK_LINES:
-                yield from self._chunk_batches(buf[:VEC_CHUNK_LINES], target)
-                buf = buf[VEC_CHUNK_LINES:]
-        if buf:
-            yield from self._chunk_batches(buf, target)
-
-    def _chunk_batches(self, chunk, target):
-        from hadoop_bam_spark.formats.vcf_vec import chunk_to_batch, interval_mask
-
-        arrays = self._spec.parse_chunk(chunk)
-        if arrays:
-            keep = {f.name for f in self._schema.fields}
-            mask = (
-                interval_mask(arrays, self._intervals, len(chunk))
-                if self._intervals is not None
-                else None
-            )
-            yield chunk_to_batch(
-                {k: v for k, v in arrays.items() if k in keep}, target, mask)
-            return
-        yield from self._scalar_chunk(chunk)
-
-    def _scalar_chunk(self, chunk):
-        from hadoop_bam_spark.sources import (
-            apply_stringency,
-            arrow_batches,
-            project_rows,
+        spec, intervals = self._spec, self._intervals
+        return decode_chunks(
+            (
+                [l for l in chunk if not spec.is_header_line(l)]
+                for chunk in partition_line_chunks(partition)
+            ),
+            spec.schema, self._schema, spec.parse_chunk, spec.parse_line,
+            self._stringency, spec.name,
+            None if intervals is None
+            else lambda arrays, n: interval_mask(arrays, intervals, n),
         )
-
-        spec = self._spec
-        ci, si, ei = spec.coords
-        intervals = self._intervals
-        rows = []
-        for line in chunk:
-            try:
-                row = spec.parse_line(line)
-            except ValueError as e:
-                apply_stringency(self._stringency, e, spec.name)
-                continue
-            if row is None:
-                continue
-            if intervals is not None:
-                contig, start, end = row[ci], row[si], row[ei]
-                if not any(
-                    c == contig and start <= stop and s <= end
-                    for c, s, stop in intervals
-                ):
-                    continue
-            rows.append(row)
-        yield from arrow_batches(project_rows(iter(rows), self._keep), self._schema)
 
 
 def _data_source(spec: TabixTextSpec, cls_name: str) -> type:

@@ -7,7 +7,8 @@ split for non-BGZF gzip. BCF files in the same path dispatch to the BCF
 reader by content sniff (reference VCFInputFormat.java:170-197).
 
 Interval filtering: ``option("intervals", "20:1-70000")`` applies the
-overlap residual per row (reference VCFRecordReader.java:213-219).
+overlap residual to every decoded chunk (reference
+VCFRecordReader.java:213-219).
 
 Malformed rows: ``option("stringency", "strict"|"lenient"|"silent")``
 (default strict; FAILFAST/PERMISSIVE aliases) — the reference's
@@ -21,8 +22,12 @@ from typing import Optional
 from pyspark.sql.datasource import DataSource, DataSourceReader
 
 from hadoop_bam_spark.formats.vcf import VCF_SCHEMA, parse_vcf_line, read_vcf_header
-from hadoop_bam_spark.sources import list_format_files, pushed_intervals
-from hadoop_bam_spark.sources.bam_source import EmptyPartition, parse_intervals
+from hadoop_bam_spark.sources import (
+    EmptyPartition,
+    list_format_files,
+    pushed_intervals,
+)
+from hadoop_bam_spark.sources.bam_source import parse_intervals
 from hadoop_bam_spark.sources.tabix_text import (
     DEFAULT_SPLIT_SIZE,
     partition_line_chunks,
@@ -119,7 +124,10 @@ class VCFReader(DataSourceReader):
     def partitions(self):
         parts = plan_text_partitions(self._files, self._split_size, self._intervals)
         if self._bcf is not None:
-            parts.extend(self._bcf.partitions())
+            parts.extend(
+                p for p in self._bcf.partitions()
+                if not isinstance(p, EmptyPartition)
+            )
         return parts or [EmptyPartition()]
 
     def read(self, partition):
@@ -132,64 +140,21 @@ class VCFReader(DataSourceReader):
             return self._bcf.read(partition)  # already Arrow batches + pruned
         if isinstance(partition, EmptyPartition):
             return iter(())
-        return self._batches(
-            partition_line_chunks(partition), self._samples[partition.path]
-        )
-
-    def _batches(self, chunks, samples):
-        """Decode bulk line lists columnar (formats.vcf_vec); any chunk
-        the vectorized parser rejects re-parses per-line with the scalar
-        path, which applies ValidationStringency exactly as before."""
         from hadoop_bam_spark.formats import vcf_vec
-        from hadoop_bam_spark.sources import arrow_schema
+        from hadoop_bam_spark.sources import decode_chunks, interval_mask
 
-        target = arrow_schema(self._schema)
-        size = vcf_vec.VEC_CHUNK_LINES
-        buf: list[str] = []
-        for chunk in chunks:
-            buf.extend(l for l in chunk if l and not l.startswith("#"))
-            while len(buf) >= size:
-                yield from self._chunk_batches(buf[:size], samples, target)
-                buf = buf[size:]
-        if buf:
-            yield from self._chunk_batches(buf, samples, target)
-
-    def _chunk_batches(self, chunk, samples, target):
-        from hadoop_bam_spark.formats import vcf_vec
-
-        arrays = vcf_vec.parse_vcf_chunk(chunk, samples, self._wanted)
-        if arrays:
-            mask = (
-                vcf_vec.interval_mask(arrays, self._intervals, len(chunk))
-                if self._intervals is not None
-                else None
-            )
-            yield vcf_vec.chunk_to_batch(arrays, target, mask)
-            return
-        yield from self._scalar_chunk(chunk, samples)
-
-    def _scalar_chunk(self, chunk, samples):
-        from hadoop_bam_spark.sources import (
-            apply_stringency,
-            arrow_batches,
-            project_rows,
-        )
-
+        samples = self._samples[partition.path]
         intervals = self._intervals
-        rows = []
-        for line in chunk:
-            try:
-                row = parse_vcf_line(line, samples, self._wanted)
-            except ValueError as e:
-                # malformed-row policy (reference VCFRecordReader.java:180-196)
-                apply_stringency(self._stringency, e, "vcf")
-                continue
-            if intervals is not None:
-                contig, start, end = row[0], row[1], row[2]
-                if not any(
-                    c == contig and start <= stop and s <= end
-                    for c, s, stop in intervals
-                ):
-                    continue
-            rows.append(row)
-        yield from arrow_batches(project_rows(iter(rows), self._keep), self._schema)
+        return decode_chunks(
+            (
+                [l for l in chunk if l and not l.startswith("#")]
+                for chunk in partition_line_chunks(partition)
+            ),
+            VCF_SCHEMA, self._schema,
+            lambda lines: vcf_vec.parse_vcf_chunk(lines, samples, self._wanted),
+            # malformed-row policy (reference VCFRecordReader.java:180-196)
+            lambda line: parse_vcf_line(line, samples, self._wanted),
+            self._stringency, "vcf",
+            None if intervals is None
+            else lambda arrays, n: interval_mask(arrays, intervals, n),
+        )

@@ -1,6 +1,7 @@
-"""BCF2 codec + source tests against the reference golden files
-(/root/reference/src/test/resources/test.uncompressed.bcf, test.bgzf.bcf —
-same records as test.vcf; reference test analog TestBCFRecordReader)."""
+"""BCF2 codec tests against the reference golden files
+(test.uncompressed.bcf, test.bgzf.bcf — same records as test.vcf), and
+split-walk tests of the BCF source on BCF encoded from ``tests/textgen.py``
+rows (reference test analog TestBCFRecordReader)."""
 
 import io
 import os
@@ -8,8 +9,13 @@ import os
 import pytest
 
 from hadoop_bam_spark.formats import bcf, bgzf
-from hadoop_bam_spark.formats.vcf import parse_vcf_line, read_vcf_header
+from hadoop_bam_spark.formats.vcf import (
+    parse_vcf_header,
+    parse_vcf_line,
+    read_vcf_header,
+)
 from hadoop_bam_spark.sources import bcf_source
+from tests import textgen
 
 RES = "/root/reference/src/test/resources"
 PLAIN = os.path.join(RES, "test.uncompressed.bcf")
@@ -93,45 +99,88 @@ class TestBCFCodec:
                 assert probe + got in bounds
 
 
+def _gen_bcf_bytes(rows):
+    """Uncompressed BCF of textgen VCF rows (engine codec, no fixture)."""
+    vh = parse_vcf_header(textgen.gen_vcf_text([]).splitlines())
+    hdr = bcf.parse_bcf_header_text(vh.text)
+    return bcf.encode_header(hdr) + b"".join(
+        bcf.encode_record(r, hdr) for r in rows
+    )
+
+
+def _write_bgzf(path, raw):
+    with open(path, "wb") as fh:
+        w = bgzf.BGZFWriter(fh)
+        w.write(raw)
+        w.close()
+
+
+@pytest.fixture(scope="module")
+def gen_bcf(tmp_path_factory):
+    """{"plain": path, "bgzf": path, "vcf": path, "rows": rows}: the same
+    textgen records as uncompressed BCF, BGZF BCF and VCF text."""
+    d = tmp_path_factory.mktemp("gen_bcf")
+    rows = textgen.gen_vcf_rows(3000)
+    raw = _gen_bcf_bytes(rows)
+    (d / "gen.uncompressed.bcf").write_bytes(raw)
+    _write_bgzf(str(d / "gen.bgzf.bcf"), raw)
+    (d / "gen.vcf").write_text(textgen.gen_vcf_text(rows))
+    return {
+        "plain": str(d / "gen.uncompressed.bcf"),
+        "bgzf": str(d / "gen.bgzf.bcf"),
+        "vcf": str(d / "gen.vcf"),
+        "rows": rows,
+    }
+
+
+def _read_range(p, s, n):
+    with open(p, "rb") as fh:
+        fh.seek(s)
+        return fh.read(n)
+
+
+def _split_records(path, split):
+    """Records of every split of ``path``, in split order, through the
+    reader's own span walks (``_iter_plain_spans`` / ``_iter_bgzf_spans``)."""
+    kind = bcf_source.sniff_bcf(path)
+    hdr, hend = bcf_source.read_header(path, kind)
+    size = os.path.getsize(path)
+    if kind == "plain":
+        bounds = list(range(0, size, split)) + [size]
+        spans = (
+            bcf_source._iter_plain_spans(
+                bcf_source.BCFPlainPartition(path, bounds[i], bounds[i + 1]),
+                hdr, hend,
+            )
+            for i in range(len(bounds) - 1)
+        )
+    else:
+        spans = (
+            bcf_source._iter_bgzf_spans(
+                bcf_source.BCFBgzfPartition(path, s.start_coffset, s.end_coffset),
+                hdr, hend,
+            )
+            for s in bgzf.align_splits(path, size, split, _read_range)
+        )
+    return [
+        bcf.decode_record(buf, int(off), hdr)[0]
+        for walk in spans
+        for buf, starts in walk
+        for off in starts
+    ]
+
+
 class TestBCFSource:
-    @pytest.mark.parametrize("path,kind", [(PLAIN, "plain"), (BGZF, "bgzf")])
-    def test_sniff(self, path, kind):
-        assert bcf_source.sniff_bcf(path) == kind
-        assert bcf_source.sniff_bcf(TEXT) is None
+    @pytest.mark.parametrize("kind", ["plain", "bgzf"])
+    def test_sniff(self, gen_bcf, kind):
+        assert bcf_source.sniff_bcf(gen_bcf[kind]) == kind
+        assert bcf_source.sniff_bcf(gen_bcf["vcf"]) is None
 
-    @pytest.mark.parametrize("path", [PLAIN, BGZF])
+    @pytest.mark.parametrize("kind", ["plain", "bgzf"])
     @pytest.mark.parametrize("split", [64, 300, 1 << 20])
-    def test_split_invariance(self, path, split):
-        kind = bcf_source.sniff_bcf(path)
-        hdr, hend = bcf_source.read_header(path, kind)
-        size = os.path.getsize(path)
-        if kind == "plain":
-            bounds = list(range(0, size, split)) + [size]
-            got = [
-                r
-                for i in range(len(bounds) - 1)
-                for r in bcf_source._iter_plain(
-                    bcf_source.BCFPlainPartition(path, bounds[i], bounds[i + 1]),
-                    hdr,
-                    hend,
-                )
-            ]
-        else:
-            def rr(p, s, n):
-                with open(p, "rb") as fh:
-                    fh.seek(s)
-                    return fh.read(n)
-
-            got = [
-                r
-                for s in bgzf.align_splits(path, size, split, rr)
-                for r in bcf_source._iter_bgzf(
-                    bcf_source.BCFBgzfPartition(path, s.start_coffset, s.end_coffset),
-                    hdr,
-                    hend,
-                )
-            ]
-        assert [r[1] for r in got] == [14370, 17330, 1110696, 1230237, 1234567]
+    def test_split_invariance(self, gen_bcf, kind, split):
+        got = _split_records(gen_bcf[kind], split)
+        assert [r[1] for r in got] == [r[1] for r in gen_bcf["rows"]]
 
     @pytest.mark.parametrize("split", [4096, 16384, 70000])
     def test_multiblock_bgzf_no_record_loss(self, tmp_path, split):
@@ -140,32 +189,9 @@ class TestBCFSource:
         returned the NEXT block's coffset and the end-of-split ownership
         check dropped records silently (e.g. 4,990/10,000 at split=4096).
         A multi-block file with small splits must return every record."""
-        hdr, rows = _decode_all()
-        blob = b"".join(bcf.encode_record(r, hdr) for r in rows) * 2000
         path = str(tmp_path / "big.bcf")
-        with open(path, "wb") as fh:
-            w = bgzf.BGZFWriter(fh)
-            w.write(bcf.encode_header(hdr))
-            w.write(blob)
-            w.close()
-        hdr2, hend = bcf_source.read_header(path, "bgzf")
-        size = os.path.getsize(path)
-
-        def rr(p, s, n):
-            with open(p, "rb") as fh:
-                fh.seek(s)
-                return fh.read(n)
-
-        got = [
-            r
-            for s in bgzf.align_splits(path, size, split, rr)
-            for r in bcf_source._iter_bgzf(
-                bcf_source.BCFBgzfPartition(path, s.start_coffset, s.end_coffset),
-                hdr2,
-                hend,
-            )
-        ]
-        assert len(got) == 10000
+        _write_bgzf(path, _gen_bcf_bytes(textgen.gen_vcf_rows(10000)))
+        assert len(_split_records(path, split)) == 10000
 
 
 class TestFastDecodeParity:

@@ -299,7 +299,7 @@ class TestVCFStreaming:
         from hadoop_bam_spark import sinks
         from hadoop_bam_spark.formats.vcf import VCF_SCHEMA, VCFHeader
         from hadoop_bam_spark.sources import register_all
-        from hadoop_bam_spark.sources.bam_source import EmptyPartition
+        from hadoop_bam_spark.sources import EmptyPartition
         from hadoop_bam_spark.streaming.tail import VCFStreamDataSource
 
         register_all(spark)

@@ -178,8 +178,10 @@ class TestVCFVecParity:
         lines = ["chr1\t100\t.\tAC\tT\t.\t.\t.",  # [100,101]
                  "chr1\t300\t.\tA\tT\t.\t.\tEND=400",
                  "chr2\t100\t.\tA\tT\t.\t.\t."]
+        from hadoop_bam_spark.sources import interval_mask
+
         arrays = vcf_vec.parse_vcf_chunk(lines, [])
-        mask = vcf_vec.interval_mask(arrays, [("chr1", 101, 350)], 3)
+        mask = interval_mask(arrays, [("chr1", 101, 350)], 3)
         assert list(mask) == [True, True, False]
 
 
@@ -293,13 +295,13 @@ class TestSAMFormatChunkParity:
         import pyarrow  # noqa: F401
 
         from hadoop_bam_spark.formats.sam import SAM_SCHEMA, format_sam_line
-        from hadoop_bam_spark.sources import arrow_schema
+        from hadoop_bam_spark.sources import arrow_schema, to_batch
 
         rows = [parse_sam_line(l) for l in lines]
         arrays = sam_vec.parse_sam_chunk(lines)
         if arrays is None:  # duplicate-tag records defer to the scalar path
             return
-        batch = vcf_vec.chunk_to_batch(arrays, arrow_schema(SAM_SCHEMA))
+        batch = to_batch(arrays, arrow_schema(SAM_SCHEMA))
         blob = sam_vec.format_sam_chunk(batch)
         got = blob.decode().rstrip("\n").split("\n")
         exp = [format_sam_line(r) for r in rows]
@@ -314,13 +316,13 @@ class TestVCFFormatChunkParity:
             VCF_SCHEMA,
             format_vcf_line,
         )
-        from hadoop_bam_spark.sources import arrow_schema
+        from hadoop_bam_spark.sources import arrow_schema, to_batch
 
         samples = data.draw(st.sampled_from([[], ["S1", "S2"]]))
         lines = data.draw(vcf_lines(samples))
         rows = [parse_vcf_line(l, samples) for l in lines]
         arrays = vcf_vec.parse_vcf_chunk(lines, samples)
-        batch = vcf_vec.chunk_to_batch(arrays, arrow_schema(VCF_SCHEMA))
+        batch = to_batch(arrays, arrow_schema(VCF_SCHEMA))
         blob = vcf_vec.format_vcf_chunk(batch, samples)
         exp = [format_vcf_line(r, samples) for r in rows]
         if blob is None:
