@@ -20,6 +20,7 @@ Register with :func:`register_all`.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from itertools import chain, islice
 
 from pyspark.sql import SparkSession
 from pyspark.sql.datasource import InputPartition
@@ -150,23 +151,32 @@ def arrow_schema(spark_schema):
 def _conform(arr, t):
     """Cast to the exact Spark-bridge type, tolerating nullability-only
     mismatches in nested fields (Arrow refuses nullable->non-nullable casts
-    even when no value is null, e.g. the genotype struct's sample field)."""
+    even when no value is null, e.g. the genotype struct's sample field).
+    Lists and structs are rebuilt from their children, so their own
+    validity is carried over: a null list or struct stays null."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     if arr.type.equals(t):
         return arr
     if arr.null_count == len(arr):
         return pa.nulls(len(arr), t)
+    nulls = arr.is_null() if arr.null_count else None
     if pa.types.is_list(t) and pa.types.is_list(arr.type):
+        # rebased to 0: Arrow takes no validity mask with sliced offsets
+        offsets = arr.offsets
+        first = offsets[0].as_py()
+        values = arr.values.slice(first, offsets[-1].as_py() - first)
         out = pa.ListArray.from_arrays(
-            arr.offsets, _conform(arr.values, t.value_type)
+            pc.subtract(offsets, first), _conform(values, t.value_type),
+            mask=nulls,
         )
         return out if out.type.equals(t) else out.cast(t)
     if pa.types.is_struct(t) and pa.types.is_struct(arr.type):
         children = [
             _conform(arr.field(i), t.field(i).type) for i in range(t.num_fields)
         ]
-        return pa.StructArray.from_arrays(children, fields=list(t))
+        return pa.StructArray.from_arrays(children, fields=list(t), mask=nulls)
     return arr.cast(t)
 
 
@@ -188,19 +198,25 @@ def to_batch(arrays, target, mask=None):
     return batch
 
 
-def interval_mask(arrays, intervals, n: int):
-    """Residual overlap filter over the (contig, start, end) columns: true
-    where the row overlaps any 1-based inclusive ``(contig, lo, hi)``."""
+def interval_mask(intervals):
+    """Residual overlap filter over the (contig, start, end) columns: a
+    ``mask(arrays, n)`` that is true where the row overlaps any 1-based
+    inclusive ``(contig, lo, hi)``; None when ``intervals`` is None."""
+    if intervals is None:
+        return None
     import numpy as np
     import pyarrow.compute as pc
 
-    contig = arrays["contig"]
-    start = arrays["start"].to_numpy(zero_copy_only=False)
-    end = arrays["end"].to_numpy(zero_copy_only=False)
-    mask = np.zeros(n, dtype=bool)
-    for c, s, stop in intervals:
-        cm = pc.equal(contig, c).to_numpy(zero_copy_only=False)
-        mask |= cm & (start <= stop) & (s <= end)
+    def mask(arrays, n: int):
+        contig = arrays["contig"]
+        start = arrays["start"].to_numpy(zero_copy_only=False)
+        end = arrays["end"].to_numpy(zero_copy_only=False)
+        keep = np.zeros(n, dtype=bool)
+        for c, s, stop in intervals:
+            cm = pc.equal(contig, c).to_numpy(zero_copy_only=False)
+            keep |= cm & (start <= stop) & (s <= end)
+        return keep
+
     return mask
 
 
@@ -227,8 +243,6 @@ def row_batches(rows, full_schema, schema, mask=None):
     pruned by :func:`pruned_schema`), ``ARROW_BATCH_ROWS`` rows at a time,
     filtered by ``mask(arrays, n)`` when given. Nested structs may be
     tuples, maps dicts (pyarrow converts both)."""
-    from itertools import islice
-
     full = arrow_schema(full_schema)
     target = arrow_schema(schema)
     rows = iter(rows)
@@ -241,14 +255,8 @@ def row_batches(rows, full_schema, schema, mask=None):
 
 def _rechunk(chunks, size: int):
     """Lists of any length -> lists of ``size`` items (the last shorter)."""
-    buf: list = []
-    for chunk in chunks:
-        buf.extend(chunk)
-        while len(buf) >= size:
-            yield buf[:size]
-            del buf[:size]
-    if buf:
-        yield buf
+    items = chain.from_iterable(chunks)
+    return iter(lambda: list(islice(items, size)), [])
 
 
 def decode_chunks(chunks, full_schema, schema, parse_chunk, parse_line,

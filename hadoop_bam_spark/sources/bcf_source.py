@@ -336,8 +336,9 @@ class BCFReader(DataSourceReader):
             spans = _iter_plain_spans(partition, hdr, header_end)
         else:
             spans = _iter_bgzf_spans(partition, hdr, header_end)
-        by_rid = mask = None
+        by_rid = None
         intervals = self._intervals
+        mask = interval_mask(intervals)
         if intervals is not None:
             name_to_id = {c: i for i, c in enumerate(hdr.contigs)}
             by_rid = [
@@ -345,10 +346,6 @@ class BCFReader(DataSourceReader):
                 for c, lo, hi in intervals
                 if c in name_to_id
             ]
-
-            def mask(arrays, n):
-                return interval_mask(arrays, intervals, n)
-
         fields = [f.name for f in self._schema.fields]
         decoder = bcf_vec.BCFBatchDecoder(hdr, fields=fields)
         target = arrow_schema(self._schema)

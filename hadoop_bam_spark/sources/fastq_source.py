@@ -19,14 +19,13 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from itertools import islice
 from typing import Iterator
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from hadoop_bam_spark import fs
-from hadoop_bam_spark.sources import CHUNK_LINES, EmptyPartition, decode_chunks
+from hadoop_bam_spark.sources import EmptyPartition, decode_chunks
 from hadoop_bam_spark.sources.sam_source import plan_text_splits
 
 FASTQ_SCHEMA = T.StructType(
@@ -242,7 +241,8 @@ class FastqReader(DataSourceReader):
         from hadoop_bam_spark.sources import pruned_schema, stringency_option
 
         self._stringency = stringency_option(options)
-        self._schema, self._keep = pruned_schema(FASTQ_SCHEMA, options)
+        self._schema, keep = pruned_schema(FASTQ_SCHEMA, options)
+        self._wanted = qc_wanted(keep, self._filter_failed)
 
     def partitions(self):
         return [
@@ -253,22 +253,27 @@ class FastqReader(DataSourceReader):
     def read(self, partition: FastqPartition):
         if isinstance(partition, EmptyPartition):
             return iter(())
-        wanted = None
-        if self._keep is not None:
-            wanted = frozenset(FASTQ_SCHEMA.fields[i].name for i in self._keep)
-            if self._filter_failed:
-                wanted = wanted | {"filter_passed"}
         records = iter_fastq_raw(
             partition.path, partition.start, partition.end, self._stringency
         )
         return decode_chunks(
-            iter(lambda: list(islice(records, CHUNK_LINES)), []),
+            (records,),
             FASTQ_SCHEMA, self._schema,
-            lambda recs: parse_fastq_chunk(recs, wanted),
+            lambda recs: parse_fastq_chunk(recs, self._wanted),
             lambda rec: fastq_record(*rec),
             self._stringency, "fastq",
             qc_mask if self._filter_failed else None,
         )
+
+
+def qc_wanted(keep, filter_failed: bool):
+    """Columns the chunk parsers build for ``pruned_schema``'s ``keep``:
+    the projected ones, plus ``filter_passed`` when :func:`qc_mask` reads
+    it; None (build all) when nothing is projected."""
+    if keep is None:
+        return None
+    wanted = frozenset(FASTQ_SCHEMA.fields[i].name for i in keep)
+    return wanted | {"filter_passed"} if filter_failed else wanted
 
 
 def qc_mask(arrays, n):

@@ -13,7 +13,11 @@ from __future__ import annotations
 from pyspark.sql.datasource import DataSource, DataSourceReader
 
 from hadoop_bam_spark.sources import EmptyPartition, decode_chunks
-from hadoop_bam_spark.sources.fastq_source import FASTQ_SCHEMA, qc_mask
+from hadoop_bam_spark.sources.fastq_source import (
+    FASTQ_SCHEMA,
+    qc_mask,
+    qc_wanted,
+)
 from hadoop_bam_spark.sources.sam_source import (
     TextRangePartition,
     iter_line_chunks,
@@ -152,7 +156,8 @@ class QseqReader(DataSourceReader):
         from hadoop_bam_spark.sources import pruned_schema, stringency_option
 
         self._stringency = stringency_option(options)
-        self._schema, self._keep = pruned_schema(FASTQ_SCHEMA, options)
+        self._schema, keep = pruned_schema(FASTQ_SCHEMA, options)
+        self._wanted = qc_wanted(keep, self._filter_failed)
 
     def partitions(self):
         return plan_text_splits(
@@ -162,17 +167,11 @@ class QseqReader(DataSourceReader):
     def read(self, partition: TextRangePartition):
         if isinstance(partition, EmptyPartition):
             return iter(())
-        wanted = None
-        if self._keep is not None:
-            wanted = frozenset(FASTQ_SCHEMA.fields[i].name for i in self._keep)
-            if self._filter_failed:
-                wanted = wanted | {"filter_passed"}
-        recode = self._recode
         return decode_chunks(
             ([l for l in chunk if l] for chunk in iter_line_chunks(partition)),
             FASTQ_SCHEMA, self._schema,
-            lambda lines: parse_qseq_chunk(lines, recode, wanted),
-            lambda line: parse_qseq_line(line, recode),
+            lambda lines: parse_qseq_chunk(lines, self._recode, self._wanted),
+            lambda line: parse_qseq_line(line, self._recode),
             self._stringency, "qseq",
             qc_mask if self._filter_failed else None,
         )

@@ -390,16 +390,14 @@ class TabixTextReader(DataSourceReader):
     def read(self, partition) -> Iterator:
         if isinstance(partition, EmptyPartition):
             return iter(())
-        spec, intervals = self._spec, self._intervals
+        spec = self._spec
         return decode_chunks(
             (
                 [l for l in chunk if not spec.is_header_line(l)]
                 for chunk in partition_line_chunks(partition)
             ),
             spec.schema, self._schema, spec.parse_chunk, spec.parse_line,
-            self._stringency, spec.name,
-            None if intervals is None
-            else lambda arrays, n: interval_mask(arrays, intervals, n),
+            self._stringency, spec.name, interval_mask(self._intervals),
         )
 
 

@@ -144,7 +144,6 @@ class VCFReader(DataSourceReader):
         from hadoop_bam_spark.sources import decode_chunks, interval_mask
 
         samples = self._samples[partition.path]
-        intervals = self._intervals
         return decode_chunks(
             (
                 [l for l in chunk if l and not l.startswith("#")]
@@ -154,7 +153,5 @@ class VCFReader(DataSourceReader):
             lambda lines: vcf_vec.parse_vcf_chunk(lines, samples, self._wanted),
             # malformed-row policy (reference VCFRecordReader.java:180-196)
             lambda line: parse_vcf_line(line, samples, self._wanted),
-            self._stringency, "vcf",
-            None if intervals is None
-            else lambda arrays, n: interval_mask(arrays, intervals, n),
+            self._stringency, "vcf", interval_mask(self._intervals),
         )

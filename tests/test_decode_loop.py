@@ -5,7 +5,9 @@ A malformed line makes the vectorized parser reject its whole chunk, and
 the chunk is re-parsed line by line. Under ``stringency=silent`` that read
 must equal the read of the same file without the bad line — with
 projection and interval residual — so the fallback changes nothing but
-the parser. A reader that plans nothing must read as empty, not crash."""
+the parser. Missing values ('.' ALT and FILTER, a BCF record without
+FORMAT) read as null on either path, VCF text and BCF alike. A reader that
+plans nothing must read as empty, not crash."""
 
 import random
 
@@ -35,10 +37,23 @@ def _sam_lines(n=400):
     return head, data
 
 
+#: VCF data-line indices planted with '.' ALT, '.' FILTER, and (BCF only)
+#: no FORMAT: missing values mixed among complete rows must read as null
+NO_ALT = set(range(0, 400, 7))
+NO_FILTER = set(range(3, 400, 11))
+NO_FORMAT = set(range(5, 400, 13))
+
+
 def _vcf_lines():
     lines = textgen.gen_vcf_text(textgen.gen_vcf_rows(400)).splitlines()
     i = next(i for i, l in enumerate(lines) if not l.startswith("#"))
-    return lines[:i], lines[i:]
+    data = [l.split("\t") for l in lines[i:]]
+    for j, f in enumerate(data):
+        if j in NO_ALT:
+            f[4] = "."
+        if j in NO_FILTER:
+            f[6] = "."
+    return lines[:i], ["\t".join(f) for f in data]
 
 
 def _intervals_rows(n=400, seed=5):
@@ -212,3 +227,110 @@ def test_empty_plan_reads_nothing(spark, empty_inputs, case):
 
     register_all(spark)
     assert EMPTY_PLANS[case](spark.read, empty_inputs).count() == 0
+
+
+def test_to_batch_keeps_null_lists_and_structs():
+    """A column whose type differs from Spark's Arrow type in nested
+    nullability is rebuilt from its children by ``to_batch``: a null list
+    and a null struct element must stay null, not become [] or a struct
+    of nulls. (vcf_vec's genotypes column has a nullable ``sample``.)"""
+    import pyarrow as pa
+
+    from hadoop_bam_spark.formats.vcf import VCF_SCHEMA
+    from hadoop_bam_spark.sources import arrow_schema, to_batch
+
+    field = arrow_schema(VCF_SCHEMA).field("genotypes")
+    gt = pa.struct([("sample", pa.string()), ("gt", pa.string()),
+                    ("fields", pa.map_(pa.string(), pa.string()))])
+    call = [{"sample": "s1", "gt": "0/1", "fields": [("GT", "0/1")]}]
+    values = [call, None, [], [None] + call]
+    arr = pa.array(values, type=pa.list_(gt))
+    assert not arr.type.equals(field.type)
+    for a, want in ((arr, values), (arr.slice(1), values[1:])):
+        got = to_batch({"genotypes": a}, pa.schema([field])).column(0)
+        assert got.type.equals(field.type)
+        assert got.to_pylist() == want
+
+
+def _assert_missing_null(rows, no_format=()):
+    assert len(rows) == 400
+    for i, r in enumerate(rows):
+        assert (r["alts"] is None) == (i in NO_ALT), i
+        assert (r["filters"] is None) == (i in NO_FILTER), i
+        assert (r["genotypes"] is None) == (i in no_format), i
+
+
+def test_vcf_missing_alt_filter_read_null(spark, text_inputs):
+    """'.' ALT and '.' FILTER read as null on the vectorized chunk parser
+    (clean file) and on the scalar fallback (file with BAD planted)."""
+    from hadoop_bam_spark.sources import register_all
+
+    register_all(spark)
+    for p in text_inputs["vcf"]:
+        _assert_missing_null(
+            spark.read.format("vcf").option("stringency", "silent")
+            .load(p).collect()
+        )
+
+
+@pytest.fixture(scope="module")
+def missing_bcf(tmp_path_factory):
+    """Uncompressed BCF of the VCF rows, with NO_FORMAT rows also missing
+    their genotypes."""
+    from hadoop_bam_spark.formats import bcf
+    from hadoop_bam_spark.formats.vcf import parse_vcf_header
+
+    head, _ = _vcf_lines()
+    hdr = bcf.parse_bcf_header_text(parse_vcf_header(head).text)
+    rows = [
+        (c, s, e, vid, ref, None if i in NO_ALT else alts, qual,
+         None if i in NO_FILTER else filters, info,
+         None if i in NO_FORMAT else gts)
+        for i, (c, s, e, vid, ref, alts, qual, filters, info, gts)
+        in enumerate(textgen.gen_vcf_rows(400))
+    ]
+    path = tmp_path_factory.mktemp("missing") / "gen.bcf"
+    path.write_bytes(
+        bcf.encode_header(hdr)
+        + b"".join(bcf.encode_record(r, hdr) for r in rows)
+    )
+    return str(path)
+
+
+def _bcf_read(path):
+    import pyarrow as pa
+
+    from hadoop_bam_spark.sources.bcf_source import BCFReader
+
+    reader = BCFReader({"path": path})
+    return pa.Table.from_batches([
+        b for p in reader.partitions() for b in reader.read(p)
+    ]).to_pylist()
+
+
+def test_bcf_missing_alt_filter_read_null(spark, missing_bcf, monkeypatch):
+    """Missing ALT, FILTER and FORMAT read as null on the vectorized BCF
+    decoder and on its scalar fallback, in process and through Spark."""
+    import hadoop_bam_spark.sources as sources
+    from hadoop_bam_spark.formats import bcf_vec
+
+    def no_rows(*a, **k):
+        raise AssertionError("vectorized decode fell back to row tuples")
+
+    with monkeypatch.context() as m:
+        m.setattr(sources, "row_batches", no_rows)
+        vec = _bcf_read(missing_bcf)
+    _assert_missing_null(vec, NO_FORMAT)
+
+    def unsupported(*a, **k):
+        raise bcf_vec.VecUnsupported("forced")
+
+    with monkeypatch.context() as m:
+        m.setattr(bcf_vec.BCFBatchDecoder, "decode", unsupported)
+        scalar = _bcf_read(missing_bcf)
+    assert scalar == vec
+
+    sources.register_all(spark)
+    _assert_missing_null(
+        spark.read.format("bcf").load(missing_bcf).collect(), NO_FORMAT
+    )

@@ -181,7 +181,7 @@ class TestVCFVecParity:
         from hadoop_bam_spark.sources import interval_mask
 
         arrays = vcf_vec.parse_vcf_chunk(lines, [])
-        mask = interval_mask(arrays, [("chr1", 101, 350)], 3)
+        mask = interval_mask([("chr1", 101, 350)])(arrays, 3)
         assert list(mask) == [True, True, False]
 
 
