@@ -6,11 +6,13 @@ sharded writers rely on (PAPER.md capability 4): a task writes only into
 staging, under a name unique to its attempt, and output becomes visible
 only when the driver commits.
 
-- **Task side** (:func:`staged_part`): each task attempt writes
-  ``attempt-{taskAttemptId}-p{partition:05d}{ext}`` inside a dot-prefixed
-  staging directory and removes it (and its sidecars) if it raises. A
-  retried or speculative attempt gets its own name, so no attempt writes
-  over another's file.
+- **Task side** (:func:`staged_part`, :func:`write_staged`): each task
+  attempt runs the format's part writer (:mod:`hadoop_bam_spark.sinks`)
+  on ``attempt-{taskAttemptId}-p{partition:05d}{ext}`` inside a
+  dot-prefixed staging directory and removes the file (and its sidecars)
+  if it raises. A retried or speculative attempt gets its own name, so no
+  attempt writes over another's file. Batch writes run it through
+  ``mapInArrow``, stream writes through :class:`ShardStreamWriter`.
 - **Driver side, sharded** (:func:`commit_shards`): rename each staged
   shard to its final name (sidecar-safe, see :func:`replace_file`),
   replace the manifest (staged, then renamed), delete every shard and
@@ -44,7 +46,7 @@ import posixpath
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql.datasource import DataSourceStreamWriter, WriterCommitMessage
+from pyspark.sql.datasource import DataSourceStreamArrowWriter, WriterCommitMessage
 
 from hadoop_bam_spark import fs
 
@@ -58,7 +60,7 @@ SIDECARS = (".bai", ".csi", ".sbi", ".splitting-bai", ".tbi", ".crai", ".fai")
 @dataclass
 class ShardCommit(WriterCommitMessage):
     staged: str | None  # name inside the staging dir; None: empty partition
-    records: int | None  # None: the sink does not count records
+    records: int
 
 
 @contextmanager
@@ -75,9 +77,21 @@ def staged_part(staging: str, ext: str = ""):
     try:
         yield part
     except BaseException:
-        for p in (part, *(part + s for s in SIDECARS)):
-            fs.remove(p)
+        _remove_with_sidecars(part)
         raise
+
+
+def _remove_with_sidecars(path: str) -> None:
+    for p in (path, *(path + s for s in SIDECARS)):
+        fs.remove(p)
+
+
+def write_staged(staging: str, ext: str, part, batches) -> tuple:
+    """Task side of every sink, batch and stream: run the part writer
+    ``part(path, batches) -> (records, info)`` on this attempt's staged
+    path. Returns ``(path, records, info)``."""
+    with staged_part(staging, ext) as path:
+        return (path, *part(path, batches))
 
 
 def replace_file(src: str, dst: str) -> None:
@@ -129,11 +143,11 @@ def commit_shards(dir_: str, messages, batch_id: int | None, ext: str,
 
     ``batch_id`` None is a batch write: shard ``i`` of the message order
     becomes ``part-{i:05d}{ext}`` and the manifest is ``_manifest.json``
-    with each shard's bytes and record count; ``fmt``, given by the sinks
-    that count records, adds the format name and the total. A micro-batch
-    names its shards ``batch-{batchId:05d}-{i:05d}{ext}`` in staged-name
-    order and writes ``_manifest-{batchId:05d}.jsonl``; one with no rows
-    removes its manifest."""
+    with each shard's bytes and record count, the format name ``fmt`` and
+    the total. A micro-batch names its shards
+    ``batch-{batchId:05d}-{i:05d}{ext}`` in staged-name order and writes
+    ``_manifest-{batchId:05d}.jsonl``; one with no rows removes its
+    manifest."""
     staged = [m for m in messages if m is not None and m.staged]
     if batch_id is None:
         prefix, mname = "part-", "_manifest.json"
@@ -148,19 +162,17 @@ def commit_shards(dir_: str, messages, batch_id: int | None, ext: str,
         name = f"{prefix}{i:05d}{ext}"
         src = fs.join(staging, m.staged)
         if batch_id is None:
-            entry = {"shard": name, "bytes": fs.file_size(src)}
-            if m.records is not None:
-                entry["records"] = m.records
+            entry = {"shard": name, "bytes": fs.file_size(src),
+                     "records": m.records}
         else:
             entry = {"shard": name, "records": m.records, "batch": batch_id}
         replace_file(src, fs.join(dir_, name))
         entries.append(entry)
     if batch_id is None:
-        body = {"shards": entries}
-        if fmt:
-            body["format"] = fmt
-            body["records"] = sum(m.records for m in staged)
-        data = json.dumps(body, indent=1).encode()
+        data = json.dumps({
+            "shards": entries, "format": fmt,
+            "records": sum(m.records for m in staged),
+        }, indent=1).encode()
     else:
         data = "".join(json.dumps(e) + "\n" for e in entries).encode()
     mpath = fs.join(dir_, mname)
@@ -178,24 +190,27 @@ def commit_shards(dir_: str, messages, batch_id: int | None, ext: str,
     _sweep_staging(dir_)
 
 
-class ShardStreamWriter(DataSourceStreamWriter):
-    """Base of the streaming shard sinks (``writeStream.format(...)``):
-    every micro-batch lands as one complete standalone shard per non-empty
-    partition, committed into ``dir`` by :func:`commit_shards` under its
-    batchId. Subclasses implement ``_write_shard(f, rows) -> records``."""
+class ShardStreamWriter(DataSourceStreamArrowWriter):
+    """The stream sink of every format (``writeStream.format(...)``): each
+    task writes its Arrow batches through ``part``, the same part writer
+    the format's ``write_*(sharded=True)`` uses (:mod:`hadoop_bam_spark.sinks`),
+    so every non-empty partition of a micro-batch lands as a complete
+    standalone shard, committed into ``dir`` by :func:`commit_shards` under
+    its batchId. An empty partition leaves no shard."""
 
-    def __init__(self, dir_: str, ext: str):
+    def __init__(self, dir_: str, ext: str, part):
         self._dir = dir_
         self._ext = ext
+        self._part = part
 
     def write(self, iterator) -> ShardCommit:
-        with staged_part(fs.join(self._dir, STAGING), self._ext) as part:
-            with fs.open_file(part, "wb") as f:
-                n = self._write_shard(f, iterator)
+        path, n, _ = write_staged(
+            fs.join(self._dir, STAGING), self._ext, self._part, iterator
+        )
         if n == 0:
-            fs.remove(part)
+            _remove_with_sidecars(path)
             return ShardCommit(staged=None, records=0)
-        return ShardCommit(staged=posixpath.basename(part), records=n)
+        return ShardCommit(staged=posixpath.basename(path), records=n)
 
     def commit(self, messages, batchId: int) -> None:
         commit_shards(self._dir, messages, batchId, self._ext)

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import re
 import struct
-from typing import BinaryIO, Iterator, Optional
+from typing import Iterator, Optional
 
 from hadoop_bam_spark.formats import bgzf
 from hadoop_bam_spark.formats.sam import (
@@ -439,47 +439,6 @@ def encode_record(row: tuple, ref_index: dict[str, int]) -> bytes:
         + name_b + cigar_b + bytes(seq_b) + qual_b + tags_b
     )
     return struct.pack("<i", len(body)) + body
-
-
-def write_bam(
-    f: BinaryIO,
-    header: SAMHeader,
-    rows,
-    refs: Optional[list[tuple[str, int]]] = None,
-    write_header: bool = True,
-    write_terminator: bool = True,
-    index_granularity: int = 0,
-    stats_out=None,
-) -> list[int]:
-    """Write rows (SAM_SCHEMA order) as BAM. Returns the virtual offsets of
-    every ``index_granularity``-th record (a splitting index, reference
-    SplittingBAMIndexer.java:232-274) when granularity > 0.
-
-    write_header=False + write_terminator=False produces a concatenatable
-    part file (reference KeyIgnoringBAMOutputFormat.java:48-93).
-    ``stats_out`` (a bai.PartIndexStats) accumulates binning-index stats
-    inline so the driver can merge a .bai without re-reading the output.
-    """
-    if refs is None:
-        ordered = sorted(header.sequences.items(), key=lambda kv: kv[1][0])
-        refs = [(name, ln) for name, (_, ln) in ordered]
-    ref_index = {name: i for i, (name, _) in enumerate(refs)}
-    w = bgzf.BGZFWriter(f, write_terminator=write_terminator)
-    if write_header:
-        w.write(encode_header(header, refs))
-    offsets: list[int] = []
-    for i, row in enumerate(rows):
-        if index_granularity and i % index_granularity == 0:
-            offsets.append(w.tell_voffset())
-        row = tuple(row)
-        if stats_out is not None:
-            at = w.tell_voffset()
-            w.write(encode_record(row, ref_index))
-            stats_out.add_sam_row(row, ref_index, at, w.tell_voffset())
-        else:
-            w.write(encode_record(row, ref_index))
-    w.close()
-    return offsets
 
 
 # ---------------------------------------------------------------------------

@@ -1745,73 +1745,6 @@ def encode_header_container(header_text: str, major: int = 3) -> bytes:
     return hdr.serialize(major) + block
 
 
-class CRAMWriter:
-    """Stream SAM-schema tuples into CRAM 3.0 containers.
-
-    ``bare=True`` omits the file definition / SAM-header container / EOF so
-    executors can emit concatenatable shard bodies, merged by the driver
-    behind one header + EOF (reference CRAMRecordWriter.java:74-121 with
-    writeHeader=false + util/SAMFileMerger.java:92-103).
-
-    Faithfulness bounds (documented, matching the htslib no_ref shape):
-    '='/'X' cigar ops re-emerge as 'M'; a mapped record with a '*' cigar
-    decodes as '<RL>M'; mapping quality of unmapped records decodes as 0
-    (the spec gives unmapped records no MQ slot).
-    """
-
-    def __init__(self, fh: BinaryIO, refs: list[tuple[str, int]],
-                 header_text: Optional[str] = None,
-                 records_per_container: int = 10000,
-                 bare: bool = False, record_counter: int = 0,
-                 ref_fasta: Optional[FastaRef] = None,
-                 records_per_slice: int = 10000,
-                 gzip_level: int = 6,
-                 embed_reference: bool = False,
-                 codecs: str = "gzip"):
-        self._fh = fh
-        self._refs = refs
-        self._ref_index = {name: i for i, (name, _) in enumerate(refs)}
-        self._ref_names = [name for name, _ in refs]
-        self._ref_fasta = ref_fasta
-        self._embed_reference = embed_reference
-        self._per_container = records_per_container
-        self._per_slice = records_per_slice
-        self._gzip_level = gzip_level
-        self._codecs = codecs
-        self._counter = record_counter
-        self._buf: list[tuple] = []
-        self._closed = False
-        if not bare:
-            write_file_definition(fh)
-            fh.write(encode_header_container(header_text or ""))
-
-    def write(self, row: tuple) -> None:
-        self._buf.append(row)
-        if len(self._buf) >= self._per_container:
-            self.flush()
-
-    def flush(self) -> None:
-        if self._buf:
-            self._fh.write(encode_container(
-                self._buf, self._ref_index, self._counter,
-                ref_fasta=self._ref_fasta, ref_names=self._ref_names,
-                records_per_slice=self._per_slice,
-                gzip_level=self._gzip_level,
-                embed_reference=self._embed_reference,
-                codecs=self._codecs,
-            ))
-            self._counter += len(self._buf)
-            self._buf = []
-
-    def close(self, write_eof: bool = True) -> None:
-        if self._closed:
-            return
-        self.flush()
-        if write_eof:
-            self._fh.write(EOF_CONTAINER_V3)
-        self._closed = True
-
-
 #: substitution code for (ref_base, read_base) under the fixed matrix
 #: 0x1b per ref row: code j == index of the read base in ACGTN-minus-ref.
 def _sub_code(ref_base: str, read_base: str):

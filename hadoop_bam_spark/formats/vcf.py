@@ -207,14 +207,14 @@ def format_vcf_line(row: tuple, samples: list[str]) -> str:
     if genotypes:
         keys: list[str] = []
         for g in genotypes:
-            for k in g[2]:
+            for k in g[2] or {}:
                 if k not in keys:
                     keys.append(k)
         if "GT" in keys:  # GT must come first per spec
             keys.remove("GT")
             keys.insert(0, "GT")
         fields.append(":".join(keys))
-        by_sample = {g[0]: g[2] for g in genotypes}
+        by_sample = {g[0]: g[2] or {} for g in genotypes}
         for s in samples:
             fm = by_sample.get(s, {})
             fields.append(":".join(fm.get(k, ".") for k in keys))

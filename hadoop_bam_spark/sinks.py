@@ -3,6 +3,19 @@
 (KeyIgnoringBAMOutputFormat.java:48-93, util/SAMFileMerger.java:46-149,
 util/VCFFileMerger.java:45-135, util/SAMOutputPreparer.java:61-128).
 
+Each format has one part writer, as the reference has one record writer
+per format (KeyIgnoringBAMOutputFormat.java:48-93,
+CRAMRecordWriter.java:74-121): :class:`BAMPart`, :class:`CRAMPart`,
+:class:`BCFPart` and :class:`TextPart`. ``part(path, batches)`` writes
+one part file from a partition's Arrow batches, picking its columns by
+name, and returns the part's record count and the index info its
+``merge`` needs. A ``standalone`` part is a complete file with its own
+header, terminator and sidecars; the others are headerless bodies for
+the single-file merge. The batch ``write_*`` functions run parts through
+``mapInArrow``. The stream sinks (:func:`stream_writer`) run the same
+standalone part in :class:`hadoop_bam_spark.commit.ShardStreamWriter`, so
+a stream shard is the ``write_*(sharded=True)`` shard of the same rows.
+
 Every sink commits through :mod:`hadoop_bam_spark.commit`:
 
 - Each task attempt writes its part under an attempt-unique name in a
@@ -38,7 +51,9 @@ from __future__ import annotations
 import io
 import posixpath
 import shutil
-from typing import Optional
+from dataclasses import dataclass
+from functools import partial
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 
@@ -46,9 +61,10 @@ from hadoop_bam_spark import fs
 from hadoop_bam_spark.commit import (
     STAGING,
     ShardCommit,
+    ShardStreamWriter,
     commit_shards,
     publish_file,
-    staged_part,
+    write_staged,
 )
 from hadoop_bam_spark.formats import bam, bgzf
 from hadoop_bam_spark.formats.sam import SAMHeader
@@ -63,59 +79,58 @@ VCF_COLS = [
     "contig", "start", "end", "id", "ref", "alts",
     "qual", "filters", "info", "genotypes",
 ]
+FASTQ_COLS = [
+    "name", "sequence", "quality", "instrument", "run_number", "flowcell_id",
+    "lane", "tile", "xpos", "ypos", "read", "filter_passed", "control_number",
+    "index_sequence",
+]
 
 
-def _run_parts(df: DataFrame, staging: str, ext: str, write_part,
-               arrow: bool = True) -> list:
-    """Executor side of every sink: ``write_part(part_path, it)`` runs once
-    per partition on its attempt-staged path and returns a picklable
-    result. ``it`` is Arrow batches through ``mapInArrow`` when ``arrow``
-    (no Row materialization; the result comes back as one pickled binary
-    cell), else Rows. Returns ``[(part_path, result)]`` in partition
-    order."""
+def _run_parts(df: DataFrame, staging: str, ext: str, part) -> list:
+    """Executor side of every batch sink: the part writer runs once per
+    partition on its attempt-staged path, over the partition's Arrow
+    batches (``mapInArrow``: no Row materialization; the result comes back
+    as one pickled binary cell). Returns ``[(path, records, info)]`` in
+    partition order."""
     import pickle
 
     import pyarrow as pa
 
     fs.makedirs(staging)  # also the parents of ``path``, before any task
 
-    def run(it):
+    def fn(batches):
         from pyspark import TaskContext
 
-        with staged_part(staging, ext) as part:
-            return TaskContext.get().partitionId(), part, write_part(part, it)
+        res = (TaskContext.get().partitionId(),
+               *write_staged(staging, ext, part, batches))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([pickle.dumps(res)], pa.binary())], ["res"]
+        )
 
-    if arrow:
-        def fn(batches):
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([pickle.dumps(run(batches))], pa.binary())], ["res"]
-            )
-
-        out = [pickle.loads(bytes(r["res"]))
-               for r in df.mapInArrow(fn, "res binary").collect()]
-    else:
-        out = df.rdd.mapPartitions(lambda it: [run(it)]).collect()
-    return [(part, res) for _, part, res in sorted(out, key=lambda t: t[0])]
+    out = [pickle.loads(bytes(r["res"]))
+           for r in df.mapInArrow(fn, "res binary").collect()]
+    return [res[1:] for res in sorted(out, key=lambda t: t[0])]
 
 
-def _publish(df: DataFrame, path: str, sharded: bool, ext: str, write_part,
-             merge, arrow: bool = True, fmt: str = "") -> None:
-    """Run ``write_part`` on every partition and commit the result.
+def _publish(df: DataFrame, path: str, sharded: bool, part) -> None:
+    """Run ``part`` on every partition of ``df``'s ``part.cols`` and commit
+    the result.
 
-    Sharded: every part is a complete shard and ``write_part`` returns its
-    record count (None when the sink does not count), which goes to the
-    manifest. Single file: ``merge(tmp, parts)`` writes the merged file and
-    its sidecars at ``tmp`` from the ``_run_parts`` results."""
+    Sharded: every part is a complete shard, listed in the manifest with
+    its record count. Single file: ``part.merge(tmp, parts)`` writes the
+    merged file and its sidecars at ``tmp`` from the ``_run_parts``
+    results."""
+    df = df.select(*part.cols)
     if not sharded:
         with publish_file(path) as (staging, tmp):
-            merge(tmp, _run_parts(df, staging, "", write_part, arrow))
+            part.merge(tmp, _run_parts(df, staging, "", part))
         return
     staging = fs.join(path, STAGING)
     try:
-        parts = _run_parts(df, staging, ext, write_part, arrow)
+        parts = _run_parts(df, staging, part.ext, part)
         commit_shards(
-            path, [ShardCommit(posixpath.basename(p), n) for p, n in parts],
-            None, ext, fmt=fmt,
+            path, [ShardCommit(posixpath.basename(p), n) for p, n, _ in parts],
+            None, part.ext, fmt=part.fmt,
         )
     finally:
         fs.remove_tree(staging)
@@ -126,7 +141,7 @@ def _merge_parts(dst: str, head: bytes, parts, tail: bytes) -> None:
     ``tail``."""
     with fs.open_file(dst, "wb") as out:
         out.write(head)
-        for part, _ in parts:
+        for part, *_ in parts:
             with fs.open_file(part, "rb") as f:
                 shutil.copyfileobj(f, out)
         out.write(tail)
@@ -139,6 +154,618 @@ def _bgzf(data: bytes) -> bytes:
     w.write(data)
     w.close()
     return buf.getvalue()
+
+
+def _select(batch, cols):
+    """``batch``'s columns ``cols``, by name and in that order (a stream
+    DataFrame's column order is the user's)."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [batch.column(c) for c in cols], names=list(cols)
+    )
+
+
+def _py_converter(t) -> Optional[Callable]:
+    """Converter of one ``to_pylist`` value of Arrow type ``t`` into the
+    scalar writers' shape (maps as dicts, structs as tuples); None when the
+    value is already in that shape."""
+    import pyarrow as pa
+
+    if pa.types.is_map(t):
+        return lambda v: None if v is None else dict(v)
+    if pa.types.is_struct(t):
+        subs = [(f.name, _py_converter(f.type)) for f in t]
+        return lambda v: None if v is None else tuple(
+            v[n] if c is None else c(v[n]) for n, c in subs
+        )
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        c = _py_converter(t.value_type)
+        if c is not None:
+            return lambda v: None if v is None else [c(x) for x in v]
+    return None
+
+
+def _batch_rows(batch):
+    """Arrow batch (or table) -> row tuples in the shape the scalar
+    formatters and encoders take: maps as dicts, structs as tuples, nulls
+    as None."""
+    cols = []
+    for col, field in zip(batch.columns, batch.schema):
+        vals = col.to_pylist()
+        conv = _py_converter(field.type)
+        cols.append(vals if conv is None else [conv(v) for v in vals])
+    return zip(*cols)
+
+
+def _with_tag_lists(batch):
+    """A SAM batch (or table) with its ``tags`` map as the ``tag_keys`` and
+    ``tag_vals`` list columns the vectorized encoders take. Both lists
+    share the map's validity and offsets buffers over its key and item
+    children: no copy, a null map stays null, and a sliced batch keeps
+    its absolute offsets (the children are the unsliced ones)."""
+    import pyarrow as pa
+
+    if isinstance(batch, pa.Table):
+        return pa.Table.from_batches(
+            [_with_tag_lists(b) for b in batch.to_batches()]
+        )
+    tags = batch.column("tags")
+
+    def lists(child):
+        return pa.Array.from_buffers(
+            pa.list_(child.type), len(tags), tags.buffers()[:2],
+            null_count=tags.null_count, offset=tags.offset, children=[child],
+        )
+
+    return pa.RecordBatch.from_arrays(
+        [batch.column(c) for c in SAM_COLS[:-1]]
+        + [lists(tags.keys), lists(tags.items)],
+        names=SAM_COLS[:-1] + ["tag_keys", "tag_vals"],
+    )
+
+
+def _header_refs(header: SAMHeader) -> list[tuple[str, int]]:
+    """The reference dictionary of ``header``, in ``@SQ`` order."""
+    ordered = sorted(header.sequences.items(), key=lambda kv: kv[1][0])
+    return [(name, ln) for name, (_, ln) in ordered]
+
+
+@dataclass
+class BAMPart:
+    """One BAM part: bam_venc blobs through BGZF, plus the ``.sbi`` (and
+    ``.splitting-bai``, ``.bai``) info.
+
+    Record voffsets (one every ``granularity`` records, BAI chunk spans)
+    are recovered AFTER each bulk write from the writer's block table
+    (BGZFWriter.voffsets_of_u), and the BAI stats accumulate once per
+    batch (PartIndexStats.add_batch): no per-record Python on the hot
+    path. The info is ``(size, offsets, stats)``."""
+
+    header: SAMHeader
+    refs: Optional[list]
+    standalone: bool
+    granularity: int = DEFAULT_GRANULARITY
+    index_bai: bool = False
+    index_splitting_bai: bool = False
+
+    ext, fmt, cols = ".bam", "bam", SAM_COLS
+
+    def __post_init__(self):
+        if self.refs is None:
+            self.refs = _header_refs(self.header)
+
+    def __call__(self, path: str, batches):
+        import numpy as np
+
+        from hadoop_bam_spark.formats.bam_venc import BAMBatchEncoder
+
+        stats = None
+        if self.index_bai:
+            from hadoop_bam_spark.formats.bai import PartIndexStats
+
+            stats = PartIndexStats()
+        enc = BAMBatchEncoder(self.refs)
+        g = self.granularity
+        offsets: list[int] = []
+        nrec = 0
+        with fs.open_file(path, "wb") as f:
+            w = bgzf.BGZFWriter(f, write_terminator=self.standalone)
+            if self.standalone:
+                # header first, through the same writer, so every recorded
+                # voffset is already file-absolute
+                w.write(bam.encode_header(self.header, self.refs))
+            for batch in batches:
+                blob, rec_lens, (rid, pos0, end0, mapped) = enc.encode_batch(
+                    _with_tag_lists(batch)
+                )
+                if not len(rec_lens):
+                    continue
+                u0 = w.u_total
+                w.write(blob)
+                u_starts = u0 + np.concatenate(
+                    [[0], np.cumsum(rec_lens[:-1])]
+                )
+                if g:
+                    offsets.extend(
+                        w.voffsets_of_u(u_starts[(-nrec) % g::g]).tolist()
+                    )
+                if stats is not None:
+                    stats.add_batch(
+                        rid, pos0, end0, mapped, w.voffsets_of_u(u_starts),
+                        w.voffsets_of_u(u_starts + rec_lens),
+                    )
+                nrec += len(rec_lens)
+            w.close()
+        info = (fs.file_size(path), offsets, stats)
+        if self.standalone:
+            self._sidecars(path, [info], 0)
+        return nrec, info
+
+    def merge(self, tmp: str, parts) -> None:
+        head = _bgzf(bam.encode_header(self.header, self.refs))
+        _merge_parts(tmp, head, parts, bgzf.BGZF_EOF)
+        self._sidecars(tmp, [info for *_, info in parts], len(head))
+
+    def _sidecars(self, dst: str, infos, header_len: int) -> None:
+        """``.sbi`` (+ ``.splitting-bai``, ``.bai``) of ``dst`` from the
+        ``(size, offsets, stats)`` of its parts, shifted past the header."""
+        sbi = SplittingIndex.merge(
+            [(offs, size) for size, offs, _ in infos], header_len,
+            self.granularity,
+        )
+        with fs.open_file(dst + ".sbi", "wb") as f:
+            sbi.write(f)
+        if self.index_splitting_bai:
+            with fs.open_file(dst + ".splitting-bai", "wb") as f:
+                sbi.write_reference_layout(f)
+        if self.index_bai:
+            from hadoop_bam_spark.formats.bai import bai_from_part_stats
+
+            bai = bai_from_part_stats(
+                [(stats, size) for size, _, stats in infos], header_len,
+                len(self.refs),
+            )
+            with fs.open_file(dst + ".bai", "wb") as f:
+                bai.write(f)
+
+
+@dataclass
+class CRAMPart:
+    """One CRAM part: batches gather into containers of
+    ``records_per_container`` records in slices of ``records_per_slice``,
+    each encoded by the vectorized cram_venc column encoder (RR=true
+    against ``reference`` when set, RR=false verbatim otherwise). A
+    container whose shape falls outside the fast path (VecUnsupported)
+    degrades to the scalar ``cram.encode_container`` for that container
+    only; byte parity between the two is property-tested
+    (tests/test_cram_venc.py), so the fallback changes speed, never bytes.
+    The ``.crai`` comes from a header-only container walk of the written
+    file; there is no merge info."""
+
+    header: SAMHeader
+    refs: Optional[list]
+    standalone: bool
+    records_per_container: int = 30000
+    reference: Optional[str] = None
+    index_crai: bool = False
+    records_per_slice: int = 10000
+    embed_reference: bool = False
+    codecs: str = "gzip"
+
+    ext, fmt, cols = ".cram", "cram", SAM_COLS
+
+    def __post_init__(self):
+        if self.refs is None:
+            self.refs = _header_refs(self.header)
+
+    def __call__(self, path: str, batches):
+        import pyarrow as pa
+
+        from hadoop_bam_spark.formats import cram
+        from hadoop_bam_spark.formats.cram_venc import (
+            CRAMColumnEncoder,
+            VecUnsupported,
+        )
+
+        ref_index = {name: i for i, (name, _) in enumerate(self.refs)}
+        ref_names = [name for name, _ in self.refs]
+        ref_fasta = (
+            cram.FastaRef(self.reference, open_fn=fs.open_file)
+            if self.reference
+            else None
+        )
+        enc = CRAMColumnEncoder(
+            ref_index, ref_fasta=ref_fasta, ref_names=ref_names,
+            embed_reference=self.embed_reference, codecs=self.codecs,
+        )
+        rpc, rps = self.records_per_container, self.records_per_slice
+        counter = 0
+        with fs.open_file(path, "wb") as f:
+            if self.standalone:
+                f.write(self._head())
+
+            def flush(tbl):
+                nonlocal counter
+                try:
+                    f.write(enc.encode_container(
+                        _with_tag_lists(tbl), counter, records_per_slice=rps
+                    ))
+                except VecUnsupported:
+                    f.write(cram.encode_container(
+                        list(_batch_rows(tbl)), ref_index, counter,
+                        ref_fasta=ref_fasta, ref_names=ref_names,
+                        records_per_slice=rps,
+                        embed_reference=self.embed_reference,
+                        codecs=self.codecs,
+                    ))
+                counter += tbl.num_rows
+
+            pend: list = []
+            pend_rows = 0
+            for batch in batches:
+                pend.append(_select(batch, SAM_COLS))
+                pend_rows += batch.num_rows
+                while pend_rows >= rpc:
+                    tbl = pa.Table.from_batches(pend)
+                    flush(tbl.slice(0, rpc))
+                    rest = tbl.slice(rpc)
+                    pend = rest.to_batches() if rest.num_rows else []
+                    pend_rows = rest.num_rows
+            if pend_rows:
+                flush(pa.Table.from_batches(pend))
+            if self.standalone:
+                f.write(cram.EOF_CONTAINER_V3)
+        if self.standalone and self.index_crai:
+            self._crai(path)
+        return counter, None
+
+    def _head(self) -> bytes:
+        """File definition + SAM header container."""
+        from hadoop_bam_spark.formats import cram
+
+        head = io.BytesIO()
+        cram.write_file_definition(head)
+        head.write(cram.encode_header_container(self.header.text))
+        return head.getvalue()
+
+    def merge(self, tmp: str, parts) -> None:
+        from hadoop_bam_spark.formats import cram
+
+        _merge_parts(tmp, self._head(), parts, cram.EOF_CONTAINER_V3)
+        if self.index_crai:
+            self._crai(tmp)
+
+    @staticmethod
+    def _crai(dst: str) -> None:
+        from hadoop_bam_spark.formats import crai
+
+        crai.write_crai(
+            crai.build_crai(dst, open_fn=fs.open_file), dst + ".crai",
+            open_fn=fs.open_file,
+        )
+
+
+@dataclass
+class BCFPart:
+    """One BGZF BCF2 part: bcf_venc blobs through BGZF; a batch outside the
+    vectorized fast path (VecUnsupported) degrades to the scalar per-record
+    encoder for that batch only. With ``index_csi`` the CSI stats
+    accumulate inline from the encoder's (rid, beg0, end0) arrays and the
+    writer's analytic voffsets, with no re-decode of the output. The info
+    is ``(stats, record-stream bytes)``."""
+
+    header: VCFHeader
+    standalone: bool
+    index_csi: bool = False
+
+    ext, fmt, cols = ".bcf", "bcf", VCF_COLS
+
+    def __post_init__(self):
+        from hadoop_bam_spark.formats import bcf
+
+        self.bhdr = bcf.parse_bcf_header_text(self.header.text)
+
+    def __call__(self, path: str, batches):
+        import numpy as np
+
+        from hadoop_bam_spark.formats import bcf
+        from hadoop_bam_spark.formats.bam_venc import reg2bin_vec
+        from hadoop_bam_spark.formats.bcf_venc import (
+            BCFBatchEncoder,
+            VecUnsupported,
+        )
+
+        bhdr = self.bhdr
+        enc = BCFBatchEncoder(bhdr)
+        stats = None
+        if self.index_csi:
+            from hadoop_bam_spark.formats.csi import CSIPartStats
+
+            stats = CSIPartStats()  # default 14/5 == reg2bin_vec's scheme
+        nrec = 0
+        hdr_len = 0
+        with fs.open_file(path, "wb") as f:
+            if self.standalone:
+                # the merged file's exact layout: the header closes its own
+                # BGZF stream so records begin on a block boundary (the
+                # reader and the part-stats CSI rebase both assume it)
+                f.write(_bgzf(bcf.encode_header(bhdr)))
+                hdr_len = f.tell()
+            w = bgzf.BGZFWriter(f, write_terminator=False)
+            for batch in batches:
+                batch = _select(batch, VCF_COLS)
+                try:
+                    blob, rec_lens, (rid, beg0, end0) = enc.encode_batch(batch)
+                    u0 = w.u_total
+                    w.write(blob)
+                    nrec += len(rec_lens)
+                    if stats is not None and len(rec_lens):
+                        u_starts = u0 + np.concatenate(
+                            [[0], np.cumsum(rec_lens[:-1])]
+                        )
+                        bins = reg2bin_vec(beg0, end0)
+                        begs = w.voffsets_of_u(u_starts).tolist()
+                        ends = w.voffsets_of_u(u_starts + rec_lens).tolist()
+                        add = stats.add
+                        for i in range(len(rec_lens)):
+                            add(int(rid[i]), int(bins[i]), begs[i], ends[i])
+                except VecUnsupported:
+                    for row in _batch_rows(batch):
+                        u0 = w.u_total
+                        rec = bcf.encode_record(row, bhdr)
+                        w.write(rec)
+                        nrec += 1
+                        if stats is not None:
+                            stats.add_record(
+                                bhdr.contig_index[row[0]], row[1] - 1, row[2],
+                                w.voffset_of_u(u0),
+                                w.voffset_of_u(u0 + len(rec)),
+                            )
+            pend = w.voffset_of_u(w.u_total) if stats is not None else None
+            w.close()
+            if self.standalone:
+                f.write(bgzf.BGZF_EOF)
+        size = fs.file_size(path)
+        if self.standalone:
+            size -= hdr_len + len(bgzf.BGZF_EOF)  # record-stream length only
+        if stats is not None:
+            stats.remap_part_end(pend, size << 16)
+        if self.standalone and self.index_csi:
+            self._csi(path, [(stats, size)], hdr_len)
+        return nrec, (stats, size)
+
+    def merge(self, tmp: str, parts) -> None:
+        from hadoop_bam_spark.formats import bcf
+
+        head = _bgzf(bcf.encode_header(self.bhdr))
+        _merge_parts(tmp, head, parts, bgzf.BGZF_EOF)
+        if self.index_csi:
+            self._csi(tmp, [info for *_, info in parts], len(head))
+
+    def _csi(self, dst: str, infos, header_len: int) -> None:
+        """``.csi`` of ``dst`` from its parts' ``(stats, record-stream
+        bytes)``, shifted past the header."""
+        from hadoop_bam_spark.formats import csi
+
+        idx = csi.csi_from_part_stats(infos, header_len,
+                                      len(self.bhdr.contigs))
+        csi.write_csi(idx, dst + ".csi", open_fn=fs.open_file)
+
+
+@dataclass
+class TextPart:
+    """One text part, plain or BGZF (``compress``), opening with
+    ``header`` when standalone.
+
+    ``chunk(batch)`` formats a whole Arrow batch to newline-terminated
+    bytes; where it is None or returns None, ``line(row)`` formats the
+    batch's rows one by one. ``tbi = (span, preset)`` (BGZF only) writes
+    line by line and accumulates tabix stats: ``span(row)`` is the row's
+    ``(contig, beg0, end0)``, 0-based half-open, and ``preset`` the
+    index's ``(format, col_seq, col_beg, col_end)``. The info is then
+    ``(stats, size)``, else None."""
+
+    header: str
+    compress: bool
+    standalone: bool
+    ext: str
+    fmt: str
+    cols: list
+    line: Optional[Callable] = None
+    chunk: Optional[Callable] = None
+    tbi: Optional[tuple] = None
+
+    def __call__(self, path: str, batches):
+        stats = None
+        if self.tbi:
+            from hadoop_bam_spark.formats.bai import PartIndexStats
+
+            stats, span = PartIndexStats(), self.tbi[0]
+        n = 0
+        with fs.open_file(path, "wb") as f:
+            w = (bgzf.BGZFWriter(f, write_terminator=self.standalone)
+                 if self.compress else f)
+            if self.standalone:
+                w.write(self.header.encode())
+            for batch in batches:
+                batch = _select(batch, self.cols)
+                n += batch.num_rows
+                if stats is None:
+                    w.write(self._chunk(batch))
+                    continue
+                for r in _batch_rows(batch):
+                    at = w.tell_voffset()
+                    w.write((self.line(r) + "\n").encode())
+                    stats.add(*span(r), True, at, w.tell_voffset())
+            if self.compress:
+                w.close()
+        if stats is None:
+            return n, None
+        info = (stats, fs.file_size(path))
+        if self.standalone:
+            self._tbi(path, [info], 0)
+        return n, info
+
+    def _chunk(self, batch) -> bytes:
+        out = self.chunk(batch) if self.chunk else None
+        if out is None:
+            out = "".join(
+                self.line(r) + "\n" for r in _batch_rows(batch)
+            ).encode()
+        return out
+
+    def merge(self, tmp: str, parts) -> None:
+        head = self.header.encode()
+        if self.compress:
+            head = _bgzf(head)
+        _merge_parts(tmp, head, parts,
+                     bgzf.BGZF_EOF if self.compress else b"")
+        if self.tbi:
+            self._tbi(tmp, [info for *_, info in parts], len(head))
+
+    def _tbi(self, dst: str, infos, header_len: int) -> None:
+        """``.tbi`` of ``dst`` from its parts' ``(stats, size)``, shifted
+        past the header; contigs in first-seen order."""
+        from hadoop_bam_spark.formats.bai import merge_part_stats
+        from hadoop_bam_spark.formats.tabix import TabixIndex, write_tabix
+
+        names = list(dict.fromkeys(k for st, _ in infos for k in st.order))
+        merged = merge_part_stats(infos, header_len, names)
+        merged.pop("__n_no_coor__")
+        write_tabix(TabixIndex(
+            names, [merged[n] for n in names], *self.tbi[1], ord("#"), 0, 0
+        ), dst + ".tbi")
+
+
+def _vcf_span(r) -> tuple:
+    beg0 = int(r[1]) - 1
+    return r[0], beg0, beg0 + max(len(r[4] or "N"), 1)  # pos + len(ref)
+
+
+def _vcf_part(header: VCFHeader, compress: bool, standalone: bool,
+              index_tbi: bool = False) -> TextPart:
+    from hadoop_bam_spark.formats import vcf_vec
+    from hadoop_bam_spark.formats.tabix import FMT_VCF
+
+    return TextPart(
+        header.text, compress, standalone,
+        ".vcf.bgz" if compress else ".vcf", "vcf", VCF_COLS,
+        line=partial(format_vcf_line, samples=header.samples),
+        chunk=partial(vcf_vec.format_vcf_chunk, samples=header.samples),
+        tbi=(_vcf_span, (FMT_VCF, 1, 2, 0)) if index_tbi else None,
+    )
+
+
+def _spec_span(coords, r) -> tuple:
+    c, s, e = coords
+    beg0 = int(r[s]) - 1
+    # zero-length features (end == start-1, insertion points) bin as
+    # length 1, the tabix convention
+    return r[c], beg0, max(int(r[e]), beg0 + 1)
+
+
+def _spec_part(spec, compress: bool, standalone: bool,
+               index_tbi: bool = False) -> TextPart:
+    """The part writer of a tabix-text spec (sources/tabix_text.py). The
+    tabix preset is the coordinate columns + 1, plus the zero-based
+    flag."""
+    from hadoop_bam_spark.formats.tabix import FMT_GENERIC, FMT_ZERO_BASED
+
+    c, s, e = spec.coords
+    preset = (FMT_ZERO_BASED if spec.zero_based else FMT_GENERIC,
+              c + 1, s + 1, e + 1)
+    return TextPart(
+        spec.header, compress, standalone,
+        spec.shard_ext + (".bgz" if compress else ""), spec.name, spec.cols,
+        line=spec.format_row, chunk=spec.format_chunk,
+        tbi=(partial(_spec_span, spec.coords), preset) if index_tbi else None,
+    )
+
+
+def _bgzf_output(path: str, compress: Optional[bool], index_tbi: bool,
+                 sharded: bool) -> bool:
+    """Whether a text write is BGZF: ``compress``, else by extension (a
+    shard directory carries no extension signal: BGZF)."""
+    if compress is None:
+        compress = sharded or path.endswith((".gz", ".bgz"))
+    if index_tbi and not compress:
+        # fail fast, before any part is written
+        raise ValueError("tabix index requires BGZF-compressed output")
+    return compress
+
+
+def load_sam_header(path: str):
+    """SAMHeader + refs from a SAM text file or a BAM file."""
+    from hadoop_bam_spark.formats.sam import parse_header
+
+    with fs.open_file(path, "rb") as f:
+        magic = f.read(2)
+    if magic == b"\x1f\x8b":  # BGZF/BAM
+        with fs.open_file(path, "rb") as f:
+            header, refs, _ = bam.read_header(bgzf.BGZFReader(f))
+        return header, refs
+    with fs.open_file(path, "rb") as f:
+        hdr = parse_header(
+            ln for ln in f.read().decode().splitlines() if ln.startswith("@")
+        )
+    return hdr, _header_refs(hdr)
+
+
+def stream_writer(fmt: str, options) -> ShardStreamWriter:
+    """The ``writeStream.format(fmt)`` sink: every non-empty partition of a
+    micro-batch lands as the shard ``write_<fmt>(sharded=True)`` writes
+    for the same rows with default settings.
+
+    Options:
+
+    - ``path``: the target directory (every format).
+    - ``header``: a SAM text or BAM file for ``bam`` and ``cram``, a VCF
+      file for ``vcf`` and ``bcf`` (required there). The text formats
+      write their spec's header.
+    - ``cram`` only, as in ``write_cram``: ``reference``,
+      ``embed_reference``, ``records_per_container``,
+      ``records_per_slice`` and ``codecs``."""
+    from hadoop_bam_spark.sources import local_path
+
+    path = options.get("path")
+    if not path:
+        raise ValueError(f"{fmt} stream sink requires a path (directory)")
+    header = options.get("header")
+    if fmt in ("bam", "cram", "vcf", "bcf"):
+        if not header:
+            kind = "sam-or-bam" if fmt in ("bam", "cram") else "vcf"
+            raise ValueError(
+                f"{fmt} stream sink requires option('header', <{kind} "
+                "path>): every shard is a standalone file and carries the "
+                "header"
+            )
+        header = local_path(header)
+    if fmt == "bam":
+        part = BAMPart(*load_sam_header(header), True)
+    elif fmt == "cram":
+        reference = options.get("reference")
+        part = CRAMPart(
+            *load_sam_header(header), True,
+            records_per_container=int(
+                options.get("records_per_container", 30000)),
+            reference=local_path(reference) if reference else None,
+            records_per_slice=int(options.get("records_per_slice", 10000)),
+            embed_reference=str(
+                options.get("embed_reference", "false")).lower() == "true",
+            codecs=options.get("codecs", "gzip"),
+        )
+    elif fmt in ("vcf", "bcf"):
+        from hadoop_bam_spark.formats.vcf import read_vcf_header
+
+        vh = read_vcf_header(header)
+        part = _vcf_part(vh, True, True) if fmt == "vcf" else BCFPart(vh, True)
+    else:
+        from hadoop_bam_spark.sources.tabix_text import BED, BEDGRAPH, GFF
+
+        spec = {s.name: s for s in (BED, BEDGRAPH, GFF)}[fmt]
+        part = _spec_part(spec, True, True)
+    return ShardStreamWriter(local_path(path), part.ext, part)
 
 
 def write_bam(
@@ -173,96 +800,10 @@ def write_bam(
     directory of format files natively, so
     ``spark.read.format("bam").load(dir)`` round-trips with per-shard
     index pruning intact."""
-    if refs is None:
-        ordered = sorted(header.sequences.items(), key=lambda kv: kv[1][0])
-        refs = [(name, ln) for name, (_, ln) in ordered]
-
-    def sidecars(dst: str, parts, header_len: int) -> None:
-        """``.sbi`` (+ ``.splitting-bai``, ``.bai``) of ``dst`` from the
-        ``(size, offsets, stats)`` of its parts, shifted past the header."""
-        sbi = SplittingIndex.merge(
-            [(offs, size) for size, offs, _ in parts], header_len,
-            index_granularity,
-        )
-        with fs.open_file(dst + ".sbi", "wb") as f:
-            sbi.write(f)
-        if index_splitting_bai:
-            with fs.open_file(dst + ".splitting-bai", "wb") as f:
-                sbi.write_reference_layout(f)
-        if index_bai:
-            from hadoop_bam_spark.formats.bai import bai_from_part_stats
-
-            bai = bai_from_part_stats(
-                [(stats, size) for size, _, stats in parts], header_len,
-                len(refs),
-            )
-            with fs.open_file(dst + ".bai", "wb") as f:
-                bai.write(f)
-
-    def write_part(part_path: str, batches):
-        """Columnar part write: Arrow batches -> bam_venc blobs -> BGZF.
-
-        Record voffsets (splitting-index granularity anchors, BAI chunk
-        spans) are recovered analytically AFTER each bulk write via the
-        writer's block table (BGZFWriter.voffsets_of_u), and the BAI stats
-        accumulate once per batch (PartIndexStats.add_batch): no per-record
-        Python on the hot path."""
-        import numpy as np
-
-        from hadoop_bam_spark.formats.bam_venc import BAMBatchEncoder
-
-        stats = None
-        if index_bai:
-            from hadoop_bam_spark.formats.bai import PartIndexStats
-
-            stats = PartIndexStats()
-        enc = BAMBatchEncoder(refs)
-        offsets: list[int] = []
-        nrec = 0
-        with fs.open_file(part_path, "wb") as f:
-            w = bgzf.BGZFWriter(f, write_terminator=sharded)
-            if sharded:
-                # a shard is a complete standalone BAM: header first,
-                # through the same writer so every recorded voffset is
-                # already file-absolute (no merge-time shifting)
-                w.write(bam.encode_header(header, refs))
-            for batch in batches:
-                blob, rec_lens, (rid, pos0, end0, mapped) = enc.encode_batch(batch)
-                if not len(rec_lens):
-                    continue
-                u0 = w.u_total
-                w.write(blob)
-                u_starts = u0 + np.concatenate(
-                    [[0], np.cumsum(rec_lens[:-1])]
-                )
-                if index_granularity:
-                    first = (-nrec) % index_granularity
-                    offsets.extend(w.voffsets_of_u(
-                        u_starts[first::index_granularity]).tolist())
-                if stats is not None:
-                    stats.add_batch(
-                        rid, pos0, end0, mapped, w.voffsets_of_u(u_starts),
-                        w.voffsets_of_u(u_starts + rec_lens),
-                    )
-                nrec += len(rec_lens)
-            w.close()
-        info = (fs.file_size(part_path), offsets, stats)
-        if sharded:
-            sidecars(part_path, [info], 0)
-            return nrec
-        return info
-
-    def merge(tmp: str, parts) -> None:
-        head = _bgzf(bam.encode_header(header, refs))
-        _merge_parts(tmp, head, parts, bgzf.BGZF_EOF)
-        sidecars(tmp, [info for _, info in parts], len(head))
-
-    pre = df.selectExpr(
-        *SAM_COLS[:-1],
-        "map_keys(tags) as tag_keys",
-        "map_values(tags) as tag_vals",
-    )
-    _publish(pre, path, sharded, ".bam", write_part, merge, fmt="bam")
+    _publish(df, path, sharded, BAMPart(
+        header, refs, sharded, index_granularity, index_bai,
+        index_splitting_bai,
+    ))
 
 
 def write_cram(
@@ -320,113 +861,10 @@ def write_cram(
     FORMAT_BENCH.md r9). Readers need htslib-compatible rANS decode
     (this engine's reader, samtools, htsjdk all qualify). Default stays
     gzip: write speed is the sink's headline contract."""
-    from hadoop_bam_spark.formats import cram
-
-    if refs is None:
-        ordered = sorted(header.sequences.items(), key=lambda kv: kv[1][0])
-        refs = [(name, ln) for name, (_, ln) in ordered]
-    ref_index = {name: i for i, (name, _) in enumerate(refs)}
-
-    def crai_sidecar(dst: str) -> None:
-        """``.crai`` from a header-only container walk of ``dst`` (the
-        public CRAM index; the source plans splits and prunes intervals
-        from it without touching the data file)."""
-        from hadoop_bam_spark.formats import crai as crai_mod
-
-        crai_mod.write_crai(
-            crai_mod.build_crai(dst, open_fn=fs.open_file),
-            dst + ".crai",
-            open_fn=fs.open_file,
-        )
-
-    def write_part(part_path: str, batches):
-        """Columnar part write (both reference modes): Arrow batches
-        accumulate to ``records_per_container`` rows, each container
-        encodes through the vectorized cram_venc column encoder — RR=true
-        when ``reference`` is set (whole-contig numpy compare, r8),
-        RR=false verbatim otherwise; a container whose batch shape falls
-        outside the fast path (VecUnsupported) degrades to the scalar
-        ``cram.encode_container`` for that container only — byte parity
-        between the two is property-tested (tests/test_cram_venc.py),
-        so the fallback changes speed, never bytes."""
-        import pyarrow as pa
-
-        from hadoop_bam_spark.formats.cram_venc import (
-            CRAMColumnEncoder,
-            VecUnsupported,
-        )
-
-        ref_fasta = (
-            cram.FastaRef(reference, open_fn=fs.open_file)
-            if reference
-            else None
-        )
-        ref_names = [name for name, _ in refs]
-        enc = CRAMColumnEncoder(
-            ref_index, ref_fasta=ref_fasta, ref_names=ref_names,
-            embed_reference=embed_reference, codecs=codecs,
-        )
-
-        def scalar_rows(tbl):
-            cols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
-            for vals in zip(*cols):
-                yield vals[:11] + (dict(zip(vals[11] or (), vals[12] or ())),)
-
-        with fs.open_file(part_path, "wb") as f:
-            if sharded:
-                cram.write_file_definition(f)
-                f.write(cram.encode_header_container(header.text))
-            counter = 0
-            pend: list = []
-            pend_rows = 0
-
-            def flush(tbl):
-                nonlocal counter
-                try:
-                    f.write(enc.encode_container(
-                        tbl, counter, records_per_slice=records_per_slice
-                    ))
-                except VecUnsupported:
-                    f.write(cram.encode_container(
-                        list(scalar_rows(tbl)), ref_index, counter,
-                        ref_fasta=ref_fasta, ref_names=ref_names,
-                        records_per_slice=records_per_slice,
-                        embed_reference=embed_reference,
-                        codecs=codecs,
-                    ))
-                counter += tbl.num_rows
-
-            for batch in batches:
-                pend.append(batch)
-                pend_rows += batch.num_rows
-                while pend_rows >= records_per_container:
-                    tbl = pa.Table.from_batches(pend)
-                    flush(tbl.slice(0, records_per_container))
-                    rest = tbl.slice(records_per_container)
-                    pend = rest.to_batches() if rest.num_rows else []
-                    pend_rows = rest.num_rows
-            if pend_rows:
-                flush(pa.Table.from_batches(pend))
-            if sharded:
-                f.write(cram.EOF_CONTAINER_V3)
-        if sharded and index_crai:
-            crai_sidecar(part_path)
-        return counter
-
-    def merge(tmp: str, parts) -> None:
-        head = io.BytesIO()
-        cram.write_file_definition(head)
-        head.write(cram.encode_header_container(header.text))
-        _merge_parts(tmp, head.getvalue(), parts, cram.EOF_CONTAINER_V3)
-        if index_crai:
-            crai_sidecar(tmp)
-
-    pre = df.selectExpr(
-        *SAM_COLS[:-1],
-        "map_keys(tags) as tag_keys",
-        "map_values(tags) as tag_vals",
-    )
-    _publish(pre, path, sharded, ".cram", write_part, merge, fmt="cram")
+    _publish(df, path, sharded, CRAMPart(
+        header, refs, sharded, records_per_container, reference, index_crai,
+        records_per_slice, embed_reference, codecs,
+    ))
 
 
 def write_any_sam(
@@ -460,47 +898,14 @@ def write_any_sam(
         )
 
 
-def _write_text_parts(df: DataFrame, path: str, header_text: str,
-                      compress: bool, shard_ext: str | None, chunk_fn=None,
-                      line_fn=None) -> None:
-    """Text write of ``df``'s columns, plain or BGZF: ``chunk_fn``
-    (RecordBatch -> newline-terminated bytes) formats Arrow batches with no
-    Row materialization; without it ``line_fn`` formats one Row per line.
-
-    ``shard_ext`` (e.g. ``".vcf.bgz"``) switches to sharded output: every
-    part becomes a complete standalone file (own header, own BGZF EOF)."""
-    sharded = shard_ext is not None
-    arrow = chunk_fn is not None
-    if not arrow:
-        def chunk_fn(r):
-            return (line_fn(r) + "\n").encode()
-
-    def write_part(part_path: str, it) -> None:
-        with fs.open_file(part_path, "wb") as f:
-            w = bgzf.BGZFWriter(f, write_terminator=sharded) if compress else f
-            if sharded:
-                w.write(header_text.encode())
-            for x in it:
-                w.write(chunk_fn(x))
-            if compress:
-                w.close()
-
-    def merge(tmp: str, parts) -> None:
-        head = header_text.encode()
-        _merge_parts(tmp, _bgzf(head) if compress else head, parts,
-                     bgzf.BGZF_EOF if compress else b"")
-
-    _publish(df, path, sharded, shard_ext, write_part, merge, arrow=arrow)
-
-
 def write_sam(df: DataFrame, path: str, header: SAMHeader,
               sharded: bool = False) -> None:
     from hadoop_bam_spark.formats import sam_vec
 
-    _write_text_parts(
-        df.select(*SAM_COLS), path, header.text, False,
-        ".sam" if sharded else None, chunk_fn=sam_vec.format_sam_chunk,
-    )
+    _publish(df, path, sharded, TextPart(
+        header.text, False, sharded, ".sam", "sam", SAM_COLS,
+        chunk=sam_vec.format_sam_chunk,
+    ))
 
 
 def _ensure_vcf_samples(df: DataFrame, header: VCFHeader) -> VCFHeader:
@@ -543,69 +948,9 @@ def write_vcf(
     same rationale as ``write_bam(sharded=True)``: no output byte ever
     funnels through the driver, the commit is a rename, and the VCF
     source reads the directory natively."""
-    if sharded and compress is None:
-        compress = True  # directory path carries no extension signal
-    if compress is None:
-        compress = path.endswith((".gz", ".bgz"))
-    if index_tbi and not compress:
-        # fail fast, before any part is written
-        raise ValueError("tabix index requires BGZF-compressed output")
+    compress = _bgzf_output(path, compress, index_tbi, sharded)
     header = _ensure_vcf_samples(df, header)
-    samples = header.samples
-
-    if index_tbi:
-        from hadoop_bam_spark.formats.tabix import FMT_VCF
-
-        def line(r):
-            return format_vcf_line(tuple(r), samples)
-
-        def span(r):
-            beg0 = int(r[1]) - 1
-            return r[0], beg0, beg0 + max(len(r[4] or "N"), 1)  # pos + len(ref)
-
-        _write_tabix_text_indexed(
-            df, VCF_COLS, path, sharded, line, ".vcf.bgz", span,
-            (FMT_VCF, 1, 2, 0), header=header.text, fmt="vcf",
-        )
-        return
-
-    def chunk(b):
-        from hadoop_bam_spark.formats import vcf_vec
-
-        out = vcf_vec.format_vcf_chunk(b, samples)
-        if out is None:  # ragged genotype shapes -> per-row formatter
-            out = "".join(
-                format_vcf_line(r, samples) + "\n" for r in _vcf_batch_rows(b)
-            ).encode("utf-8", "surrogateescape")
-        return out
-
-    _write_text_parts(df.select(*VCF_COLS), path, header.text, compress,
-                      (".vcf.bgz" if compress else ".vcf") if sharded else None,
-                      chunk_fn=chunk)
-
-
-def _vcf_batch_rows(batch):
-    """Arrow batch -> VCF_SCHEMA tuples for the scalar fallbacks of BOTH
-    the text-VCF formatter and the BCF encoder (map columns come back
-    from to_pylist as [(k, v), ...] pair lists and must be dicts).
-
-    A null per-genotype fields map becomes ``{}``: ``format_vcf_line``
-    iterates ``g[2]`` directly (None would TypeError), and the BCF
-    ``encode_indiv`` treats None and ``{}`` identically (``g[2] or {}``),
-    so the substitution is byte-neutral there."""
-    cols = [batch.column(i).to_pylist() for i in range(batch.num_columns)]
-    for t in zip(*cols):
-        (contig, start, end, vid, ref, alts, qual, filters, info, gts) = t
-        yield (
-            contig, start, end, vid, ref, alts, qual, filters,
-            dict(info) if info is not None else None,
-            [
-                (g["sample"], g["gt"], dict(g["fields"]) if g["fields"] is not None else {})
-                for g in gts
-            ]
-            if gts is not None
-            else None,
-        )
+    _publish(df, path, sharded, _vcf_part(header, compress, sharded, index_tbi))
 
 
 def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
@@ -624,105 +969,8 @@ def write_bcf(df: DataFrame, path: str, header: "VCFHeader",
     BCFs (own header block + BGZF EOF, per-shard ``.csi`` when
     ``index_csi``) plus ``_manifest.json`` — same no-driver-byte-funnel
     rationale as ``write_bam(sharded=True)``."""
-    from hadoop_bam_spark.formats import bcf as bcfmod
-
     header = _ensure_vcf_samples(df, header)
-    bhdr = bcfmod.parse_bcf_header_text(header.text)
-
-    def csi_sidecar(dst: str, parts, header_len: int) -> None:
-        """``.csi`` of ``dst`` from its parts' ``(stats, record-stream
-        bytes)``, shifted past the header."""
-        from hadoop_bam_spark.formats import csi as csi_mod
-
-        idx = csi_mod.csi_from_part_stats(parts, header_len, len(bhdr.contigs))
-        csi_mod.write_csi(idx, dst + ".csi", open_fn=fs.open_file)
-
-    def write_part(part_path: str, batches):
-        """Columnar part write: Arrow batches -> bcf_venc blobs -> BGZF.
-
-        A batch whose shape falls outside the vectorized fast path
-        (VecUnsupported) degrades to the scalar per-record encoder for
-        that batch only — same contract as the BCF read path. With
-        ``index_csi`` the per-record CSI stats accumulate INLINE from the
-        encoder's (rid, beg0, end0) arrays and the writer's analytic
-        voffsets — no post-merge re-decode of the output."""
-        import numpy as np
-
-        from hadoop_bam_spark.formats.bam_venc import reg2bin_vec
-        from hadoop_bam_spark.formats.bcf_venc import (
-            BCFBatchEncoder,
-            VecUnsupported,
-        )
-
-        enc = BCFBatchEncoder(bhdr)
-        stats = None
-        if index_csi:
-            from hadoop_bam_spark.formats.csi import CSIPartStats
-
-            stats = CSIPartStats()  # default 14/5 == reg2bin_vec's scheme
-        nrec = 0
-        hdr_len = 0
-        with fs.open_file(part_path, "wb") as f:
-            if sharded:
-                # a shard is a complete standalone BCF with the MERGED
-                # file's exact layout: the header closes its own BGZF
-                # stream so records begin on a block boundary (the reader
-                # and the part-stats CSI rebase both assume it), and the
-                # EOF terminator is appended after the record stream
-                f.write(_bgzf(bcfmod.encode_header(bhdr)))
-                hdr_len = f.tell()
-            w = bgzf.BGZFWriter(f, write_terminator=False)
-            for batch in batches:
-                try:
-                    blob, rec_lens, (rid, beg0, end0) = enc.encode_batch(batch)
-                    u0 = w.u_total
-                    w.write(blob)
-                    nrec += len(rec_lens)
-                    if stats is not None and len(rec_lens):
-                        u_starts = u0 + np.concatenate(
-                            [[0], np.cumsum(rec_lens[:-1])]
-                        )
-                        bins = reg2bin_vec(beg0, end0)
-                        begs = w.voffsets_of_u(u_starts).tolist()
-                        ends = w.voffsets_of_u(u_starts + rec_lens).tolist()
-                        add = stats.add
-                        for i in range(len(rec_lens)):
-                            add(int(rid[i]), int(bins[i]), begs[i], ends[i])
-                except VecUnsupported:
-                    for row in _vcf_batch_rows(batch):
-                        u0 = w.u_total
-                        rec = bcfmod.encode_record(row, bhdr)
-                        w.write(rec)
-                        nrec += 1
-                        if stats is not None:
-                            stats.add_record(
-                                bhdr.contig_index[row[0]], row[1] - 1, row[2],
-                                w.voffset_of_u(u0),
-                                w.voffset_of_u(u0 + len(rec)),
-                            )
-            pend = w.voffset_of_u(w.u_total) if stats is not None else None
-            w.close()
-            if sharded:
-                f.write(bgzf.BGZF_EOF)
-        size = fs.file_size(part_path)
-        if sharded:
-            size -= hdr_len + len(bgzf.BGZF_EOF)  # record-stream length only
-        if stats is not None:
-            stats.remap_part_end(pend, size << 16)
-        if sharded:
-            if index_csi:
-                csi_sidecar(part_path, [(stats, size)], hdr_len)
-            return nrec
-        return stats, size
-
-    def merge(tmp: str, parts) -> None:
-        head = _bgzf(bcfmod.encode_header(bhdr))
-        _merge_parts(tmp, head, parts, bgzf.BGZF_EOF)
-        if index_csi:
-            csi_sidecar(tmp, [info for _, info in parts], len(head))
-
-    _publish(df.select(*VCF_COLS), path, sharded, ".bcf", write_part, merge,
-             fmt="bcf")
+    _publish(df, path, sharded, BCFPart(header, sharded, index_csi))
 
 
 def _synthesize_name(r) -> str:
@@ -736,12 +984,6 @@ def _synthesize_name(r) -> str:
         f"/{r.read or 1}"
     )
 
-
-FASTQ_COLS = [
-    "name", "sequence", "quality", "instrument", "run_number", "flowcell_id",
-    "lane", "tile", "xpos", "ypos", "read", "filter_passed", "control_number",
-    "index_sequence",
-]
 
 
 def _opt_str(col, zero_empty: bool = True):
@@ -843,99 +1085,15 @@ def write_gff(
 
 def _write_tabix_text(df: DataFrame, spec, path: str, compress: bool | None,
                       index_tbi: bool, sharded: bool) -> None:
-    """One writer for every tabix-text spec (sources/tabix_text.py). The
-    tabix preset is derived from the spec: its columns are the coordinate
-    columns + 1, plus the zero-based flag."""
-    from hadoop_bam_spark.formats.tabix import FMT_GENERIC, FMT_ZERO_BASED
-
-    if sharded and compress is None:
-        compress = True  # directory path carries no extension signal
-    if compress is None:
-        compress = path.endswith((".gz", ".bgz"))
-    if index_tbi and not compress:
-        # fail fast, before any part is written
-        raise ValueError("tabix index requires BGZF-compressed output")
-
-    def line(r):
-        return spec.format_row(tuple(r))
-
-    if index_tbi:
-        c, s, e = spec.coords
-
-        def span(r):
-            beg0 = int(r[s]) - 1
-            # zero-length features (end == start-1, insertion points) bin
-            # as length 1, the tabix convention
-            return r[c], beg0, max(int(r[e]), beg0 + 1)
-
-        preset = (FMT_ZERO_BASED if spec.zero_based else FMT_GENERIC,
-                  c + 1, s + 1, e + 1)
-        _write_tabix_text_indexed(
-            df, spec.cols, path, sharded, line, spec.shard_ext + ".bgz",
-            span, preset, header=spec.header, fmt=spec.name,
-        )
-        return
-    _write_text_parts(df.select(*spec.cols), path, spec.header, compress,
-                      spec.shard_ext + (".bgz" if compress else "")
-                      if sharded else None,
-                      chunk_fn=spec.format_chunk, line_fn=line)
-
-
-def _write_tabix_text_indexed(
-    df: DataFrame, cols, path: str, sharded: bool, line_fn, shard_ext: str,
-    span_fn, preset: tuple, header: str = "", fmt: str = "",
-) -> None:
-    """Shared BGZF + ``.tbi`` text write (VCF and the tabix-text specs):
-    executor part files accumulate PartIndexStats while writing; sharded
-    mode commits standalone shards each with its own ``.tbi``, merged
-    mode concatenates the part bytes and offset-shifts the merged stats
-    — never a post-merge re-read. ``span_fn(row)`` gives one row's
-    ``(contig, beg0, end0)``, 0-based half-open; ``preset`` is the
-    index's ``(format, col_seq, col_beg, col_end)``."""
-    from hadoop_bam_spark.formats.bai import PartIndexStats, merge_part_stats
-    from hadoop_bam_spark.formats.tabix import TabixIndex, write_tabix
-
-    def tbi_sidecar(dst: str, parts, header_len: int) -> None:
-        """``.tbi`` of ``dst`` from its parts' ``(stats, size)``, shifted
-        past the header; contigs in first-seen order."""
-        names = list(dict.fromkeys(k for st, _ in parts for k in st.order))
-        merged = merge_part_stats(parts, header_len, names)
-        merged.pop("__n_no_coor__")
-        write_tabix(TabixIndex(
-            names, [merged[n] for n in names], *preset, ord("#"), 0, 0
-        ), dst + ".tbi")
-
-    def write_part(part_path: str, rows):
-        stats = PartIndexStats()
-        nrec = 0
-        with fs.open_file(part_path, "wb") as f:
-            w = bgzf.BGZFWriter(f, write_terminator=sharded)
-            if sharded:
-                w.write(header.encode())
-            for r in rows:
-                at = w.tell_voffset()
-                w.write((line_fn(r) + "\n").encode())
-                stats.add(*span_fn(r), True, at, w.tell_voffset())
-                nrec += 1
-            w.close()
-        info = (stats, fs.file_size(part_path))
-        if sharded:
-            tbi_sidecar(part_path, [info], 0)
-            return nrec
-        return info
-
-    def merge(tmp: str, parts) -> None:
-        head = _bgzf(header.encode())
-        _merge_parts(tmp, head, parts, bgzf.BGZF_EOF)
-        tbi_sidecar(tmp, [info for _, info in parts], len(head))
-
-    _publish(df.select(*cols), path, sharded, shard_ext, write_part, merge,
-             arrow=False, fmt=fmt)
+    """One writer for every tabix-text spec (sources/tabix_text.py)."""
+    compress = _bgzf_output(path, compress, index_tbi, sharded)
+    _publish(df, path, sharded, _spec_part(spec, compress, sharded, index_tbi))
 
 
 def write_fastq(df: DataFrame, path: str, sharded: bool = False) -> None:
-    _write_text_parts(df.select(*FASTQ_COLS), path, "", False,
-                      ".fastq" if sharded else None, chunk_fn=_fastq_chunk)
+    _publish(df, path, sharded, TextPart(
+        "", False, sharded, ".fastq", "fastq", FASTQ_COLS, chunk=_fastq_chunk,
+    ))
 
 
 _P33_TO_P64 = bytes(
@@ -953,23 +1111,34 @@ def write_fasta(df: DataFrame, path: str, index_fai: bool = True) -> None:
     so the fasta source plans one split per contig (requires the fixed line
     width faidx assumes; reference model ReferenceFragment.java:36-41)."""
     prepared = df.repartition("contig").sortWithinPartitions("contig", "pos")
+    _publish(prepared, path, False, _FastaPart(index_fai))
 
-    def write_part(part_path: str, rows) -> None:
-        with fs.open_file(part_path, "wb") as f:
-            cur = None
-            for r in rows:
-                if r.contig != cur:
-                    f.write(f">{r.contig}\n".encode())
-                    cur = r.contig
-                f.write((r.seq + "\n").encode())
 
-    def merge(tmp: str, parts) -> None:
+@dataclass
+class _FastaPart:
+    """``>name`` sections of one contig-partitioned FASTA part."""
+
+    index_fai: bool
+
+    ext, fmt, cols = "", "fasta", ["contig", "pos", "seq"]
+
+    def __call__(self, path: str, batches):
+        n = 0
+        cur = None
+        with fs.open_file(path, "wb") as f:
+            for batch in batches:
+                for contig, _, seq in _batch_rows(_select(batch, self.cols)):
+                    if contig != cur:
+                        f.write(f">{contig}\n".encode())
+                        cur = contig
+                    f.write((seq + "\n").encode())
+                    n += 1
+        return n, None
+
+    def merge(self, tmp: str, parts) -> None:
         _merge_parts(tmp, b"", parts, b"")
-        if index_fai:
+        if self.index_fai:
             build_fai(tmp, tmp + ".fai")
-
-    _publish(prepared.select("contig", "pos", "seq"), path, False, "",
-             write_part, merge, arrow=False)
 
 
 def scan_fai_entries(
@@ -1105,8 +1274,9 @@ def _qseq_chunk(batch) -> bytes:
 def write_qseq(df: DataFrame, path: str, sharded: bool = False) -> None:
     """Inverse of the qseq source: N->'.', Sanger->Illumina quality
     (reference QseqOutputFormat.java:98-157)."""
-    _write_text_parts(df.select(*FASTQ_COLS), path, "", False,
-                      ".qseq" if sharded else None, chunk_fn=_qseq_chunk)
+    _publish(df, path, sharded, TextPart(
+        "", False, sharded, ".qseq", "qseq", FASTQ_COLS, chunk=_qseq_chunk,
+    ))
 
 
 def write_parquet_reads(

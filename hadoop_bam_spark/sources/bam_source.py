@@ -105,9 +105,9 @@ class BAMDataSource(DataSource):
         return BAMReader(self.options)
 
     def streamWriter(self, schema, overwrite):
-        from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter
+        from hadoop_bam_spark.sinks import stream_writer
 
-        return BAMStreamWriter(self.options)
+        return stream_writer("bam", self.options)
 
 
 class BAMReader(DataSourceReader):

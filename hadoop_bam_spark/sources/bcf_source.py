@@ -230,9 +230,9 @@ class BCFDataSource(DataSource):
         return BCFReader(self.options)
 
     def streamWriter(self, schema, overwrite):
-        from hadoop_bam_spark.streaming.bcf_sink import BCFStreamWriter
+        from hadoop_bam_spark.sinks import stream_writer
 
-        return BCFStreamWriter(self.options)
+        return stream_writer("bcf", self.options)
 
 
 class BCFReader(DataSourceReader):

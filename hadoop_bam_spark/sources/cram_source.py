@@ -87,9 +87,9 @@ class CRAMDataSource(DataSource):
         return CRAMReader(self.options)
 
     def streamWriter(self, schema, overwrite):
-        from hadoop_bam_spark.streaming.cram_sink import CRAMStreamWriter
+        from hadoop_bam_spark.sinks import stream_writer
 
-        return CRAMStreamWriter(self.options)
+        return stream_writer("cram", self.options)
 
 
 class CRAMReader(DataSourceReader):

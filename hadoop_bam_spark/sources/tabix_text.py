@@ -15,9 +15,9 @@ through :func:`plan_text_partitions` and :func:`partition_line_chunks` too.
 A :class:`TabixTextSpec` holds every decision that differs between the
 interval-text formats, and every binding is built from it: the batch
 source here (``spark.read.format("bed"|"bedgraph"|"gff")``), the tail
-sources (streaming/tail.py), the stream sink
-(streaming/text_sink.py) and the batch writers (sinks.py, whose tabix
-preset is the coordinate columns + 1 plus the zero-based flag). A new
+sources (streaming/tail.py), and the part writer that the batch writers
+and the stream sink share (sinks.py, whose tabix preset is the coordinate
+columns + 1 plus the zero-based flag). A new
 tabix-indexed text format is one spec.
 
 Intervals (``option("intervals", "chr1:1-70000")`` or pushed-down
@@ -403,7 +403,8 @@ class TabixTextReader(DataSourceReader):
 
 def _data_source(spec: TabixTextSpec, cls_name: str) -> type:
     """The ``spark.read.format(spec.name)`` DataSource for one spec; its
-    ``streamWriter`` lands micro-batches as BGZF shards."""
+    ``streamWriter`` lands micro-batches as the BGZF shards of
+    ``write_*(sharded=True)``."""
 
     class _Source(DataSource):
         @classmethod
@@ -417,9 +418,9 @@ def _data_source(spec: TabixTextSpec, cls_name: str) -> type:
             return TabixTextReader(spec, self.options)
 
         def streamWriter(self, schema, overwrite):
-            from hadoop_bam_spark.streaming.text_sink import text_stream_writer
+            from hadoop_bam_spark.sinks import stream_writer
 
-            return text_stream_writer(spec, self.options)
+            return stream_writer(spec.name, self.options)
 
     # module-level names, so the classes pickle by reference
     _Source.__name__ = _Source.__qualname__ = cls_name

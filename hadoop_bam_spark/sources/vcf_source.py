@@ -51,9 +51,9 @@ class VCFDataSource(DataSource):
         return VCFReader(self.options)
 
     def streamWriter(self, schema, overwrite):
-        from hadoop_bam_spark.streaming.vcf_sink import VCFStreamWriter
+        from hadoop_bam_spark.sinks import stream_writer
 
-        return VCFStreamWriter(self.options)
+        return stream_writer("vcf", self.options)
 
 
 class VCFReader(DataSourceReader):

@@ -8,8 +8,11 @@ directory-tail sources, :mod:`hadoop_bam_spark.streaming.tail`: each
 micro-batch is planned on the driver and decoded on executors by the batch
 source of its format, with that source's options), streaming shard sinks for
 BAM/VCF/CRAM/BCF/BED/bedGraph/GFF3
-(``writeStream.format("bam"|"vcf"|"cram"|"bcf"|...)`` — rename-committed
-standalone shards, the producer side of the tail sources), and
+(``writeStream.format("bam"|"vcf"|"cram"|"bcf"|...)``, the producer side of
+the tail sources: :func:`hadoop_bam_spark.sinks.stream_writer` runs the
+format's ``write_*(sharded=True)`` part writer in
+:class:`hadoop_bam_spark.commit.ShardStreamWriter`, which commits
+rename-committed standalone shards), and
 stateful/windowed processing of event streams,
 expressed with watermarks + windowed aggregation and
 ``applyInPandasWithState`` for custom state (sessionization, as-of

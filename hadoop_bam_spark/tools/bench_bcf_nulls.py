@@ -199,9 +199,9 @@ def run(n: int, quantized: bool, adversarial: bool = False) -> dict:
     old_fallback_batches = sum(_has_null_fmt_value(b) for b in batches)
 
     # both paths timed as the SINK pays them: the scalar fallback must
-    # first materialize Arrow -> python rows (_vcf_batch_rows), which is
+    # first materialize Arrow -> python rows (_batch_rows), which is
     # part of its real cost
-    from hadoop_bam_spark.sinks import _vcf_batch_rows
+    from hadoop_bam_spark.sinks import _batch_rows
 
     enc = BCFBatchEncoder(hdr)
     t0 = time.perf_counter()
@@ -219,7 +219,7 @@ def run(n: int, quantized: bool, adversarial: bool = False) -> dict:
             new_fallback_batches += 1
             path_hist["scalar"] = path_hist.get("scalar", 0) + 1
             vec_parts.append(
-                b"".join(bcf.encode_record(t, hdr) for t in _vcf_batch_rows(b))
+                b"".join(bcf.encode_record(t, hdr) for t in _batch_rows(b))
             )
     vec_s = time.perf_counter() - t0
 
@@ -227,7 +227,7 @@ def run(n: int, quantized: bool, adversarial: bool = False) -> dict:
     scalar_blob = b"".join(
         bcf.encode_record(t, hdr)
         for b in batches
-        for t in _vcf_batch_rows(b)
+        for t in _batch_rows(b)
     )
     scalar_s = time.perf_counter() - t0
 

@@ -98,44 +98,40 @@ def test_summarize_all_flat_says_so_in_verdict():
     assert "every per-query ratio inside" in out["verdict"]
 
 
-def test_materialize_rejects_stale_worktree(tmp_path):
+def test_materialize_rejects_stale_worktree(tmp_path, monkeypatch):
     """A reused worktree directory whose HEAD is not the requested sha
-    must be recreated, not silently benchmarked."""
+    must be recreated, not silently benchmarked. Runs against its own
+    two-commit repository, so it holds in an exported tree too."""
     import os
     import subprocess
 
     from hadoop_bam_spark.tools import ab_bench
 
-    sha = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD~1"], cwd=_REPO,
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
+    repo = tmp_path / "repo"
+    repo.mkdir()
+
+    def git(*args, cwd=repo):
+        return subprocess.run(
+            ["git", "-c", "user.name=ab", "-c", "user.email=ab@example.com",
+             *args],
+            cwd=cwd, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+
+    git("init", "-q")
+    for i in range(2):
+        (repo / "f.txt").write_text(str(i))
+        git("add", "f.txt")
+        git("commit", "-q", "-m", f"c{i}")
+    monkeypatch.setattr(ab_bench, "_REPO", str(repo))
+    want = git("rev-parse", "HEAD~1")
     label, tree = ab_bench._materialize("HEAD~1")
-    assert label == sha
-    head = subprocess.run(
-        ["git", "rev-parse", "HEAD"], cwd=tree,
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    want = subprocess.run(
-        ["git", "rev-parse", "HEAD~1"], cwd=_REPO,
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    assert head == want
+    assert label == git("rev-parse", "--short", "HEAD~1")
+    assert git("rev-parse", "HEAD", cwd=tree) == want
     # poison the worktree: move its HEAD elsewhere, re-materialize
-    subprocess.run(
-        ["git", "checkout", "--detach", "HEAD~1"], cwd=tree,
-        capture_output=True, text=True, check=True,
-    )
+    git("checkout", "-q", "--detach", git("rev-parse", "HEAD"), cwd=tree)
+    assert git("rev-parse", "HEAD", cwd=tree) != want
     label2, tree2 = ab_bench._materialize("HEAD~1")
-    head2 = subprocess.run(
-        ["git", "rev-parse", "HEAD"], cwd=tree2,
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    assert head2 == want
+    assert git("rev-parse", "HEAD", cwd=tree2) == want
     # parent directory is user-private
-    parent = os.path.dirname(tree2)
-    assert os.stat(parent).st_mode & 0o777 == 0o700
-    subprocess.run(
-        ["git", "worktree", "remove", "--force", tree2], cwd=_REPO,
-        capture_output=True, text=True,
-    )
+    assert os.stat(os.path.dirname(tree2)).st_mode & 0o777 == 0o700
+    git("worktree", "remove", "--force", tree2)

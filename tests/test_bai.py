@@ -12,6 +12,8 @@ import pytest
 from hadoop_bam_spark.formats import bai, bam, bgzf
 from hadoop_bam_spark.formats.sam import SAMHeader
 
+from tests import writers
+
 
 def _header(n_refs=2, ln=100_000_000):
     hdr = SAMHeader()
@@ -32,7 +34,7 @@ def _row(qname, rname, pos, flag=0, seq="ACGT"):
 
 def _make_bam(path, rows, hdr):
     with open(path, "wb") as f:
-        bam.write_bam(f, hdr, rows)
+        writers.write_bam(f, hdr, rows)
 
 
 def _sorted_rows(n=20000, seed=7):

@@ -23,9 +23,10 @@ import struct
 
 import pytest
 
-from hadoop_bam_spark.formats import bam as bam_mod
 from hadoop_bam_spark.formats.bam import SAMHeader
 from hadoop_bam_spark.tools import bgzf_bam_validator as V
+
+from tests import writers
 
 REFS = [("chr1", 100000), ("chr2", 50000)]
 HEADER = SAMHeader(
@@ -51,7 +52,7 @@ ROWS = _rows()
 
 def _engine_bam() -> bytes:
     buf = io.BytesIO()
-    bam_mod.write_bam(buf, HEADER, ROWS, refs=REFS)
+    writers.write_bam(buf, HEADER, ROWS, refs=REFS)
     return buf.getvalue()
 
 

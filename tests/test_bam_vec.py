@@ -17,6 +17,8 @@ import pytest
 from hadoop_bam_spark.formats import bam, bam_vec, bgzf
 from hadoop_bam_spark.formats.sam import SAMHeader, parse_header
 
+from tests import writers
+
 REFS = [("chr1", 1_000_000), ("chr2", 2_000_000)]
 
 
@@ -48,7 +50,7 @@ def _edge_rows() -> list[tuple]:
 
 def _write_bam_bytes(rows, granularity=0) -> bytes:
     fh = io.BytesIO()
-    bam.write_bam(fh, _header(), rows, refs=REFS, index_granularity=granularity)
+    writers.write_bam(fh, _header(), rows, refs=REFS, index_granularity=granularity)
     return fh.getvalue()
 
 
@@ -128,7 +130,7 @@ def test_iter_bodies_span_ownership_midfile():
     reader = bgzf.BGZFReader(fh)
     _, refs, first_voffset = bam.read_header(reader)
     # recover record voffsets from the inline splitting offsets
-    offs = bam.write_bam(io.BytesIO(), _header(), rows, refs=REFS,
+    offs = writers.write_bam(io.BytesIO(), _header(), rows, refs=REFS,
                          index_granularity=100)
     # pick a mid-file record boundary; shift by the header the real file has
     fh2 = io.BytesIO(data)

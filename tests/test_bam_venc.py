@@ -65,6 +65,53 @@ def test_sliced_batch_parity():
     assert sliced == whole
 
 
+def test_tag_split_keeps_null_maps_and_slices():
+    """The sinks split the ``tags`` map column into tag_keys/tag_vals over
+    the map's own buffers: a null map stays null, a sliced batch keeps its
+    offsets, and the BAM and CRAM encoders give the bytes of the scalar
+    encoders on every slice."""
+    from hadoop_bam_spark.formats import cram
+    from hadoop_bam_spark.formats.cram_venc import CRAMColumnEncoder
+    from hadoop_bam_spark.sinks import _batch_rows, _with_tag_lists
+
+    rows = [
+        ("a1", 0, "chr1", 10, 30, "4M", None, 0, 0, "ACGT", "IIII",
+         {"NM": "i:1"}),
+        ("a2", 4, None, 0, 0, None, None, 0, 0, "ACG", "III", None),
+        ("a3", 16, "chr2", 99, 60, "2M1I2D5M", "chr1", 5, -42, "ACGTACGT",
+         "!!!!!!~~", {"MD": "Z:abc", "AS": "i:-7"}),
+        ("a4", 0, "chr1", 100, 255, "1S2M", "chr2", 1, 0, "NNT", "III",
+         {"XX": "Z:x y"}),
+        ("a5", 0, "chr1", 200, 30, "3M", None, 0, 0, "ACG", "III", None),
+        ("a6", 0, "chr2", 400, 30, "5M", None, 0, 0, "ACGTN", "IIIII", {}),
+    ]
+    split = rows_to_batch([r[:11] + (r[11] or {},) for r in rows])
+    batch = pa.RecordBatch.from_arrays(
+        split.columns[:11] + [pa.array(
+            [None if r[11] is None else list(r[11].items()) for r in rows],
+            pa.map_(pa.string(), pa.string()),
+        )],
+        names=split.schema.names[:11] + ["tags"],
+    )
+    enc = BAMBatchEncoder(REFS)
+    cenc = CRAMColumnEncoder(REF_INDEX)
+    for lo, n in [(0, 6), (1, 3), (2, 4), (4, 2), (5, 1), (3, 0)]:
+        part = batch.slice(lo, n)
+        got = _with_tag_lists(part)
+        want = rows[lo:lo + n]
+        assert got.column("tag_keys").to_pylist() == [
+            None if r[11] is None else list(r[11]) for r in want]
+        assert got.column("tag_vals").to_pylist() == [
+            None if r[11] is None else list(r[11].values()) for r in want]
+        assert list(_batch_rows(part)) == want
+        assert enc.encode_batch(got)[0] == b"".join(
+            bam.encode_record(r, REF_INDEX) for r in want)
+        if n:
+            table = pa.Table.from_batches([part])
+            assert cenc.encode_container(_with_tag_lists(table), 0) == (
+                cram.encode_container(want, REF_INDEX, 0))
+
+
 def test_stats_arrays_match_add_sam_row():
     from hadoop_bam_spark.formats.bai import PartIndexStats
 

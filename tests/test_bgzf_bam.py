@@ -18,6 +18,7 @@ from hadoop_bam_spark.formats import bam, bgzf
 from hadoop_bam_spark.formats.sam import parse_sam_line, format_sam_line
 from hadoop_bam_spark.formats.splitting_index import SplittingIndex
 from tests import textgen
+from tests import writers
 
 RES = "/root/reference/src/test/resources"
 has_ref = os.path.isdir(RES)
@@ -123,7 +124,7 @@ class TestBAMCodec:
     def test_encode_roundtrip(self, gen_bam):
         _, header, refs, _, recs = gen_bam
         buf = io.BytesIO()
-        bam.write_bam(buf, header, recs, refs=refs)
+        writers.write_bam(buf, header, recs, refs=refs)
         buf.seek(0)
         r2 = bgzf.BGZFReader(buf)
         h2, refs2, s2 = bam.read_header(r2)
@@ -173,7 +174,7 @@ class TestBAMCodec:
         the partition scan. Every guess must now land on a true start."""
         _, header, refs, _, recs = gen_bam
         buf = io.BytesIO()
-        bam.write_bam(buf, header, recs * 8, refs=refs)
+        writers.write_bam(buf, header, recs * 8, refs=refs)
         raw = buf.getvalue()
         r = bgzf.BGZFReader(io.BytesIO(raw))
         _, _, start = bam.read_header(r)

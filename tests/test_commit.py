@@ -80,6 +80,44 @@ def test_sharded_overwrite_with_fewer_partitions(fmt_spark, gen_bam, tmp_path):
     )
 
 
+@pytest.mark.parametrize("fmt", ["vcf", "sam", "fastq", "qseq", "bed"])
+def test_sharded_manifest_counts_records(fmt_spark, gen_bam, tmp_path, fmt):
+    """Every sharded write's manifest names its format and counts its
+    records, the text sinks' included."""
+    from hadoop_bam_spark import sinks
+    from hadoop_bam_spark.formats.vcf import read_vcf_header
+
+    src = tmp_path / "src"
+    if fmt == "vcf":
+        src.write_text(textgen.gen_vcf_text(textgen.gen_vcf_rows(300)))
+        df = fmt_spark.read.format("vcf").load(str(src))
+        write = lambda p: sinks.write_vcf(  # noqa: E731
+            df, p, read_vcf_header(str(src)), compress=False, sharded=True)
+    elif fmt == "sam":
+        df = fmt_spark.read.format("bam").load(gen_bam)
+        write = lambda p: sinks.write_sam(  # noqa: E731
+            df, p, _header()[0], sharded=True)
+    elif fmt == "bed":
+        src.write_text("".join(
+            f"chr1\t{10 * i}\t{10 * i + 5}\tf{i}\n" for i in range(250)))
+        df = fmt_spark.read.format("bed").load(str(src))
+        write = lambda p: sinks.write_bed(df, p, sharded=True)  # noqa: E731
+    else:
+        src.write_text("".join(
+            f"@r{i}/1\nACGTN\n+\nIIIII\n" for i in range(250)))
+        df = fmt_spark.read.format("fastq").load(str(src))
+        write = lambda p: getattr(sinks, f"write_{fmt}")(  # noqa: E731
+            df, p, sharded=True)
+    df = df.repartition(3)
+    out = str(tmp_path / "out")
+    write(out)
+    man = json.load(open(os.path.join(out, "_manifest.json")))
+    n = df.count()
+    assert man["format"] == fmt
+    assert man["records"] == n
+    assert sum(m["records"] for m in man["shards"]) == n
+
+
 @pytest.mark.parametrize("stale", ["bai", "csi"])
 def test_single_file_overwrite_drops_stale_index(fmt_spark, gen_bam, tmp_path,
                                                  stale):

@@ -10,6 +10,8 @@ import pytest
 from hadoop_bam_spark.formats import crai, cram
 from hadoop_bam_spark.formats.sam import SAMHeader
 
+from tests import writers
+
 
 def _header(n_refs=2, ln=100_000_000):
     hdr = SAMHeader()
@@ -43,7 +45,7 @@ def _write_cram(path, rows, hdr, per_container=500):
         import io
 
         buf = io.BytesIO()
-        w = cram.CRAMWriter(buf, refs, bare=True,
+        w = writers.CRAMWriter(buf, refs, bare=True,
                             records_per_container=per_container)
         for r in rows:
             w.write(r)
@@ -297,7 +299,7 @@ class TestMultiSliceWrite:
                          "ACGTACGTAC", "IIIIIIIIII", None))
         p = str(tmp_path / f"ms{records_per_slice}.cram")
         with open(p, "wb") as fh:
-            w = cram.CRAMWriter(fh, refs, header_text="@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:10000000\n",
+            w = writers.CRAMWriter(fh, refs, header_text="@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:10000000\n",
                                 records_per_container=900,
                                 records_per_slice=records_per_slice)
             for r in rows:

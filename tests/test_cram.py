@@ -12,6 +12,8 @@ import pytest
 
 from hadoop_bam_spark.formats import cram
 
+from tests import writers
+
 REF_CRAM = "/root/reference/src/test/resources/test.cram"
 REF_FASTA = "/root/reference/src/test/resources/auxf.fa"
 
@@ -112,7 +114,7 @@ HEADER = "@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:1000\n@SQ\tSN:chr2\tLN:2000\n"
 
 def _write_rows(rows, per_container=3):
     buf = io.BytesIO()
-    w = cram.CRAMWriter(buf, REFS, header_text=HEADER,
+    w = writers.CRAMWriter(buf, REFS, header_text=HEADER,
                         records_per_container=per_container)
     for r in rows:
         w.write(r)
@@ -155,7 +157,7 @@ def test_cigar_query_length():
 
 def test_writer_rejects_cigar_seq_mismatch():
     buf = io.BytesIO()
-    w = cram.CRAMWriter(buf, REFS, header_text=HEADER)
+    w = writers.CRAMWriter(buf, REFS, header_text=HEADER)
     with pytest.raises(ValueError):
         w.write(("bad", 0, "chr1", 1, 0, "5M", None, 0, 0, "ACG", None, {}))
         w.close()
@@ -258,7 +260,7 @@ def test_reference_write_roundtrip_and_shrinks(tmp_path):
 
     def write(ref):
         buf = io.BytesIO()
-        w = cram.CRAMWriter(
+        w = writers.CRAMWriter(
             buf, REFS, header_text=HEADER, records_per_container=3,
             ref_fasta=cram.FastaRef(fasta) if ref else None,
         )

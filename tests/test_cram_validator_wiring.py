@@ -32,6 +32,8 @@ import pytest
 from hadoop_bam_spark.formats import cram
 from hadoop_bam_spark.tools import cram3_validator as V
 
+from tests import writers
+
 # ---------------------------------------------------------------------------
 # write fixtures
 # ---------------------------------------------------------------------------
@@ -92,7 +94,7 @@ def fasta(tmp_path_factory):
 def _engine_bytes(codecs="gzip", ref_fasta=None, embed=False,
                   per_container=60, per_slice=30):
     buf = io.BytesIO()
-    w = cram.CRAMWriter(
+    w = writers.CRAMWriter(
         buf, REFS, header_text=HEADER,
         records_per_container=per_container,
         records_per_slice=per_slice,

@@ -7,6 +7,8 @@ import pytest
 
 from hadoop_bam_spark import fs
 
+from tests import writers
+
 
 @pytest.fixture(autouse=True)
 def _clean_mem():
@@ -33,7 +35,6 @@ def test_mem_basics():
 def test_bam_codec_roundtrip_on_memory_fs():
     """Write a BAM (codec level) to memory://, then run the DRIVER-side
     machinery against it: header read, .sbi planning, record iteration."""
-    from hadoop_bam_spark.formats import bam, bgzf
     from hadoop_bam_spark.formats.sam import SAMHeader
     from hadoop_bam_spark.formats.splitting_index import SplittingIndex
     from hadoop_bam_spark.sources.bam_source import BAMReader
@@ -47,7 +48,7 @@ def test_bam_codec_roundtrip_on_memory_fs():
     ]
     path = "memory://bams/x.bam"
     with fs.open_file(path, "wb") as f:
-        offsets = bam.write_bam(f, hdr, rows, index_granularity=100)
+        offsets = writers.write_bam(f, hdr, rows, index_granularity=100)
     with fs.open_file(path + ".sbi", "wb") as f:
         SplittingIndex(100, offsets, fs.file_size(path)).write(f)
 
@@ -73,7 +74,7 @@ def test_cram_codec_roundtrip_on_memory_fs():
     rows = [("r1", 0, "chr1", 10, 60, "4M", None, 0, 0, "ACGT", "IIII", {"NM": "1"})]
     path = "memory://crams/x.cram"
     with fs.open_file(path, "wb") as f:
-        w = cram.CRAMWriter(f, refs, header_text="@SQ\tSN:chr1\tLN:1000\n")
+        w = writers.CRAMWriter(f, refs, header_text="@SQ\tSN:chr1\tLN:1000\n")
         for r in rows:
             w.write(r)
         w.close()

@@ -36,6 +36,8 @@ import pytest
 from hadoop_bam_spark.formats import bam, bcf, bgzf, cram
 from hadoop_bam_spark.formats.bam import SAMHeader
 
+from tests import writers
+
 #: what a decoder may raise on corrupt input (zlib.error for payloads
 #: that fail inside a compression codec; it does not subclass OSError)
 CONTROLLED = (ValueError, EOFError, OSError, zlib.error)
@@ -131,7 +133,7 @@ def _bam_rows(n=25):
 class TestFuzzBAM:
     def _file_bytes(self):
         buf = io.BytesIO()
-        bam.write_bam(buf, BAM_HEADER, _bam_rows(), refs=BAM_REFS)
+        writers.write_bam(buf, BAM_HEADER, _bam_rows(), refs=BAM_REFS)
         return buf.getvalue()
 
     def test_record_bodies(self):
@@ -309,7 +311,7 @@ class TestFuzzCRAM:
     @pytest.fixture(scope="class")
     def clean(self):
         buf = io.BytesIO()
-        w = cram.CRAMWriter(
+        w = writers.CRAMWriter(
             buf, BAM_REFS,
             header_text=BAM_HEADER.text, records_per_container=10,
             records_per_slice=5)

@@ -6,6 +6,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from tests import writers
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -552,7 +554,6 @@ class TestManifestDrivenTail:
     different record split, duplicating or dropping rows)."""
 
     def _bam_bytes(self, tmp_path, name, rows):
-        from hadoop_bam_spark.formats import bam as bammod
         from hadoop_bam_spark.formats.sam import SAMHeader
 
         hdr = SAMHeader()
@@ -560,14 +561,14 @@ class TestManifestDrivenTail:
         hdr.sequences = {"chr1": (0, 5000)}
         p = tmp_path / name
         with open(p, "wb") as f:
-            bammod.write_bam(f, hdr, rows)
+            writers.write_bam(f, hdr, rows)
         return p.read_bytes()
 
     def test_replay_supersedes_mid_tail_total_exact(self, tmp_path):
         import copy
 
         from hadoop_bam_spark.commit import ShardCommit as M
-        from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter
+        from hadoop_bam_spark.sources.bam_source import BAMDataSource
         from hadoop_bam_spark.streaming.tail import BAMStreamDataSource
 
         rows = [
@@ -581,7 +582,8 @@ class TestManifestDrivenTail:
         out.mkdir()
         staging = out / ".staging"
         staging.mkdir()
-        w = BAMStreamWriter({"path": str(out), "header": str(hdr)})
+        w = BAMDataSource(
+            {"path": str(out), "header": str(hdr)}).streamWriter(None, False)
         rdr = BAMStreamDataSource({"path": str(out)}).streamReader(None)
 
         # attempt 1 of batch 0 is MID-COMMIT: one shard already renamed
@@ -675,13 +677,14 @@ class TestStreamSinkCommitProtocol:
     visibility is the rename, abort leaves nothing half-visible."""
 
     def _writer(self, tmp_path):
-        from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter
+        from hadoop_bam_spark.sources.bam_source import BAMDataSource
 
         hdr = tmp_path / "h.sam"
         hdr.write_text("@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:100\n")
         out = tmp_path / "out"
         out.mkdir()
-        return BAMStreamWriter({"path": str(out), "header": str(hdr)}), out
+        return BAMDataSource(
+            {"path": str(out), "header": str(hdr)}).streamWriter(None, False), out
 
     def _stage(self, out, name, data=b"x"):
         staging = out / ".staging"
@@ -840,22 +843,22 @@ class TestStreamSinkCommitProtocol:
         out = tmp_path / f"out_{fmt}"
         out.mkdir()
         if fmt == "bam":
-            from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter as W
+            from hadoop_bam_spark.sources.bam_source import BAMDataSource as W
 
             hdr, ext = sam_hdr, ".bam"
         elif fmt == "vcf":
-            from hadoop_bam_spark.streaming.vcf_sink import VCFStreamWriter as W
+            from hadoop_bam_spark.sources.vcf_source import VCFDataSource as W
 
             hdr, ext = vcf_hdr, ".vcf.bgz"
         elif fmt == "cram":
-            from hadoop_bam_spark.streaming.cram_sink import CRAMStreamWriter as W
+            from hadoop_bam_spark.sources.cram_source import CRAMDataSource as W
 
             hdr, ext = sam_hdr, ".cram"
         else:
-            from hadoop_bam_spark.streaming.bcf_sink import BCFStreamWriter as W
+            from hadoop_bam_spark.sources.bcf_source import BCFDataSource as W
 
             hdr, ext = vcf_hdr, ".bcf"
-        w = W({"path": str(out), "header": str(hdr)})
+        w = W({"path": str(out), "header": str(hdr)}).streamWriter(None, False)
         self._stage(out, f"attempt-1-p00000{ext}", b"A")
         self._stage(out, f"attempt-2-p00001{ext}", b"B")
         w.commit(
@@ -926,10 +929,9 @@ class TestMidFlightCommitWindow:
         (once full, stays full through the staging sweep)."""
         import copy
 
-        from hadoop_bam_spark.formats import bam as bammod
         from hadoop_bam_spark.formats.sam import SAMHeader
         from hadoop_bam_spark.commit import ShardCommit as M
-        from hadoop_bam_spark.streaming.bam_sink import BAMStreamWriter
+        from hadoop_bam_spark.sources.bam_source import BAMDataSource
         from hadoop_bam_spark.streaming.tail import BAMStreamDataSource
 
         def bam_bytes(rows):
@@ -939,7 +941,7 @@ class TestMidFlightCommitWindow:
             import io as _io
 
             buf = _io.BytesIO()
-            bammod.write_bam(buf, hdr, rows)
+            writers.write_bam(buf, hdr, rows)
             return buf.getvalue()
 
         rows = [
@@ -953,7 +955,8 @@ class TestMidFlightCommitWindow:
         out.mkdir()
         staging = out / ".staging"
         staging.mkdir()
-        w = BAMStreamWriter({"path": str(out), "header": str(hdr_p)})
+        w = BAMDataSource(
+            {"path": str(out), "header": str(hdr_p)}).streamWriter(None, False)
         rdr = BAMStreamDataSource({"path": str(out)}).streamReader(None)
 
         # batch 0 committed cleanly; the reader has consumed it

@@ -336,17 +336,15 @@ class TestVCFFormatChunkParity:
 
 class TestVcfBatchRowsNullFields:
     def test_null_fields_map_formats_and_encodes(self):
-        """_vcf_batch_rows maps a NULL per-genotype fields map to {} —
-        format_vcf_line iterates g[2] directly (None would TypeError on
-        the text sink's ragged fallback), and BCF's encode_indiv treats
-        None and {} identically, so the substitution is byte-neutral
-        there. Regression: the function was defined twice in sinks.py
-        with the two semantics and the crashable copy shadowed the safe
-        one (r9)."""
+        """_batch_rows keeps a NULL per-genotype fields map null, and
+        format_vcf_line (the text sink's ragged fallback) writes it as
+        missing values like ``{}``, as BCF's encode_indiv does. Regression:
+        a row helper once passed None through to a formatter that
+        iterated it (r9)."""
         import pyarrow as pa
 
         from hadoop_bam_spark.formats.vcf import format_vcf_line
-        from hadoop_bam_spark.sinks import _vcf_batch_rows
+        from hadoop_bam_spark.sinks import _batch_rows
         from hadoop_bam_spark.sources import arrow_schema
         from hadoop_bam_spark.formats.vcf import VCF_SCHEMA
 
@@ -363,8 +361,9 @@ class TestVcfBatchRowsNullFields:
             }],
             schema=arrow_schema(VCF_SCHEMA),
         )
-        rows = list(_vcf_batch_rows(batch))
-        assert rows[0][9][1][2] == {}  # null fields -> {}
+        rows = list(_batch_rows(batch))
+        assert rows[0][9][0] == ("S1", "0/1", {"GT": "0/1"})
+        assert rows[0][9][1][2] is None  # null fields stay null
         line = format_vcf_line(rows[0], ["S1", "S2"])
         assert line.split("\t")[9:] == ["0/1", "."]
 

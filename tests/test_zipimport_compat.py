@@ -19,9 +19,10 @@ import pytest
 
 from hadoop_bam_spark import _zipimport_compat
 from hadoop_bam_spark._zipimport_compat import LazyZipImporter
-from hadoop_bam_spark.formats import bam
 from hadoop_bam_spark.formats.sam import SAMHeader
 from hadoop_bam_spark.session import IMPORT_ROOT, default_driver_memory
+
+from tests import writers
 
 eager_interpreter = pytest.mark.skipif(
     not _zipimport_compat._eager(zipimport.zipimporter),
@@ -117,7 +118,7 @@ def _small_bam(path, n=300):
         for i in range(n)
     ]
     with open(path, "wb") as f:
-        bam.write_bam(f, hdr, rows)
+        writers.write_bam(f, hdr, rows)
     return n
 
 
