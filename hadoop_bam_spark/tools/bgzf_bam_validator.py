@@ -9,6 +9,9 @@ self-validate. The r12 CRAM EOF-constant bug is the motivating failure
 mode: engine-only roundtrips masked a spec-invalid fixed trailer; the
 analogous BGZF risks are the 28-byte EOF member, the BC/BSIZE extra
 subfield arithmetic, and per-member CRC32/ISIZE — all re-derived here.
+It inflates and checksums with the stdlib ``zlib`` on purpose, even where
+the engine deflates and inflates through libdeflate: a second codec is
+the independent oracle for the engine's blocks.
 
 Checks:
 - gzip member framing: magic/CM/FLG, FEXTRA with a BC subfield whose

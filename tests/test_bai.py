@@ -4,8 +4,12 @@ source (mirrors the reference's TestBAMInputFormat.java:143-216 bounded
 traversal cases)."""
 
 import io
+import json
 import os
 import random
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
@@ -13,6 +17,8 @@ from hadoop_bam_spark.formats import bai, bam, bgzf
 from hadoop_bam_spark.formats.sam import SAMHeader
 
 from tests import writers
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _header(n_refs=2, ln=100_000_000):
@@ -407,16 +413,18 @@ def test_part_stats_add_batch_equals_per_record_add(seed):
     assert max(len(c) for r in rows.refs.values() for c in r.bins.values()) > 1
 
 
-def test_write_bam_index_bytes_pinned(spark, tmp_path):
-    """write_bam(index_bai=True) with several Arrow batches per partition:
-    the .bam, .bai and .sbi bytes are pinned to those of the per-record
-    index accumulator the batch path replaced."""
-    import hashlib
-
+#: The pinned write, run in a fresh interpreter: the Spark session it
+#: starts hands its environment to every Python worker it launches.
+_PINNED_WRITE = textwrap.dedent("""
+    import hashlib, io, json, sys
     from hadoop_bam_spark import sinks
+    from hadoop_bam_spark.formats import bam, bgzf
     from hadoop_bam_spark.formats.sam import SAM_SCHEMA, parse_header
+    from hadoop_bam_spark.session import get_spark
     from tests import textgen
 
+    spark = get_spark("pinned", master="local[2]", extra_conf={
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "128"})
     r = bgzf.BGZFReader(io.BytesIO(
         textgen.bam_file(textgen.gen_bam_records(3000, seed=5))))
     _, refs, start = bam.read_header(r)
@@ -424,19 +432,34 @@ def test_write_bam_index_bytes_pinned(spark, tmp_path):
     hdr = parse_header(textgen.gen_bam_header_text().splitlines())
     df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
                                SAM_SCHEMA)
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "128")  # ~8 Arrow batches per partition
-    try:
-        path = str(tmp_path / "pinned.bam")
-        sinks.write_bam(df, path, hdr, index_granularity=64, index_bai=True)
-    finally:
-        spark.conf.set(key, old)
-    digest = {
-        ext: hashlib.sha256(open(path + ext, "rb").read()).hexdigest()
-        for ext in ("", ".bai", ".sbi")
-    }
-    assert digest == PINNED_WRITE_BAM_SHA256
+    path = sys.argv[1]
+    sinks.write_bam(df, path, hdr, index_granularity=64, index_bai=True)
+    codecs = spark.sparkContext.parallelize(range(3), 3).map(
+        lambda _: bgzf.codec()).collect()
+    spark.stop()
+    print(json.dumps({
+        "codecs": sorted({bgzf.codec(), *codecs}),
+        "digest": {ext: hashlib.sha256(open(path + ext, "rb").read()).hexdigest()
+                   for ext in ("", ".bai", ".sbi")}}))
+""")
+
+
+def test_write_bam_index_bytes_pinned(tmp_path):
+    """write_bam(index_bai=True) with several Arrow batches per partition:
+    the .bam, .bai and .sbi bytes are pinned to those of the per-record
+    index accumulator the batch path replaced. The pins are zlib-written,
+    so the write runs with ``SPARK_GRAFT_NO_NATIVE=1`` in the driver and in
+    every worker; what the test checks, that batch and per-record index
+    accumulation agree, does not depend on the codec."""
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_DRIVER_MEM="1g",
+               SPARK_GRAFT_NO_NATIVE="1")
+    r = subprocess.run(
+        [sys.executable, "-c", _PINNED_WRITE, str(tmp_path / "pinned.bam")],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-4000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    assert out["codecs"] == ["zlib"]
+    assert out["digest"] == PINNED_WRITE_BAM_SHA256
 
 
 PINNED_WRITE_BAM_SHA256 = {

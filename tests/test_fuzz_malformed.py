@@ -74,6 +74,9 @@ def _mutations(rng, data: bytes, n: int, lo: int = 0):
 # ---------------------------------------------------------------------------
 
 class TestFuzzBGZF:
+    """Under the codec this process engages: libdeflate where it loads.
+    ``TestFuzzBGZFZlib`` reruns every case under the zlib fallback."""
+
     def test_single_block(self):
         payload = bytes(range(256)) * 8
         block = bgzf.compress_block(payload)
@@ -110,6 +113,13 @@ class TestFuzzBGZF:
                          for _ in range(rng.randrange(1, 200)))
             _assert_controlled(lambda b=blob: bgzf.decompress_block(b),
                                f"garbage[{i}]")
+
+
+class TestFuzzBGZFZlib(TestFuzzBGZF):
+    @pytest.fixture(autouse=True)
+    def _zlib(self, monkeypatch):
+        monkeypatch.setattr(bgzf, "_load", lambda: None)
+        assert bgzf.codec() == "zlib"
 
 
 # ---------------------------------------------------------------------------
