@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import struct
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Optional
 
 from hadoop_bam_spark.formats.vcf import VCFHeader, parse_vcf_header
@@ -60,6 +61,21 @@ class BCFHeader:
             }
         return got
 
+    @cached_property
+    def info_flag_idx(self) -> frozenset:
+        """Dictionary indexes of the INFO keys the header declares
+        ``Type=Flag``. Spec §6.3.3 lets a flag be encoded by any
+        non-reserved typed value, so decoders key flag-ness on the header,
+        not on the value's type."""
+        idx = self.string_index
+        flags = set()
+        for line in self.vcf.lines:
+            if line.startswith("##INFO=<"):
+                kv = _meta_fields(line)
+                if kv.get("Type") == "Flag" and kv.get("ID") in idx:
+                    flags.add(idx[kv["ID"]])
+        return frozenset(flags)
+
     @property
     def contig_index(self) -> dict:
         got = self.__dict__.get("_cidx")
@@ -70,11 +86,16 @@ class BCFHeader:
         return got
 
 
+def _meta_fields(line: str) -> dict:
+    """The key=value fields of a ``##KEY=<...>`` header line."""
+    inner = line[line.index("<") + 1 : line.rindex(">")]
+    return dict(p.split("=", 1) for p in inner.split(",") if "=" in p)
+
+
 def _parse_idx(line: str) -> Optional[int]:
     if "<" not in line:
         return None
-    inner = line[line.index("<") + 1 : line.rindex(">")]
-    kv = dict(p.split("=", 1) for p in inner.split(",") if "=" in p)
+    kv = _meta_fields(line)
     return int(kv["IDX"]) if "IDX" in kv else None
 
 
@@ -97,17 +118,14 @@ def parse_bcf_header_text(text: str) -> BCFHeader:
     contigs: list[str] = []
     for line in lines:
         if line.startswith(("##FILTER=", "##INFO=", "##FORMAT=")):
-            inner = line[line.index("<") + 1 : line.rindex(">")]
-            kv = dict(p.split("=", 1) for p in inner.split(",") if "=" in p)
-            key = kv.get("ID")
+            key = _meta_fields(line).get("ID")
             if key is None:
                 continue
             if key == "PASS":
                 continue
             _dict_put(strings, key, _parse_idx(line))
         elif line.startswith("##contig="):
-            inner = line[line.index("<") + 1 : line.rindex(">")]
-            kv = dict(p.split("=", 1) for p in inner.split(",") if "=" in p)
+            kv = _meta_fields(line)
             if "ID" in kv:
                 _dict_put(contigs, kv["ID"], _parse_idx(line))
     return BCFHeader(vcf, strings, contigs, len(vcf.samples))
@@ -296,6 +314,7 @@ def decode_record(buf: bytes, off: int, hdr: BCFHeader):
 def _decode_record_unchecked(buf: bytes, off: int, hdr: BCFHeader):
     upk = struct.unpack_from
     strings = hdr.strings
+    flags = hdr.info_flag_idx
     l_shared, l_indiv = upk("<II", buf, off)
     shared_end = off + 8 + l_shared
     rec_end = shared_end + l_indiv
@@ -357,8 +376,10 @@ def _decode_record_unchecked(buf: bytes, off: int, hdr: BCFHeader):
         count = desc >> 4
         if count == 15:
             count, p = _scalar_int(buf, p)
-        if typ == 0:
-            info[key] = "true"  # flag
+        if typ == 0 or key_idx in flags:
+            # a flag, whatever its value (spec §6.3.3): skip the value
+            _, p = _read_vector(buf, p, typ, count)
+            info[key] = "true"
         elif typ == 7:
             s = buf[p : p + count].decode("utf-8", "replace") if count else ""
             p += count
@@ -536,11 +557,11 @@ def decode_record_ref(buf: bytes, off: int, hdr: BCFHeader):
         key_idx, p = _read_typed_int_scalar(buf, p)
         key = hdr.strings[key_idx]
         typ, count, p = _read_typed_descriptor(buf, p)
-        if typ == 0:
-            info[key] = "true"  # flag
-            continue
         val, p = _read_vector(buf, p, typ, count)
-        info[key] = _fmt_value(val)
+        if typ == 0 or key_idx in hdr.info_flag_idx:
+            info[key] = "true"  # flag, whatever its value (spec §6.3.3)
+        else:
+            info[key] = _fmt_value(val)
 
     genotypes = None
     if n_fmt and n_sample:

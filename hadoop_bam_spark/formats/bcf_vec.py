@@ -62,6 +62,8 @@ assert PREFIX_DTYPE.itemsize == 32
 _INT_TYPES = (1, 2, 3)
 _INT_DT = {1: np.dtype("i1"), 2: np.dtype("<i2"), 3: np.dtype("<i4")}
 _INT_W = {1: 1, 2: 2, 3: 4}
+#: bytes per element by type code; -1 marks the reserved codes
+_TYPE_W = np.array([0, 1, 2, 4, -1, 4, -1, 1] + [-1] * 8, dtype=np.int64)
 _MISS = sb._INT_MISSING
 _EOV = sb._INT_EOV
 _F_MISS = sb._FLOAT_MISSING_BITS
@@ -316,6 +318,7 @@ class BCFBatchDecoder:
         except ValueError:
             self._gt_idx = -1
         self._samples = list(hdr.vcf.samples or [])
+        self._flag_idx = np.array(sorted(hdr.info_flag_idx), dtype=np.int64)
 
     # ---------------------------------------------------------------- api
 
@@ -531,10 +534,16 @@ class BCFBatchDecoder:
             vln = np.zeros(n, dtype=np.int64)
             adv = np.zeros(n, dtype=np.int64)
 
-            flag = act & (typ == 0)
+            width = _TYPE_W[typ]
+            if (act & (width < 0)).any():
+                raise VecUnsupported("INFO reserved/unknown type")
+            # a flag, whatever its value (spec §6.3.3): skip the value
+            flag = act & ((typ == 0) | np.isin(key_idx, self._flag_idx))
             if flag.any():
                 vst[flag], vln[flag] = _Aux.TRUE
-            strm = act & (typ == 7)
+                adv[flag] = cnt[flag] * width[flag]
+            rest = act & ~flag
+            strm = rest & (typ == 7)
             if strm.any():
                 nonempty = strm & (cnt > 0)
                 # copy string bytes into the arena (values must live in one
@@ -547,10 +556,8 @@ class BCFBatchDecoder:
                 dot = strm & (cnt == 0)
                 vst[dot], vln[dot] = _Aux.DOT
                 adv[strm] = cnt[strm]
-            intm = act & np.isin(typ, _INT_TYPES)
-            fltm = act & (typ == 5)
-            if (act & ~(flag | strm | intm | fltm)).any():
-                raise VecUnsupported("INFO reserved/unknown type")
+            intm = rest & np.isin(typ, _INT_TYPES)
+            fltm = rest & (typ == 5)
             for t in _INT_TYPES:
                 for c in (np.unique(cnt[intm & (typ == t)])
                           if (intm & (typ == t)).any() else ()):

@@ -1,11 +1,14 @@
-"""BCF2 codec tests against the reference golden files
-(test.uncompressed.bcf, test.bgzf.bcf — same records as test.vcf), and
-split-walk tests of the BCF source on BCF encoded from ``tests/textgen.py``
-rows (reference test analog TestBCFRecordReader)."""
+"""BCF2 codec tests on golden files of the VCF spec's five example
+records: that file encoded per VCFv4.3 section 6 by ``tests/textgen.py``
+(flags as 1-element INT8s, the form section 6.3.3 recommends), and, wherever
+the reference checkout holds them, htsjdk's test.uncompressed.bcf with its
+test.vcf. Split-walk tests of the BCF source run on BCF encoded from
+``tests/textgen.py`` rows (reference test analog TestBCFRecordReader)."""
 
 import io
 import os
 
+import numpy as np
 import pytest
 
 from hadoop_bam_spark.formats import bcf, bgzf
@@ -19,11 +22,24 @@ from tests import textgen
 
 RES = "/root/reference/src/test/resources"
 PLAIN = os.path.join(RES, "test.uncompressed.bcf")
-BGZF = os.path.join(RES, "test.bgzf.bcf")
 TEXT = os.path.join(RES, "test.vcf")
 
 
-def _decode_all(path=PLAIN):
+@pytest.fixture(scope="module")
+def goldens(tmp_path_factory):
+    """(uncompressed BCF path, VCF text path) pairs of the same records:
+    the spec example always, the reference's files where they exist."""
+    d = tmp_path_factory.mktemp("bcf_golden")
+    (d / "test.uncompressed.bcf").write_bytes(
+        textgen.bcf_file(textgen.VCF_SPEC_EXAMPLE))
+    (d / "test.vcf").write_text(textgen.VCF_SPEC_EXAMPLE)
+    pairs = [(str(d / "test.uncompressed.bcf"), str(d / "test.vcf"))]
+    if os.path.exists(PLAIN):
+        pairs.append((PLAIN, TEXT))
+    return pairs
+
+
+def _decode_all(path):
     raw = open(path, "rb").read()
     hdr, off = bcf.read_bcf_header(io.BytesIO(raw))
     rows = []
@@ -34,69 +50,91 @@ def _decode_all(path=PLAIN):
 
 
 class TestBCFCodec:
-    def test_header_dictionaries(self):
-        hdr, _ = _decode_all()
-        assert hdr.vcf.samples == ["NA00001", "NA00002", "NA00003"]
-        assert hdr.contigs == ["20"]
-        assert hdr.strings[0] == "PASS"
-        assert {"NS", "DP", "GT", "GQ", "HQ"} <= set(hdr.strings)
+    def test_header_dictionaries(self, goldens):
+        for path, _ in goldens:
+            hdr, _ = _decode_all(path)
+            assert hdr.vcf.samples == ["NA00001", "NA00002", "NA00003"]
+            assert hdr.contigs == ["20"]
+            assert hdr.strings[0] == "PASS"
+            assert {"NS", "DP", "GT", "GQ", "HQ"} <= set(hdr.strings)
 
-    def test_golden_matches_text_vcf(self):
+    def test_golden_matches_text_vcf(self, goldens):
         """BCF decode == text VCF parse, field for field (qual approx —
         float32 vs decimal text)."""
-        _, rows = _decode_all()
-        vh = read_vcf_header(TEXT)
-        trows = [
-            t
-            for line in open(TEXT)
-            if (t := parse_vcf_line(line, vh.samples)) is not None
-        ]
-        assert len(rows) == len(trows) == 5
-        for b, t in zip(rows, trows):
-            assert b[0] == t[0] and b[1] == t[1]  # contig, pos
-            assert b[3] == t[3] and b[4] == t[4] and b[5] == t[5]
-            if t[6] is None:
-                assert b[6] is None
-            else:
-                assert b[6] == pytest.approx(t[6], abs=1e-4)
-            assert b[7] == t[7]  # filters
-            assert b[8] == t[8]  # info map
-            assert b[9] == t[9]  # genotypes incl. GT phasing
+        for path, text in goldens:
+            _, rows = _decode_all(path)
+            vh = read_vcf_header(text)
+            trows = [
+                t
+                for line in open(text)
+                if (t := parse_vcf_line(line, vh.samples)) is not None
+            ]
+            assert len(rows) == len(trows) == 5
+            for b, t in zip(rows, trows):
+                assert b[0] == t[0] and b[1] == t[1]  # contig, pos
+                assert b[3] == t[3] and b[4] == t[4] and b[5] == t[5]
+                if t[6] is None:
+                    assert b[6] is None
+                else:
+                    assert b[6] == pytest.approx(t[6], abs=1e-4)
+                assert b[7] == t[7]  # filters
+                assert b[8] == t[8]  # info map
+                assert b[9] == t[9]  # genotypes incl. GT phasing
 
-    def test_encode_roundtrip(self):
-        hdr, rows = _decode_all()
-        blob = b"".join(bcf.encode_record(r, hdr) for r in rows)
-        off, back = 0, []
-        while off < len(blob):
-            row, off = bcf.decode_record(blob, off, hdr)
-            back.append(row)
-        assert back == rows
+    def test_encode_roundtrip(self, goldens):
+        for path, _ in goldens:
+            hdr, rows = _decode_all(path)
+            blob = b"".join(bcf.encode_record(r, hdr) for r in rows)
+            off, back = 0, []
+            while off < len(blob):
+                row, off = bcf.decode_record(blob, off, hdr)
+                back.append(row)
+            assert back == rows
 
-    def test_header_encode_roundtrip(self):
-        hdr, _ = _decode_all()
-        blob = bcf.encode_header(hdr)
-        h2, consumed = bcf.read_bcf_header(io.BytesIO(blob))
-        assert consumed == len(blob)
-        assert h2.strings == hdr.strings
-        assert h2.contigs == hdr.contigs
-        assert h2.vcf.samples == hdr.vcf.samples
+    def test_header_encode_roundtrip(self, goldens):
+        for path, _ in goldens:
+            hdr, _ = _decode_all(path)
+            blob = bcf.encode_header(hdr)
+            h2, consumed = bcf.read_bcf_header(io.BytesIO(blob))
+            assert consumed == len(blob)
+            assert h2.strings == hdr.strings
+            assert h2.contigs == hdr.contigs
+            assert h2.vcf.samples == hdr.vcf.samples
 
-    def test_guesser_every_offset(self):
+    def test_guesser_every_offset(self, goldens):
         """From every byte offset in the record region, the guesser must
         land on a true record boundary (reference TestBCFSplitGuesser
         strategy)."""
-        raw = open(PLAIN, "rb").read()
-        hdr, hend = bcf.read_bcf_header(io.BytesIO(raw))
-        bounds = []
-        off = hend
-        while off < len(raw):
-            bounds.append(off)
-            _, off = bcf.decode_record(raw, off, hdr)
-        for probe in range(hend, len(raw)):
-            got = bcf.guess_next_record_offset(raw[probe:], hdr)
-            expect = next((b - probe for b in bounds if b >= probe), None)
-            if got is not None:
-                assert probe + got in bounds
+        for path, _ in goldens:
+            raw = open(path, "rb").read()
+            hdr, hend = bcf.read_bcf_header(io.BytesIO(raw))
+            bounds = []
+            off = hend
+            while off < len(raw):
+                bounds.append(off)
+                _, off = bcf.decode_record(raw, off, hdr)
+            for probe in range(hend, len(raw)):
+                got = bcf.guess_next_record_offset(raw[probe:], hdr)
+                if got is not None:
+                    assert probe + got in bounds
+
+
+def test_flag_with_reserved_type_raises():
+    """A flag is decoded as true whatever its value, but a reserved type
+    code there is still corrupt input (spec §6.3.3)."""
+    from hadoop_bam_spark.formats import bcf_vec
+
+    raw = textgen.bcf_file(textgen.VCF_SPEC_EXAMPLE)
+    hdr, off = bcf.read_bcf_header(io.BytesIO(raw))
+    db = bytes([0x11, hdr.strings.index("DB"), 0x11, 0x01])
+    at = raw.index(db, off) + 2
+    bad = raw[:at] + bytes([0x14]) + raw[at + 1:]  # type 4 is reserved
+    with pytest.raises(ValueError):
+        bcf.decode_record(bad, off, hdr)
+    with pytest.raises(ValueError):
+        bcf.decode_record_ref(bad, off, hdr)
+    with pytest.raises(bcf_vec.VecUnsupported):
+        bcf_vec.BCFBatchDecoder(hdr).decode(bad, np.array([off]))
 
 
 def _gen_bcf_bytes(rows):
@@ -199,14 +237,15 @@ class TestFastDecodeParity:
     (the spec-structured implementation) byte-for-byte on every fixture and
     on adversarial synthetic records."""
 
-    def test_fixture_parity(self):
-        hdr, rows = _decode_all()
-        blob = b"".join(bcf.encode_record(r, hdr) for r in rows)
-        off = off2 = 0
-        while off < len(blob):
-            r1, off = bcf.decode_record(blob, off, hdr)
-            r2, off2 = bcf.decode_record_ref(blob, off2, hdr)
-            assert off == off2 and r1 == r2
+    def test_fixture_parity(self, goldens):
+        for path, _ in goldens:
+            hdr, rows = _decode_all(path)
+            blob = b"".join(bcf.encode_record(r, hdr) for r in rows)
+            off = off2 = 0
+            while off < len(blob):
+                r1, off = bcf.decode_record(blob, off, hdr)
+                r2, off2 = bcf.decode_record_ref(blob, off2, hdr)
+                assert off == off2 and r1 == r2
 
     def test_synthetic_parity(self):
         import random

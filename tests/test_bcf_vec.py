@@ -1,6 +1,7 @@
 """Vectorized BCF decode parity: bcf_vec.BCFBatchDecoder output must equal
-decode_record_ref row-for-row, including the reference golden files and
-hypothesis-generated record batches covering every BCF2 type shape."""
+decode_record_ref row-for-row, on golden files (the VCF spec example
+encoded by ``tests/textgen.py``, and the reference's where it exists) and
+on hypothesis-generated record batches covering every BCF2 type shape."""
 
 import io
 import os
@@ -12,6 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hadoop_bam_spark.formats import bcf, bcf_vec
+from tests import textgen
 
 RES = "/root/reference/src/test/resources"
 PLAIN = os.path.join(RES, "test.uncompressed.bcf")
@@ -116,11 +118,15 @@ def _assert_parity(buf, hdr):
                 assert g[i] == w[i], f"{name}: {g[i]!r} != {w[i]!r}"
 
 
-@pytest.mark.skipif(not os.path.exists(PLAIN), reason="fixtures absent")
 def test_golden_file_parity():
-    raw = open(PLAIN, "rb").read()
-    hdr, off = bcf.read_bcf_header(io.BytesIO(raw))
-    _assert_parity(raw[off:], hdr)
+    """The VCF spec example encoded per VCFv4.3 section 6 (flags as
+    1-element INT8s), and htsjdk's golden file where it exists."""
+    goldens = [textgen.bcf_file(textgen.VCF_SPEC_EXAMPLE)]
+    if os.path.exists(PLAIN):
+        goldens.append(open(PLAIN, "rb").read())
+    for raw in goldens:
+        hdr, off = bcf.read_bcf_header(io.BytesIO(raw))
+        _assert_parity(raw[off:], hdr)
 
 
 def _encode(rows, hdr):

@@ -2,12 +2,27 @@
 the declared schema and skips decoding unselected fields — the engine's
 analog of the reference's lazy decode (LazyBAMRecordFactory.java:53-111,
 LazyParsingGenotypesContext.java:28-33). Every pruned read must equal the
-full read's ``.select(...)`` of the same columns."""
+full read's ``.select(...)`` of the same columns.
+
+The inputs are written per module under the reference's file names, so
+each case keeps its name; their origins (``tests/textgen.py``):
+
+- ``test.bam``: the seeded generator's BAM; ``misnamedBam.sam`` is the
+  same bytes under a SAM name;
+- ``test.sam``: the SAMv1 spec's example alignment (section 1.1), and
+  ``auxf.fa`` its 45-bp reference ``ref``; ``test.cram`` is that alignment
+  written against ``auxf.fa`` by ``tests/writers.CRAMWriter``;
+- ``test.vcf``: the VCF spec's example file, plain and as BGZF
+  (``test.vcf.bgz``); ``test.bgzf.bcf`` is that file encoded per
+  VCFv4.3 section 6, in BGZF.
+"""
+
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-RES = "/root/reference/src/test/resources"
+from tests import textgen
 
 
 @pytest.fixture(scope="module")
@@ -18,33 +33,68 @@ def fmt_spark(spark):
     return spark
 
 
+@pytest.fixture(scope="module")
+def res(tmp_path_factory):
+    """The directory holding every input of this module."""
+    from hadoop_bam_spark.formats import cram
+    from hadoop_bam_spark.formats.sam import parse_header, parse_sam_line
+    from tests import writers
+
+    d = tmp_path_factory.mktemp("projection")
+    (d / "test.bam").write_bytes(textgen.bam_file(textgen.gen_bam_records()))
+    shutil.copy(d / "test.bam", d / "misnamedBam.sam")
+    (d / "test.sam").write_text(textgen.SAM_SPEC_EXAMPLE)
+    (d / "auxf.fa").write_text(f">ref\n{textgen.SAM_SPEC_REF}\n")
+    lines = textgen.SAM_SPEC_EXAMPLE.splitlines()
+    head = [ln for ln in lines if ln.startswith("@")]
+    refs = [(name, n) for name, (_, n) in parse_header(head).sequences.items()]
+    with open(d / "test.cram", "wb") as fh:
+        w = writers.CRAMWriter(
+            fh, refs, header_text="".join(ln + "\n" for ln in head),
+            ref_fasta=cram.FastaRef(str(d / "auxf.fa")),
+        )
+        for ln in lines[len(head):]:
+            w.write(parse_sam_line(ln))
+        w.close()
+    (d / "test.vcf").write_text(textgen.VCF_SPEC_EXAMPLE)
+    (d / "test.vcf.bgz").write_bytes(
+        textgen.bgzf_compress(textgen.VCF_SPEC_EXAMPLE.encode()))
+    (d / "test.bgzf.bcf").write_bytes(
+        textgen.bgzf_compress(textgen.bcf_file(textgen.VCF_SPEC_EXAMPLE)))
+    return d
+
+
 def rows(df, *order):
     return sorted(map(tuple, df.select(*df.columns).collect()))
 
 
+#: (format, input file, pruned columns, options naming an input file)
 CASES = [
-    ("bam", f"{RES}/test.bam", ["qname", "flag", "rname", "pos"], {}),
-    ("sam", f"{RES}/test.sam", ["qname", "flag", "pos", "mapq"], {}),
+    ("bam", "test.bam", ["qname", "flag", "rname", "pos"], {}),
+    ("sam", "test.sam", ["qname", "flag", "pos", "mapq"], {}),
     (
         "cram",
-        f"{RES}/test.cram",
+        "test.cram",
         ["qname", "flag", "rname", "pos"],
-        {"reference": f"{RES}/auxf.fa"},
+        {"reference": "auxf.fa"},
     ),
-    ("sam_any", f"{RES}/misnamedBam.sam", ["qname", "rname", "pos"], {}),
-    ("vcf", f"{RES}/test.vcf", ["contig", "start", "ref"], {}),
-    ("vcf", f"{RES}/test.vcf.bgz", ["contig", "start", "alts"], {}),
-    ("bcf", f"{RES}/test.bgzf.bcf", ["contig", "start", "ref"], {}),
-    ("fasta", f"{RES}/auxf.fa", ["contig", "seq"], {}),
+    ("sam_any", "misnamedBam.sam", ["qname", "rname", "pos"], {}),
+    ("vcf", "test.vcf", ["contig", "start", "ref"], {}),
+    ("vcf", "test.vcf.bgz", ["contig", "start", "alts"], {}),
+    ("bcf", "test.bgzf.bcf", ["contig", "start", "ref"], {}),
+    ("fasta", "auxf.fa", ["contig", "seq"], {}),
 ]
 
 
 @pytest.mark.parametrize(
-    "fmt,path,cols,opts",
+    "fmt,name,cols,opts",
     CASES,
-    ids=[f"{f}-{p.rsplit('/', 1)[1]}" for f, p, _, _ in CASES],
+    ids=[f"{f}-{p}" for f, p, _, _ in CASES],
 )
-def test_pruned_read_matches_full_select(fmt_spark, fmt, path, cols, opts):
+def test_pruned_read_matches_full_select(fmt_spark, res, fmt, name, cols,
+                                         opts):
+    path = str(res / name)
+    opts = {k: str(res / v) for k, v in opts.items()}
     full = fmt_spark.read.format(fmt).options(**opts).load(path)
     pruned = (
         fmt_spark.read.format(fmt)
@@ -77,57 +127,57 @@ def test_fastq_pruned(fmt_spark, tmp_path):
     assert rows(pruned) == rows(full.select("name", "sequence"))
 
 
-def test_unknown_column_raises(fmt_spark):
+def test_unknown_column_raises(fmt_spark, res):
     with pytest.raises(Exception, match="unknown columns"):
         (
             fmt_spark.read.format("bam")
             .option("columns", "qname,nope")
-            .load(f"{RES}/test.bam")
+            .load(str(res / "test.bam"))
             .count()
         )
 
 
-def test_bam_interval_with_pruned_columns(fmt_spark):
+def test_bam_interval_with_pruned_columns(fmt_spark, res):
     """Interval residual needs cigar internally; projection still drops it."""
     full = (
         fmt_spark.read.format("bam")
-        .option("intervals", "1:1581001-1600000")
-        .load(f"{RES}/test.bam")
+        .option("intervals", "chr1:100001-120000")
+        .load(str(res / "test.bam"))
     )
     pruned = (
         fmt_spark.read.format("bam")
-        .option("intervals", "1:1581001-1600000")
+        .option("intervals", "chr1:100001-120000")
         .option("columns", "qname,pos")
-        .load(f"{RES}/test.bam")
+        .load(str(res / "test.bam"))
     )
     assert pruned.columns == ["qname", "pos"]
     assert rows(pruned) == rows(full.select("qname", "pos"))
     assert pruned.count() > 0
 
 
-def test_vcf_end_without_info(fmt_spark):
+def test_vcf_end_without_info(fmt_spark, res):
     """`end` is INFO-derived: pruning info but keeping end still parses END."""
-    full = fmt_spark.read.format("vcf").load(f"{RES}/test.vcf")
+    full = fmt_spark.read.format("vcf").load(str(res / "test.vcf"))
     pruned = (
         fmt_spark.read.format("vcf")
         .option("columns", "contig,start,end")
-        .load(f"{RES}/test.vcf")
+        .load(str(res / "test.vcf"))
     )
     assert pruned.columns == ["contig", "start", "end"]
     assert rows(pruned) == rows(full.select("contig", "start", "end"))
 
 
-def test_bam_lazy_decode_skips_fields():
+def test_bam_lazy_decode_skips_fields(res):
     """decode_record(wanted=...) returns None for skipped expensive fields
     and identical values for kept ones."""
     from hadoop_bam_spark.formats import bam, bgzf
 
-    with open(f"{RES}/test.bam", "rb") as f:
+    with open(res / "test.bam", "rb") as f:
         r = bgzf.BGZFReader(f)
         _, refs, first = bam.read_header(r)
         full_rows = list(bam.iter_records(r, refs, first))
     assert full_rows
-    with open(f"{RES}/test.bam", "rb") as f:
+    with open(res / "test.bam", "rb") as f:
         r = bgzf.BGZFReader(f)
         bam.read_header(r)
         r.seek_voffset(first)

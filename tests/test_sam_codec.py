@@ -1,7 +1,8 @@
 """Pure-Python SAM codec tests (no Spark session needed).
 
-Golden data mirrors the reference's test.sam fixture shape
-(/root/reference/src/test/resources/test.sam: 2 reads on chr21).
+The golden record is the SAMv1 spec's first example read (section 1.1),
+placed on ``chr21`` with two tags; the whole-file test parses the spec's
+example alignment (``tests/textgen.SAM_SPEC_EXAMPLE``).
 """
 
 from hadoop_bam_spark.formats.sam import (
@@ -10,6 +11,7 @@ from hadoop_bam_spark.formats.sam import (
     parse_header,
     parse_sam_line,
 )
+from tests.textgen import SAM_SPEC_EXAMPLE
 
 HEADER_LINES = [
     "@HD\tVN:1.4\tSO:coordinate",
@@ -78,9 +80,10 @@ def test_unmapped_roundtrip():
     assert back[7] == 0 and back[8] == 0
 
 
-def test_reference_test_sam_parses():
-    """Parse the reference repo's own golden file (read-only input data)."""
-    path = "/root/reference/src/test/resources/test.sam"
+def test_reference_test_sam_parses(tmp_path):
+    """Parse the SAMv1 spec's example file: six records on ``ref``."""
+    path = tmp_path / "test.sam"
+    path.write_text(SAM_SPEC_EXAMPLE)
     hdr_lines, records = [], []
     with open(path) as fh:
         for line in fh:
@@ -89,6 +92,6 @@ def test_reference_test_sam_parses():
             else:
                 records.append(parse_sam_line(line))
     hdr = parse_header(hdr_lines)
-    assert "chr21" in hdr.sequences
-    assert len(records) == 2
-    assert all(r[2] == "chr21" for r in records)
+    assert "ref" in hdr.sequences
+    assert len(records) == 6
+    assert all(r[2] == "ref" for r in records)

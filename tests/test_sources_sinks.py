@@ -3,6 +3,15 @@
 Split-boundary stress follows the reference's pattern of forcing tiny
 splits and asserting count/content invariance
 (TestBAMInputFormat.java:64-142, TestVCFRoundTrip.java:103-113).
+
+Every input is written by the tests themselves (``tests/textgen.py``), and
+expected values come from the generators' arithmetic or the specs:
+
+- BAM: the seeded generator's records (``gen_bam_records``);
+- SAM: the SAMv1 spec's example alignment (section 1.1), with and
+  without its header;
+- VCF: the VCF spec's example file and the seeded VCF generator;
+- FASTA: a two-contig file written below.
 """
 
 import os
@@ -11,7 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-RES = "/root/reference/src/test/resources"
+from tests import textgen
 
 
 @pytest.fixture(scope="module")
@@ -23,20 +32,36 @@ def fmt_spark(spark):
 
 
 @pytest.fixture(scope="module")
-def gen_bam_path(tmp_path_factory):
-    """The engine-free seeded BAM of tests/textgen.py, on disk."""
-    from tests import textgen
+def bam_records():
+    """The record bodies of the seeded generator's BAM."""
+    return textgen.gen_bam_records()
 
-    path = tmp_path_factory.mktemp("gen") / "gen.bam"
-    path.write_bytes(textgen.bam_file(textgen.gen_bam_records()))
-    return str(path)
+
+@pytest.fixture(scope="module")
+def res(tmp_path_factory, bam_records):
+    """The directory of the module's fixed-name inputs: ``test.bam``,
+    ``test.sam``, ``test_headerless.sam`` and ``mini-chr1-chr2.fasta``."""
+    d = tmp_path_factory.mktemp("res")
+    (d / "test.bam").write_bytes(textgen.bam_file(bam_records))
+    sam = textgen.SAM_SPEC_EXAMPLE
+    (d / "test.sam").write_text(sam)
+    (d / "test_headerless.sam").write_text("".join(
+        ln for ln in sam.splitlines(keepends=True) if not ln.startswith("@")))
+    (d / "mini-chr1-chr2.fasta").write_text(
+        ">chr1\n" + "ACGTTGCA" * 15 + "\n" + "GATTACA" * 10 + "\n"
+        + ">chr2\n" + "TTGGCCAA" * 12 + "\n")
+    return d
+
+
+@pytest.fixture(scope="module")
+def gen_bam_path(res):
+    """The engine-free seeded BAM of tests/textgen.py, on disk."""
+    return str(res / "test.bam")
 
 
 @pytest.fixture(scope="module")
 def gen_vcf_path(tmp_path_factory):
     """A seeded 3000-record VCF written by tests/textgen.py."""
-    from tests import textgen
-
     path = tmp_path_factory.mktemp("gen") / "gen.vcf"
     path.write_text(textgen.gen_vcf_text(textgen.gen_vcf_rows(3000)))
     return str(path)
@@ -71,66 +96,69 @@ def same(a, b) -> bool:
 
 
 class TestBAMSource:
-    def test_split_invariance(self, fmt_spark):
-        one = fmt_spark.read.format("bam").load(f"{RES}/test.bam")
+    def test_split_invariance(self, fmt_spark, gen_bam_path, bam_records):
+        one = fmt_spark.read.format("bam").load(gen_bam_path)
         many = (
             fmt_spark.read.format("bam")
             .option("split_size", "20000")
-            .load(f"{RES}/test.bam")
+            .load(gen_bam_path)
         )
-        assert one.count() == 2277
+        assert one.count() == len(bam_records)
         assert same(one, many)
 
-    def test_interval_option(self, fmt_spark):
+    def test_interval_option(self, fmt_spark, gen_bam_path, bam_records):
+        start, stop = 200001, 201000  # 1-based, inclusive
+        spans = [textgen.bam_span(b) for b in bam_records]
+        expect = sum(1 for rid, beg, end in spans
+                     if rid == 0 and beg < stop and end > start - 1)
+        assert expect >= 3
         df = (
             fmt_spark.read.format("bam")
-            .option("intervals", "1:1581000-1581100")
-            .load(f"{RES}/test.bam")
+            .option("intervals", f"chr1:{start}-{stop}")
+            .load(gen_bam_path)
         )
         rows = df.collect()
-        assert len(rows) == 3
-        assert all(r.rname == "1" for r in rows)
+        assert len(rows) == expect
+        assert all(r.rname == "chr1" for r in rows)
 
-    def test_contig_pushdown_prunes(self, fmt_spark):
-        df = fmt_spark.read.format("bam").load(f"{RES}/test.bam")
+    def test_contig_pushdown_prunes(self, fmt_spark, gen_bam_path,
+                                    bam_records):
+        df = fmt_spark.read.format("bam").load(gen_bam_path)
+        on_chr1 = sum(1 for b in bam_records if textgen.bam_span(b)[0] == 0)
         assert df.filter(F.col("rname") == "no_such_contig").count() == 0
-        assert df.filter(F.col("rname") == "1").count() == 2277
+        assert df.filter(F.col("rname") == "chr1").count() == on_chr1
 
 
 class TestSAMSource:
-    def test_golden(self, fmt_spark):
-        df = fmt_spark.read.format("sam").load(f"{RES}/test.sam")
+    def test_golden(self, fmt_spark, res):
+        df = fmt_spark.read.format("sam").load(str(res / "test.sam"))
         rows = df.collect()
-        assert len(rows) == 2
-        assert rows[0].rname == "chr21" and rows[0].pos == 28833
+        assert len(rows) == 6
+        assert rows[0].rname == "ref" and rows[0].pos == 7
 
-    def test_headerless(self, fmt_spark):
-        df = fmt_spark.read.format("sam").load(f"{RES}/test_headerless.sam")
-        assert df.count() == 2
+    def test_headerless(self, fmt_spark, res):
+        df = fmt_spark.read.format("sam").load(
+            str(res / "test_headerless.sam"))
+        assert df.count() == 6
 
 
 @pytest.fixture(scope="module")
 def vcf_inputs(tmp_path_factory):
-    """Engine-free VCF inputs (tests/textgen.py): the VCF 4.2 spec example
+    """Engine-free VCF inputs (tests/textgen.py): the VCF spec example
     as plain text and plain gzip, and a generated multi-block VCF as plain
     text and BGZF."""
     import gzip
 
-    from tests.textgen import (
-        VCF_SPEC_EXAMPLE,
-        bgzf_compress,
-        gen_vcf_rows,
-        gen_vcf_text,
-    )
-
+    spec = textgen.VCF_SPEC_EXAMPLE
     d = tmp_path_factory.mktemp("vcf_inputs")
-    (d / "spec.vcf").write_text(VCF_SPEC_EXAMPLE)
-    (d / "spec.vcf.gz").write_bytes(gzip.compress(VCF_SPEC_EXAMPLE.encode()))
-    rows = gen_vcf_rows(3000)
-    text = gen_vcf_text(rows).encode()
+    (d / "spec.vcf").write_text(spec)
+    (d / "spec.vcf.gz").write_bytes(gzip.compress(spec.encode()))
+    rows = textgen.gen_vcf_rows(3000)
+    text = textgen.gen_vcf_text(rows).encode()
     (d / "gen.vcf").write_bytes(text)
     # small blocks: many block boundaries, lines straddling them
-    (d / "gen.vcf.bgz").write_bytes(bgzf_compress(text, block_payload=4096))
+    (d / "gen.vcf.bgz").write_bytes(
+        textgen.bgzf_compress(text, block_payload=4096))
     return d, len(rows)
 
 
@@ -176,8 +204,9 @@ class TestVCFSource:
 
 
 class TestFastaSource:
-    def test_contigs_and_positions(self, fmt_spark):
-        df = fmt_spark.read.format("fasta").load(f"{RES}/mini-chr1-chr2.fasta")
+    def test_contigs_and_positions(self, fmt_spark, res):
+        df = fmt_spark.read.format("fasta").load(
+            str(res / "mini-chr1-chr2.fasta"))
         rows = df.collect()
         contigs = {r.contig for r in rows}
         assert contigs == {"chr1", "chr2"}

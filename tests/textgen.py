@@ -1,8 +1,17 @@
-"""Engine-free inputs for the codec, source and sink tests: a BGZF block
-writer (zlib only, per the SAM/BAM spec's BGZF section), the VCF 4.2 spec's
-example file, a seeded VCF generator, and a seeded BAM record writer with
-mixed aux-tag layouts. Tests can count and compare what these produce
-without reading it through the engine."""
+"""Engine-free inputs for the codec, source and sink tests, built with
+``struct`` and ``zlib`` only and nothing from ``hadoop_bam_spark``:
+
+- a BGZF block writer (the SAMv1 spec's BGZF section);
+- the VCF specification's example file (section 1.1) and a BCF 2.2
+  encoder for VCF text (VCFv4.3 section 6);
+- the SAMv1 specification's example alignment and its 45-bp reference
+  (section 1.1);
+- a seeded VCF generator, and a seeded BAM record writer with mixed
+  aux-tag layouts.
+
+Tests can count and compare what these produce without reading it through
+the engine: expected values come from the generators' own arithmetic or
+from the specifications."""
 
 from __future__ import annotations
 
@@ -70,6 +79,150 @@ VCF_SPEC_EXAMPLE = "\n".join([
     "GT:GQ:DP\t0/1:35:4\t0/2:17:2\t1/1:40:3",
 ]) + "\n"
 
+# ---------------------------------------------------------------------------
+# BCF 2.2 (VCFv4.3 specification section 6), struct only
+# ---------------------------------------------------------------------------
+
+#: (type code, struct format, smallest, largest value) of the typed ints;
+#: the values below each type's smallest are its reserved sentinels
+_BCF_INTS = ((1, "b", -120, 127), (2, "h", -32760, 32767),
+             (3, "i", -2147483640, 2147483647))
+#: (MISSING, END_OF_VECTOR) per int type code, and the float32 bit patterns
+_BCF_INT_SENTINELS = {1: (-128, -127), 2: (-32768, -32767),
+                      3: (-2147483648, -2147483647)}
+_BCF_FLOAT_MISSING, _BCF_FLOAT_EOV = 0x7F800001, 0x7F800002
+
+
+def _bcf_desc(typ: int, count: int) -> bytes:
+    """A typed-value descriptor byte; counts from 15 up follow it as a
+    typed int."""
+    if count < 15:
+        return bytes([count << 4 | typ])
+    return bytes([0xF0 | typ]) + _bcf_ints([[count]])
+
+
+def _bcf_ints(rows: list[list]) -> bytes:
+    """One typed int vector per row (a row per sample, or one row), in the
+    smallest type that holds every value. ``None`` is MISSING, and rows
+    shorter than the longest are padded with END_OF_VECTOR."""
+    width = max(len(r) for r in rows)
+    vals = [v for r in rows for v in r if v is not None]
+    typ, fmt = next((t, f) for t, f, lo, hi in _BCF_INTS
+                    if lo <= min(vals, default=0) and max(vals, default=0) <= hi)
+    miss, eov = _BCF_INT_SENTINELS[typ]
+    flat = [miss if v is None else v for r in rows
+            for v in r + [eov] * (width - len(r))]
+    return _bcf_desc(typ, width) + struct.pack(f"<{len(flat)}{fmt}", *flat)
+
+
+def _bcf_floats(rows: list[list]) -> bytes:
+    """As :func:`_bcf_ints`, for float32 vectors."""
+    width = max(len(r) for r in rows)
+    out = bytearray(_bcf_desc(5, width))
+    for r in rows:
+        for v in r:
+            out += (struct.pack("<I", _BCF_FLOAT_MISSING) if v is None
+                    else struct.pack("<f", v))
+        out += struct.pack("<I", _BCF_FLOAT_EOV) * (width - len(r))
+    return bytes(out)
+
+
+def _bcf_chars(rows: list[str]) -> bytes:
+    """A char vector per row, NUL-padded to the longest."""
+    data = [r.encode() for r in rows]
+    width = max(len(d) for d in data)
+    return _bcf_desc(7, width) + b"".join(d.ljust(width, b"\x00") for d in data)
+
+
+def _bcf_gt(gt: str) -> list[int]:
+    """A GT string as its allele codes, ``(allele + 1) << 1 | phased``, the
+    phase bit set on an allele that follows a ``|``."""
+    codes, phased = [], 0
+    for tok in gt.replace("|", " | ").replace("/", " / ").split():
+        if tok in "|/":
+            phased = int(tok == "|")
+        else:
+            codes.append((0 if tok == "." else int(tok) + 1) << 1 | phased)
+    return codes
+
+
+def _bcf_values(typ: str, key: str, texts: list) -> bytes:
+    """The typed values of one INFO or FORMAT key of VCF header type
+    ``typ``: a row per text, one for INFO and one per sample for FORMAT,
+    where ``None`` is a sample that lacks the key. A flag is written the way
+    section 6.3.3 recommends: a 1-element INT8 holding 1."""
+    if typ == "Flag":
+        return _bcf_ints([[1]])
+    if key == "GT":
+        return _bcf_ints([_bcf_gt(t) if t else [None] for t in texts])
+    if typ in ("Integer", "Float"):
+        conv = int if typ == "Integer" else float
+        rows = [[None if x == "." else conv(x) for x in t.split(",")]
+                if t is not None else [None] for t in texts]
+        return (_bcf_ints if typ == "Integer" else _bcf_floats)(rows)
+    return _bcf_chars([t or "" for t in texts])
+
+
+def bcf_file(vcf_text: str) -> bytes:
+    """Uncompressed BCF 2.2 (VCFv4.3 section 6) of a VCF file's text. The
+    string dictionary is PASS followed by the FILTER, INFO and FORMAT IDs
+    in header order, and the contig dictionary is the ``##contig`` lines in
+    order (section 6.2.1; the header must carry no ``IDX=`` fields)."""
+    lines = vcf_text.rstrip("\n").split("\n")
+    head = [ln for ln in lines if ln.startswith("#")]
+    body = [ln for ln in lines if not ln.startswith("#")]
+    strings, contigs, types = ["PASS"], [], {}
+    for ln in head:
+        kind = ln[2:ln.find("=")] if ln.startswith("##") else ""
+        if kind not in ("FILTER", "INFO", "FORMAT", "contig"):
+            continue
+        fields = dict(kv.split("=", 1) for kv in
+                      ln[ln.index("<") + 1:ln.rindex(">")].split(",")
+                      if "=" in kv)
+        if kind == "contig":
+            contigs.append(fields["ID"])
+            continue
+        if fields["ID"] not in strings:
+            strings.append(fields["ID"])
+        types[kind, fields["ID"]] = fields.get("Type")
+    index = {k: i for i, k in enumerate(strings)}
+    n_sample = len(head[-1].split("\t")) - 9 if "\tFORMAT" in head[-1] else 0
+
+    text = ("\n".join(head) + "\n").encode() + b"\x00"
+    out = bytearray(b"BCF\x02\x02" + struct.pack("<I", len(text)) + text)
+    for ln in body:
+        f = ln.split("\t")
+        pos, ref = int(f[1]), f[3]
+        alleles = [ref] + ([] if f[4] == "." else f[4].split(","))
+        info = [] if f[7] == "." else [
+            kv.split("=", 1) if "=" in kv else [kv, ""]
+            for kv in f[7].split(";")]
+        end = next((int(v) for k, v in info if k == "END"), pos + len(ref) - 1)
+        shared = struct.pack(
+            "<iiiIII", contigs.index(f[0]), pos - 1, end - pos + 1,
+            _BCF_FLOAT_MISSING if f[5] == "." else
+            struct.unpack("<I", struct.pack("<f", float(f[5])))[0],
+            len(alleles) << 16 | len(info),
+            (len(f[8].split(":")) if n_sample else 0) << 24 | n_sample)
+        shared += _bcf_chars(["" if f[2] == "." else f[2]])
+        shared += b"".join(_bcf_chars([a]) for a in alleles)
+        shared += (b"\x00" if f[6] == "." else
+                   _bcf_ints([[index[x] for x in f[6].split(";")]]))
+        for k, v in info:
+            shared += _bcf_ints([[index[k]]]) + _bcf_values(
+                types["INFO", k], k, [v])
+        indiv = b""
+        if n_sample:
+            keys = f[8].split(":")
+            samples = [s.split(":") for s in f[9:]]
+            for j, k in enumerate(keys):
+                vals = [s[j] if j < len(s) else None for s in samples]
+                indiv += _bcf_ints([[index[k]]]) + _bcf_values(
+                    types["FORMAT", k], k, vals)
+        out += struct.pack("<II", len(shared), len(indiv)) + shared + indiv
+    return bytes(out)
+
+
 GEN_SAMPLES = ["S1", "S2", "S3"]
 GEN_CONTIGS = [("1", 5_000_000), ("2", 4_000_000)]
 
@@ -132,6 +285,27 @@ def gen_vcf_text(rows: list[tuple]) -> str:
             + [":".join(f[k] for k in keys) for _, _, f in gts]
         ))
     return "\n".join(lines) + "\n"
+
+
+# ---------------------------------------------------------------------------
+# SAM (SAMv1 specification section 1.1)
+# ---------------------------------------------------------------------------
+
+#: The 45-bp reference ``ref`` of the SAMv1 specification's example.
+SAM_SPEC_REF = "AGCATGTTAGATAAGATAGCTGTGCTAGTAGGCAGTCAGCGCCAT"
+
+#: The SAMv1 specification's example alignment (section 1.1): six records
+#: on ``ref``, the first at position 7.
+SAM_SPEC_EXAMPLE = "".join("\t".join(ln.split()) + "\n" for ln in [
+    "@HD VN:1.6 SO:coordinate",
+    "@SQ SN:ref LN:45",
+    "r001 99 ref 7 30 8M2I4M1D3M = 37 39 TTAGATAAAGGATACTG *",
+    "r002 0 ref 9 30 3S6M1P1I4M * 0 0 AAAAGATAAGGATA *",
+    "r003 0 ref 9 30 5S6M * 0 0 GCCTAAGCTAA * SA:Z:ref,29,-,6H5M,17,0;",
+    "r004 0 ref 16 30 6M14N5M * 0 0 ATAGCTTCAGC *",
+    "r003 2064 ref 29 17 6H5M * 0 0 TAGGC * SA:Z:ref,9,+,5S6M,30,1;",
+    "r001 147 ref 37 30 9M = 7 -39 CAGCGGCAT * NM:i:1",
+])
 
 
 # ---------------------------------------------------------------------------
@@ -272,6 +446,18 @@ def bam_aux_block(body: bytes) -> bytes:
     l_name, n_cigar, l_seq = (body[8], struct.unpack_from("<H", body, 12)[0],
                               struct.unpack_from("<i", body, 16)[0])
     return body[32 + l_name + 4 * n_cigar + (l_seq + 1) // 2 + l_seq:]
+
+
+def bam_span(body: bytes) -> tuple[int, int, int]:
+    """(refID, pos, end) of one record body, 0-based and half-open: the
+    CIGAR's reference length, or one base for a record without a CIGAR (the
+    span :func:`gen_bam_records` bins it by)."""
+    rid, pos = struct.unpack_from("<ii", body, 0)
+    l_name, n_cigar = body[8], struct.unpack_from("<H", body, 12)[0]
+    ops = struct.unpack_from(f"<{n_cigar}I", body, 32 + l_name)
+    ref_ops = {_CIGAR_CODE[op] for op in "MDN=X"}
+    return rid, pos, pos + (sum(c >> 4 for c in ops if c & 0xF in ref_ops)
+                            or 1)
 
 
 def gen_bam_header_text() -> str:
