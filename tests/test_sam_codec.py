@@ -2,8 +2,11 @@
 
 The golden record is the SAMv1 spec's first example read (section 1.1),
 placed on ``chr21`` with two tags; the whole-file test parses the spec's
-example alignment (``tests/textgen.SAM_SPEC_EXAMPLE``).
+example alignment (``tests/textgen.SAM_SPEC_EXAMPLE``) and, wherever the
+reference checkout holds it, the reference's test.sam (2 reads on chr21).
 """
+
+import os
 
 from hadoop_bam_spark.formats.sam import (
     SAMHeader,
@@ -81,17 +84,23 @@ def test_unmapped_roundtrip():
 
 
 def test_reference_test_sam_parses(tmp_path):
-    """Parse the SAMv1 spec's example file: six records on ``ref``."""
-    path = tmp_path / "test.sam"
-    path.write_text(SAM_SPEC_EXAMPLE)
-    hdr_lines, records = [], []
-    with open(path) as fh:
-        for line in fh:
-            if line.startswith("@"):
-                hdr_lines.append(line)
-            else:
-                records.append(parse_sam_line(line))
-    hdr = parse_header(hdr_lines)
-    assert "ref" in hdr.sequences
-    assert len(records) == 6
-    assert all(r[2] == "ref" for r in records)
+    """Parse the SAMv1 spec's example file (six records on ``ref``), and
+    the reference repo's own golden file where it exists."""
+    spec = tmp_path / "test.sam"
+    spec.write_text(SAM_SPEC_EXAMPLE)
+    cases = [(spec, "ref", 6)]
+    path = "/root/reference/src/test/resources/test.sam"
+    if os.path.exists(path):
+        cases.append((path, "chr21", 2))
+    for path, rname, n in cases:
+        hdr_lines, records = [], []
+        with open(path) as fh:
+            for line in fh:
+                if line.startswith("@"):
+                    hdr_lines.append(line)
+                else:
+                    records.append(parse_sam_line(line))
+        hdr = parse_header(hdr_lines)
+        assert rname in hdr.sequences
+        assert len(records) == n
+        assert all(r[2] == rname for r in records)

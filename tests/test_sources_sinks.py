@@ -12,6 +12,10 @@ expected values come from the generators' arithmetic or the specs:
   without its header;
 - VCF: the VCF spec's example file and the seeded VCF generator;
 - FASTA: a two-contig file written below.
+
+Wherever the reference checkout's test resources exist, the BAM, SAM and
+FASTA tests also read its htsjdk- and samtools-written files, with the
+values the reference asserts of them.
 """
 
 import os
@@ -21,6 +25,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tests import textgen
+
+RES = "/root/reference/src/test/resources"
+
+
+def on_reference(name, *expected):
+    """``[(path, *expected)]`` for the reference's file ``name`` where it
+    exists, else ``[]``."""
+    path = os.path.join(RES, name)
+    return [(path, *expected)] if os.path.exists(path) else []
 
 
 @pytest.fixture(scope="module")
@@ -97,14 +110,16 @@ def same(a, b) -> bool:
 
 class TestBAMSource:
     def test_split_invariance(self, fmt_spark, gen_bam_path, bam_records):
-        one = fmt_spark.read.format("bam").load(gen_bam_path)
-        many = (
-            fmt_spark.read.format("bam")
-            .option("split_size", "20000")
-            .load(gen_bam_path)
-        )
-        assert one.count() == len(bam_records)
-        assert same(one, many)
+        for path, n in [(gen_bam_path, len(bam_records)),
+                        *on_reference("test.bam", 2277)]:
+            one = fmt_spark.read.format("bam").load(path)
+            many = (
+                fmt_spark.read.format("bam")
+                .option("split_size", "20000")
+                .load(path)
+            )
+            assert one.count() == n
+            assert same(one, many)
 
     def test_interval_option(self, fmt_spark, gen_bam_path, bam_records):
         start, stop = 200001, 201000  # 1-based, inclusive
@@ -112,34 +127,43 @@ class TestBAMSource:
         expect = sum(1 for rid, beg, end in spans
                      if rid == 0 and beg < stop and end > start - 1)
         assert expect >= 3
-        df = (
-            fmt_spark.read.format("bam")
-            .option("intervals", f"chr1:{start}-{stop}")
-            .load(gen_bam_path)
-        )
-        rows = df.collect()
-        assert len(rows) == expect
-        assert all(r.rname == "chr1" for r in rows)
+        for path, interval, n, rname in [
+            (gen_bam_path, f"chr1:{start}-{stop}", expect, "chr1"),
+            *on_reference("test.bam", "1:1581000-1581100", 3, "1"),
+        ]:
+            df = (
+                fmt_spark.read.format("bam")
+                .option("intervals", interval)
+                .load(path)
+            )
+            rows = df.collect()
+            assert len(rows) == n
+            assert all(r.rname == rname for r in rows)
 
     def test_contig_pushdown_prunes(self, fmt_spark, gen_bam_path,
                                     bam_records):
-        df = fmt_spark.read.format("bam").load(gen_bam_path)
         on_chr1 = sum(1 for b in bam_records if textgen.bam_span(b)[0] == 0)
-        assert df.filter(F.col("rname") == "no_such_contig").count() == 0
-        assert df.filter(F.col("rname") == "chr1").count() == on_chr1
+        for path, rname, n in [(gen_bam_path, "chr1", on_chr1),
+                               *on_reference("test.bam", "1", 2277)]:
+            df = fmt_spark.read.format("bam").load(path)
+            assert df.filter(F.col("rname") == "no_such_contig").count() == 0
+            assert df.filter(F.col("rname") == rname).count() == n
 
 
 class TestSAMSource:
     def test_golden(self, fmt_spark, res):
-        df = fmt_spark.read.format("sam").load(str(res / "test.sam"))
-        rows = df.collect()
-        assert len(rows) == 6
-        assert rows[0].rname == "ref" and rows[0].pos == 7
+        for path, n, rname, pos in [
+            (str(res / "test.sam"), 6, "ref", 7),
+            *on_reference("test.sam", 2, "chr21", 28833),
+        ]:
+            rows = fmt_spark.read.format("sam").load(path).collect()
+            assert len(rows) == n
+            assert rows[0].rname == rname and rows[0].pos == pos
 
     def test_headerless(self, fmt_spark, res):
-        df = fmt_spark.read.format("sam").load(
-            str(res / "test_headerless.sam"))
-        assert df.count() == 6
+        for path, n in [(str(res / "test_headerless.sam"), 6),
+                        *on_reference("test_headerless.sam", 2)]:
+            assert fmt_spark.read.format("sam").load(path).count() == n
 
 
 @pytest.fixture(scope="module")
@@ -205,13 +229,13 @@ class TestVCFSource:
 
 class TestFastaSource:
     def test_contigs_and_positions(self, fmt_spark, res):
-        df = fmt_spark.read.format("fasta").load(
-            str(res / "mini-chr1-chr2.fasta"))
-        rows = df.collect()
-        contigs = {r.contig for r in rows}
-        assert contigs == {"chr1", "chr2"}
-        first = [r for r in rows if r.contig == "chr1"][0]
-        assert first.pos == 1 and len(first.seq) > 0
+        name = "mini-chr1-chr2.fasta"
+        for (path,) in [(str(res / name),), *on_reference(name)]:
+            rows = fmt_spark.read.format("fasta").load(path).collect()
+            contigs = {r.contig for r in rows}
+            assert contigs == {"chr1", "chr2"}
+            first = [r for r in rows if r.contig == "chr1"][0]
+            assert first.pos == 1 and len(first.seq) > 0
 
 
 class TestFastqQseq:
