@@ -172,11 +172,19 @@ def _read_typed_value(buf: bytes, off: int):
     return _read_vector(buf, off, typ, count)
 
 
+def _chars(raw: bytes) -> str:
+    """A BCF character vector as text, up to its first NUL: VCFv4.3
+    §6.3.3 pads per-sample strings to one width with NULs, and htslib
+    reads every char vector up to the first."""
+    end = raw.find(0)
+    return (raw if end < 0 else raw[:end]).decode("utf-8", "replace")
+
+
 def _read_vector(buf: bytes, off: int, typ: int, count: int):
     if typ == 0 or count == 0:
         return None, off
     if typ == 7:
-        s = buf[off : off + count].decode("utf-8", "replace")
+        s = _chars(buf[off : off + count])
         return (None if s == "" else s), off + count
     if typ == 5:
         vals = []
@@ -284,7 +292,7 @@ def _read_str(buf: bytes, p: int):
         return _read_vector(buf, p, typ, count)
     if count == 0:
         return None, p
-    s = buf[p : p + count].decode("utf-8", "replace")
+    s = _chars(buf[p : p + count])
     return (s or None), p + count
 
 
@@ -381,7 +389,7 @@ def _decode_record_unchecked(buf: bytes, off: int, hdr: BCFHeader):
             _, p = _read_vector(buf, p, typ, count)
             info[key] = "true"
         elif typ == 7:
-            s = buf[p : p + count].decode("utf-8", "replace") if count else ""
+            s = _chars(buf[p : p + count])
             p += count
             info[key] = s if s else "."
         elif count == 1 and typ in (1, 2, 3):
@@ -465,9 +473,7 @@ def _decode_record_unchecked(buf: bytes, off: int, hdr: BCFHeader):
             elif typ == 7:
                 base = p2
                 for s in range(n_sample):
-                    v = buf[base + s * count : base + (s + 1) * count].decode(
-                        "utf-8", "replace"
-                    )
+                    v = _chars(buf[base + s * count : base + (s + 1) * count])
                     if v:
                         per_sample[s][key] = v
                 p2 = base + n_sample * count

@@ -108,6 +108,21 @@ def _gather_fixed(arr: np.ndarray, p: np.ndarray, width: int) -> np.ndarray:
     return arr[p[:, None] + np.arange(width, dtype=np.int64)]
 
 
+def _gather_chars(arr: np.ndarray, st: np.ndarray, ln: np.ndarray):
+    """Gather the char cells arr[st[i] : st[i]+ln[i]], each cut at its
+    first NUL (as bcf._chars): (values, offsets, cut lengths)."""
+    vals, off = _gather(arr, st, ln)
+    nul = np.flatnonzero(vals == 0)
+    if not nul.size:
+        return vals, off, ln
+    cells, first = np.unique(np.searchsorted(off, nul, side="right") - 1,
+                             return_index=True)
+    ln = np.array(ln, dtype=np.int64)
+    ln[cells] = nul[first] - off[cells]
+    vals, off = _gather(arr, st, ln)
+    return vals, off, ln
+
+
 def _ints_at(arr: np.ndarray, p: np.ndarray, typ: int, count: int) -> np.ndarray:
     """(k, count) int64 matrix of typed ints at per-record offsets."""
     w = _INT_W[typ]
@@ -404,11 +419,8 @@ class BCFBatchDecoder:
             if (typ != 7).any():
                 raise VecUnsupported("non-string ID field")
             if "id" in want:
-                null = cnt == 0
-                st = np.where(null, 0, p2)
-                ln = np.where(null, 0, cnt)
-                vals, off = _gather(arr, st, ln)
-                cols["id"] = _string_array_utf8(vals, off, null)
+                vals, off, ln = _gather_chars(arr, p2, cnt)
+                cols["id"] = _string_array_utf8(vals, off, ln == 0)
             p = p2 + cnt
         if depth >= 2:
             max_a = int(n_allele.max()) if n else 0
@@ -424,17 +436,14 @@ class BCFBatchDecoder:
                 p = np.where(act, p2 + cnt, p)
             if "ref" in want:
                 if max_a:
-                    null = ~a_act[0] | (a_ln[0] == 0)
-                    vals, off = _gather(
-                        arr, np.where(null, 0, a_st[0]),
-                        np.where(null, 0, a_ln[0])
-                    )
-                    cols["ref"] = _string_array_utf8(vals, off, null)
+                    # a_st/a_ln are 0 where a record has no allele
+                    vals, off, ln = _gather_chars(arr, a_st[0], a_ln[0])
+                    cols["ref"] = _string_array_utf8(vals, off, ln == 0)
                 else:
                     cols["ref"] = pa.nulls(n, pa.string())
             if "alts" in want:
                 st, ln, counts = _rowmajor(a_st[1:], a_ln[1:], a_act[1:])
-                vals, off = _gather(arr, st, ln)
+                vals, off, ln = _gather_chars(arr, st, ln)
                 elems = _string_array_utf8(vals, off, ln == 0)
                 offsets = np.zeros(n + 1, dtype=np.int64)
                 np.cumsum(counts, out=offsets[1:])
@@ -545,15 +554,14 @@ class BCFBatchDecoder:
             rest = act & ~flag
             strm = rest & (typ == 7)
             if strm.any():
-                nonempty = strm & (cnt > 0)
                 # copy string bytes into the arena (values must live in one
                 # buffer for the final row-major map gather)
-                sel = np.flatnonzero(nonempty)
-                vals, off = _gather(arr, p[sel], cnt[sel])
+                sel = np.flatnonzero(strm)
+                vals, off, ln = _gather_chars(arr, p[sel], cnt[sel])
                 base = aux.add(vals)
                 vst[sel] = base + off[:-1]
-                vln[sel] = cnt[sel]
-                dot = strm & (cnt == 0)
+                vln[sel] = ln
+                dot = sel[ln == 0]
                 vst[dot], vln[dot] = _Aux.DOT
                 adv[strm] = cnt[strm]
             intm = rest & np.isin(typ, _INT_TYPES)
@@ -695,8 +703,7 @@ class BCFBatchDecoder:
             strm = sl_act & (typ == 7)[rec_of]
             if strm.any():
                 sel = np.flatnonzero(strm)
-                lens = cnt[rec_of][sel]
-                vals, off = _gather(arr, cell0[sel], lens)
+                vals, off, lens = _gather_chars(arr, cell0[sel], cnt[rec_of][sel])
                 base = aux.add(vals)
                 vst[sel] = base + off[:-1]
                 vln[sel] = lens

@@ -7,12 +7,30 @@ job rather than Spark's 200 default).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import socket
+import tempfile
+from collections.abc import Mapping
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 #: the directory holding the ``hadoop_bam_spark`` package
 IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+UDS_ENABLED = "spark.python.unix.domain.socket.enabled"
+UDS_DIR = "spark.python.unix.domain.socket.dir"
+#: bytes a Unix socket path may hold: ``sun_path`` is 108 with its NUL
+SUN_PATH_MAX = 107
+#: Spark names every socket it makes ``.<uuid4>.sock``
+_SOCK_NAME = "." + "0" * 36 + ".sock"
+_DIR_PREFIX = "hbs-uds-"
+#: ``tempfile.mkdtemp`` appends eight random characters to the prefix
+_DIR_NAME = _DIR_PREFIX + "x" * 8
+#: this process's private socket directory, once made
+_socket_dir_made: str | None = None
 
 
 def default_driver_memory(phys_bytes: int | None = None) -> str:
@@ -33,6 +51,52 @@ def export_import_root() -> None:
     paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     if IMPORT_ROOT not in map(os.path.abspath, paths):
         os.environ["PYTHONPATH"] = os.pathsep.join([*paths, IMPORT_ROOT])
+
+
+def socket_parent(
+    conf: Mapping[str, str], master: str, tmpdir: str, af_unix: bool
+) -> str | None:
+    """Where :func:`get_spark` makes its private socket directory: ``tmpdir``,
+    else ``/tmp``, the first in which Spark's socket paths fit ``sun_path``.
+    ``None`` keeps the engine out of it: the caller's ``conf`` sets either
+    Unix-socket key (it wins, with Spark's defaults for the other), the
+    master is not ``local`` (executors on other hosts have no such
+    directory), neither directory fits, or the platform has no ``AF_UNIX``
+    (loopback TCP)."""
+    if (UDS_ENABLED in conf or UDS_DIR in conf or not af_unix
+            or not master.startswith("local")):
+        return None
+    for parent in (tmpdir, "/tmp"):
+        path = os.path.join(os.path.abspath(parent), _DIR_NAME, _SOCK_NAME)
+        if len(os.fsencode(path)) <= SUN_PATH_MAX:
+            return parent
+    return None
+
+
+def _socket_dir(parent: str) -> str:
+    """This process's private socket directory, made under ``parent`` on
+    first use and removed with every socket in it at interpreter exit."""
+    global _socket_dir_made
+    if _socket_dir_made is None:
+        _socket_dir_made = tempfile.mkdtemp(
+            prefix=_DIR_PREFIX, dir=os.path.abspath(parent))
+        atexit.register(_remove_socket_dir, _socket_dir_made, os.getpid())
+    return _socket_dir_made
+
+
+def _remove_socket_dir(path: str, owner_pid: int) -> None:
+    if os.getpid() == owner_pid:  # not in a forked child
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def worker_transport() -> str:
+    """How the active SparkContext talks to its Python workers: ``"unix"``
+    (domain sockets) or ``"tcp"`` (loopback; also with no active context)."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return "tcp"
+    on = sc.getConf().get(UDS_ENABLED, os.environ.get("PYSPARK_UDS_MODE", "false"))
+    return "unix" if on.lower() == "true" else "tcp"
 
 
 def get_spark(
@@ -65,7 +129,16 @@ def get_spark(
         # Python DataSource V2 filter pushdown (bam/vcf sources implement it)
         .config("spark.sql.python.filterPushdown.enabled", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    # Python worker traffic over Unix domain sockets: on loopback TCP every
+    # small command reply waits out the 40 ms delayed ACK (Nagle's
+    # algorithm), several times per region query.
+    parent = socket_parent(
+        extra_conf, master, tempfile.gettempdir(), hasattr(socket, "AF_UNIX"))
+    if parent is not None:
+        extra_conf[UDS_ENABLED] = "true"
+        extra_conf[UDS_DIR] = _socket_dir(parent)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

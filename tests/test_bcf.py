@@ -137,6 +137,53 @@ def test_flag_with_reserved_type_raises():
         bcf_vec.BCFBatchDecoder(hdr).decode(bad, np.array([off]))
 
 
+#: The spec example with a String FORMAT key whose per-sample values differ
+#: in length, so the BCF pads the shorter ones with NULs (VCFv4.3 §6.3.3).
+FT_VCF = textgen.VCF_SPEC_EXAMPLE.replace(
+    "##FORMAT=<ID=HQ,",
+    '##FORMAT=<ID=FT,Number=1,Type=String,Description="Sample filter">\n'
+    "##FORMAT=<ID=HQ,",
+).replace(
+    "GT:GQ:DP:HQ\t0|0:48:1:51,51\t1|0:48:8:51,51\t1/1:43:5:.,.",
+    "GT:GQ:DP:HQ:FT\t0|0:48:1:51,51:PASS\t1|0:48:8:51,51:q10;s50"
+    "\t1/1:43:5:.,.:.",
+)
+FT_VALUES = ["PASS", "q10;s50", "."]
+
+
+def _ft(genotypes):
+    return [fields.get("FT") for _, _, fields in genotypes]
+
+
+def test_string_format_values_end_at_nul(spark, tmp_path):
+    """NUL padding is not part of a per-sample String value: the fast and
+    reference scalar decoders, the vectorized decoder and an engine
+    write/read round trip all give the values as written."""
+    from hadoop_bam_spark import sinks
+    from hadoop_bam_spark.formats import bcf_vec
+    from hadoop_bam_spark.sources import register_all
+
+    raw = textgen.bcf_file(FT_VCF)
+    assert b"PASS\x00\x00\x00" in raw
+    hdr, off = bcf.read_bcf_header(io.BytesIO(raw))
+    assert _ft(bcf.decode_record(raw, off, hdr)[0][9]) == FT_VALUES
+    assert _ft(bcf.decode_record_ref(raw, off, hdr)[0][9]) == FT_VALUES
+    cols = bcf_vec.BCFBatchDecoder(hdr).decode(raw, np.array([off]))
+    vec = [(g["sample"], g["gt"], dict(g["fields"]))
+           for g in cols["genotypes"].to_pylist()[0]]
+    assert _ft(vec) == FT_VALUES
+
+    register_all(spark)
+    src = tmp_path / "ft.bcf"
+    src.write_bytes(raw)
+    out = str(tmp_path / "ft_out.bcf")
+    df = spark.read.format("bcf").load(str(src))
+    sinks.write_bcf(df, out, parse_vcf_header(FT_VCF.splitlines()))
+    for path in (str(src), out):
+        first = spark.read.format("bcf").load(path).orderBy("start").first()
+        assert [g.fields.get("FT") for g in first.genotypes] == FT_VALUES
+
+
 def _gen_bcf_bytes(rows):
     """Uncompressed BCF of textgen VCF rows (engine codec, no fixture)."""
     vh = parse_vcf_header(textgen.gen_vcf_text([]).splitlines())
