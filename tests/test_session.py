@@ -8,6 +8,8 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
+
 from hadoop_bam_spark import session
 from tests import textgen
 
@@ -43,7 +45,8 @@ _REGION_COUNT = textwrap.dedent("""
     sock_dir = spark.sparkContext.getConf().get(UDS_DIR)
     out = {"transport": worker_transport(), "dir": sock_dir, "count": n,
            "sockets": sum(f.endswith(".sock") for f in os.listdir(sock_dir))}
-    spark.stop()
+    if sys.argv[3] == "stop":
+        spark.stop()
     print(json.dumps(out))
 """)
 
@@ -52,11 +55,13 @@ def _tmp_sockets() -> set:
     return {f for f in os.listdir("/tmp") if f.startswith(".") and f.endswith(".sock")}
 
 
-def test_region_query_over_unix_sockets_leaves_nothing(tmp_path):
+@pytest.mark.parametrize("finish", ["stop", "exit"])
+def test_region_query_over_unix_sockets_leaves_nothing(tmp_path, finish):
     """A TMPDIR too long for ``sun_path``: the sockets move to a private
     directory under /tmp, an ``intervals`` count over them matches the
     generator, and neither a socket nor the directory outlives the
-    interpreter."""
+    interpreter, whether it stops Spark first or just exits (which leaves
+    a socket file behind in Spark's default directory)."""
     records = textgen.gen_bam_records()
     bam = tmp_path / "t.bam"
     bam.write_bytes(textgen.bam_file(records))
@@ -70,7 +75,8 @@ def test_region_query_over_unix_sockets_leaves_nothing(tmp_path):
     env = dict(os.environ, PYTHONPATH=REPO, SPARK_DRIVER_MEM="1g",
                TMPDIR=str(long_tmp))
     r = subprocess.run(
-        [sys.executable, "-c", _REGION_COUNT, str(bam), f"chr1:{start}-{stop}"],
+        [sys.executable, "-c", _REGION_COUNT, str(bam), f"chr1:{start}-{stop}",
+         finish],
         cwd=REPO, env=env, capture_output=True, text=True, timeout=300)
     assert r.returncode == 0, r.stderr[-4000:]
     out = json.loads(r.stdout.strip().splitlines()[-1])
