@@ -315,8 +315,8 @@ class BAMBatchDecoder:
         self,
         bodies: list,
         unmapped_only: bool = False,
-        ref_ids: Optional[set] = None,
         intervals_by_rid: Optional[list] = None,
+        start_ranges: Optional[list] = None,
     ) -> Optional[dict]:
         """bodies: raw record bodies (bytes/memoryview, no length prefix).
 
@@ -331,8 +331,8 @@ class BAMBatchDecoder:
         starts = np.zeros(len(bodies), dtype=np.int64)
         np.cumsum(lens[:-1], out=starts[1:])
         return self.decode_span(buf, starts, lens, unmapped_only=unmapped_only,
-                                ref_ids=ref_ids,
-                                intervals_by_rid=intervals_by_rid)
+                                intervals_by_rid=intervals_by_rid,
+                                start_ranges=start_ranges)
 
     def decode_span(
         self,
@@ -340,8 +340,8 @@ class BAMBatchDecoder:
         starts: np.ndarray,
         lens: np.ndarray,
         unmapped_only: bool = False,
-        ref_ids: Optional[set] = None,
         intervals_by_rid: Optional[list] = None,
+        start_ranges: Optional[list] = None,
     ) -> Optional[dict]:
         """Record bodies at buf[starts[i] : starts[i]+lens[i]] -> columns.
 
@@ -349,6 +349,10 @@ class BAMBatchDecoder:
         batch filters down to zero rows. ``intervals_by_rid`` is a list of
         (ref_id, start, stop) 1-based inclusive intervals; a record passes
         if it overlaps any (same residual the row path applied).
+        ``start_ranges`` is a list of (ref_id, lo, hi); a record passes if
+        its ref id is one of them and its 1-based ``pos`` column value is in
+        ``[lo, hi]``, which is exactly ``rname = c AND pos >= lo AND pos <=
+        hi``. A record must pass every predicate given.
         """
         if len(starts) == 0:
             return None
@@ -368,9 +372,11 @@ class BAMBatchDecoder:
         mask = None
         if unmapped_only:
             mask = rid == -1
-        if ref_ids is not None:
-            m = np.isin(rid, np.fromiter(ref_ids, np.int64, len(ref_ids))) \
-                if ref_ids else np.zeros(len(rid), dtype=bool)
+        if start_ranges is not None:
+            p = pos1.astype(np.int64)  # bounds may lie outside int32
+            m = np.zeros(len(rid), dtype=bool)
+            for srid, lo, hi in start_ranges:
+                m |= (rid == srid) & (p >= lo) & (p <= hi)
             mask = m if mask is None else (mask & m)
         if intervals_by_rid is not None:
             l_read_name = prefix["l_read_name"].astype(np.int64)

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from itertools import chain, islice
+from typing import NamedTuple, Optional
 
 from pyspark.sql import SparkSession
 from pyspark.sql.datasource import InputPartition
@@ -335,39 +336,74 @@ def list_format_files(path: str, *exts: str) -> list[str]:
 MAX_COORD = (1 << 31) - 2
 
 
-def pushed_intervals(filters, name_attr: str, pos_attr: str):
-    """Shared Catalyst-filter pushdown of the genomic sources: returns
-    (names | None, intervals | None) from EqualTo/In on ``name_attr`` and
-    range predicates on ``pos_attr``. ``intervals`` is one
-    ``(name, lo, hi)`` per pushed name, sorted, and None when no name was
-    pushed. Sources use it for pruning only — every filter is re-applied
-    by Catalyst as the residual, so this can never change semantics.
+#: the int32 range of a position column: a start range with no pushed
+#: bound on one side runs to that end of it.
+INT32_MIN, INT32_MAX = -(1 << 31), (1 << 31) - 1
 
-    ``lo`` starts at 0, not 1: when no lower bound is pushed the synthesized
-    interval must admit coordinate-unset rows (VCF telomeric POS=0, BAM
-    RNAME-set/POS-unset) that a bare name-equality filter selects — the
-    interval also drives the row-level overlap residual in the readers, so
-    a [1, MAX] floor would silently drop those spec-legal rows. Index
-    queries clamp to 0-based ``max(lo - 1, 0)`` so pruning is unchanged."""
+
+class Pushdown(NamedTuple):
+    """What :func:`pushed_intervals` makes of a source's Catalyst filters.
+
+    - ``names``: the contigs the name filters allow; None when no name was
+      filtered, empty when the filters exclude every name.
+    - ``intervals``: one ``(name, lo, hi)`` pruning interval per name,
+      sorted; None when no name was pushed.
+    - ``starts``: one ``(name, lo, hi)`` start range per name: a row
+      passes when its name is ``name`` and ``lo <= position <= hi``.
+      Empty when no name is allowed, None when no name was filtered.
+    - ``exact``: the input filters (by reference) that ``starts`` fully
+      expresses. A source that keeps only the rows in ``starts`` need not
+      hand these back to Spark."""
+
+    names: Optional[set]
+    intervals: Optional[list]
+    starts: Optional[list]
+    exact: list
+
+
+def pushed_intervals(filters, name_attr: str, pos_attr: str) -> Pushdown:
+    """Shared Catalyst-filter pushdown of the genomic sources (see
+    :class:`Pushdown`). EqualTo/In on ``name_attr`` name the contigs, and
+    integer range predicates on ``pos_attr`` bound the positions.
+
+    Exact, once a name is pushed: EqualTo/In on ``name_attr`` with string
+    values, GreaterThan/GreaterThanOrEqual/LessThan/LessThanOrEqual with an
+    ``int`` value on ``pos_attr``, and IsNotNull on either column. A null
+    in EqualTo/In never equals a contig, so it is dropped. Everything else
+    (position bounds with no name, any other filter) must stay with Spark.
+
+    ``intervals`` select rows that overlap the region, a superset of the
+    rows that start in it; sources that only prune keep returning every
+    filter so Catalyst re-applies them. Their ``lo`` starts at 0, not 1:
+    when no lower bound is pushed the synthesized interval must admit
+    coordinate-unset rows (VCF telomeric POS=0, BAM RNAME-set/POS-unset)
+    that a bare name-equality filter selects — the interval also drives
+    the row-level overlap residual in the readers, so a [1, MAX] floor
+    would silently drop those spec-legal rows. Index queries clamp to
+    0-based ``max(lo - 1, 0)`` so pruning is unchanged. ``starts`` are not
+    clamped: without a bound they run over the whole int32 range."""
     from pyspark.sql.datasource import (
         EqualTo,
         GreaterThan,
         GreaterThanOrEqual,
         In,
+        IsNotNull,
         LessThan,
         LessThanOrEqual,
     )
 
     names = None
-    lo, hi = 0, MAX_COORD
+    lo, hi = INT32_MIN, INT32_MAX
+    exact = []
     for f in filters:
         attr = getattr(f, "attribute", None)  # Not/composites have none
-        if isinstance(f, EqualTo) and attr == (name_attr,):
-            names = {f.value} if names is None else names & {f.value}
-        elif isinstance(f, In) and attr == (name_attr,):
-            vals = set(f.value)
+        if attr == (name_attr,) and isinstance(f, (EqualTo, In)):
+            vals = set(f.value) if isinstance(f, In) else {f.value}
+            vals.discard(None)
             names = vals if names is None else names & vals
-        elif attr == (pos_attr,):
+            if all(isinstance(v, str) for v in vals):
+                exact.append(f)
+        elif attr == (pos_attr,) and type(getattr(f, "value", None)) is int:
             if isinstance(f, GreaterThan):
                 lo = max(lo, f.value + 1)
             elif isinstance(f, GreaterThanOrEqual):
@@ -376,6 +412,13 @@ def pushed_intervals(filters, name_attr: str, pos_attr: str):
                 hi = min(hi, f.value - 1)
             elif isinstance(f, LessThanOrEqual):
                 hi = min(hi, f.value)
-    if not names:
-        return names, None
-    return names, [(n, lo, hi) for n in sorted(names)]
+            else:
+                continue
+            exact.append(f)
+        elif isinstance(f, IsNotNull) and attr in ((name_attr,), (pos_attr,)):
+            exact.append(f)
+    if names is None:
+        return Pushdown(None, None, None, [])
+    starts = [(n, lo, hi) for n in sorted(names)]
+    intervals = [(n, max(lo, 0), min(hi, MAX_COORD)) for n, _, _ in starts]
+    return Pushdown(names, intervals or None, starts, exact)

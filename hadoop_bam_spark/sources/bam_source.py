@@ -127,7 +127,12 @@ class BAMReader(DataSourceReader):
         # LazyBAMRecordFactory.java:53-111); interval residuals evaluate on
         # cigar OPS arrays without ever building cigar strings.
         self._schema = pruned_schema(SAM_SCHEMA, options)[0]
+        # set by pushFilters: the pushed contigs, the pruning intervals
+        # they synthesize when no intervals option was given, and the
+        # (contig, lo, hi) start ranges read() enforces
         self._rname_eq: Optional[set] = None
+        self._pushed: Optional[list] = None
+        self._starts: Optional[list] = None
         # header/refs per file, read once on the driver
         # (reference util/SAMHeaderReader.java:48-75)
         self._files: list[tuple[str, list[tuple[str, int]], int, int]] = []
@@ -139,21 +144,26 @@ class BAMReader(DataSourceReader):
             self._files.append((f, refs, first_voffset, size))
 
     def pushFilters(self, filters):
-        """Derive planning-time pruning from Catalyst filters; everything is
-        returned as unsupported so Catalyst re-applies it (safe residual).
+        """Enforce the ``rname``/``pos`` filters in the scan and return the
+        rest, by reference, for Spark to apply (``sources.pushed_intervals``
+        decides which are exact).
 
         - rname EqualTo/In prunes whole files missing the contig;
         - rname + optional pos bounds synthesize an interval when the user
           passed none, so a plain ``.filter(col("rname") == ...)`` gets the
           same BAI chunk-span split pruning as ``option("intervals", ...)``.
-          The interval selects every record whose alignment overlaps it — a
-          superset of the pos-predicate rows — and Catalyst's residual
-          closes the gap, so this is pruning only, never semantics
-          (``sources.pushed_intervals``)."""
-        self._rname_eq, pushed = pushed_intervals(filters, "rname", "pos")
-        if pushed and self._intervals is None:
-            self._intervals = pushed
-        return filters
+          The interval selects every record whose alignment overlaps it, a
+          superset of the rows the filters select;
+        - ``read`` keeps only records that start in a pushed
+          ``(contig, lo, hi)`` range, which closes that gap, so Spark plans
+          no residual ``Filter`` for the exact filters.
+
+        Eager on purpose: callers may discard the result and still get the
+        pruning and the start ranges."""
+        pd = pushed_intervals(filters, "rname", "pos")
+        self._rname_eq, self._pushed, self._starts = pd.names, pd.intervals, pd.starts
+        done = {id(f) for f in pd.exact}
+        return [f for f in filters if id(f) not in done]
 
     @staticmethod
     def _bounds(p) -> tuple[int, int]:
@@ -173,7 +183,8 @@ class BAMReader(DataSourceReader):
                 plans[path] = self._plan_file(path, refs, first_voffset, size)
             return plans[path]
 
-        bounded = self._intervals is not None or self._unmapped
+        intervals = self._intervals if self._intervals is not None else self._pushed
+        bounded = intervals is not None or self._unmapped
         for path, refs, first_voffset, size in self._files:
             contigs = {name for name, _ in refs}
             if not bounded:
@@ -192,15 +203,13 @@ class BAMReader(DataSourceReader):
                 from hadoop_bam_spark.formats.csi import BAMIndexView, read_csi
 
                 idx = BAMIndexView(read_csi(path + ".csi", open_fn=fs.open_file))
-            if self._intervals is not None and any(
-                c in contigs for c, _, _ in self._intervals
-            ):
+            if intervals is not None and any(c in contigs for c, _, _ in intervals):
                 if idx is not None:
                     # Index-driven bounded traversal: intervals -> merged
                     # chunk spans -> drop splits with no overlap, clamp the
                     # chunk list into each survivor (reference
                     # BAMInputFormat.filterByInterval, BAMInputFormat.java:542-644).
-                    span = idx.span_for_intervals(refs, self._intervals)
+                    span = idx.span_for_intervals(refs, intervals)
                     for p in plan(path, refs, first_voffset, size):
                         b0, b1 = self._bounds(p)
                         cl = tuple(
@@ -331,14 +340,18 @@ class BAMReader(DataSourceReader):
         refs, first_voffset, size = next(
             (r, fv, sz) for p, r, fv, sz in self._files if p == partition.path
         )
-        intervals_by_rid = None
-        if self._intervals is not None:
-            name_to_id = {name: i for i, (name, _) in enumerate(refs)}
-            intervals_by_rid = [
-                (name_to_id[c], start, stop)
-                for c, start, stop in self._intervals
-                if c in name_to_id
-            ]
+        name_to_id = {name: i for i, (name, _) in enumerate(refs)}
+
+        def by_rid(ranges):
+            if ranges is None:
+                return None
+            return [(name_to_id[c], lo, hi) for c, lo, hi in ranges
+                    if c in name_to_id]
+
+        # the intervals option keeps overlapping records; pushed filters
+        # keep records that start in their range (both when both are set)
+        intervals_by_rid = by_rid(self._intervals)
+        start_ranges = by_rid(self._starts)
         decoder = bam_vec.BAMBatchDecoder(
             refs, fields=[f.name for f in self._schema.fields]
         )
@@ -360,10 +373,11 @@ class BAMReader(DataSourceReader):
                 # queryUnmapped semantics: only unplaced (refID==-1)
                 # records (reference BAMRecordReader.java:176-178).
                 spans = ((partition.vstart, partition.vend),)
-                flt = dict(unmapped_only=True)
+                flt = dict(unmapped_only=True, start_ranges=start_ranges)
             else:
                 spans = partition.chunks or ((partition.vstart, partition.vend),)
-                flt = dict(intervals_by_rid=intervals_by_rid)
+                flt = dict(intervals_by_rid=intervals_by_rid,
+                           start_ranges=start_ranges)
             for vbeg, vend in spans:
                 for span_buf, starts, lens in bam_vec.iter_body_batches(
                     fh, vbeg, vend, self.BATCH_RECORDS

@@ -256,13 +256,13 @@ class BCFReader(DataSourceReader):
             self._files[f] = (kind, hdr, header_end)
 
     def pushFilters(self, filters):
-        """Same Catalyst-filter pushdown policy as the VCF/BAM sources:
+        """Same Catalyst-filter pushdown policy as the VCF source:
         contig/start predicates synthesize an interval for CSI/split
         pruning; all filters are returned unsupported (Catalyst residual
         keeps semantics exact)."""
         from hadoop_bam_spark.sources import pushed_intervals
 
-        _, pushed = pushed_intervals(filters, "contig", "start")
+        pushed = pushed_intervals(filters, "contig", "start").intervals
         if pushed and self._intervals is None:
             self._intervals = pushed
         return filters

@@ -14,9 +14,9 @@ CRAMInputFormat plans from), the driver never touches the data file at
 all: the index's distinct container offsets are the split-alignment
 points, and its (seq_id, start, span) entries prune containers that
 cannot overlap a query interval — the CRAM analog of BAI chunk-span
-pruning. Catalyst rname/pos filters push down the same way as in the BAM
-source (interval synthesized at pushFilters time, all filters returned as
-residual).
+pruning. Catalyst rname/pos filters prune the same way as in the BAM
+source (interval synthesized at pushFilters time), but all filters are
+returned as residual.
 
 Options:
   path         file or directory of .cram files
@@ -127,11 +127,11 @@ class CRAMReader(DataSourceReader):
             self._files.append((f, major, refs, rgs))
 
     def pushFilters(self, filters):
-        """rname/pos predicates -> container pruning (same policy as the
-        BAM source: pruning only, every filter returned as residual)."""
+        """rname/pos predicates -> container pruning (pruning only, every
+        filter returned as residual; the BAM source enforces them)."""
         from hadoop_bam_spark.sources import pushed_intervals
 
-        _, pushed = pushed_intervals(filters, "rname", "pos")
+        pushed = pushed_intervals(filters, "rname", "pos").intervals
         if pushed and self._intervals is None:
             self._pushed = pushed
         return filters

@@ -372,12 +372,12 @@ class TabixTextReader(DataSourceReader):
         self._files = list_format_files(path, *spec.extensions)
 
     def pushFilters(self, filters):
-        """Same policy as the VCF/BAM sources: contig EqualTo/In plus
+        """Same policy as the VCF source: contig EqualTo/In plus
         optional start bounds synthesize an interval when none was
         given, so plain Catalyst predicates get tabix split pruning;
         every filter is returned unsupported (the residual keeps
         semantics exact)."""
-        _, pushed = pushed_intervals(filters, "contig", "start")
+        pushed = pushed_intervals(filters, "contig", "start").intervals
         if pushed and self._intervals is None:
             self._intervals = pushed
         return filters

@@ -103,14 +103,14 @@ class VCFReader(DataSourceReader):
         self._samples = {f: read_vcf_header(f).samples for f in self._files}
 
     def pushFilters(self, filters):
-        """Derive planning-time pruning from Catalyst filters (same policy
-        as the BAM source): contig EqualTo/In plus optional start bounds
+        """Derive planning-time pruning from Catalyst filters (the BAM
+        source's planning policy): contig EqualTo/In plus optional start bounds
         synthesize an interval when no intervals option was given, so a
         plain ``.filter(col("contig") == ...)`` gets tabix split pruning.
         Every filter is returned unsupported — Catalyst's residual keeps
         semantics exact (the interval admits a superset: overlap on
         [start, end] vs the start predicate)."""
-        _, pushed = pushed_intervals(filters, "contig", "start")
+        pushed = pushed_intervals(filters, "contig", "start").intervals
         if pushed and self._intervals is None:
             self._intervals = pushed
             if self._wanted is not None:

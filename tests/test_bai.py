@@ -261,7 +261,8 @@ class TestCatalystFilterPushdown:
     """Plain DataFrame filters (no intervals option) must reach the BAI:
     rname equality + pos bounds synthesize an interval at pushFilters time,
     so Catalyst predicates get the same split pruning as option("intervals")
-    — with results identical to the unpruned plan (Catalyst residual)."""
+    — with results identical to the unpruned plan (the source enforces the
+    filters; tests/test_pushdown_exact.py checks the plan)."""
 
     SPLIT = 8 * 1024
 
@@ -327,8 +328,8 @@ class TestCatalystFilterPushdown:
 
 def test_intervals_option_plus_catalyst_filter(spark, indexed_bam):
     """option('intervals') and DataFrame predicates compose: the option
-    drives index pruning, the pushed filter stays residual, and the result
-    is the intersection."""
+    drives index pruning, the source enforces the pushed filter too, and
+    the result is the intersection."""
     from pyspark.sql import functions as F
 
     from hadoop_bam_spark.sources import register_all

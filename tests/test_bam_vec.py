@@ -170,6 +170,19 @@ def test_columnar_filters():
     # nothing matches -> None
     cols, _, _ = _scan_columnar(data, intervals_by_rid=[(1, 1, 2)])
     assert cols is None
+    # start ranges keep records that START in [lo, hi]: m1 (100..109)
+    # overlaps chr1:105-300 but starts before it
+    cols, _, _ = _scan_columnar(data, start_ranges=[(0, 105, 300)])
+    assert [r[0] for r in _cols_to_rows(cols)] == ["m3"]
+    cols, _, _ = _scan_columnar(data, start_ranges=[(0, 100, 100), (1, 0, 500)])
+    assert [r[0] for r in _cols_to_rows(cols)] == ["m1", "m2"]
+    # every predicate given must pass
+    cols, _, _ = _scan_columnar(data, intervals_by_rid=[(0, 105, 110)],
+                                start_ranges=[(0, 101, 300)])
+    assert cols is None
+    cols, _, _ = _scan_columnar(data, unmapped_only=True,
+                                start_ranges=[(0, -(1 << 31), (1 << 31) - 1)])
+    assert cols is None
 
 
 def test_columnar_projection_subset():
