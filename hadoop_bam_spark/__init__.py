@@ -21,7 +21,10 @@ This package re-expresses those capabilities Spark-first:
 __version__ = "0.1.0"
 
 # Every Python worker that runs engine code imports this package first, so
-# this is where the workers' zip imports switch to lazy invalidation.
-from hadoop_bam_spark import _zipimport_compat
+# this is where the workers shed PySpark's two per-command costs: zip imports
+# switch to lazy invalidation, and a reused worker freezes its imports out of
+# the daemon's gc.collect() after each command.
+from hadoop_bam_spark import _worker_gc, _zipimport_compat
 
 _zipimport_compat.install()
+_worker_gc.install()

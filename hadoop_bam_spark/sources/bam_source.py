@@ -223,7 +223,8 @@ class BAMReader(DataSourceReader):
                     # No index: full scan, residual overlap filter at read
                     # time (the reference instead raises; we degrade gracefully).
                     parts.extend(plan(path, refs, first_voffset, size))
-            if self._unmapped:
+            # a pushed rname excludes every unplaced read (its rname is null)
+            if self._unmapped and self._rname_eq is None:
                 vstart = None
                 if idx is not None:
                     if idx.n_no_coor == 0:

@@ -177,6 +177,27 @@ def test_unmapped_option_plus_rname(spark, gen_bam):
     assert _qnames(df) == _brute(spans, lambda r, p, _: r == "chr2" and p > S)
 
 
+def test_unmapped_tail_not_planned_under_rname(spark, gen_bam):
+    """No unplaced read passes a pushed ``rname`` filter, so ``unmapped=true``
+    plans no ``unmapped_only`` partition for it; without the filter it does."""
+    from hadoop_bam_spark.sources.bam_source import BAMReader
+
+    path, spans = gen_bam
+    opts = {"path": path, "split_size": SPLIT, "unmapped": "true"}
+    assert any(getattr(p, "unmapped_only", False)
+               for p in BAMReader(opts).partitions())
+    rd = BAMReader(opts)
+    rd.pushFilters([EqualTo(("rname",), "chr2")])
+    parts = rd.partitions()
+    assert parts and not any(getattr(p, "unmapped_only", False) for p in parts)
+    want = _brute(spans, lambda r, p, _: r == "chr2")
+    got = sorted(q for p in parts for b in rd.read(p)
+                 for q in b.column("qname").to_pylist())
+    assert got == want
+    df = _bam(spark, path, unmapped="true").filter(F.col("rname") == "chr2")
+    assert df.count() == len(want)
+
+
 def test_isin_with_null_bam(spark, gen_bam):
     """A null in ``isin`` never equals a contig: it is dropped at
     pushdown, where sorting it with the names used to crash planning."""

@@ -1,23 +1,30 @@
-"""Lazy zipimport invalidation (hadoop_bam_spark/_zipimport_compat.py) and
-the session defaults that reach Spark's Python workers.
+"""The two per-command costs of a reused Python worker, and the session
+defaults that reach Spark's Python workers.
+
+- Lazy zipimport invalidation (``hadoop_bam_spark/_zipimport_compat.py``):
+  PySpark calls ``importlib.invalidate_caches()`` at the start of every
+  worker command.
+- The frozen import heap (``hadoop_bam_spark/_worker_gc.py``): PySpark's
+  daemon runs ``gc.collect()`` after every command of a reused worker.
 
 The unit tests run in-process with no Spark. The worker tests report from
 inside the Python workers themselves: a fix that reached only the driver
-would pass a driver-side check and save nothing, because PySpark calls
-``importlib.invalidate_caches()`` at the start of every worker command.
+would pass a driver-side check and save nothing.
 """
 
+import gc
 import importlib
 import os
 import subprocess
 import sys
 import textwrap
+import weakref
 import zipfile
 import zipimport
 
 import pytest
 
-from hadoop_bam_spark import _zipimport_compat
+from hadoop_bam_spark import _worker_gc, _zipimport_compat
 from hadoop_bam_spark._zipimport_compat import LazyZipImporter
 from hadoop_bam_spark.formats.sam import SAMHeader
 from hadoop_bam_spark.session import IMPORT_ROOT, default_driver_memory
@@ -106,6 +113,71 @@ def test_default_driver_memory_is_half_of_physical_memory():
     assert default_driver_memory() in {f"{n}g" for n in range(1, 33)}
 
 
+@pytest.fixture
+def worker_gc(monkeypatch, tmp_path):
+    """``_worker_gc`` as a reused worker would see it; on teardown the hook
+    is gone and the heap unfrozen, so no other test runs frozen."""
+    assert _worker_gc._freeze_new_imports not in gc.callbacks
+    monkeypatch.setenv("SPARK_REUSE_WORKER", "1")
+    monkeypatch.syspath_prepend(str(tmp_path))
+    monkeypatch.setattr(_worker_gc, "_modules_at_freeze", len(sys.modules))
+    yield tmp_path
+    if _worker_gc._freeze_new_imports in gc.callbacks:
+        gc.callbacks.remove(_worker_gc._freeze_new_imports)
+    gc.unfreeze()
+    for name in [m for m in sys.modules if m.startswith("gc_probe_")]:
+        del sys.modules[name]
+
+
+def test_worker_gc_is_a_no_op_outside_reused_workers(monkeypatch):
+    monkeypatch.delenv("SPARK_REUSE_WORKER", raising=False)
+    callbacks = list(gc.callbacks)
+    assert not _worker_gc.install()
+    assert gc.callbacks == callbacks
+    assert gc.get_freeze_count() == 0
+
+
+def test_worker_gc_freezes_after_new_imports(worker_gc):
+    (worker_gc / "gc_probe_a.py").write_text("VALUE = 1\n")
+    assert _worker_gc.install()
+    assert not _worker_gc.install()
+    gc.collect()
+    assert gc.get_freeze_count() == 0  # no module imported since install
+    importlib.import_module("gc_probe_a")
+    gc.collect()
+    frozen = gc.get_freeze_count()
+    assert frozen > 0
+    gc.collect()
+    assert gc.get_freeze_count() == frozen
+
+
+def test_worker_gc_still_collects_new_cycles(worker_gc):
+    class Node:
+        pass
+
+    def cycle():
+        node = Node()
+        node.self = node
+        return weakref.ref(node)
+
+    for name in ("gc_probe_b", "gc_probe_c"):
+        (worker_gc / f"{name}.py").write_text("VALUE = 2\n")
+    assert _worker_gc.install()
+    importlib.import_module("gc_probe_b")
+    gc.collect()
+    frozen = gc.get_freeze_count()
+    assert frozen > 0
+    ref = cycle()
+    gc.collect()
+    assert ref() is None
+    # a collection that ends in a freeze collects the garbage first
+    ref = cycle()
+    importlib.import_module("gc_probe_c")
+    gc.collect()
+    assert ref() is None
+    assert gc.get_freeze_count() > frozen
+
+
 # ---------------------------------------------------------------- workers
 
 
@@ -124,10 +196,13 @@ def _small_bam(path, n=300):
 
 def _worker_probe():
     """A function, pickled by value, that reports from the process it runs
-    in: the finder classes of the zip entries in ``sys.path_importer_cache``
-    and the ``_read_directory`` calls one ``invalidate_caches()`` makes."""
+    in: the finder classes of the zip entries in ``sys.path_importer_cache``,
+    the ``_read_directory`` calls one ``invalidate_caches()`` makes, the
+    frozen object count and the tracked objects a collection would walk
+    (``gc.get_objects()`` does not list frozen ones)."""
 
     def probe():
+        import gc
         import importlib
         import sys
         import zipimport
@@ -144,7 +219,7 @@ def _worker_probe():
             importlib.invalidate_caches()
         finally:
             zipimport._read_directory = read_directory
-        return ",".join(finders), len(calls)
+        return ",".join(finders), len(calls), gc.get_freeze_count(), len(gc.get_objects())
 
     return probe
 
@@ -178,7 +253,11 @@ def _probe_source():
             return "bam_zipimport_probe"
 
         def schema(self):
-            return "n long, plan_finders string, plan_reads int, task_finders string, task_reads int"
+            return (
+                "n long, plan_finders string, plan_reads int, plan_frozen long,"
+                " plan_young long, task_finders string, task_reads int,"
+                " task_frozen long, task_young long"
+            )
 
         def reader(self, schema):
             return ProbeReader(self.options)
@@ -186,14 +265,14 @@ def _probe_source():
     return ProbeSource
 
 
-@eager_interpreter
-def test_engine_workers_invalidate_lazily(spark, tmp_path):
+def _worker_reports(spark, path, n):
+    """One query through ``_probe_source`` and one ``mapInArrow`` job: the
+    probe result of every planner, scan-task and plain-task worker, as
+    ``(finders, reads, frozen, young)``."""
     import pyarrow as pa
 
     from hadoop_bam_spark.formats import bgzf
 
-    path = str(tmp_path / "probe.bam")
-    n = _small_bam(path)
     spark.dataSource.register(_probe_source())
     rows = spark.read.format("bam_zipimport_probe").load(path).collect()
     assert sum(r.n for r in rows) == n
@@ -206,21 +285,41 @@ def test_engine_workers_invalidate_lazily(spark, tmp_path):
         size = sum(
             len(bgzf.compress_block(b.column(0).to_numpy().tobytes())) for b in batches
         )
-        finders, calls = probe()
-        yield pa.RecordBatch.from_pydict(
-            {"finders": [finders], "reads": [calls], "size": [size]}
-        )
+        finders, calls, frozen, young = probe()
+        yield pa.RecordBatch.from_pydict({
+            "finders": [finders], "reads": [calls], "frozen": [frozen],
+            "young": [young], "size": [size],
+        })
 
     tasks = (
         spark.range(4, numPartitions=4)
-        .mapInArrow(report, "finders string, reads long, size long")
+        .mapInArrow(report, "finders string, reads long, frozen long, young long, size long")
         .collect()
     )
-    reports = [(r.plan_finders, r.plan_reads) for r in rows]
-    reports += [(r.task_finders, r.task_reads) for r in rows]
-    reports += [(r.finders, r.reads) for r in tasks]
-    assert all(finders == "LazyZipImporter" for finders, _ in reports), reports
-    assert all(calls == 0 for _, calls in reports), reports
+    reports = [(r.plan_finders, r.plan_reads, r.plan_frozen, r.plan_young) for r in rows]
+    reports += [(r.task_finders, r.task_reads, r.task_frozen, r.task_young) for r in rows]
+    reports += [(r.finders, r.reads, r.frozen, r.young) for r in tasks]
+    return reports
+
+
+@eager_interpreter
+def test_engine_workers_invalidate_lazily(spark, tmp_path):
+    path = str(tmp_path / "probe.bam")
+    reports = _worker_reports(spark, path, _small_bam(path))
+    assert all(finders == "LazyZipImporter" for finders, *_ in reports), reports
+    assert all(calls == 0 for _, calls, *_ in reports), reports
+
+
+def test_engine_workers_freeze_their_imports(spark, tmp_path):
+    """From a reused worker's second engine command on, the daemon's
+    per-command collection walks only what recent commands allocated: the
+    imports are frozen. Unfrozen, a worker holds 40-75k tracked objects."""
+    path = str(tmp_path / "probe.bam")
+    n = _small_bam(path)
+    _worker_reports(spark, path, n)
+    reports = _worker_reports(spark, path, n)
+    assert all(frozen > 0 for *_, frozen, _ in reports), reports
+    assert all(young < 5000 for *_, young in reports), reports
 
 
 def test_workers_import_engine_from_any_cwd(tmp_path):
