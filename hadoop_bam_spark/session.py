@@ -99,13 +99,20 @@ def worker_transport() -> str:
     return "unix" if on.lower() == "true" else "tcp"
 
 
+def local_cpus() -> int:
+    """Cores of the local master: ``SPARK_GRAFT_CPUS``, else the machine's.
+    Python workers inherit the driver's environment, so the source planners
+    (:func:`hadoop_bam_spark.sources.split_size`) read the same number."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
 def get_spark(
     app_name: str = "hadoop_bam_spark",
     shuffle_partitions: int | None = None,
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus

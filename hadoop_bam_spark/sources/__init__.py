@@ -11,8 +11,9 @@ Shared here: the one decode loop of the line-oriented readers
 (:func:`decode_chunks`: vectorized chunk parse, scalar fallback under
 ``option("stringency")``, residual mask), the one Arrow batch builder
 (:func:`to_batch`, and :func:`row_batches` for row tuples), projection
-(:func:`pruned_schema`), the interval residual (:func:`interval_mask`) and
-Catalyst interval pushdown (:func:`pushed_intervals`).
+(:func:`pruned_schema`), split sizing (:func:`split_size`), the interval
+residual (:func:`interval_mask`) and Catalyst interval pushdown
+(:func:`pushed_intervals`).
 
 Register with :func:`register_all`.
 """
@@ -100,6 +101,39 @@ def apply_stringency(stringency: str, exc: Exception, context: str) -> None:
         logging.getLogger("hadoop_bam_spark").warning(
             "skipping malformed record (%s): %s", context, exc
         )
+
+
+#: ``split_size`` when the option is absent: the most compressed bytes one
+#: split of any source holds.
+DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
+
+#: the smallest split the per-core rule of :func:`split_size` plans: 16
+#: full BGZF blocks. An executor realigns a raw BAM split edge by reading
+#: ``(BLOCKS_NEEDED_FOR_GUESS + 2) * 64 KiB`` = 320 KiB, so a smaller split
+#: would spend most of its read on guessing.
+MIN_SPLIT_SIZE = 1 << 20
+
+
+def split_size(options, total_bytes: Optional[int]) -> int:
+    """Bytes per split for one scan; every source plans with this.
+
+    ``option("split_size")`` (default :data:`DEFAULT_SPLIT_SIZE`) is an upper
+    bound, as ``spark.sql.files.maxPartitionBytes`` is for Spark's file
+    sources. An unbounded scan passes the ``total_bytes`` of its files and
+    gets at most ``ceil(total_bytes / cpus)``, but never less than
+    :data:`MIN_SPLIT_SIZE`, so a scan smaller than ``split_size * cpus``
+    still keeps every core busy (Spark's ``FilePartition.maxSplitBytes``).
+    A bounded scan (intervals, a pushed contig, the unmapped traversal)
+    passes None and gets ``split_size`` itself, so its index-driven plan
+    does not depend on the core count. ``cpus`` is
+    :func:`hadoop_bam_spark.session.local_cpus`."""
+    cap = int(options.get("split_size", DEFAULT_SPLIT_SIZE))
+    if total_bytes is None:
+        return cap
+    from hadoop_bam_spark.session import local_cpus
+
+    per_core = -(-total_bytes // local_cpus())
+    return min(cap, max(MIN_SPLIT_SIZE, per_core))
 
 
 def pruned_schema(full_schema, options):

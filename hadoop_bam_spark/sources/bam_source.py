@@ -19,7 +19,9 @@ contract.
 
 Options:
   path            file or directory of .bam files
-  split_size      target compressed bytes per partition (default 32 MiB)
+  split_size      most compressed bytes per partition (default 32 MiB); an
+                  unbounded scan plans at least one split per core, down
+                  to 1 MiB splits (``sources.split_size``)
   intervals       "contig:start-stop,..." index-pushdown + residual intervals
   unmapped        "true" to (also) traverse unplaced-unmapped records
 """
@@ -39,9 +41,8 @@ from hadoop_bam_spark.sources import (
     EmptyPartition,
     list_format_files,
     pushed_intervals,
+    split_size,
 )
-
-DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
 
 
 def parse_intervals(spec: str) -> list[tuple[str, int, int]]:
@@ -115,7 +116,7 @@ class BAMReader(DataSourceReader):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("bam source requires a path")
-        self._split_size = int(options.get("split_size", DEFAULT_SPLIT_SIZE))
+        self._options = options
         self._intervals = (
             parse_intervals(options["intervals"]) if options.get("intervals") else None
         )
@@ -177,20 +178,24 @@ class BAMReader(DataSourceReader):
     def partitions(self) -> list[InputPartition]:
         parts: list[InputPartition] = []
         plans: dict[str, list] = {}
-
-        def plan(path, refs, first_voffset, size):
-            if path not in plans:
-                plans[path] = self._plan_file(path, refs, first_voffset, size)
-            return plans[path]
-
         intervals = self._intervals if self._intervals is not None else self._pushed
         bounded = intervals is not None or self._unmapped
+        split = split_size(
+            self._options,
+            None if bounded else sum(size for *_, size in self._files),
+        )
+
+        def plan(path, first_voffset, size, idx=None):
+            if path not in plans:
+                plans[path] = self._plan_file(path, first_voffset, size, split, idx)
+            return plans[path]
+
         for path, refs, first_voffset, size in self._files:
             contigs = {name for name, _ in refs}
             if not bounded:
                 if self._rname_eq is not None and not (self._rname_eq & contigs):
                     continue  # pushed contig not in this file's dictionary
-                parts.extend(plan(path, refs, first_voffset, size))
+                parts.extend(plan(path, first_voffset, size))
                 continue
             idx = None
             if fs.exists(path + ".bai"):
@@ -210,7 +215,7 @@ class BAMReader(DataSourceReader):
                     # chunk list into each survivor (reference
                     # BAMInputFormat.filterByInterval, BAMInputFormat.java:542-644).
                     span = idx.span_for_intervals(refs, intervals)
-                    for p in plan(path, refs, first_voffset, size):
+                    for p in plan(path, first_voffset, size, idx):
                         b0, b1 = self._bounds(p)
                         cl = tuple(
                             (max(cb, b0), min(ce, b1))
@@ -222,7 +227,7 @@ class BAMReader(DataSourceReader):
                 else:
                     # No index: full scan, residual overlap filter at read
                     # time (the reference instead raises; we degrade gracefully).
-                    parts.extend(plan(path, refs, first_voffset, size))
+                    parts.extend(plan(path, first_voffset, size, idx))
             # a pushed rname excludes every unplaced read (its rname is null)
             if self._unmapped and self._rname_eq is None:
                 vstart = None
@@ -232,7 +237,7 @@ class BAMReader(DataSourceReader):
                     vstart = idx.start_of_last_linear_bin()
                 if vstart is None:
                     vstart = first_voffset
-                for p in plan(path, refs, first_voffset, size):
+                for p in plan(path, first_voffset, size, idx):
                     b0, b1 = self._bounds(p)
                     if b1 > vstart:
                         parts.append(
@@ -242,11 +247,13 @@ class BAMReader(DataSourceReader):
                         )
         return parts or [EmptyPartition()]
 
-    def _plan_file(self, path, refs, first_voffset, size) -> list[InputPartition]:
-        """Index-aligned voffset splits when a splitting index exists (cheap
-        driver-side lookups, zero data reads); otherwise raw byte ranges that
-        executors realign on first read (RawBAMPartition) — at 100 TB the
-        driver must not run the guesser per split."""
+    def _plan_file(self, path, first_voffset, size, raw, idx) -> list[InputPartition]:
+        """Splits of about ``raw`` compressed bytes. Index-aligned voffset
+        splits when a splitting index or a ``.bai`` exists (cheap
+        driver-side lookups, zero data reads); otherwise raw byte ranges
+        that executors realign on first read (RawBAMPartition) — at 100 TB
+        the driver must not run the guesser per split. ``idx`` is the
+        file's index when the caller has read it already, else None."""
         end_voffset = bgzf.make_voffset(size, 0)
         sbi = None
         if fs.exists(path + ".sbi"):
@@ -257,7 +264,6 @@ class BAMReader(DataSourceReader):
             # (SplittingBAMIndex.java:53-73)
             with fs.open_file(path + ".splitting-bai", "rb") as fh:
                 sbi = SplittingIndex.read_reference_layout(fh)
-        raw = self._split_size
         if sbi is None and fs.exists(path + ".bai"):
             # BAI-based split calculation (reference BAMInputFormat.java:
             # 333-477): linear-index entries are real record voffsets, so
@@ -265,22 +271,22 @@ class BAMReader(DataSourceReader):
             # driver-side lookups only, no guessing.
             import bisect
 
-            from hadoop_bam_spark.formats.bai import read_bai
+            if idx is None:
+                from hadoop_bam_spark.formats.bai import read_bai
 
-            idx = read_bai(path + ".bai", open_fn=fs.open_file)
+                idx = read_bai(path + ".bai", open_fn=fs.open_file)
             lin = sorted(
                 {v for r in idx.refs for v in r.linear if v > 0}
             )
             if lin:
-                end_v = bgzf.make_voffset(size, 0)
                 boundaries = [first_voffset]
                 pos = (first_voffset >> 16) + raw
                 while pos < size:
                     i = bisect.bisect_left(lin, pos << 16)
-                    if i < len(lin) and boundaries[-1] < lin[i] < end_v:
+                    if i < len(lin) and boundaries[-1] < lin[i] < end_voffset:
                         boundaries.append(lin[i])
                     pos += raw
-                boundaries.append(end_v)
+                boundaries.append(end_voffset)
                 return [
                     BAMPartition(path, boundaries[i], boundaries[i + 1])
                     for i in range(len(boundaries) - 1)

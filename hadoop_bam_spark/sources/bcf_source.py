@@ -7,6 +7,10 @@ with the BCF split guesser (BCFSplitGuesser.java:118-360 semantics,
 implemented in formats/bcf.py). Rows share VCF_SCHEMA with the text
 source, so queries are dispatch-transparent — the reference's
 multi-format VCF scan (VCFInputFormat.getFormat, VCFFormat.java:49-82).
+
+Options: ``split_size`` (most compressed bytes per partition, default 32
+MiB; an unbounded scan plans at least one split per core, down to 1 MiB
+splits, ``sources.split_size``), ``intervals`` and ``columns``.
 """
 
 from __future__ import annotations
@@ -20,10 +24,8 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from hadoop_bam_spark import fs
 from hadoop_bam_spark.formats import bcf, bgzf
 from hadoop_bam_spark.formats.vcf import VCF_SCHEMA
-from hadoop_bam_spark.sources import EmptyPartition, list_format_files
+from hadoop_bam_spark.sources import EmptyPartition, list_format_files, split_size
 from hadoop_bam_spark.sources.bam_source import parse_intervals
-
-DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
 
 #: decompressed-window budget for one guess: a record boundary must appear
 #: within a few blocks of any split start (analog of the reference's
@@ -243,7 +245,7 @@ class BCFReader(DataSourceReader):
         from hadoop_bam_spark.sources import pruned_schema
 
         self._schema = pruned_schema(VCF_SCHEMA, options)[0]
-        self._split_size = int(options.get("split_size", DEFAULT_SPLIT_SIZE))
+        self._options = options
         self._intervals = (
             parse_intervals(options["intervals"]) if options.get("intervals") else None
         )
@@ -269,10 +271,15 @@ class BCFReader(DataSourceReader):
 
     def partitions(self):
         parts: list[InputPartition] = []
+        sizes = {f: fs.file_size(f) for f in self._files}
+        split = split_size(
+            self._options,
+            None if self._intervals is not None else sum(sizes.values()),
+        )
         for f, (kind, hdr, _) in self._files.items():
-            size = fs.file_size(f)
+            size = sizes[f]
             if kind == "plain":
-                bounds = list(range(0, size, self._split_size)) + [size]
+                bounds = list(range(0, size, split)) + [size]
                 parts.extend(
                     BCFPlainPartition(f, bounds[i], bounds[i + 1])
                     for i in range(len(bounds) - 1)
@@ -285,7 +292,7 @@ class BCFReader(DataSourceReader):
 
                 splits = [
                     BCFBgzfPartition(f, s.start_coffset, s.end_coffset)
-                    for s in bgzf.align_splits(f, size, self._split_size, read_range)
+                    for s in bgzf.align_splits(f, size, split, read_range)
                 ]
                 if self._intervals is not None and fs.exists(f + ".csi"):
                     splits = self._filter_splits_by_csi(f, hdr, splits)

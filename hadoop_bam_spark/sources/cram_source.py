@@ -20,11 +20,13 @@ returned as residual.
 
 Options:
   path         file or directory of .cram files
-  split_size   target compressed bytes per partition (default 32 MiB)
+  split_size   most compressed bytes per partition (default 32 MiB); an
+               unbounded scan plans at least one split per core, down to
+               1 MiB splits (``sources.split_size``)
   records_per_split  target records per partition (default 200k). CRAM
                compresses so hard that byte-based sizing alone misplans
-               dense files — a 9 MB file can hold 2M records and would
-               scan on ONE core under the 32 MiB default (the reference's
+               dense files — a 9 MB file can hold 2M records, and 1 MiB
+               splits would still give one task 200k+ records (the reference's
                CRAMInputFormat.java:31-80 has the same byte-only
                weakness). The planner probes the first container header
                for record density; only when the byte plan would exceed
@@ -50,7 +52,7 @@ from hadoop_bam_spark import fs
 from hadoop_bam_spark.formats import cram
 from hadoop_bam_spark.formats.bam import cigar_ref_length
 from hadoop_bam_spark.formats.sam import SAM_SCHEMA
-from hadoop_bam_spark.sources import EmptyPartition, list_format_files
+from hadoop_bam_spark.sources import EmptyPartition, list_format_files, split_size
 
 #: compressed container-body read-ahead per rANS batch-decode call —
 #: sized to swallow a whole default 32 MB split in one batch (peak task
@@ -58,7 +60,6 @@ from hadoop_bam_spark.sources import EmptyPartition, list_format_files
 #: executor headroom even at 32 concurrent tasks)
 _READAHEAD_BYTES = 48 << 20
 
-DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
 DEFAULT_RECORDS_PER_SPLIT = 200_000
 #: ceiling on plan-time header walks (a denser file has FEWER containers,
 #: so the walk is cheap exactly when the record budget matters; a huge
@@ -100,7 +101,7 @@ class CRAMReader(DataSourceReader):
         from hadoop_bam_spark.sources import pruned_schema
 
         self._schema = pruned_schema(SAM_SCHEMA, options)[0]
-        self._split_size = int(options.get("split_size", DEFAULT_SPLIT_SIZE))
+        self._options = options
         self._records_per_split = int(
             options.get("records_per_split", DEFAULT_RECORDS_PER_SPLIT)
         )
@@ -149,6 +150,11 @@ class CRAMReader(DataSourceReader):
         from hadoop_bam_spark.formats import crai
 
         bounding = self._intervals if self._intervals is not None else self._pushed
+        bounded = bounding is not None or self._unmapped
+        split = split_size(
+            self._options,
+            None if bounded else sum(fs.file_size(f) for f, *_ in self._files),
+        )
         parts: list[CRAMPartition] = []
         for path, _major, refs, _rgs in self._files:
             entries = self._entries(path)
@@ -195,7 +201,7 @@ class CRAMReader(DataSourceReader):
                     if off in keep:
                         if run_start is None:
                             run_start = off
-                        elif off - run_start >= self._split_size:
+                        elif off - run_start >= split:
                             parts.append(CRAMPartition(path, run_start, off))
                             run_start = off
                         prev_end = nxt
@@ -208,13 +214,13 @@ class CRAMReader(DataSourceReader):
             # greedy container grouping to ~split_size compressed bytes,
             # AND ~records_per_split records when the file is dense enough
             # for the byte plan alone to overload single tasks
-            counts = self._density_counts(path, _major, offsets)
+            counts = self._density_counts(path, _major, offsets, split)
             bounds = [offsets[0]]
             recs = 0
             for i, off in enumerate(offsets[1:], start=1):
                 if counts is not None:
                     recs += counts[i - 1]
-                if off - bounds[-1] >= self._split_size or (
+                if off - bounds[-1] >= split or (
                     counts is not None and recs >= self._records_per_split
                 ):
                     bounds.append(off)
@@ -229,7 +235,7 @@ class CRAMReader(DataSourceReader):
         return parts or [EmptyPartition()]
 
     def _density_counts(
-        self, path: str, major: int, offsets: list[int]
+        self, path: str, major: int, offsets: list[int], split: int
     ) -> Optional[list[int]]:
         """Per-container record counts, or None when byte sizing suffices.
 
@@ -253,7 +259,7 @@ class CRAMReader(DataSourceReader):
                 first = hdr_at(offsets[0])
                 clen = first.header_size + first.length
                 density = first.n_records / max(clen, 1)
-                byte_splits = max(1, data_bytes // self._split_size)
+                byte_splits = max(1, data_bytes // split)
                 if (
                     density * data_bytes / byte_splits
                     <= self._records_per_split

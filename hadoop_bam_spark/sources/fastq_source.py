@@ -236,7 +236,7 @@ class FastqReader(DataSourceReader):
         if not path:
             raise ValueError("fastq source requires a path")
         self._path = path
-        self._split_size = int(options.get("split_size", 32 * 1024 * 1024))
+        self._options = options
         self._filter_failed = options.get("filter_failed_qc", "false").lower() == "true"
         from hadoop_bam_spark.sources import pruned_schema, stringency_option
 
@@ -247,7 +247,7 @@ class FastqReader(DataSourceReader):
     def partitions(self):
         return [
             FastqPartition(p.path, p.start, p.end)
-            for p in plan_text_splits(self._path, self._split_size, (".fastq", ".fq"))
+            for p in plan_text_splits(self._path, self._options, (".fastq", ".fq"))
         ] or [EmptyPartition()]
 
     def read(self, partition: FastqPartition):

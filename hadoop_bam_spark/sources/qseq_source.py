@@ -149,7 +149,7 @@ class QseqReader(DataSourceReader):
         if not path:
             raise ValueError("qseq source requires a path")
         self._path = path
-        self._split_size = int(options.get("split_size", 32 * 1024 * 1024))
+        self._options = options
         # input quality encoding: illumina (default, recode) or sanger
         self._recode = options.get("base_quality_encoding", "illumina") == "illumina"
         self._filter_failed = options.get("filter_failed_qc", "false").lower() == "true"
@@ -161,7 +161,7 @@ class QseqReader(DataSourceReader):
 
     def partitions(self):
         return plan_text_splits(
-            self._path, self._split_size, (".qseq", ".txt")
+            self._path, self._options, (".qseq", ".txt")
         ) or [EmptyPartition()]
 
     def read(self, partition: TextRangePartition):

@@ -8,6 +8,10 @@ header to re-inject, and '@' header lines are dropped at the scan
 
 Malformed lines: ``option("stringency", "strict"|"lenient"|"silent")``
 (default strict), as in the reference's ValidationStringency readers.
+
+``option("split_size")`` is the most bytes per partition (default 32 MiB);
+a scan plans at least one split per core, down to 1 MiB splits
+(``sources.split_size``). The FASTQ and QSEQ sources plan the same way.
 """
 
 from __future__ import annotations
@@ -19,9 +23,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from hadoop_bam_spark import fs
 from hadoop_bam_spark.formats.sam import SAM_SCHEMA, parse_sam_line
-from hadoop_bam_spark.sources import EmptyPartition, list_format_files
-
-DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
+from hadoop_bam_spark.sources import EmptyPartition, list_format_files, split_size
 
 
 @dataclass
@@ -31,19 +33,23 @@ class TextRangePartition(InputPartition):
     end: int
 
 
-def plan_text_splits(path: str, split_size: int, exts: tuple[str, ...]) -> list[TextRangePartition]:
-    parts = []
-    for f in list_format_files(path, *exts):
-        size = fs.file_size(f)
-        if size == 0:
-            continue
-        n = max(1, (size + split_size - 1) // split_size)
-        step = (size + n - 1) // n
-        parts.extend(
-            TextRangePartition(f, i * step, min((i + 1) * step, size))
-            for i in range(n)
-        )
-    return parts
+def text_splits(path: str, size: int, split: int) -> list[TextRangePartition]:
+    """Equal byte ranges of at most ``split`` bytes over one plain-text
+    file of ``size`` bytes; none for an empty file."""
+    n = -(-size // split)
+    step = -(-size // n) if n else 0
+    return [
+        TextRangePartition(path, i * step, min((i + 1) * step, size))
+        for i in range(n)
+    ]
+
+
+def plan_text_splits(path: str, options, exts: tuple[str, ...]) -> list[TextRangePartition]:
+    """Byte-range splits over the plain-text files ``path`` names, sized
+    by :func:`hadoop_bam_spark.sources.split_size` on their total bytes."""
+    files = [(f, fs.file_size(f)) for f in list_format_files(path, *exts)]
+    split = split_size(options, sum(size for _, size in files))
+    return [p for f, size in files for p in text_splits(f, size, split)]
 
 
 def iter_line_chunks(
@@ -109,7 +115,7 @@ class SAMReader(DataSourceReader):
         path = options.get("path")
         if not path:
             raise ValueError("sam source requires a path")
-        self._split_size = int(options.get("split_size", DEFAULT_SPLIT_SIZE))
+        self._options = options
         self._path = path
         from hadoop_bam_spark.sources import pruned_schema, stringency_option
 
@@ -122,7 +128,7 @@ class SAMReader(DataSourceReader):
         )
 
     def partitions(self):
-        return plan_text_splits(self._path, self._split_size, (".sam",)) or [
+        return plan_text_splits(self._path, self._options, (".sam",)) or [
             EmptyPartition()
         ]
 

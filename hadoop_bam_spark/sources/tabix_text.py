@@ -11,6 +11,9 @@ pruned at plan time through a ``.tbi`` or tabix-flavored ``.csi`` sidecar
 (VCFInputFormat.java:388-472). That filter applies to any
 coordinate-sorted text, so the VCF source plans and reads its text files
 through :func:`plan_text_partitions` and :func:`partition_line_chunks` too.
+``option("split_size")`` is the most bytes per split (default 32 MiB); a
+scan with no intervals plans at least one split per core, down to 1 MiB
+splits (:func:`hadoop_bam_spark.sources.split_size`).
 
 A :class:`TabixTextSpec` holds every decision that differs between the
 interval-text formats, and every binding is built from it: the batch
@@ -45,16 +48,15 @@ from hadoop_bam_spark.sources import (
     list_format_files,
     pruned_schema,
     pushed_intervals,
+    split_size,
     stringency_option,
 )
 from hadoop_bam_spark.sources.bam_source import parse_intervals
 from hadoop_bam_spark.sources.sam_source import (
     TextRangePartition,
     iter_line_chunks,
-    plan_text_splits,
+    text_splits,
 )
-
-DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024
 
 
 @dataclass
@@ -153,13 +155,13 @@ def iter_bgzf_owned_line_chunks(
                 yield [pending.decode("utf-8", "replace").rstrip("\r")]
 
 
-def plan_bgzf_splits(path: str, split_size: int) -> list[BGZFTextPartition]:
+def plan_bgzf_splits(path: str, split: int) -> list[BGZFTextPartition]:
     if fs.exists(path + ".bgzfi"):
         # sidecar block index: pure-lookup split alignment, zero data reads
         # (reference util/BGZFBlockIndex.java + BGZFSplitFileInputFormat)
         with fs.open_file(path + ".bgzfi", "rb") as fh:
             idx = bgzf.BGZFBlockIndex.read(fh)
-        splits = bgzf.align_splits_indexed(path, idx, split_size)
+        splits = bgzf.align_splits_indexed(path, idx, split)
         return [
             BGZFTextPartition(s.path, s.start_coffset, s.end_coffset) for s in splits
         ]
@@ -170,7 +172,7 @@ def plan_bgzf_splits(path: str, split_size: int) -> list[BGZFTextPartition]:
             fh.seek(start)
             return fh.read(length)
 
-    splits = bgzf.align_splits(path, size, split_size, read_range)
+    splits = bgzf.align_splits(path, size, split, read_range)
     return [BGZFTextPartition(s.path, s.start_coffset, s.end_coffset) for s in splits]
 
 
@@ -237,18 +239,21 @@ def sniff_text_compression(path: str) -> str:
     return "plain"
 
 
-def plan_text_partitions(files, split_size: int, intervals) -> list[InputPartition]:
+def plan_text_partitions(files, options, intervals) -> list[InputPartition]:
     """Partitions for line-oriented text files: byte-range splits for
     plain text, BGZF block splits pruned by a ``.tbi``/``.csi`` sidecar
     when ``intervals`` is set, and one whole-file partition for plain
-    gzip."""
+    gzip. Splits are sized by :func:`hadoop_bam_spark.sources.split_size`
+    on the files' total bytes; ``intervals`` make the scan bounded."""
+    sizes = [fs.file_size(f) for f in files]
+    split = split_size(options, None if intervals is not None else sum(sizes))
     parts: list[InputPartition] = []
-    for f in files:
+    for f, size in zip(files, sizes):
         kind = sniff_text_compression(f)
         if kind == "plain":
-            parts.extend(plan_text_splits(f, split_size, ()))
+            parts.extend(text_splits(f, size, split))
         elif kind == "bgzf":
-            splits = plan_bgzf_splits(f, split_size)
+            splits = plan_bgzf_splits(f, split)
             if intervals is not None:
                 if fs.exists(f + ".tbi"):
                     splits = filter_splits_by_tabix(f, splits, intervals)
@@ -363,7 +368,7 @@ class TabixTextReader(DataSourceReader):
         if not path:
             raise ValueError(f"{spec.name} source requires a path")
         self._spec = spec
-        self._split_size = int(options.get("split_size", DEFAULT_SPLIT_SIZE))
+        self._options = options
         self._intervals = (
             parse_intervals(options["intervals"]) if options.get("intervals") else None
         )
@@ -384,7 +389,7 @@ class TabixTextReader(DataSourceReader):
 
     def partitions(self):
         return plan_text_partitions(
-            self._files, self._split_size, self._intervals
+            self._files, self._options, self._intervals
         ) or [EmptyPartition()]
 
     def read(self, partition) -> Iterator:

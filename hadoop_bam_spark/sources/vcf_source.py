@@ -29,7 +29,6 @@ from hadoop_bam_spark.sources import (
 )
 from hadoop_bam_spark.sources.bam_source import parse_intervals
 from hadoop_bam_spark.sources.tabix_text import (
-    DEFAULT_SPLIT_SIZE,
     partition_line_chunks,
     plan_text_partitions,
 )
@@ -61,7 +60,7 @@ class VCFReader(DataSourceReader):
         path = options.get("path")
         if not path:
             raise ValueError("vcf source requires a path")
-        self._split_size = int(options.get("split_size", DEFAULT_SPLIT_SIZE))
+        self._options = options
         self._intervals = (
             parse_intervals(options["intervals"]) if options.get("intervals") else None
         )
@@ -91,14 +90,7 @@ class VCFReader(DataSourceReader):
         self._files = [f for f in all_files if f not in set(bcf_files)]
         self._bcf: Optional[BCFReader] = None
         if bcf_files:
-            self._bcf = BCFReader(
-                {
-                    "path": ",".join(bcf_files),
-                    "split_size": str(self._split_size),
-                    **({"intervals": options["intervals"]} if options.get("intervals") else {}),
-                    **({"columns": options["columns"]} if options.get("columns") else {}),
-                }
-            )
+            self._bcf = BCFReader(dict(options, path=",".join(bcf_files)))
         # header (and samples) read once on the driver per file
         self._samples = {f: read_vcf_header(f).samples for f in self._files}
 
@@ -122,7 +114,7 @@ class VCFReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        parts = plan_text_partitions(self._files, self._split_size, self._intervals)
+        parts = plan_text_partitions(self._files, self._options, self._intervals)
         if self._bcf is not None:
             parts.extend(
                 p for p in self._bcf.partitions()

@@ -6,8 +6,8 @@
   encoder for VCF text (VCFv4.3 section 6);
 - the SAMv1 specification's example alignment and its 45-bp reference
   (section 1.1);
-- a seeded VCF generator, and a seeded BAM record writer with mixed
-  aux-tag layouts.
+- a seeded VCF generator, a seeded BAM record writer with mixed
+  aux-tag layouts, and seeded SAM and FASTQ text.
 
 Tests can count and compare what these produce without reading it through
 the engine: expected values come from the generators' own arithmetic or
@@ -23,13 +23,14 @@ BGZF_EOF = bytes.fromhex(
     "1f8b08040000000000ff0600424302001b0003000000000000000000")
 
 
-def bgzf_compress(data: bytes, block_payload: int = 0xFF00) -> bytes:
-    """``data`` as BGZF blocks of at most ``block_payload`` bytes, plus the
-    EOF marker block."""
+def bgzf_compress(data: bytes, block_payload: int = 0xFF00,
+                  level: int = 6) -> bytes:
+    """``data`` as BGZF blocks of at most ``block_payload`` bytes, deflated
+    at zlib ``level`` (0 stores them), plus the EOF marker block."""
     out = bytearray()
     for i in range(0, len(data), block_payload):
         chunk = data[i:i + block_payload]
-        c = zlib.compressobj(6, zlib.DEFLATED, -15)
+        c = zlib.compressobj(level, zlib.DEFLATED, -15)
         deflated = c.compress(chunk) + c.flush()
         # ID1 ID2 CM FLG MTIME XFL OS XLEN, then the BC subfield with BSIZE
         # (total block size - 1: 18 header + payload + 8 trailer bytes)
@@ -306,6 +307,38 @@ SAM_SPEC_EXAMPLE = "".join("\t".join(ln.split()) + "\n" for ln in [
     "r003 2064 ref 29 17 6H5M * 0 0 TAGGC * SA:Z:ref,9,+,5S6M,30,1;",
     "r001 147 ref 37 30 9M = 7 -39 CAGCGGCAT * NM:i:1",
 ])
+
+
+def gen_sam_text(n: int, seed: int = 3) -> str:
+    """An unsorted SAM file of ``n`` all-match alignments named ``s<i>``
+    over the contigs of :data:`GEN_BAM_REFS`."""
+    rng = random.Random(seed)
+    lines = ["@HD\tVN:1.6\tSO:unsorted"] + [
+        f"@SQ\tSN:{name}\tLN:{ln}" for name, ln in GEN_BAM_REFS]
+    for i in range(n):
+        l_seq = rng.randint(40, 120)
+        seq = "".join(rng.choice("ACGT") for _ in range(l_seq))
+        qual = "".join(chr(33 + rng.randint(2, 40)) for _ in range(l_seq))
+        lines.append("\t".join([
+            f"s{i}", str(rng.choice([0, 16])), rng.choice(["chr1", "chr2"]),
+            str(rng.randint(1, 400_000)), "60", f"{l_seq}M", "*", "0", "0",
+            seq, qual, f"NM:i:{rng.randint(0, 9)}"]))
+    return "\n".join(lines) + "\n"
+
+
+def gen_fastq_text(n: int, seed: int = 4) -> str:
+    """``n`` FASTQ records with Casava 1.8 names (``...:<i> 1:N:0:ACGT``)."""
+    rng = random.Random(seed)
+    out = []
+    for i in range(n):
+        l_seq = rng.randint(40, 120)
+        out.append(
+            f"@INST:7:FC01:1:{1101 + i % 8}:{i}:{rng.randint(1, 9999)} "
+            f"1:{rng.choice('NY')}:0:ACGT\n"
+            + "".join(rng.choice("ACGTN") for _ in range(l_seq)) + "\n+\n"
+            + "".join(chr(33 + rng.randint(2, 40)) for _ in range(l_seq))
+            + "\n")
+    return "".join(out)
 
 
 # ---------------------------------------------------------------------------
