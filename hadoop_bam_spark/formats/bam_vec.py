@@ -16,6 +16,10 @@ once straight into Arrow arrays:
 - sequence nibbles decode via ``bytes.hex()`` + ``str.translate`` (the hex
   digit of each nibble IS its 4-bit code, so hex → base is one C-speed
   table pass);
+- CIGAR text is formatted once per distinct op sequence, not per record:
+  the op bytes are dictionary-encoded, only the dictionary entries are
+  formatted (and cached on the decoder across batches), and a ``take`` by
+  the dictionary indices puts the texts back in record order;
 - residual predicates (unmapped-only, contig pre-check, interval overlap
   with CIGAR reference-length arithmetic) evaluate as numpy masks BEFORE
   any string column is built.
@@ -62,7 +66,17 @@ _CONSUMES_REF = np.zeros(16, dtype=bool)
 for _i, _c in enumerate(CIGAR_OPS):
     _CONSUMES_REF[_i] = _c in "MDN=X"
 
-_CIGAR_CHARS = np.array(list(CIGAR_OPS) + ["?"] * (16 - len(CIGAR_OPS)))
+#: cigar op code -> op char; the 7 codes SAM leaves unassigned read "?"
+_CIGAR_CHARS = CIGAR_OPS + "?" * (16 - len(CIGAR_OPS))
+
+#: most distinct op sequences a decoder remembers the text of
+CIGAR_CACHE_MAX = 65536
+
+
+def _format_cigar(ops: bytes) -> str:
+    """Packed uint32 cigar ops -> SAM cigar text."""
+    return "".join(f"{op >> 4}{_CIGAR_CHARS[op & 0xF]}"
+                   for op in np.frombuffer(ops, dtype="<u4").tolist())
 
 
 def iter_body_batches(f, vstart: int, vend: int, batch_records: int = 8192):
@@ -304,6 +318,8 @@ class BAMBatchDecoder:
             [name for name, _ in refs] + [None], dtype=object
         )
         self._nref = len(refs)
+        #: packed cigar op bytes -> text, across this decoder's batches
+        self._cigar_text: dict = {}
 
     def _ref_names(self, rid: np.ndarray):
         import pyarrow as pa
@@ -506,28 +522,34 @@ class BAMBatchDecoder:
             out["tags"] = pa.array(t, type=out["tags"].type)
 
     def _cigar_column(self, arr, cigar_start, n_cigar):
-        """n_cigar==0 -> null (SAM '*'); ops render as count+opchar pieces
-        built with one vectorized int->str conversion. Single-op cigars
-        (the common aligned-read case) skip the per-record join entirely."""
+        """n_cigar==0 -> null (SAM '*'). The records' op bytes are
+        dictionary-encoded, each distinct op sequence is formatted once
+        (and remembered across batches in ``_cigar_text``), and the texts
+        are taken back to record order by the dictionary indices."""
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         n = len(cigar_start)
         ops_bytes, off = _gather(arr, cigar_start, 4 * n_cigar)
         if ops_bytes.size == 0:
             return pa.nulls(n, type=pa.string())
-        ops = ops_bytes.view("<u4")
-        pieces = np.char.add((ops >> 4).astype("U9"), _CIGAR_CHARS[ops & 0xF])
-        if bool((n_cigar <= 1).all()):
-            out = np.full(n, None, dtype=object)
-            out[n_cigar == 1] = pieces.astype(object)
-            return pa.array(out, type=pa.string())
-        plist = pieces.tolist()
-        bounds = (off // 4).astype(np.int64)
-        out = [
-            "".join(plist[a:b]) if b > a else None
-            for a, b in zip(bounds[:-1].tolist(), bounds[1:].tolist())
-        ]
-        return pa.array(out, type=pa.string())
+        nulls, null_count = _validity(n_cigar == 0, n)
+        raw = pa.Array.from_buffers(
+            pa.binary(), n,
+            [nulls, pa.py_buffer(off.astype(np.int32)), pa.py_buffer(ops_bytes)],
+            null_count,
+        )
+        d = pc.dictionary_encode(raw)
+        cache = self._cigar_text
+        texts = []
+        for ops in d.dictionary.to_pylist():
+            text = cache.get(ops)
+            if text is None:
+                text = _format_cigar(ops)
+                if len(cache) < CIGAR_CACHE_MAX:
+                    cache[ops] = text
+            texts.append(text)
+        return pa.array(texts, type=pa.string()).take(d.indices)
 
     def _seq_column(self, arr, seq_start, nb, l_seq):
         """Packed nibbles -> base string. hex() emits (high, low) nibble

@@ -11,8 +11,10 @@ ONE contiguous byte blob:
   (n, 32) uint8 matrices through a structured dtype — no per-record pack;
 - variable sections (qname / cigar ops / packed seq / qual / tags) scatter
   with the same repeat/cumsum "ramp" index the decoder gathers with;
-- sequences nibble-pack via a 256-entry LUT + two fancy-index assignments
-  (high nibbles on even bases, OR-in low nibbles on odd bases);
+- sequences nibble-pack in pairs: a 256-entry LUT maps bases to nibbles,
+  one ``np.insert`` pads each odd-length record with a 0 nibble, and each
+  packed byte is ``nibs[2k] << 4 | nibs[2k + 1]``, written with one
+  assignment through the ramp index;
 - cigar strings and tag (key, value) pairs are dictionary-encoded first:
   only UNIQUE values pay the Python parse (real data has a handful of
   distinct cigar shapes and low-cardinality tag values), then per-record
@@ -294,6 +296,8 @@ class BAMBatchEncoder:
         seq_vals, l_seq, seq_null, _ = _string_parts(col["seq"])
         nb = (l_seq + 1) // 2
         qual_vals, qual_lens, qual_null, _ = _string_parts(col["qual"])
+        # an empty qual is missing, as in bam.encode_record's `if qual`
+        qual_null = qual_null | (qual_lens == 0)
         bad = (~qual_null) & (qual_lens != l_seq)
         if bad.any():
             i = int(np.flatnonzero(bad)[0])
@@ -355,27 +359,25 @@ class BAMBatchEncoder:
         if cig_bytes.size:
             src = _ramp(cigar_src_start, 4 * n_cigar)
             blob[_ramp(cigar_tgt, 4 * n_cigar)] = cig_bytes[src]
-        # seq nibbles: hi on even bases, OR-in lo on odd bases. One fused
-        # repeat: t2 = 2*seq_tgt + pos_in_rec, so byte target = t2 >> 1 and
-        # parity = t2 & 1 (2*seq_tgt is even).
+        # seq nibbles in pairs: a 0 pad nibble after each odd-length
+        # record's last base makes every record's nibbles an even run, so
+        # byte k of the packed section is nibble pair (2k, 2k + 1)
         if seq_vals.size:
             nibs = _SEQ_LUT[seq_vals]
-            base_off = _exclusive_cumsum(l_seq)[:-1]
-            t2 = np.repeat((2 * seq_tgt - base_off).astype(np.int64), l_seq)
-            t2 += np.arange(len(nibs), dtype=np.int64)
-            tgt = t2 >> 1
-            even = (t2 & 1) == 0
-            blob[tgt[even]] = nibs[even] << 4
-            t_odd = tgt[~even]
-            blob[t_odd] = blob[t_odd] | nibs[~even]
+            odd = (l_seq & 1).astype(bool)
+            if odd.any():
+                nibs = np.insert(nibs, np.cumsum(l_seq)[odd], 0)
+            blob[_ramp(seq_tgt, nb)] = (nibs[0::2] << 4) | nibs[1::2]
         # qual: phred text - 33; missing qual -> 0xFF fill
         qual_section = _ramp(qual_tgt, l_seq)
-        if qual_section.size:
-            null_of_base = np.repeat(qual_null, l_seq)
+        if (qual_null & (l_seq > 0)).any():
+            missing = np.repeat(qual_null, l_seq)
             flat = np.empty(len(qual_section), dtype=np.uint8)
-            flat[null_of_base] = 0xFF
-            flat[~null_of_base] = qual_vals - 33
+            flat[missing] = 0xFF
+            flat[~missing] = qual_vals - 33
             blob[qual_section] = flat
+        else:
+            blob[qual_section] = qual_vals - 33
         # tags
         if tag_entry_len.size and int(tag_entry_len.sum()):
             entry_rec = np.repeat(

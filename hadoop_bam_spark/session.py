@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import socket
 import tempfile
@@ -100,10 +101,26 @@ def worker_transport() -> str:
 
 
 def local_cpus() -> int:
-    """Cores of the local master: ``SPARK_GRAFT_CPUS``, else the machine's.
+    """Cores of the local master: ``SPARK_GRAFT_CPUS`` (which
+    :func:`get_spark` sets from a ``local[N]`` master), else the machine's.
     Python workers inherit the driver's environment, so the source planners
     (:func:`hadoop_bam_spark.sources.split_size`) read the same number."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def master_cores(master: str) -> int | None:
+    """Task slots of a local master: ``N`` for ``local[N]`` and
+    ``local[N,F]``, ``os.cpu_count()`` for ``local[*]``, 1 for ``local``;
+    None for any other master."""
+    m = re.fullmatch(r"local(?:\[(\*|[1-9]\d*)(?:,\d+)?\])?", master.strip())
+    if m is None:
+        return None
+    n = m.group(1)
+    if n is None:
+        return 1
+    if n == "*":
+        return os.cpu_count() or 1
+    return int(n)
 
 
 def get_spark(
@@ -112,8 +129,13 @@ def get_spark(
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    master = master or f"local[{local_cpus()}]"
+    cores = master_cores(master)
+    if cores is not None and SparkContext._active_spark_context is None:
+        # the JVM about to start, and every Python worker it launches,
+        # inherits this, so the split planners size for the session's slots
+        os.environ["SPARK_GRAFT_CPUS"] = str(cores)
     cpus = local_cpus()
-    master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     export_import_root()

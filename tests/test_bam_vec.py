@@ -318,3 +318,46 @@ def test_tags_column_malformed_raises_row_codec_error(bad):
     with pytest.raises(ValueError) as col_err:
         _tag_lists(bodies)
     assert str(col_err.value) == str(row_err.value)
+
+
+def test_cigar_formatted_once_per_distinct_op_sequence(monkeypatch):
+    """A 10k-read BAM with 3 CIGAR shapes, decoded by one decoder over
+    several batches, formats each distinct op sequence exactly once."""
+    from tests import textgen
+
+    shapes = [[(100, "M")], [(40, "M"), (3, "I"), (57, "M")],
+              [(4, "S"), (60, "M"), (5, "D"), (36, "M")]]
+    bodies = textgen.gen_bam_records(10000, seed=3, cigars=shapes)
+    data = textgen.bam_file(bodies)
+    formatted = []
+    real = bam_vec._format_cigar
+    monkeypatch.setattr(bam_vec, "_format_cigar",
+                        lambda ops: formatted.append(ops) or real(ops))
+    fh = io.BytesIO(data)
+    _, refs, first = bam.read_header(bgzf.BGZFReader(fh))
+    dec = bam_vec.BAMBatchDecoder(refs, fields=["cigar"])
+    got, n_batches = [], 0
+    for buf, starts, lens in bam_vec.iter_body_batches(
+            fh, first, bgzf.make_voffset(len(data), 0), 2048):
+        got += dec.decode_span(buf, starts, lens)["cigar"].to_pylist()
+        n_batches += 1
+    assert n_batches >= 4
+    assert got == [bam.decode_record(b, refs)[5] for b in bodies]
+    assert sorted(set(got) - {None}) == ["100M", "40M3I57M", "4S60M5D36M"]
+    assert len(formatted) == len(set(formatted)) == 3
+    assert len(dec._cigar_text) == 3
+
+
+def test_cigar_text_cache_is_bounded():
+    """More distinct op sequences than the cache holds: the cache stops at
+    its bound and every record still gets its own text."""
+    n = bam_vec.CIGAR_CACHE_MAX + 3000
+    prefix = struct.Struct("<iiBBHHHiiii")
+    bodies = [prefix.pack(0, 0, 2, 0, 0, 1, 0, 0, -1, -1, 0) + b"r\x00"
+              + struct.pack("<I", k << 4) for k in range(1, n + 1)]
+    dec = bam_vec.BAMBatchDecoder(REFS, fields=["cigar"])
+    for a in range(0, n, 10000):
+        got = dec.decode(bodies[a:a + 10000])["cigar"].to_pylist()
+        assert got == [f"{k}M" for k in range(a + 1, min(a + 10000, n) + 1)]
+        assert len(dec._cigar_text) <= bam_vec.CIGAR_CACHE_MAX
+    assert len(dec._cigar_text) == bam_vec.CIGAR_CACHE_MAX

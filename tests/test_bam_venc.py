@@ -6,8 +6,11 @@ import io
 import numpy as np
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from hadoop_bam_spark.formats import bam, bgzf
+from hadoop_bam_spark.formats.bam_vec import BAMBatchDecoder
 from hadoop_bam_spark.formats.bam_venc import BAMBatchEncoder, reg2bin_vec
 
 REFS = [("chr1", 100000), ("chr2", 50000)]
@@ -181,6 +184,80 @@ def test_voffset_of_u_matches_tell():
     r = bgzf.BGZFReader(io.BytesIO(data))
     r.seek_voffset(w.voffset_of_u(us[17]))
     assert r.read(4) == payload[:4]
+
+
+# --- vectorized codec against the scalar codec -----------------------------
+
+#: every IUPAC code in both cases, '=', and bases the codec maps to N
+_BASES = bam.SEQ_CODE + bam.SEQ_CODE.lower() + "XUZ.*-?j"
+_QUALS = "".join(map(chr, range(33, 127)))
+_TAGS = st.dictionaries(
+    st.sampled_from(["NM", "MD", "AS", "XZ", "RG", "XB"]),
+    st.sampled_from(["i:1", "i:-7", "Z:abc", "Z:", "A:Q", "f:1.5",
+                     "B:c,1,-2", "B:I,7", "H:1AFF", "7", "hello", "1.5"]),
+    max_size=4)
+_CIGARS = st.one_of(
+    st.none(), st.just(""),
+    st.lists(st.tuples(st.integers(0, 300), st.sampled_from(bam.CIGAR_OPS)),
+             min_size=1, max_size=6).map(
+        lambda ops: "".join(f"{c}{op}" for c, op in ops)))
+
+
+@st.composite
+def _sam_row(draw):
+    """One SAM row: odd, even, empty and null seq; a qual that is null,
+    empty or as long as seq; 0-op and multi-op cigars; tags."""
+    seq = draw(st.one_of(st.none(), st.text(_BASES, max_size=17)))
+    qual = draw(st.one_of(
+        st.none(), st.just(""),
+        st.text(_QUALS, min_size=len(seq or ""), max_size=len(seq or ""))))
+    return (
+        draw(st.text("abcXYZ:0123456789_", min_size=1, max_size=12)),
+        draw(st.integers(0, 0xFFFF)),
+        draw(st.sampled_from([None, "chr1", "chr2", "chrUn"])),
+        draw(st.integers(0, 100000)),
+        draw(st.integers(0, 255)),
+        draw(_CIGARS),
+        draw(st.sampled_from([None, "chr1", "chr2"])),
+        draw(st.integers(0, 50000)),
+        draw(st.integers(-(2**31), 2**31 - 1)),
+        seq, qual, draw(_TAGS),
+    )
+
+
+def _check_codec(enc, dec, rows):
+    """``enc`` gives the bytes of ``bam.encode_record`` and ``dec`` the rows
+    of ``bam.decode_record`` on them."""
+    records = [bam.encode_record(tuple(r), REF_INDEX) for r in rows]
+    blob, lens, _ = enc.encode_batch(rows_to_batch(rows))
+    assert blob == b"".join(records)
+    assert lens.tolist() == [len(r) for r in records]
+    cols = dec.decode([r[4:] for r in records])
+    got = {k: cols[k].to_pylist() for k in cols}
+    got["tags"] = [dict(t) for t in got["tags"]]
+    want = [bam.decode_record(r[4:], REFS) for r in records]
+    for j, name in enumerate(dec.fields):
+        assert got[name] == [w[j] for w in want], name
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.lists(_sam_row(), min_size=1, max_size=12),
+                min_size=2, max_size=4))
+def test_vectorized_codec_matches_scalar(batches):
+    """Every batch through one encoder and one decoder, so their per-instance
+    caches (cigar and tag encodings, cigar texts) carry across batches."""
+    enc, dec = BAMBatchEncoder(REFS), BAMBatchDecoder(REFS)
+    for rows in batches:
+        _check_codec(enc, dec, rows)
+
+
+def test_vectorized_codec_all_null_cigars():
+    rows = [(f"u{i}", 4, None, 0, 0, None, None, 0, 0, "ACGTA"[:i], None, {})
+            for i in range(5)]
+    enc, dec = BAMBatchEncoder(REFS), BAMBatchDecoder(REFS)
+    _check_codec(enc, dec, rows)
+    _check_codec(enc, dec, [r[:5] + ("",) + r[6:] for r in rows])
+    assert dec._cigar_text == {}
 
 
 # --- long-CIGAR CG-tag convention (SAM spec 4.2.2, r8) ----------------------

@@ -1,6 +1,7 @@
-"""Python worker transport: ``session.get_spark`` runs Spark's Python worker
-traffic over Unix domain sockets in a private directory it removes at
-interpreter exit, and stays on loopback TCP where it cannot."""
+"""``session.get_spark``: it tells the split planners the local master's
+task slots, and it runs Spark's Python worker traffic over Unix domain
+sockets in a private directory it removes at interpreter exit, staying on
+loopback TCP where it cannot."""
 
 import json
 import os
@@ -14,6 +15,27 @@ from hadoop_bam_spark import session
 from tests import textgen
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.mark.parametrize("master, cores", [
+    ("local", 1), ("local[1]", 1), ("local[8]", 8), ("local[2,3]", 2),
+    ("local[*]", os.cpu_count()), ("local[*,4]", os.cpu_count()),
+    ("local[0]", None), ("local[x]", None), ("yarn", None),
+    ("spark://host:7077", None), ("local-cluster[2,1,1024]", None),
+])
+def test_master_cores(master, cores):
+    assert session.master_cores(master) == cores
+
+
+def test_session_slots_reach_the_planners(spark):
+    """The suite's ``local[8]`` session exported its 8 task slots as
+    ``SPARK_GRAFT_CPUS`` before its JVM started, so the split planners in
+    its Python workers size for the slots Spark runs."""
+    assert os.environ["SPARK_GRAFT_CPUS"] == str(spark.sparkContext.defaultParallelism)
+    assert session.local_cpus() == spark.sparkContext.defaultParallelism
+    in_worker = spark.sparkContext.parallelize([0], 1).map(
+        lambda _: os.environ.get("SPARK_GRAFT_CPUS")).collect()
+    assert in_worker == [os.environ["SPARK_GRAFT_CPUS"]]
 
 
 def test_socket_parent_choice():

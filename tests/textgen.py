@@ -423,13 +423,16 @@ def _gen_tags(rng: random.Random, i: int, unplaced: bool) -> bytes:
 
 
 def gen_bam_records(n: int = 3000, seed: int = 5, repeat_tag: bool = False,
-                    non_ascii: bool = False) -> list[bytes]:
+                    non_ascii: bool = False,
+                    cigars: list | None = None) -> list[bytes]:
     """``n`` coordinate-sorted BAM record bodies (no block_size prefix)
     over GEN_BAM_REFS, ending in an unplaced-unmapped tail. Every tenth
     placed read is unmapped (placed at its mate). ``repeat_tag`` gives one
     record a second NM field and ``non_ascii`` one record a latin-1 Z
     string, the two layouts the columnar tag decoder hands back to the row
-    codec."""
+    codec. ``cigars``, a list of ``[(count, op), ...]`` shapes, gives mapped
+    read ``i`` the shape ``cigars[i % len(cigars)]`` and its query length,
+    in place of a random one."""
     rng = random.Random(seed)
     n_tail = n // 20
     placed = sorted(
@@ -444,6 +447,9 @@ def gen_bam_records(n: int = 3000, seed: int = 5, repeat_tag: bool = False,
         l_seq = rng.randint(40, 120)
         unmapped = unplaced or i % 10 == 9
         cigar = [] if unmapped else _gen_cigar(rng, l_seq)
+        if cigar and cigars:
+            cigar = cigars[i % len(cigars)]
+            l_seq = sum(c for c, op in cigar if op in "MIS=X")
         ref_len = sum(c for c, op in cigar if op in "MDN=X") or 1
         flag = 0x1 | (0x40 if i % 2 else 0x80)
         if unmapped:
