@@ -9,6 +9,17 @@ splits with no overlap and attaching the clamped chunk list for read-time
 chunk-to-chunk iteration (the analog of htsjdk's createIndexIterator used
 at BAMRecordReader.java:170-175).
 
+``ref_chunks`` bounds each query on both sides, for BAI, tabix and CSI
+alike. On the left, chunks end past the linear-index entry of the query
+start's 16 kb window. On the right, chunks begin before the first chunk of
+the nearest bin that starts at or after the query end. Both bounds hold
+only for a coordinate-sorted file, which every index here presumes. The
+right bound is htslib's ``max_off`` (``hts_itr_query``, Bonfield et al.,
+GigaScience 2021); htsjdk gets the same effect at read time, as its query
+iterator stops once records pass the interval end. Without it, chunks of
+coarse bins far to the right of the query (reads straddling 16 kb to 8 Mb
+bin edges) stay in the plan.
+
 Also covers the unplaced-unmapped traversal inputs
 (BAMInputFormat.java:586-641): ``start_of_last_linear_bin`` and the
 ``n_no_coor`` count drive the trailing unmapped-only split.
@@ -32,19 +43,32 @@ BAI_MAGIC = b"BAI\x01"
 #: Pseudo-bin holding per-reference metadata (SAM spec §5.2 note).
 PSEUDO_BIN = 37450
 
-#: Linear-index window size is 2^14 = 16 kb.
+#: Linear-index window size is 2^14 = 16 kb, also the finest bin size.
 LINEAR_SHIFT = 14
+#: Levels below the root bin in the BAI/tabix binning scheme.
+DEPTH = 5
+#: Upper voffset bound that bounds nothing.
+NO_BOUND = 1 << 64
 
 
-def reg2bins(beg: int, end: int) -> list[int]:
+def reg2bins(
+    beg: int, end: int, min_shift: int = LINEAR_SHIFT, depth: int = DEPTH
+) -> list[int]:
     """All bins that may contain records overlapping [beg, end) 0-based
-    half-open (SAM spec §5.3 reg2bins)."""
+    half-open (SAM spec §5.3 reg2bins; hts-specs CSI generalizes it to any
+    ``(min_shift, depth)``, and BAI/tabix are its (14, 5)). As in htslib,
+    ``end`` is clamped to the scheme's range, past which no bin lies: a
+    whole-contig query would otherwise list 2^26 finest bins."""
+    end = min(end, 1 << (min_shift + depth * 3))
     if end <= beg:
         end = beg + 1
     end -= 1
-    bins = [0]
-    for shift, base in ((26, 1), (23, 9), (20, 73), (17, 585), (14, 4681)):
-        bins.extend(range(base + (beg >> shift), base + (end >> shift) + 1))
+    bins = []
+    t, s = 0, min_shift + depth * 3
+    for level in range(depth + 1):
+        bins.extend(range(t + (beg >> s), t + (end >> s) + 1))
+        s -= 3
+        t += 1 << (level * 3)
     return bins
 
 
@@ -61,21 +85,77 @@ def merge_chunks(chunks: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return out
 
 
-def ref_chunks(r: "RefIndex", beg0: int, end0: int) -> list[tuple[int, int]]:
-    """Merged chunk spans of one reference that may hold records overlapping
-    [beg0, end0), pruned by the linear index. Shared by BAI and tabix —
-    the two formats differ only in header/meta, not binning."""
-    min_off = 0
-    if r.linear:
-        win = min(beg0 >> LINEAR_SHIFT, len(r.linear) - 1)
-        min_off = r.linear[win]
-    cand = [
-        (b, e)
-        for bin_ in reg2bins(beg0, end0)
+def _max_off(bins: dict, end0: int, min_shift: int, depth: int) -> int:
+    """Begin of the first chunk of the nearest present bin whose range
+    starts at or after ``end0`` (htslib ``hts_itr_query``'s ``max_off``),
+    or NO_BOUND. The walk moves right at the finest level and steps up to
+    the parent from a first child, since a parent starts where its first
+    child does; running off the right end climbs to the root."""
+    if end0 >= 1 << (min_shift + 3 * depth):
+        return NO_BOUND
+    bin_ = ((1 << 3 * depth) - 1) // 7 + ((end0 - 1) >> min_shift) + 1
+    while True:
+        while bin_ % 8 == 1:
+            bin_ = (bin_ - 1) >> 3
+        if bin_ == 0:
+            return NO_BOUND
+        chunks = bins.get(bin_)
+        if chunks:
+            return min(b for b, _ in chunks)
+        bin_ += 1
+
+
+def ref_chunks(
+    r: "RefIndex",
+    beg0: int,
+    end0: int,
+    min_shift: int = LINEAR_SHIFT,
+    depth: int = DEPTH,
+) -> list[tuple[int, int]]:
+    """Merged chunk spans of one reference that may hold records
+    overlapping [beg0, end0), bounded on both sides as htslib's
+    ``hts_itr_query`` bounds them. Shared by BAI, tabix and CSI, which
+    differ only in header/meta and ``(min_shift, depth)``.
+
+    - Left: the linear-index entry of beg0's window (BAI, tabix), the
+      least voffset of a record overlapping that window. CSI has no linear
+      index and gets no left bound (module docstring of ``csi``).
+    - Right: ``_max_off``. A bin's records start inside its range, so in a
+      coordinate-sorted file no record at or past that voffset starts
+      before end0. The linear entry of the next window is no right bound:
+      a long read reaching into that window pulls the entry back before
+      reads that start inside the query.
+
+    Chunks outside the bounds drop, and chunk ends are clamped to the
+    right bound, itself a record start."""
+    if end0 <= beg0:
+        end0 = beg0 + 1
+    min_off = r.linear[min(beg0 >> min_shift, len(r.linear) - 1)] if r.linear else 0
+    max_off = _max_off(r.bins, end0, min_shift, depth)
+    return merge_chunks([
+        (b, min(e, max_off))
+        for bin_ in reg2bins(beg0, end0, min_shift, depth)
         for b, e in r.bins.get(bin_, ())
-        if e > min_off
-    ]
-    return merge_chunks(cand)
+        if e > min_off and b < max_off
+    ])
+
+
+def interval_spans(
+    refs: list["RefIndex"],
+    name_to_id: dict,
+    intervals: list[tuple[str, int, int]],
+    min_shift: int = LINEAR_SHIFT,
+    depth: int = DEPTH,
+) -> list[tuple[int, int]]:
+    """Union of ``ref_chunks`` spans over 1-based inclusive (contig, start,
+    stop) intervals; contigs missing from ``name_to_id`` contribute none."""
+    chunks: list[tuple[int, int]] = []
+    for contig, start, stop in intervals:
+        rid = name_to_id.get(contig)
+        if rid is not None and rid < len(refs):
+            chunks.extend(
+                ref_chunks(refs[rid], max(start - 1, 0), stop, min_shift, depth))
+    return merge_chunks(chunks)
 
 
 @dataclass
@@ -161,8 +241,7 @@ class BAIIndex:
 
     def chunks_for(self, ref_id: int, beg0: int, end0: int) -> list[tuple[int, int]]:
         """Merged chunk spans that may hold records overlapping
-        [beg0, end0) on ``ref_id``, pruned by the linear index
-        (htsjdk BAMIndexContent / getSpanOverlapping semantics)."""
+        [beg0, end0) on ``ref_id`` (``ref_chunks``)."""
         if not (0 <= ref_id < len(self.refs)):
             return []
         return ref_chunks(self.refs[ref_id], beg0, end0)
@@ -175,12 +254,7 @@ class BAIIndex:
         """Union of chunk spans over 1-based inclusive (contig, start, stop)
         intervals, resolved against the file's reference dictionary."""
         name_to_id = {name: i for i, (name, _) in enumerate(refs)}
-        chunks: list[tuple[int, int]] = []
-        for contig, start, stop in intervals:
-            rid = name_to_id.get(contig)
-            if rid is not None:
-                chunks.extend(self.chunks_for(rid, max(start - 1, 0), stop))
-        return merge_chunks(chunks)
+        return interval_spans(self.refs, name_to_id, intervals)
 
     def start_of_last_linear_bin(self) -> Optional[int]:
         """Virtual offset of the last populated linear-index window — every

@@ -415,6 +415,11 @@ def encode_record(row: tuple, ref_index: dict[str, int]) -> bytes:
                 f"invalid qual string for {qname!r}: chars must be in "
                 "'!'..'~' (phred+33)"
             )
+        if len(qual) != l_seq:
+            raise ValueError(
+                f"BAM encode: qual length {len(qual)} != seq length {l_seq} "
+                f"for {qname!r}"
+            )
         qual_b = qual.encode("latin-1").translate(_QUAL_SUB33)
     else:
         qual_b = b"\xff" * l_seq

@@ -9,6 +9,17 @@ row-level overlap residual stays). ``build_csi`` constructs the index from
 any BCF we can read, one sequential voffset-tracking pass — engine-written
 files get real indexes without external tooling (mirrors bai.build_bai).
 
+Queries go through ``bai.ref_chunks`` at the index's ``(min_shift,
+depth)``, so a CSI span is bounded on the right as BAI's and tabix's are:
+chunks begin before the first chunk of the nearest bin that starts at or
+after the query end (htslib's ``max_off``; it holds for a coordinate-sorted
+file). CSI gets no left bound. htslib takes one from the ``loffset`` of the
+finest present bin at the query start, which it fills from its linear
+index: the first record overlapping the bin's first window. The engine's
+writers record each bin's own first record instead (below), and a read
+that straddles into the query window from a coarser bin starts before it,
+so that ``loffset`` is no lower bound for the query.
+
 Binary layout (BGZF-compressed, like tabix)::
 
     magic "CSI\\x01"  min_shift:i32  depth:i32  l_aux:i32  aux[l_aux]
@@ -28,24 +39,9 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 from hadoop_bam_spark.formats import bgzf
-from hadoop_bam_spark.formats.bai import RefIndex, merge_chunks
+from hadoop_bam_spark.formats.bai import RefIndex, interval_spans
 
 CSI_MAGIC = b"CSI\x01"
-
-
-def reg2bins_csi(beg: int, end: int, min_shift: int, depth: int) -> list[int]:
-    """All bins possibly overlapping [beg, end) 0-based half-open
-    (hts-specs CSI reg2bins, generalized UCSC binning)."""
-    if end <= beg:
-        end = beg + 1
-    end -= 1
-    bins = []
-    t, s = 0, min_shift + depth * 3
-    for level in range(depth + 1):
-        bins.extend(range(t + (beg >> s), t + (end >> s) + 1))
-        s -= 3
-        t += 1 << (level * 3)
-    return bins
 
 
 def reg2bin_csi(beg: int, end: int, min_shift: int, depth: int) -> int:
@@ -156,17 +152,6 @@ class CSIIndex:
             out += struct.pack("<Q", self.n_no_coor)
         return bytes(out)
 
-    def chunks_for_rid(self, rid: int, beg0: int, end0: int):
-        if rid < 0 or rid >= len(self.refs):
-            return []
-        r = self.refs[rid]
-        cand = [
-            c
-            for b in reg2bins_csi(beg0, end0, self.min_shift, self.depth)
-            for c in r.bins.get(b, ())
-        ]
-        return merge_chunks(cand)
-
     def span_for_intervals(
         self,
         intervals: list[tuple[str, int, int]],
@@ -175,12 +160,8 @@ class CSIIndex:
         """Union of chunk voffset spans over 1-based inclusive intervals;
         contig names resolve through the BCF header dictionary order."""
         name_to_id = {c: i for i, c in enumerate(contigs)}
-        chunks = []
-        for contig, start, stop in intervals:
-            rid = name_to_id.get(contig)
-            if rid is not None:
-                chunks.extend(self.chunks_for_rid(rid, max(start - 1, 0), stop))
-        return merge_chunks(chunks)
+        return interval_spans(self.refs, name_to_id, intervals,
+                              self.min_shift, self.depth)
 
 
 def names_from_aux(aux: bytes) -> list[str]:

@@ -7,6 +7,13 @@ bounded traversal (VCFInputFormat.java:388-472: intervals → chunk file
 pointers → split overlap filtering); the VCF source uses it the same way at
 plan time.
 
+Queries share ``bai.ref_chunks``, so tabix spans carry BAI's two bounds:
+the linear-index entry of the query start's window on the left, and on the
+right the first chunk of the nearest bin that starts at or after the query
+end (htslib's ``max_off``). Both presume a coordinate-sorted file, as tabix
+itself does; htsjdk's tabix reader stops at the interval end to the same
+effect.
+
 The .tbi container itself is BGZF-compressed.  ``build_tabix`` constructs
 an index from any BGZF-compressed tab-text file we can read (one pass with
 line-level virtual offsets), so engine-written ``.vcf.bgz`` files get real
@@ -33,7 +40,7 @@ from hadoop_bam_spark.formats.bai import (
     LINEAR_SHIFT,
     PSEUDO_BIN,
     RefIndex,
-    merge_chunks,
+    interval_spans,
     ref_chunks,
 )
 from hadoop_bam_spark.formats.bam import reg2bin
@@ -151,10 +158,8 @@ class TabixIndex:
     ) -> list[tuple[int, int]]:
         """Union of chunk voffset spans over 1-based inclusive
         (contig, start, stop) intervals."""
-        chunks: list[tuple[int, int]] = []
-        for contig, start, stop in intervals:
-            chunks.extend(self.chunks_for(contig, max(start - 1, 0), stop))
-        return merge_chunks(chunks)
+        return interval_spans(
+            self.refs, {n: i for i, n in enumerate(self.names)}, intervals)
 
 
 def read_tabix(path: str, open_fn=open) -> TabixIndex:

@@ -161,6 +161,25 @@ def test_qual_validation_raises():
         BAMBatchEncoder(REFS).encode_batch(rows_to_batch(rows))
 
 
+def test_scalar_encode_rejects_qual_length_mismatch():
+    """A qual shorter or longer than seq, or present with no seq, would
+    write a record whose tags start inside the qual bytes."""
+    for seq, qual in (("ACGT", "III"), ("ACG", "IIII"), (None, "III")):
+        row = ("q", 0, "chr1", 1, 30, "4M", None, 0, 0, seq, qual,
+               {"NM": "i:1"})
+        with pytest.raises(ValueError, match="qual length"):
+            bam.encode_record(row, REF_INDEX)
+
+
+def test_scalar_fallback_batch_rejects_qual_length_mismatch():
+    """A batch the vectorized encoder hands to the scalar fallback (a CIGAR
+    over 65,535 ops) raises for a short qual, as the vectorized path does."""
+    short = ("q", 0, "chr1", 1, 30, "4M", None, 0, 0, "ACGT", "III", {})
+    with pytest.raises(ValueError, match="qual length"):
+        BAMBatchEncoder(REFS).encode_batch(
+            rows_to_batch([_long_cigar_row(), short]))
+
+
 def test_voffset_of_u_matches_tell():
     """Analytic voffset recovery == what tell_voffset said at write time,
     across block boundaries (multi-block payload)."""

@@ -26,9 +26,12 @@ class TestBinningParity:
     @settings(max_examples=100, deadline=None)
     def test_reg2bins_matches_bai_at_14_5(self, beg, ln):
         end = min(beg + ln, 2**29 - 1)
-        assert sorted(csi.reg2bins_csi(beg, end, 14, 5)) == sorted(
-            bai.reg2bins(beg, end)
-        )
+        # SAM spec §5.3 reg2bins, with its fixed BAI level offsets
+        last = end - 1
+        want = [0]
+        for shift, base in ((26, 1), (23, 9), (20, 73), (17, 585), (14, 4681)):
+            want.extend(range(base + (beg >> shift), base + (last >> shift) + 1))
+        assert sorted(bai.reg2bins(beg, end, 14, 5)) == want
 
     @given(st.integers(0, 2**20), st.integers(1, 5000),
            st.sampled_from([(12, 4), (14, 5), (16, 6)]))
@@ -36,7 +39,7 @@ class TestBinningParity:
     def test_bin_of_region_in_reg2bins(self, beg, ln, scheme):
         ms, d = scheme
         end = beg + ln
-        assert csi.reg2bin_csi(beg, end, ms, d) in csi.reg2bins_csi(
+        assert csi.reg2bin_csi(beg, end, ms, d) in bai.reg2bins(
             beg, end, ms, d
         )
 
