@@ -24,19 +24,26 @@ Also covers the unplaced-unmapped traversal inputs
 (BAMInputFormat.java:586-641): ``start_of_last_linear_bin`` and the
 ``n_no_coor`` count drive the trailing unmapped-only split.
 
-``build_bai`` constructs the index from any BAM we can read (one
-sequential pass tracking virtual offsets), so engine-written files get
-real indexes without external tooling.
+``IndexBuilder`` is the one binning-index builder, for BAI, tabix and
+CSI alike, at any ``(min_shift, depth)``: bins with their chunks, a linear
+index and the per-reference pseudo-bin metadata, accumulated from record
+columns in file order (``add_batch``). The writers feed it each part as
+they write it and ``merge`` the parts; the offline indexers
+(``build_bai``, ``tabix.build_tabix``, ``csi.build_csi``) are thin record
+walks that feed it a whole file, so engine-written files get real indexes
+without external tooling. It coalesces a bin's chunks within one BGZF
+block, as htslib does, and CSI's per-bin ``loffset`` comes from its linear
+index (``csi.loffsets``).
 """
 
 from __future__ import annotations
 
+import itertools
 import struct
 from dataclasses import dataclass, field
 from typing import BinaryIO, Optional
 
 from hadoop_bam_spark.formats import bgzf
-from hadoop_bam_spark.formats.bam import cigar_ref_length, reg2bin  # noqa: F401
 
 BAI_MAGIC = b"BAI\x01"
 
@@ -163,13 +170,57 @@ class RefIndex:
     bins: dict[int, list[tuple[int, int]]] = field(default_factory=dict)
     linear: list[int] = field(default_factory=list)
     # per-bin loffset (CSI only — BAI carries the linear index instead);
-    # preserved through read->write so htslib's seek hint survives
+    # preserved through read->write
     loffset: dict[int, int] = field(default_factory=dict)
     # pseudo-bin metadata (-1 = absent)
     off_beg: int = -1
     off_end: int = -1
     n_mapped: int = -1
     n_unmapped: int = -1
+
+
+def refs_from_bytes(data: bytes, p: int, n_ref: int) -> tuple[list[RefIndex], int]:
+    """``n_ref`` references in the layout BAI and tabix share, from
+    ``data[p:]``: per reference its bins with their chunks (the pseudo-bin
+    as metadata), then its linear index. Also returns the offset past
+    them."""
+    refs = []
+    for _ in range(n_ref):
+        r = RefIndex()
+        (n_bin,) = struct.unpack_from("<i", data, p)
+        p += 4
+        for _ in range(n_bin):
+            bin_, n_chunk = struct.unpack_from("<Ii", data, p)
+            flat = struct.unpack_from(f"<{2 * n_chunk}Q", data, p + 8)
+            p += 8 + 16 * n_chunk
+            chunks = list(zip(flat[::2], flat[1::2]))
+            if bin_ == PSEUDO_BIN and n_chunk == 2:
+                (r.off_beg, r.off_end), (r.n_mapped, r.n_unmapped) = chunks
+            else:
+                r.bins[bin_] = chunks
+        (n_intv,) = struct.unpack_from("<i", data, p)
+        r.linear = list(struct.unpack_from(f"<{n_intv}Q", data, p + 4))
+        p += 4 + 8 * n_intv
+        refs.append(r)
+    return refs, p
+
+
+def refs_to_bytes(refs: list[RefIndex]) -> bytes:
+    """``refs`` in the layout ``refs_from_bytes`` reads; a reference with
+    counts gets the pseudo-bin."""
+    out = bytearray()
+    for r in refs:
+        has_pseudo = r.n_mapped >= 0 or r.n_unmapped >= 0
+        out += struct.pack("<i", len(r.bins) + has_pseudo)
+        for bin_, chunks in sorted(r.bins.items()):
+            out += struct.pack(f"<Ii{2 * len(chunks)}Q", bin_, len(chunks),
+                               *itertools.chain.from_iterable(chunks))
+        if has_pseudo:
+            out += struct.pack("<IiQQQQ", PSEUDO_BIN, 2, max(r.off_beg, 0),
+                               max(r.off_end, 0), max(r.n_mapped, 0),
+                               max(r.n_unmapped, 0))
+        out += struct.pack(f"<i{len(r.linear)}Q", len(r.linear), *r.linear)
+    return bytes(out)
 
 
 @dataclass
@@ -181,59 +232,22 @@ class BAIIndex:
 
     @classmethod
     def read(cls, fh: BinaryIO) -> "BAIIndex":
+        data = fh.read()
+        if data[:4] != BAI_MAGIC:
+            raise ValueError("not a BAI file (bad magic)")
         try:
-            return cls._read_unchecked(fh)
+            (n_ref,) = struct.unpack_from("<i", data, 4)
+            refs, p = refs_from_bytes(data, 8, n_ref)
         except struct.error as e:
             # raise-don't-garbage: a truncated/corrupt sidecar is a data
             # error for the planner to surface, not an engine crash
             raise ValueError(f"truncated or corrupt BAI: {e}") from e
-
-    @classmethod
-    def _read_unchecked(cls, fh: BinaryIO) -> "BAIIndex":
-        if fh.read(4) != BAI_MAGIC:
-            raise ValueError("not a BAI file (bad magic)")
-        (n_ref,) = struct.unpack("<i", fh.read(4))
-        refs = []
-        for _ in range(n_ref):
-            r = RefIndex()
-            (n_bin,) = struct.unpack("<i", fh.read(4))
-            for _ in range(n_bin):
-                bin_, n_chunk = struct.unpack("<Ii", fh.read(8))
-                chunks = [
-                    struct.unpack("<QQ", fh.read(16)) for _ in range(n_chunk)
-                ]
-                if bin_ == PSEUDO_BIN and len(chunks) == 2:
-                    (r.off_beg, r.off_end), (r.n_mapped, r.n_unmapped) = chunks
-                else:
-                    r.bins[bin_] = [(b, e) for b, e in chunks]
-            (n_intv,) = struct.unpack("<i", fh.read(4))
-            if n_intv:
-                r.linear = list(struct.unpack(f"<{n_intv}Q", fh.read(8 * n_intv)))
-            refs.append(r)
-        tail = fh.read(8)
-        n_no_coor = struct.unpack("<Q", tail)[0] if len(tail) == 8 else None
-        return cls(refs, n_no_coor)
+        tail = data[p:p + 8]
+        return cls(refs, struct.unpack("<Q", tail)[0] if len(tail) == 8 else None)
 
     def write(self, fh: BinaryIO) -> None:
-        fh.write(BAI_MAGIC)
-        fh.write(struct.pack("<i", len(self.refs)))
-        for r in self.refs:
-            has_pseudo = r.n_mapped >= 0 or r.n_unmapped >= 0
-            fh.write(struct.pack("<i", len(r.bins) + (1 if has_pseudo else 0)))
-            for bin_ in sorted(r.bins):
-                chunks = r.bins[bin_]
-                fh.write(struct.pack("<Ii", bin_, len(chunks)))
-                for b, e in chunks:
-                    fh.write(struct.pack("<QQ", b, e))
-            if has_pseudo:
-                fh.write(struct.pack("<Ii", PSEUDO_BIN, 2))
-                fh.write(struct.pack("<QQ", max(r.off_beg, 0), max(r.off_end, 0)))
-                fh.write(
-                    struct.pack("<QQ", max(r.n_mapped, 0), max(r.n_unmapped, 0))
-                )
-            fh.write(struct.pack("<i", len(r.linear)))
-            if r.linear:
-                fh.write(struct.pack(f"<{len(r.linear)}Q", *r.linear))
+        fh.write(BAI_MAGIC + struct.pack("<i", len(self.refs))
+                 + refs_to_bytes(self.refs))
         if self.n_no_coor is not None:
             fh.write(struct.pack("<Q", self.n_no_coor))
 
@@ -269,68 +283,44 @@ class BAIIndex:
         return None
 
 
+#: CIGAR ops that consume the reference (M, D, N, =, X), as a bit mask
+_REF_OPS = 0x18D
+
+
+def _bam_records(reader):
+    """(refID, beg0, end0, mapped, at, end_v) of each record of a BAM
+    stream, read at fixed offsets: refID, pos, l_read_name, n_cigar_op,
+    flag, then the CIGAR ops. An unmapped read spans one base. A CIGAR over
+    65535 ops sits in the CG tag behind a ``kSmN`` placeholder, whose N
+    already carries the reference length."""
+    while True:
+        at = reader.tell_voffset()
+        head = reader.read(4)
+        if len(head) < 4:
+            return
+        (size,) = struct.unpack("<i", head)
+        body = reader.read(size)
+        if len(body) < size:
+            return
+        rid, pos0, l_name, n_op, flag = struct.unpack_from("<iiB3xHH", body)
+        mapped = not flag & 0x4
+        ref_len = sum(op >> 4 for op in struct.unpack_from(
+            f"<{n_op}I", body, 32 + l_name) if _REF_OPS >> (op & 0xF) & 1)
+        yield (rid, pos0, pos0 + (max(ref_len, 1) if mapped else 1), mapped,
+               at, reader.tell_voffset())
+
+
 def build_bai(path: str, open_fn=open) -> BAIIndex:
     """One sequential pass over a BAM file → a BAIIndex (the offline analog
-    of htsjdk's BAMIndexer; lets engine-written BAMs carry real indexes).
-
-    Chunks for consecutive same-bin records are coalesced when they touch
-    the same BGZF block, matching how htsjdk keeps per-bin chunk lists
-    small on sorted input.
-    """
+    of htsjdk's BAMIndexer; lets engine-written BAMs carry real indexes)."""
     from hadoop_bam_spark.formats import bam
 
+    b = IndexBuilder()
     with open_fn(path, "rb") as fh:
         reader = bgzf.BGZFReader(fh)
         _, refs, _ = bam.read_header(reader)
-        idx = BAIIndex([RefIndex(linear=[]) for _ in refs])
-        n_no_coor = 0
-        while True:
-            at = reader.tell_voffset()
-            head = reader.read(4)
-            if len(head) < 4:
-                break
-            (block_size,) = struct.unpack("<i", head)
-            body = reader.read(block_size)
-            if len(body) < block_size:
-                break
-            end_v = reader.tell_voffset()
-            ref_id, pos0 = struct.unpack_from("<ii", body, 0)
-            # flag lives at offset 14 (refID i32, pos i32, l_read_name u8,
-            # mapq u8, bin u16, n_cigar_op u16, then flag u16)
-            (flag,) = struct.unpack_from("<H", body, 14)
-            if ref_id < 0 or pos0 < 0:
-                n_no_coor += 1
-                continue
-            r = idx.refs[ref_id]
-            if flag & 0x4:
-                ref_len = 1
-                r.n_unmapped = max(r.n_unmapped, 0) + 1
-            else:
-                row = bam.decode_record(body, refs)
-                ref_len = cigar_ref_length(row[5])
-                r.n_mapped = max(r.n_mapped, 0) + 1
-            end0 = pos0 + ref_len
-            bin_ = reg2bin(pos0, end0)
-            bl = r.bins.setdefault(bin_, [])
-            if bl and (at <= bl[-1][1] or (at >> 16) <= (bl[-1][1] >> 16)):
-                bl[-1] = (bl[-1][0], max(bl[-1][1], end_v))
-            else:
-                bl.append((at, end_v))
-            if r.off_beg < 0:
-                r.off_beg = at
-            r.off_end = end_v
-            first_win, last_win = pos0 >> LINEAR_SHIFT, (end0 - 1) >> LINEAR_SHIFT
-            if len(r.linear) <= last_win:
-                r.linear.extend([0] * (last_win + 1 - len(r.linear)))
-            for w in range(first_win, last_win + 1):
-                if r.linear[w] == 0 or at < r.linear[w]:
-                    r.linear[w] = at
-        for r in idx.refs:
-            if r.off_beg >= 0:  # ref has records -> pseudo-bin counts are 0-based
-                r.n_mapped = max(r.n_mapped, 0)
-                r.n_unmapped = max(r.n_unmapped, 0)
-        idx.n_no_coor = n_no_coor
-        return idx
+        b.add_records(_bam_records(reader))
+    return BAIIndex(*IndexBuilder.merge([(b, 0)], 0, range(len(refs))))
 
 
 def read_bai(path: str, open_fn=open) -> BAIIndex:
@@ -339,11 +329,12 @@ def read_bai(path: str, open_fn=open) -> BAIIndex:
 
 
 # ---------------------------------------------------------------------------
-# Distributed index build: per-part stats accumulated DURING the executor
-# write (part-local voffsets), merged driver-side with offset shifting —
-# replaces a post-merge sequential re-read of the whole output, which at
-# 100 TB would double the write path through one process. The same
-# shift-and-merge idea the .sbi merge uses (SAMFileMerger.java:105-149).
+# The one binning-index builder. Offline indexers feed it a whole file;
+# writers feed it each part DURING the executor write (part-local voffsets)
+# and merge the parts driver-side with offset shifting, which replaces a
+# post-merge sequential re-read of the whole output (at 100 TB that would
+# double the write path through one process). The same shift-and-merge
+# idea the .sbi merge uses (SAMFileMerger.java:105-149).
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -356,46 +347,69 @@ class _PartRef:
     n_unmapped: int = 0
 
 
-class PartIndexStats:
-    """Binning-index accumulation for ONE part file, keyed by reference id
-    (BAM) or contig name (tabix). Voffsets are part-local; ``shifted``
-    rebases them onto the merged file."""
+def _shift_v(v: int, base: int) -> int:
+    return ((v >> 16) + base) << 16 | (v & 0xFFFF)
 
-    def __init__(self):
-        self.refs: dict = {}
-        self.order: list = []  # keys in first-appearance order (tabix names)
+
+def _add_chunk(bl: list, beg: int, end: int) -> None:
+    """Append chunk [beg, end) to a bin's chunk list, joining the last
+    chunk when it starts before the end of the BGZF block that chunk ends
+    in (htslib's ``compress_binning`` rule; seeking within one block is
+    free)."""
+    if bl and (beg >> 16) <= (bl[-1][1] >> 16):
+        bl[-1] = (bl[-1][0], max(bl[-1][1], end))
+    else:
+        bl.append((beg, end))
+
+
+class IndexBuilder:
+    """Binning-index accumulation for one file or one part file, in the
+    ``(min_shift, depth)`` scheme of hts-specs CSIv1; BAI and tabix use its
+    (14, 5). Records come in file order, keyed by reference id, with the
+    voffsets they were written at.
+
+    Per reference it keeps each bin's chunks (``_add_chunk``), a linear
+    index of the least start voffset of the records overlapping each
+    ``1 << min_shift`` window (a window nothing overlaps is absent, so a
+    record at voffset 0 claims its windows like any other), the first start
+    and last end voffsets, and mapped and unmapped counts. ``merge`` turns
+    parts into the file's RefIndex list."""
+
+    def __init__(self, min_shift: int = LINEAR_SHIFT, depth: int = DEPTH):
+        self.min_shift = min_shift
+        self.depth = depth
+        self.refs: dict = {}  # key -> _PartRef, in first-appearance order
         self.n_no_coor = 0
 
-    def add(self, key, pos0: int, end0: int, mapped: bool, at: int, end_v: int):
-        r = self.refs.get(key)
-        if r is None:
-            r = self.refs[key] = _PartRef()
-            self.order.append(key)
+    def add(self, key, beg0: int, end0: int, mapped: bool, at: int,
+            end_v: int):
+        """One placed record written at [at, end_v): the rule
+        :meth:`add_batch` vectorizes."""
+        import numpy as np
+
+        from hadoop_bam_spark.formats.bam_venc import reg2bin_vec
+
+        r = self.refs.setdefault(key, _PartRef())
         if mapped:
             r.n_mapped += 1
         else:
             r.n_unmapped += 1
-        bin_ = reg2bin(pos0, end0)
-        bl = r.bins.setdefault(bin_, [])
-        if bl and (at <= bl[-1][1] or (at >> 16) <= (bl[-1][1] >> 16)):
-            bl[-1] = (bl[-1][0], max(bl[-1][1], end_v))
-        else:
-            bl.append((at, end_v))
+        bin_ = int(reg2bin_vec(np.array([beg0]), np.array([end0]),
+                               self.min_shift, self.depth)[0])
+        _add_chunk(r.bins.setdefault(bin_, []), at, end_v)
         if r.off_beg < 0:
             r.off_beg = at
         r.off_end = max(r.off_end, end_v)
-        first_win, last_win = pos0 >> LINEAR_SHIFT, max(pos0, end0 - 1) >> LINEAR_SHIFT
-        for w in range(first_win, last_win + 1):
-            prev = r.linear.get(w)
-            if prev is None or at < prev:
-                r.linear[w] = at
+        for w in range(beg0 >> self.min_shift,
+                       (max(beg0, end0 - 1) >> self.min_shift) + 1):
+            r.linear[w] = min(r.linear.get(w, at), at)
 
-    def add_batch(self, rid, pos0, end0, mapped, at, end_v):
+    def add_batch(self, rid, beg0, end0, mapped, at, end_v):
         """Vector form of :meth:`add` over one batch of records written in
-        file order (numpy arrays; ``at``/``end_v`` are each record's
-        part-local start and end voffsets, with end_v >= at). Records with
-        no coordinate (rid < 0 or pos0 < 0) count toward ``n_no_coor``, as
-        in :meth:`add_sam_row`. Leaves the state per-record ``add`` would.
+        file order (``at``/``end_v`` are each record's start and end
+        voffsets, with end_v >= at). Records with no coordinate (rid < 0
+        or beg0 < 0) count toward ``n_no_coor``. Leaves the state
+        per-record ``add`` would.
 
         Chunks: records are stably grouped by (reference, bin). A record
         opens a new chunk when its start block is past the block of the
@@ -406,14 +420,14 @@ class PartIndexStats:
 
         from hadoop_bam_spark.formats.bam_venc import reg2bin_vec
 
-        rid, pos0, end0, at, end_v = (
-            np.asarray(x, dtype=np.int64) for x in (rid, pos0, end0, at, end_v))
+        rid, beg0, end0, at, end_v = (
+            np.asarray(x, dtype=np.int64) for x in (rid, beg0, end0, at, end_v))
         mapped = np.asarray(mapped, dtype=bool)
-        placed = (rid >= 0) & (pos0 >= 0)
+        placed = (rid >= 0) & (beg0 >= 0)
         if not bool(placed.all()):
             self.n_no_coor += int(len(placed) - placed.sum())
-            rid, pos0, end0, mapped, at, end_v = (
-                x[placed] for x in (rid, pos0, end0, mapped, at, end_v))
+            rid, beg0, end0, mapped, at, end_v = (
+                x[placed] for x in (rid, beg0, end0, mapped, at, end_v))
         if not len(rid):
             return
 
@@ -424,11 +438,7 @@ class PartIndexStats:
         last_end = np.full(len(keys), -1, dtype=np.int64)
         np.maximum.at(last_end, inv, end_v)
         for j in np.argsort(first).tolist():
-            key = int(keys[j])
-            r = self.refs.get(key)
-            if r is None:
-                r = self.refs[key] = _PartRef()
-                self.order.append(key)
+            r = self.refs.setdefault(int(keys[j]), _PartRef())
             r.n_mapped += int(n_map[j])
             r.n_unmapped += int(n_all[j] - n_map[j])
             if r.off_beg < 0:
@@ -436,7 +446,7 @@ class PartIndexStats:
             r.off_end = max(r.off_end, int(last_end[j]))
 
         # chunks per (reference, bin)
-        kb = (rid << 16) | reg2bin_vec(pos0, end0)
+        kb = (rid << 32) | reg2bin_vec(beg0, end0, self.min_shift, self.depth)
         order = np.argsort(kb, kind="stable")
         kb, a, e = kb[order], at[order], end_v[order]
         seg_start = np.ones(len(kb), dtype=bool)
@@ -444,7 +454,7 @@ class PartIndexStats:
         seg = np.cumsum(seg_start) - 1
         seg_keys = kb[seg_start].tolist()
         carry = np.array(
-            [self.refs[k >> 16].bins.get(k & 0xFFFF, [(-1, -1)])[-1][1]
+            [self.refs[k >> 32].bins.get(k & 0xFFFFFFFF, [(-1, -1)])[-1][1]
              for k in seg_keys], dtype=np.int64)
         # segmented running max of end_v: dense ranks offset per segment
         # keep np.maximum.accumulate from crossing segment boundaries
@@ -461,15 +471,15 @@ class PartIndexStats:
         run_end = np.maximum.reduceat(e, run_start)
         for i, mx in zip(run_start.tolist(), run_end.tolist()):
             k = seg_keys[seg[i]]
-            bl = self.refs[k >> 16].bins.setdefault(k & 0xFFFF, [])
+            bl = self.refs[k >> 32].bins.setdefault(k & 0xFFFFFFFF, [])
             if opens[i]:
                 bl.append((int(a[i]), mx))
             else:
                 bl[-1] = (bl[-1][0], max(bl[-1][1], mx))
 
-        # linear index: min start voffset per (reference, 16 kb window)
-        fw = pos0 >> LINEAR_SHIFT
-        nw = (np.maximum(pos0, end0 - 1) >> LINEAR_SHIFT) - fw + 1
+        # linear index: min start voffset per (reference, window)
+        fw = beg0 >> self.min_shift
+        nw = (np.maximum(beg0, end0 - 1) >> self.min_shift) - fw + 1
         rec = np.repeat(np.arange(len(rid)), nw)
         first_of = np.cumsum(nw) - nw
         win = fw[rec] + np.arange(len(rec)) - first_of[rec]
@@ -479,79 +489,65 @@ class PartIndexStats:
         for k, v in zip(wkeys.tolist(), wmin.tolist()):
             lin = self.refs[k >> 32].linear
             w = k & 0xFFFFFFFF
-            prev = lin.get(w)
-            if prev is None or v < prev:
-                lin[w] = v
+            lin[w] = min(lin.get(w, v), v)
 
-    def add_sam_row(self, row: tuple, ref_index: dict, at: int, end_v: int):
-        """Accumulate one SAM_SCHEMA row being written at [at, end_v)."""
-        rname, pos, flag, cigar = row[2], row[3], row[1], row[5]
-        ref_id = ref_index.get(rname, -1) if rname else -1
-        pos0 = pos - 1
-        if ref_id < 0 or pos0 < 0:
-            self.n_no_coor += 1
+    def add_records(self, records, batch: int = 1 << 16) -> None:
+        """``add_batch`` over an iterable of (rid, beg0, end0, mapped, at,
+        end_v) tuples, ``batch`` records at a time."""
+        it = iter(records)
+        while rows := list(itertools.islice(it, batch)):
+            self.add_batch(*zip(*rows))
+
+    def remap_part_end(self, old: int, new: int) -> None:
+        """Rebase the end-of-part voffset representation.
+
+        The writer expresses the final record's end as (last short block,
+        tail offset); a reader scanning the MERGED file expresses the same
+        byte as (next part's first block, 0). BCF parts remap after close so
+        the merged index equals a rebuild from the merged file; BAM parts
+        keep the writer's form. Only chunk ENDS and off_end can hold the
+        part-end voffset (no record starts there)."""
+        if old == new:
             return
-        mapped = not flag & 0x4
-        ref_len = cigar_ref_length(cigar) if mapped else 1
-        self.add(ref_id, pos0, pos0 + ref_len, mapped, at, end_v)
+        for r in self.refs.values():
+            for chunks in r.bins.values():
+                if chunks and chunks[-1][1] == old:
+                    chunks[-1] = (chunks[-1][0], new)
+            if r.off_end == old:
+                r.off_end = new
 
-
-def _shift_v(v: int, base: int) -> int:
-    return ((v >> 16) + base) << 16 | (v & 0xFFFF)
-
-
-def merge_part_stats(
-    parts: list[tuple["PartIndexStats", int]],
-    header_len: int,
-    keys: list,
-) -> dict:
-    """Merge ordered (stats, part_compressed_length) into file-level
-    RefIndex objects. ``keys`` fixes the reference order (BAM: range(n_ref);
-    tabix callers pass names in first-appearance order). Returns
-    {key: RefIndex} plus ('__n_no_coor__': int)."""
-    merged: dict = {k: RefIndex(linear=[]) for k in keys}
-    n_no_coor = 0
-    base = header_len
-    for stats, part_len in parts:
-        n_no_coor += stats.n_no_coor
-        for key, pr in stats.refs.items():
-            r = merged[key]
-            for bin_, chunks in pr.bins.items():
-                bl = r.bins.setdefault(bin_, [])
-                for b, e in chunks:
-                    b, e = _shift_v(b, base), _shift_v(e, base)
-                    if bl and (b <= bl[-1][1] or (b >> 16) <= (bl[-1][1] >> 16)):
-                        bl[-1] = (bl[-1][0], max(bl[-1][1], e))
-                    else:
-                        bl.append((b, e))
-            for w, off in pr.linear.items():
-                off = _shift_v(off, base)
-                if len(r.linear) <= w:
-                    r.linear.extend([0] * (w + 1 - len(r.linear)))
-                if r.linear[w] == 0 or off < r.linear[w]:
-                    r.linear[w] = off
-            if pr.off_beg >= 0:
-                sb = _shift_v(pr.off_beg, base)
-                if r.off_beg < 0 or sb < r.off_beg:
-                    r.off_beg = sb
+    @staticmethod
+    def merge(
+        parts: list[tuple["IndexBuilder", int]], header_len: int, keys
+    ) -> tuple[list[RefIndex], int]:
+        """Ordered (builder, part_compressed_length) -> (RefIndex per key
+        of ``keys``, n_no_coor), with each part's voffsets shifted past the
+        header and the parts before it. A reference no record reaches keeps
+        the -1 counts, so it gets no pseudo-bin; an unset linear window
+        reads 0, as BAI and tabix store it."""
+        merged = {k: (RefIndex(), {}) for k in keys}
+        n_no_coor = 0
+        base = header_len
+        for stats, part_len in parts:
+            n_no_coor += stats.n_no_coor
+            for key, pr in stats.refs.items():
+                r, linear = merged[key]
+                for bin_, chunks in pr.bins.items():
+                    bl = r.bins.setdefault(bin_, [])
+                    for b, e in chunks:
+                        _add_chunk(bl, _shift_v(b, base), _shift_v(e, base))
+                for w, off in pr.linear.items():
+                    off = _shift_v(off, base)
+                    linear[w] = min(linear.get(w, off), off)
+                if r.off_beg < 0:
+                    r.off_beg = _shift_v(pr.off_beg, base)
+                    r.n_mapped = r.n_unmapped = 0
                 r.off_end = max(r.off_end, _shift_v(pr.off_end, base))
-            r.n_mapped = max(r.n_mapped, 0) + pr.n_mapped
-            r.n_unmapped = max(r.n_unmapped, 0) + pr.n_unmapped
-        base += part_len
-    merged["__n_no_coor__"] = n_no_coor
-    return merged
-
-
-def bai_from_part_stats(
-    parts: list[tuple["PartIndexStats", int]], header_len: int, n_refs: int
-) -> BAIIndex:
-    merged = merge_part_stats(parts, header_len, list(range(n_refs)))
-    n_no_coor = merged.pop("__n_no_coor__")
-    refs = []
-    for i in range(n_refs):
-        r = merged[i]
-        if r.off_beg < 0:  # no records on this reference
-            r.n_mapped = -1
-            r.n_unmapped = -1
-        refs.append(r)
-    return BAIIndex(refs, n_no_coor)
+                r.n_mapped += pr.n_mapped
+                r.n_unmapped += pr.n_unmapped
+            base += part_len
+        for r, linear in merged.values():
+            r.linear = [0] * (max(linear, default=-1) + 1)
+            for w, off in linear.items():
+                r.linear[w] = off
+        return [r for r, _ in merged.values()], n_no_coor

@@ -46,25 +46,27 @@ for _c, _i in SEQ_NIBBLE.items():
     _SEQ_LUT[ord(_c)] = _i
     _SEQ_LUT[ord(_c.lower())] = _i
 
-#: (shift, bin offset) levels of the UCSC binning scheme, finest first —
-#: mirrors formats/bam.py:reg2bin exactly.
-_BIN_LEVELS = ((14, 4681), (17, 585), (20, 73), (23, 9), (26, 1))
-
 _CONSUME_REF_MASK = np.zeros(16, dtype=np.int64)
 for _c, _i in CIGAR_CODE.items():
     if _c in "MDN=X":
         _CONSUME_REF_MASK[_i] = 1
 
 
-def reg2bin_vec(beg: np.ndarray, end: np.ndarray) -> np.ndarray:
-    """Vectorized reg2bin over [beg, end) arrays (SAM spec §5.3)."""
+def reg2bin_vec(beg: np.ndarray, end: np.ndarray, min_shift: int = 14,
+                depth: int = 5) -> np.ndarray:
+    """Vectorized reg2bin over [beg, end) arrays: the smallest bin of the
+    ``(min_shift, depth)`` scheme holding each interval (hts-specs CSI
+    reg2bin; BAI and tabix are its (14, 5), SAM spec §5.3)."""
     e = end - 1
     res = np.zeros(len(beg), dtype=np.int64)
     done = np.zeros(len(beg), dtype=bool)
-    for shift, off in _BIN_LEVELS:
+    first = ((1 << 3 * depth) - 1) // 7  # first bin of the finest level
+    for level in range(depth, 0, -1):
+        shift = min_shift + 3 * (depth - level)
         m = ~done & ((beg >> shift) == (e >> shift))
-        res[m] = off + (beg[m] >> shift)
+        res[m] = first + (beg[m] >> shift)
         done |= m
+        first -= 1 << 3 * (level - 1)
     return res
 
 
@@ -193,9 +195,11 @@ class BAMBatchEncoder:
     def encode_batch(self, batch):
         """RecordBatch -> (blob bytes, per-record lens int64, stats arrays).
 
-        stats arrays = (ref_id, pos0, end0, mapped) int64/bool, the exact
-        inputs PartIndexStats.add_sam_row derives per row — returned so an
-        indexing sink can accumulate BAI stats without re-decoding.
+        stats arrays = (ref_id, pos0, end0, mapped) int64/bool: each
+        record's reference id, 0-based start, end (start + CIGAR reference
+        length, one base when unmapped) and mapped flag — returned so an
+        indexing sink can feed bai.IndexBuilder.add_batch without
+        re-decoding.
 
         Shapes outside the vectorized fast path (today: a cigar over
         65535 ops, which needs the SAM spec 4.2.2 CG-tag convention)

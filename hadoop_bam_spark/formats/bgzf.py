@@ -444,6 +444,24 @@ class BGZFWriter:
         self.closed = True
 
 
+def read_all(path: str, open_fn=open) -> bytes:
+    """The uncompressed payload of a whole BGZF file (a .tbi or .csi)."""
+    with open_fn(path, "rb") as fh:
+        reader = BGZFReader(fh)
+        data = bytearray()
+        while chunk := reader.read(1 << 20):
+            data += chunk
+    return bytes(data)
+
+
+def write_all(path: str, data: bytes, open_fn=open) -> None:
+    """``data`` as a whole BGZF file, EOF block included."""
+    with open_fn(path, "wb") as fh:
+        w = BGZFWriter(fh)
+        w.write(data)
+        w.close()
+
+
 @dataclass(frozen=True)
 class BGZFSplit:
     """A planned byte range aligned to block boundaries (driver-side)."""

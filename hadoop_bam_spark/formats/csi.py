@@ -7,18 +7,24 @@ scheme to merged chunk voffset spans, and the BCF source drops BGZF splits
 whose block range cannot overlap any span (planning-time pruning; the
 row-level overlap residual stays). ``build_csi`` constructs the index from
 any BCF we can read, one sequential voffset-tracking pass — engine-written
-files get real indexes without external tooling (mirrors bai.build_bai).
+files get real indexes without external tooling. It, the BCF sink and
+``csi_from_bai``/``csi_from_tabix`` all go through ``bai.IndexBuilder``.
+
+Each bin's ``loffset`` is written as htslib's ``update_loff`` writes it
+(``loffsets``): the linear-index entry of the bin's first window, the
+least voffset of a record overlapping that window, with empty windows
+filled from the entry before. A ``.csi`` read from disk keeps its own.
 
 Queries go through ``bai.ref_chunks`` at the index's ``(min_shift,
 depth)``, so a CSI span is bounded on the right as BAI's and tabix's are:
 chunks begin before the first chunk of the nearest bin that starts at or
 after the query end (htslib's ``max_off``; it holds for a coordinate-sorted
-file). CSI gets no left bound. htslib takes one from the ``loffset`` of the
-finest present bin at the query start, which it fills from its linear
-index: the first record overlapping the bin's first window. The engine's
-writers record each bin's own first record instead (below), and a read
-that straddles into the query window from a coarser bin starts before it,
-so that ``loffset`` is no lower bound for the query.
+file). CSI gets no left bound. htslib takes one from the ``loffset`` of a
+present bin at the query start. A ``.csi`` the engine wrote before its
+``loffset``s followed htslib holds each bin's own first record there, and
+a long record reaching into the query from a coarser bin starts before
+it. The engine cannot tell such files apart, so it bounds on no
+``loffset``.
 
 Binary layout (BGZF-compressed, like tabix)::
 
@@ -39,24 +45,9 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 from hadoop_bam_spark.formats import bgzf
-from hadoop_bam_spark.formats.bai import RefIndex, interval_spans
+from hadoop_bam_spark.formats.bai import IndexBuilder, RefIndex, interval_spans
 
 CSI_MAGIC = b"CSI\x01"
-
-
-def reg2bin_csi(beg: int, end: int, min_shift: int, depth: int) -> int:
-    """Smallest bin fully containing [beg, end) (hts-specs CSI reg2bin)."""
-    end -= 1
-    s = min_shift
-    t = ((1 << (depth * 3)) - 1) // 7
-    level = depth
-    while level > 0:
-        if beg >> s == end >> s:
-            return t + (beg >> s)
-        level -= 1
-        s += 3
-        t -= 1 << (level * 3)
-    return 0
 
 
 @dataclass
@@ -76,38 +67,31 @@ class CSIIndex:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CSIIndex":
+        if data[:4] != CSI_MAGIC:
+            raise ValueError("not a CSI index (bad magic)")
         try:
-            return cls._from_bytes_unchecked(data)
-        except (struct.error, IndexError) as e:
+            return cls._from_bytes(data)
+        except struct.error as e:
             # raise-don't-garbage: corrupt payload behind a valid BGZF
             # wrap (e.g. a foreign tool's layout drift) is a data error
             raise ValueError(f"truncated or corrupt CSI: {e}") from e
 
     @classmethod
-    def _from_bytes_unchecked(cls, data: bytes) -> "CSIIndex":
-        if data[:4] != CSI_MAGIC:
-            raise ValueError("not a CSI index (bad magic)")
+    def _from_bytes(cls, data: bytes) -> "CSIIndex":
         min_shift, depth, l_aux = struct.unpack_from("<3i", data, 4)
-        p = 16
-        aux = data[p : p + l_aux]
-        p += l_aux
-        (n_ref,) = struct.unpack_from("<i", data, p)
-        p += 4
-        idx = cls(min_shift=min_shift, depth=depth, aux=aux)
-        pseudo = idx._pseudo_bin
+        idx = cls(min_shift=min_shift, depth=depth, aux=data[16:16 + l_aux])
+        (n_ref,) = struct.unpack_from("<i", data, 16 + l_aux)
+        p = 20 + l_aux
         for _ in range(n_ref):
             (n_bin,) = struct.unpack_from("<i", data, p)
             p += 4
             r = RefIndex()
             for _ in range(n_bin):
                 bin_, loffset, n_chunk = struct.unpack_from("<IQi", data, p)
-                p += 16
-                chunks = []
-                for _ in range(n_chunk):
-                    b, e = struct.unpack_from("<QQ", data, p)
-                    p += 16
-                    chunks.append((b, e))
-                if bin_ == pseudo:
+                flat = struct.unpack_from(f"<{2 * n_chunk}Q", data, p + 16)
+                p += 16 + 16 * n_chunk
+                chunks = list(zip(flat[::2], flat[1::2]))
+                if bin_ == idx._pseudo_bin:
                     if len(chunks) >= 1:
                         r.off_beg, r.off_end = chunks[0]
                     if len(chunks) >= 2:
@@ -178,20 +162,16 @@ def names_from_aux(aux: bytes) -> list[str]:
 
 def csi_from_tabix(tbi) -> CSIIndex:
     """Tabix -> CSI(14,5): identical binning, names preserved in the aux
-    block (the htslib tabix-flavored CSI layout bcftools emits)."""
+    block (the htslib tabix-flavored CSI layout bcftools emits), each bin's
+    ``loffset`` from the tabix linear index."""
     aux = struct.pack(
         "<6i", tbi.fmt, tbi.col_seq, tbi.col_beg, tbi.col_end, tbi.meta,
         tbi.skip,
     )
     blob = b"".join(n.encode() + b"\x00" for n in tbi.names)
     aux += struct.pack("<i", len(blob)) + blob
-    idx = CSIIndex(min_shift=14, depth=5, aux=aux)
-    for r in tbi.refs:
-        nr = RefIndex()
-        nr.bins = {b: list(cs) for b, cs in r.bins.items()}
-        nr.linear = list(r.linear)  # kept for fidelity; CSI writes ignore it
-        idx.refs.append(nr)
-    return idx
+    return CSIIndex(aux=aux, refs=[
+        RefIndex(bins=dict(r.bins), loffset=loffsets(r, 5)) for r in tbi.refs])
 
 
 class BAMIndexView:
@@ -218,127 +198,67 @@ class BAMIndexView:
 
 def csi_from_bai(bai_idx) -> CSIIndex:
     """BAI -> CSI(14,5): the binning schemes are identical at that shape,
-    so bins/chunks carry over verbatim (linear index has no CSI analog)."""
-    idx = CSIIndex(min_shift=14, depth=5, n_no_coor=bai_idx.n_no_coor)
-    for r in bai_idx.refs:
-        nr = RefIndex()
-        nr.bins = {b: list(cs) for b, cs in r.bins.items()}
-        idx.refs.append(nr)
-    return idx
+    so bins/chunks carry over verbatim, and each bin's ``loffset`` comes
+    from the BAI linear index."""
+    return CSIIndex(n_no_coor=bai_idx.n_no_coor, refs=[
+        RefIndex(bins=dict(r.bins), loffset=loffsets(r, 5))
+        for r in bai_idx.refs])
 
 
 def read_csi(path: str, open_fn=open) -> CSIIndex:
-    with open_fn(path, "rb") as fh:
-        reader = bgzf.BGZFReader(fh)
-        data = bytearray()
-        while True:
-            chunk = reader.read(1 << 20)
-            if not chunk:
-                break
-            data += chunk
-    return CSIIndex.from_bytes(bytes(data))
+    return CSIIndex.from_bytes(bgzf.read_all(path, open_fn))
 
 
 def write_csi(idx: CSIIndex, path: str, open_fn=open) -> None:
-    with open_fn(path, "wb") as fh:
-        w = bgzf.BGZFWriter(fh)
-        w.write(idx.to_bytes())
-        w.close()
+    bgzf.write_all(path, idx.to_bytes(), open_fn)
 
 
-class CSIPartStats:
-    """CSI accumulation for ONE part file with part-local voffsets —
-    the BCF analog of bai.PartIndexStats: the sink gathers (rid, beg0,
-    end0, voffset span) per record DURING the executor write, so the
-    driver never re-reads and re-decodes the merged output
-    (``build_csi``'s one-pass scan costs ~13x the write itself at 2M
-    records). Accumulation order must be file order: the chunk-adjacency
-    merge and first-touch loffset reproduce ``build_csi`` exactly, so the
-    merged index is byte-identical (asserted in tests/test_bcf_venc.py)."""
+def loffsets(r: RefIndex, depth: int) -> dict[int, int]:
+    """Each bin's ``loffset``, as htslib's ``update_loff`` sets it: the
+    linear-index entry of the bin's first window, where an empty window
+    takes the entry before it and 0 stands where nothing precedes. An
+    entry of 0 reads as empty: in a coordinate-sorted file only the
+    leading windows can hold voffset 0, and nothing precedes them."""
+    filled, last = [], 0
+    for off in r.linear:
+        last = off or last
+        filled.append(last)
+    firsts = [((1 << 3 * level) - 1) // 7 for level in range(depth + 1)]
+    out = {}
+    for bin_ in r.bins:
+        level = max(lv for lv, f in enumerate(firsts) if f <= bin_)
+        w = (bin_ - firsts[level]) << 3 * (depth - level)
+        out[bin_] = filled[w] if w < len(filled) else 0
+    return out
 
-    def __init__(self, min_shift: int = 14, depth: int = 5):
-        self.min_shift = min_shift
-        self.depth = depth
-        self.refs: dict[int, RefIndex] = {}
 
-    def add(self, rid: int, bin_: int, at: int, nxt: int) -> None:
-        r = self.refs.get(rid)
-        if r is None:
-            r = self.refs[rid] = RefIndex(linear=[])
-            r.n_mapped = r.n_unmapped = 0
-        bins = r.bins
-        bl = bins.get(bin_)
-        if bl and bl[-1][1] == at:
-            bl[-1] = (bl[-1][0], nxt)
-        else:
-            bins.setdefault(bin_, []).append((at, nxt))
-        r.loffset.setdefault(bin_, at)
-        if r.off_beg < 0:
-            r.off_beg = at
-        r.off_end = nxt
-        r.n_mapped += 1
+def csi_from_builders(parts, header_len: int, n_refs: int,
+                      min_shift: int = 14, depth: int = 5) -> CSIIndex:
+    """The CSIIndex of ordered (bai.IndexBuilder, part length) parts
+    (``IndexBuilder.merge``): the pseudo-bin of every reference with
+    records, and each bin's ``loffset`` from the builders' linear index.
+    The optional ``n_no_coor`` stays unwritten."""
+    refs, _ = IndexBuilder.merge(parts, header_len, range(n_refs))
+    for r in refs:
+        r.loffset, r.linear = loffsets(r, depth), []
+    return CSIIndex(min_shift, depth, refs=refs)
 
-    def add_record(self, rid: int, beg0: int, end0: int, at: int, nxt: int):
-        self.add(rid, reg2bin_csi(beg0, end0, self.min_shift, self.depth),
-                 at, nxt)
 
-    def remap_part_end(self, old: int, new: int) -> None:
-        """Rebase the end-of-part voffset representation.
-
-        The writer expresses the final record's end as (last short block,
-        tail offset); a reader scanning the MERGED file expresses the same
-        byte as (next part's first block, 0). Remapping after close keeps
-        cross-part chunk adjacency — and byte parity with build_csi. Only
-        chunk ENDS and off_end can hold the part-end voffset (no record
-        starts there)."""
-        if old == new:
+def _bcf_records(reader):
+    """(CHROM, beg0, end0, True, at, end_v) of each record of a BCF stream,
+    read at fixed offsets: CHROM, POS and rlen open the shared section,
+    and end0 = POS + rlen (the record's 1-based END)."""
+    while True:
+        at = reader.tell_voffset()
+        head = reader.read(8)
+        if len(head) < 8:
             return
-        for r in self.refs.values():
-            for chunks in r.bins.values():
-                if chunks and chunks[-1][1] == old:
-                    chunks[-1] = (chunks[-1][0], new)
-            if r.off_end == old:
-                r.off_end = new
-
-
-def csi_from_part_stats(
-    parts: list[tuple[Optional[CSIPartStats], int]],
-    header_len: int,
-    n_refs: int,
-    min_shift: int = 14,
-    depth: int = 5,
-) -> CSIIndex:
-    """Merge ordered (stats, part_compressed_length) into one CSIIndex,
-    rebasing part-local voffsets onto the merged file. Mirrors
-    ``build_csi``'s in-pass rules (adjacency chunk merge, first-touch
-    loffset, pseudo-bin span/counts) so results are identical."""
-    from hadoop_bam_spark.formats.bai import _shift_v
-
-    idx = CSIIndex(min_shift=min_shift, depth=depth)
-    idx.refs = [RefIndex(linear=[]) for _ in range(n_refs)]
-    base = header_len
-    for stats, part_len in parts:
-        if stats is not None:
-            for rid, pr in stats.refs.items():
-                r = idx.refs[rid]
-                for bin_, chunks in pr.bins.items():
-                    bl = r.bins.setdefault(bin_, [])
-                    for b, e in chunks:
-                        b, e = _shift_v(b, base), _shift_v(e, base)
-                        if bl and bl[-1][1] == b:
-                            bl[-1] = (bl[-1][0], e)
-                        else:
-                            bl.append((b, e))
-                for bin_, off in pr.loffset.items():
-                    r.loffset.setdefault(bin_, _shift_v(off, base))
-                if pr.off_beg >= 0:
-                    if r.off_beg < 0:
-                        r.off_beg = _shift_v(pr.off_beg, base)
-                        r.n_mapped = r.n_unmapped = 0
-                    r.off_end = _shift_v(pr.off_end, base)
-                    r.n_mapped += pr.n_mapped
-        base += part_len
-    return idx
+        l_shared, l_indiv = struct.unpack("<II", head)
+        body = reader.read(l_shared + l_indiv)
+        if len(body) < l_shared + l_indiv:
+            raise ValueError("truncated BCF record")
+        rid, pos0, rlen = struct.unpack_from("<iii", body)
+        yield rid, pos0, pos0 + rlen, True, at, reader.tell_voffset()
 
 
 def build_csi(
@@ -347,40 +267,9 @@ def build_csi(
     """Index an engine-readable BGZF BCF in one voffset-tracking pass."""
     from hadoop_bam_spark.formats import bcf as bcf_mod
 
+    b = IndexBuilder(min_shift, depth)
     with open_fn(path, "rb") as fh:
         reader = bgzf.BGZFReader(fh)
         hdr, _ = bcf_mod.read_bcf_header(reader)
-        idx = CSIIndex(min_shift=min_shift, depth=depth)
-        idx.refs = [RefIndex() for _ in hdr.contigs]
-        name_to_id = {c: i for i, c in enumerate(hdr.contigs)}
-        while True:
-            at = reader.tell_voffset()
-            head = reader.read(8)
-            if len(head) < 8:
-                break
-            l_shared, l_indiv = struct.unpack_from("<II", head, 0)
-            body = reader.read(l_shared + l_indiv)
-            if len(body) < l_shared + l_indiv:
-                raise ValueError("truncated BCF record")
-            row, _ = bcf_mod.decode_record(head + body, 0, hdr)
-            nxt = reader.tell_voffset()
-            contig, start, end = row[0], row[1], row[2]
-            rid = name_to_id.get(contig)
-            if rid is not None:
-                b = reg2bin_csi(start - 1, end, min_shift, depth)
-                r = idx.refs[rid]
-                bins = r.bins
-                if b in bins and bins[b] and bins[b][-1][1] == at:
-                    bins[b][-1] = (bins[b][-1][0], nxt)
-                else:
-                    bins.setdefault(b, []).append((at, nxt))
-                # htslib seek hint: min voffset of the bin's records
-                # (coordinate-sorted input -> first touch is the min)
-                r.loffset.setdefault(b, at)
-                # pseudo-bin stats (bcftools index -s reads these back)
-                if r.off_beg < 0:
-                    r.off_beg = at
-                    r.n_mapped = r.n_unmapped = 0
-                r.off_end = nxt
-                r.n_mapped += 1
-        return idx
+        b.add_records(_bcf_records(reader))
+    return csi_from_builders([(b, 0)], 0, len(hdr.contigs), min_shift, depth)

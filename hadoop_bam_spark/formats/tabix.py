@@ -16,8 +16,10 @@ effect.
 
 The .tbi container itself is BGZF-compressed.  ``build_tabix`` constructs
 an index from any BGZF-compressed tab-text file we can read (one pass with
-line-level virtual offsets), so engine-written ``.vcf.bgz`` files get real
-indexes without external tooling.
+line-level virtual offsets, fed to ``bai.IndexBuilder`` as the text sinks
+feed it), so engine-written ``.vcf.bgz`` files get real indexes without
+external tooling. A headerless file's first line sits at voffset 0 and
+claims its linear windows like any other.
 
 Layout (htslib tabix spec):
     magic 'TBI\\1', n_ref i32,
@@ -32,18 +34,17 @@ Layout (htslib tabix spec):
 from __future__ import annotations
 
 import struct
-from dataclasses import dataclass, field
-from typing import BinaryIO, Iterator, Optional
+from dataclasses import dataclass
+from typing import Iterator, Optional
 
 from hadoop_bam_spark.formats import bgzf
 from hadoop_bam_spark.formats.bai import (
-    LINEAR_SHIFT,
-    PSEUDO_BIN,
-    RefIndex,
+    IndexBuilder,
     interval_spans,
     ref_chunks,
+    refs_from_bytes,
+    refs_to_bytes,
 )
-from hadoop_bam_spark.formats.bam import reg2bin
 
 TBI_MAGIC = b"TBI\x01"
 
@@ -70,47 +71,17 @@ class TabixIndex:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "TabixIndex":
+        if data[:4] != TBI_MAGIC:
+            raise ValueError("not a tabix index (bad magic)")
         try:
-            return cls._from_bytes_unchecked(data)
-        except (struct.error, IndexError) as e:
+            (n_ref, fmt, col_seq, col_beg, col_end, meta, skip,
+             l_nm) = struct.unpack_from("<8i", data, 4)
+            names = [n.decode() for n in data[36:36 + l_nm].split(b"\x00")[:-1]]
+            refs, p = refs_from_bytes(data, 36 + l_nm, n_ref)
+        except struct.error as e:
             # raise-don't-garbage: corrupt payload behind a valid BGZF
             # wrap (e.g. a foreign tool's layout drift) is a data error
             raise ValueError(f"truncated or corrupt tabix index: {e}") from e
-
-    @classmethod
-    def _from_bytes_unchecked(cls, data: bytes) -> "TabixIndex":
-        if data[:4] != TBI_MAGIC:
-            raise ValueError("not a tabix index (bad magic)")
-        (n_ref, fmt, col_seq, col_beg, col_end, meta, skip, l_nm) = struct.unpack_from(
-            "<8i", data, 4
-        )
-        p = 4 + 32
-        names = data[p : p + l_nm].split(b"\x00")[:-1]
-        names = [n.decode() for n in names]
-        p += l_nm
-        refs = []
-        for _ in range(n_ref):
-            r = RefIndex()
-            (n_bin,) = struct.unpack_from("<i", data, p)
-            p += 4
-            for _ in range(n_bin):
-                bin_, n_chunk = struct.unpack_from("<Ii", data, p)
-                p += 8
-                chunks = [
-                    struct.unpack_from("<QQ", data, p + 16 * i)
-                    for i in range(n_chunk)
-                ]
-                p += 16 * n_chunk
-                if bin_ == PSEUDO_BIN and len(chunks) == 2:
-                    (r.off_beg, r.off_end), (r.n_mapped, r.n_unmapped) = chunks
-                else:
-                    r.bins[bin_] = [(b, e) for b, e in chunks]
-            (n_intv,) = struct.unpack_from("<i", data, p)
-            p += 4
-            if n_intv:
-                r.linear = list(struct.unpack_from(f"<{n_intv}Q", data, p))
-                p += 8 * n_intv
-            refs.append(r)
         n_no_coor = (
             struct.unpack_from("<Q", data, p)[0] if p + 8 <= len(data) else None
         )
@@ -125,21 +96,7 @@ class TabixIndex:
             self.col_end, self.meta, self.skip, len(nm),
         )
         out += nm
-        for r in self.refs:
-            has_pseudo = r.n_mapped >= 0 or r.n_unmapped >= 0
-            out += struct.pack("<i", len(r.bins) + (1 if has_pseudo else 0))
-            for bin_ in sorted(r.bins):
-                chunks = r.bins[bin_]
-                out += struct.pack("<Ii", bin_, len(chunks))
-                for b, e in chunks:
-                    out += struct.pack("<QQ", b, e)
-            if has_pseudo:
-                out += struct.pack("<Ii", PSEUDO_BIN, 2)
-                out += struct.pack("<QQ", max(r.off_beg, 0), max(r.off_end, 0))
-                out += struct.pack("<QQ", max(r.n_mapped, 0), max(r.n_unmapped, 0))
-            out += struct.pack("<i", len(r.linear))
-            if r.linear:
-                out += struct.pack(f"<{len(r.linear)}Q", *r.linear)
+        out += refs_to_bytes(self.refs)
         if self.n_no_coor is not None:
             out += struct.pack("<Q", self.n_no_coor)
         return bytes(out)
@@ -163,22 +120,11 @@ class TabixIndex:
 
 
 def read_tabix(path: str, open_fn=open) -> TabixIndex:
-    with open_fn(path, "rb") as fh:
-        reader = bgzf.BGZFReader(fh)
-        data = bytearray()
-        while True:
-            chunk = reader.read(1 << 20)
-            if not chunk:
-                break
-            data += chunk
-    return TabixIndex.from_bytes(bytes(data))
+    return TabixIndex.from_bytes(bgzf.read_all(path, open_fn))
 
 
 def write_tabix(idx: TabixIndex, path: str, open_fn=open) -> None:
-    with open_fn(path, "wb") as fh:
-        w = bgzf.BGZFWriter(fh)
-        w.write(idx.to_bytes())
-        w.close()
+    bgzf.write_all(path, idx.to_bytes(), open_fn)
 
 
 def _iter_lines_with_voffsets(fh) -> Iterator[tuple[int, int, str]]:
@@ -224,16 +170,15 @@ def build_tabix(
 ) -> TabixIndex:
     """One pass over a BGZF-compressed tab-text file → TabixIndex (the
     offline analog of ``tabix -p vcf``). For VCF the end coordinate is
-    ``pos + len(ref) - 1`` when no end column is configured."""
-    names: list[str] = []
-    name_ids: dict[str, int] = {}
-    refs: list[RefIndex] = []
-    with open_fn(path, "rb") as fh:
+    ``pos + len(ref) - 1`` when no end column is configured. Contigs are
+    numbered in first-seen order."""
+    names: dict[str, int] = {}
+
+    def records(fh):
         for at, end_v, line in _iter_lines_with_voffsets(fh):
             if not line or (meta and line.startswith(meta)):
                 continue
             cols = line.split("\t")
-            seq = cols[col_seq - 1]
             beg = int(cols[col_beg - 1])
             if col_end:
                 end = int(cols[col_end - 1])
@@ -244,29 +189,12 @@ def build_tabix(
                 end0 = beg0 + max(len(ref_allele), 1)
             else:
                 beg0, end0 = beg - 1, beg
-            rid = name_ids.get(seq)
-            if rid is None:
-                rid = name_ids[seq] = len(names)
-                names.append(seq)
-                refs.append(RefIndex(linear=[]))
-            r = refs[rid]
-            bin_ = reg2bin(beg0, end0)
-            bl = r.bins.setdefault(bin_, [])
-            if bl and (at <= bl[-1][1] or (at >> 16) <= (bl[-1][1] >> 16)):
-                bl[-1] = (bl[-1][0], max(bl[-1][1], end_v))
-            else:
-                bl.append((at, end_v))
-            if r.off_beg < 0:
-                r.off_beg = at
-            r.off_end = end_v
-            r.n_mapped = max(r.n_mapped, 0) + 1
-            first_win, last_win = beg0 >> LINEAR_SHIFT, max(end0 - 1, beg0) >> LINEAR_SHIFT
-            if len(r.linear) <= last_win:
-                r.linear.extend([0] * (last_win + 1 - len(r.linear)))
-            for w in range(first_win, last_win + 1):
-                if r.linear[w] == 0 or at < r.linear[w]:
-                    r.linear[w] = at
-    for r in refs:
-        if r.off_beg >= 0:
-            r.n_unmapped = max(r.n_unmapped, 0)
-    return TabixIndex(names, refs, fmt, col_seq, col_beg, col_end, ord(meta), 0, 0)
+            rid = names.setdefault(cols[col_seq - 1], len(names))
+            yield rid, beg0, end0, True, at, end_v
+
+    b = IndexBuilder()
+    with open_fn(path, "rb") as fh:
+        b.add_records(records(fh))
+    refs, n_no_coor = IndexBuilder.merge([(b, 0)], 0, range(len(names)))
+    return TabixIndex(list(names), refs, fmt, col_seq, col_beg, col_end,
+                      ord(meta), 0, n_no_coor)

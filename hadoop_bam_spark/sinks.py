@@ -239,7 +239,7 @@ class BAMPart:
     Record voffsets (one every ``granularity`` records, BAI chunk spans)
     are recovered AFTER each bulk write from the writer's block table
     (BGZFWriter.voffsets_of_u), and the BAI stats accumulate once per
-    batch (PartIndexStats.add_batch): no per-record Python on the hot
+    batch (bai.IndexBuilder.add_batch): no per-record Python on the hot
     path. The info is ``(size, offsets, stats)``."""
 
     header: SAMHeader
@@ -262,9 +262,9 @@ class BAMPart:
 
         stats = None
         if self.index_bai:
-            from hadoop_bam_spark.formats.bai import PartIndexStats
+            from hadoop_bam_spark.formats.bai import IndexBuilder
 
-            stats = PartIndexStats()
+            stats = IndexBuilder()
         enc = BAMBatchEncoder(self.refs)
         g = self.granularity
         offsets: list[int] = []
@@ -320,12 +320,12 @@ class BAMPart:
             with fs.open_file(dst + ".splitting-bai", "wb") as f:
                 sbi.write_reference_layout(f)
         if self.index_bai:
-            from hadoop_bam_spark.formats.bai import bai_from_part_stats
+            from hadoop_bam_spark.formats.bai import BAIIndex, IndexBuilder
 
-            bai = bai_from_part_stats(
+            bai = BAIIndex(*IndexBuilder.merge(
                 [(stats, size) for size, _, stats in infos], header_len,
-                len(self.refs),
-            )
+                range(len(self.refs)),
+            ))
             with fs.open_file(dst + ".bai", "wb") as f:
                 bai.write(f)
 
@@ -470,7 +470,6 @@ class BCFPart:
         import numpy as np
 
         from hadoop_bam_spark.formats import bcf
-        from hadoop_bam_spark.formats.bam_venc import reg2bin_vec
         from hadoop_bam_spark.formats.bcf_venc import (
             BCFBatchEncoder,
             VecUnsupported,
@@ -480,9 +479,9 @@ class BCFPart:
         enc = BCFBatchEncoder(bhdr)
         stats = None
         if self.index_csi:
-            from hadoop_bam_spark.formats.csi import CSIPartStats
+            from hadoop_bam_spark.formats.bai import IndexBuilder
 
-            stats = CSIPartStats()  # default 14/5 == reg2bin_vec's scheme
+            stats = IndexBuilder()
         nrec = 0
         hdr_len = 0
         with fs.open_file(path, "wb") as f:
@@ -496,32 +495,22 @@ class BCFPart:
             for batch in batches:
                 batch = _select(batch, VCF_COLS)
                 try:
-                    blob, rec_lens, (rid, beg0, end0) = enc.encode_batch(batch)
-                    u0 = w.u_total
-                    w.write(blob)
-                    nrec += len(rec_lens)
-                    if stats is not None and len(rec_lens):
-                        u_starts = u0 + np.concatenate(
-                            [[0], np.cumsum(rec_lens[:-1])]
-                        )
-                        bins = reg2bin_vec(beg0, end0)
-                        begs = w.voffsets_of_u(u_starts).tolist()
-                        ends = w.voffsets_of_u(u_starts + rec_lens).tolist()
-                        add = stats.add
-                        for i in range(len(rec_lens)):
-                            add(int(rid[i]), int(bins[i]), begs[i], ends[i])
+                    blob, rec_lens, spans = enc.encode_batch(batch)
                 except VecUnsupported:
-                    for row in _batch_rows(batch):
-                        u0 = w.u_total
-                        rec = bcf.encode_record(row, bhdr)
-                        w.write(rec)
-                        nrec += 1
-                        if stats is not None:
-                            stats.add_record(
-                                bhdr.contig_index[row[0]], row[1] - 1, row[2],
-                                w.voffset_of_u(u0),
-                                w.voffset_of_u(u0 + len(rec)),
-                            )
+                    rows = list(_batch_rows(batch))
+                    recs = [bcf.encode_record(row, bhdr) for row in rows]
+                    blob = b"".join(recs)
+                    rec_lens = np.array([len(r) for r in recs], np.int64)
+                    spans = None if stats is None else list(zip(*(
+                        (bhdr.contig_index[r[0]], r[1] - 1, r[2]) for r in rows)))
+                u0 = w.u_total
+                w.write(blob)
+                nrec += len(rec_lens)
+                if stats is not None and len(rec_lens):
+                    u = u0 + np.concatenate([[0], np.cumsum(rec_lens)])
+                    stats.add_batch(*spans, [True] * len(rec_lens),
+                                    w.voffsets_of_u(u[:-1]),
+                                    w.voffsets_of_u(u[1:]))
             pend = w.voffset_of_u(w.u_total) if stats is not None else None
             w.close()
             if self.standalone:
@@ -548,8 +537,7 @@ class BCFPart:
         bytes)``, shifted past the header."""
         from hadoop_bam_spark.formats import csi
 
-        idx = csi.csi_from_part_stats(infos, header_len,
-                                      len(self.bhdr.contigs))
+        idx = csi.csi_from_builders(infos, header_len, len(self.bhdr.contigs))
         csi.write_csi(idx, dst + ".csi", open_fn=fs.open_file)
 
 
@@ -577,11 +565,13 @@ class TextPart:
     tbi: Optional[tuple] = None
 
     def __call__(self, path: str, batches):
+        import numpy as np
+
         stats = None
         if self.tbi:
-            from hadoop_bam_spark.formats.bai import PartIndexStats
+            from hadoop_bam_spark.formats.bai import IndexBuilder
 
-            stats, span = PartIndexStats(), self.tbi[0]
+            stats, span, names = IndexBuilder(), self.tbi[0], {}
         n = 0
         with fs.open_file(path, "wb") as f:
             w = (bgzf.BGZFWriter(f, write_terminator=self.standalone)
@@ -594,14 +584,24 @@ class TextPart:
                 if stats is None:
                     w.write(self._chunk(batch))
                     continue
-                for r in _batch_rows(batch):
-                    at = w.tell_voffset()
-                    w.write((self.line(r) + "\n").encode())
-                    stats.add(*span(r), True, at, w.tell_voffset())
+                rows = list(_batch_rows(batch))
+                if not rows:
+                    continue
+                lines = [(self.line(r) + "\n").encode() for r in rows]
+                u = w.u_total + np.cumsum([0] + [len(ln) for ln in lines])
+                w.write(b"".join(lines))
+                contig, beg0, end0 = zip(*map(span, rows))
+                stats.add_batch(
+                    [names.setdefault(c, len(names)) for c in contig], beg0,
+                    end0, [True] * len(rows), w.voffsets_of_u(u[:-1]),
+                    w.voffsets_of_u(u[1:]))
             if self.compress:
                 w.close()
         if stats is None:
             return n, None
+        # key the part's references by contig name, for the merge
+        ids = list(names)
+        stats.refs = {ids[k]: r for k, r in stats.refs.items()}
         info = (stats, fs.file_size(path))
         if self.standalone:
             self._tbi(path, [info], 0)
@@ -627,14 +627,13 @@ class TextPart:
     def _tbi(self, dst: str, infos, header_len: int) -> None:
         """``.tbi`` of ``dst`` from its parts' ``(stats, size)``, shifted
         past the header; contigs in first-seen order."""
-        from hadoop_bam_spark.formats.bai import merge_part_stats
+        from hadoop_bam_spark.formats.bai import IndexBuilder
         from hadoop_bam_spark.formats.tabix import TabixIndex, write_tabix
 
-        names = list(dict.fromkeys(k for st, _ in infos for k in st.order))
-        merged = merge_part_stats(infos, header_len, names)
-        merged.pop("__n_no_coor__")
+        names = list(dict.fromkeys(k for st, _ in infos for k in st.refs))
+        refs, n_no_coor = IndexBuilder.merge(infos, header_len, names)
         write_tabix(TabixIndex(
-            names, [merged[n] for n in names], *self.tbi[1], ord("#"), 0, 0
+            names, refs, *self.tbi[1], ord("#"), 0, n_no_coor
         ), dst + ".tbi")
 
 

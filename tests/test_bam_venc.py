@@ -115,31 +115,26 @@ def test_tag_split_keeps_null_maps_and_slices():
                 cram.encode_container(want, REF_INDEX, 0))
 
 
-def test_stats_arrays_match_add_sam_row():
-    from hadoop_bam_spark.formats.bai import PartIndexStats
+def _check_stats_arrays(stats, rows):
+    """The encoder's (ref id, pos0, end0, mapped) arrays against each row's
+    own: -1 for no reference, and end0 one CIGAR reference length past
+    pos0 (one base when unmapped). Unplaced rows must be unplaced in the
+    arrays too; their other values are not index input."""
+    rid, pos0, end0, mapped = stats
+    for i, row in enumerate(rows):
+        want_rid = REF_INDEX.get(row[2], -1) if row[2] else -1
+        placed = want_rid >= 0 and row[3] >= 1
+        assert (rid[i] >= 0 and pos0[i] >= 0) == placed, row
+        if placed:
+            m = not row[1] & 0x4
+            ln = bam.cigar_ref_length(row[5]) if m else 1
+            assert (rid[i], pos0[i], end0[i], bool(mapped[i])) == (
+                want_rid, row[3] - 1, row[3] - 1 + ln, m), row
 
-    blob, lens, (rid, pos0, end0, mapped) = BAMBatchEncoder(REFS).encode_batch(
-        rows_to_batch(EDGE_ROWS)
-    )
-    # reference accumulation through the scalar API
-    exp = PartIndexStats()
-    got = PartIndexStats()
-    at = 0
-    for i, row in enumerate(EDGE_ROWS):
-        end_v = at + int(lens[i])
-        exp.add_sam_row(tuple(row), REF_INDEX, at, end_v)
-        if rid[i] < 0 or pos0[i] < 0:
-            got.n_no_coor += 1
-        else:
-            got.add(int(rid[i]), int(pos0[i]), int(end0[i]),
-                    bool(mapped[i]), at, end_v)
-        at = end_v
-    assert got.n_no_coor == exp.n_no_coor
-    assert set(got.refs) == set(exp.refs)
-    for k in exp.refs:
-        assert got.refs[k].bins == exp.refs[k].bins
-        assert got.refs[k].linear == exp.refs[k].linear
-        assert got.refs[k].n_mapped == exp.refs[k].n_mapped
+
+def test_stats_arrays_match_per_row_derivation():
+    _, _, stats = BAMBatchEncoder(REFS).encode_batch(rows_to_batch(EDGE_ROWS))
+    _check_stats_arrays(stats, EDGE_ROWS)
 
 
 def test_reg2bin_vec_matches_scalar():
@@ -147,7 +142,7 @@ def test_reg2bin_vec_matches_scalar():
     beg = rng.integers(0, 1 << 28, 500)
     ln = rng.integers(1, 1 << 20, 500)
     end = beg + ln
-    vec = reg2bin_vec(beg.astype(np.int64), end.astype(np.int64))
+    vec = reg2bin_vec(beg.astype(np.int64), end.astype(np.int64), 14, 5)
     for b, e, v in zip(beg.tolist(), end.tolist(), vec.tolist()):
         assert bam.reg2bin(b, e) == v
 
@@ -363,26 +358,8 @@ def test_long_cigar_batch_fallback_byte_parity():
     assert bytes(vec_blob) == scalar
     assert int(lens.sum()) == len(scalar)
     # stats arrays still match the per-row derivation (same check as
-    # test_stats_arrays_match_add_sam_row, over the fallback's arrays)
-    from hadoop_bam_spark.formats.bai import PartIndexStats
-
-    exp, got = PartIndexStats(), PartIndexStats()
-    at = 0
-    for i, row in enumerate(rows):
-        end_v = at + int(lens[i])
-        exp.add_sam_row(tuple(row), REF_INDEX, at, end_v)
-        if rid[i] < 0 or pos0[i] < 0:
-            got.n_no_coor += 1
-        else:
-            got.add(int(rid[i]), int(pos0[i]), int(end0[i]),
-                    bool(mapped[i]), at, end_v)
-        at = end_v
-    assert got.n_no_coor == exp.n_no_coor
-    assert set(got.refs) == set(exp.refs)
-    for k in exp.refs:
-        assert got.refs[k].bins == exp.refs[k].bins
-        assert got.refs[k].linear == exp.refs[k].linear
-        assert got.refs[k].n_mapped == exp.refs[k].n_mapped
+    # test_stats_arrays_match_per_row_derivation, over the fallback's arrays)
+    _check_stats_arrays((rid, pos0, end0, mapped), rows)
 
 
 def test_long_cigar_spark_roundtrip(spark, tmp_path):

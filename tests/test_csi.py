@@ -5,12 +5,19 @@ htslib/bcftools write for BCF by default)."""
 
 import random
 
+import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hadoop_bam_spark.formats import bai, bcf, bgzf, csi
+from hadoop_bam_spark.formats.bam_venc import reg2bin_vec
 from hadoop_bam_spark.formats.vcf import VCFHeader
+
+
+def _reg2bin(beg, end, min_shift, depth):
+    return int(reg2bin_vec(np.array([beg]), np.array([end]), min_shift,
+                           depth)[0])
 
 
 class TestBinningParity:
@@ -20,7 +27,7 @@ class TestBinningParity:
         end = min(beg + ln, 2**29 - 1)
         from hadoop_bam_spark.formats.bam import reg2bin
 
-        assert csi.reg2bin_csi(beg, end, 14, 5) == reg2bin(beg, end)
+        assert _reg2bin(beg, end, 14, 5) == reg2bin(beg, end)
 
     @given(st.integers(0, 2**29 - 2), st.integers(1, 100_000))
     @settings(max_examples=100, deadline=None)
@@ -39,7 +46,7 @@ class TestBinningParity:
     def test_bin_of_region_in_reg2bins(self, beg, ln, scheme):
         ms, d = scheme
         end = beg + ln
-        assert csi.reg2bin_csi(beg, end, ms, d) in bai.reg2bins(
+        assert _reg2bin(beg, end, ms, d) in bai.reg2bins(
             beg, end, ms, d
         )
 

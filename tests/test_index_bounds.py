@@ -8,7 +8,11 @@ query, every record overlapping an interval must start at a voffset inside
 a returned span, and every span must lie inside a span of the query as it
 was before it had a right bound (``_unbounded_spans``): the bound only
 prunes. The planning test shows the bound keeping a 1 kb query on the one
-split that holds its reads."""
+split that holds its reads.
+
+CSI indexes are also checked against htslib's query left bound, the
+``loffset`` of a bin at the query start (``_min_off``), and tabix indexes of
+a headerless file against a record at voffset 0."""
 
 import random
 import struct
@@ -78,6 +82,34 @@ def _check_spans(spans, parent, recs, name_to_id, intervals):
             f"{int(v[~inside][0]):#x} outside {spans}")
     for b, e in spans:
         assert any(pb <= b and e <= pe for pb, pe in parent), (b, e, parent)
+
+
+def _min_off(r, beg0, min_shift, depth):
+    """htslib's lower bound for a CSI query starting at ``beg0``
+    (``hts_itr_query``): the ``loffset`` of the nearest present bin at or
+    left of beg0's finest bin, moving left among siblings and up to the
+    parent from a first child; 0 when none is present."""
+    bin_ = ((1 << 3 * depth) - 1) // 7 + (beg0 >> min_shift)
+    while bin_ and bin_ not in r.bins:
+        parent = (bin_ - 1) >> 3
+        bin_ = bin_ - 1 if bin_ > (parent << 3) + 1 else parent
+    return r.loffset.get(bin_, 0)
+
+
+def _check_min_off(refs, recs, name_to_id, intervals, min_shift=14, depth=5):
+    """Every record overlapping an interval starts at or after
+    ``_min_off``."""
+    rid, pos0, end0, voff = recs
+    for contig, start, stop in intervals:
+        want = name_to_id.get(contig)
+        if want is None:
+            continue
+        hit = (rid == want) & (pos0 < stop) & (end0 > start - 1)
+        lo = _min_off(refs[want], max(start - 1, 0), min_shift, depth)
+        early = voff[hit] < np.uint64(lo)
+        assert not early.any(), (
+            f"{contig}:{start}-{stop}: record at voffset "
+            f"{int(voff[hit][early][0]):#x} before loffset {lo:#x}")
 
 
 def _queries(contigs, last_pos, seed=11):
@@ -209,9 +241,15 @@ def test_bai_bound_prunes_long_read_chunks(sorted_bam):
 
 def test_csi_from_bai_spans_hold_every_overlapping_record(sorted_bam):
     """A BAM's .csi (``samtools index -c`` shape): no linear index, so only
-    the right bound applies."""
-    _check_bai(csi.BAMIndexView(csi.csi_from_bai(bai.build_bai(sorted_bam))),
-               sorted_bam)
+    the right bound applies. Its ``loffset``s, filled from the BAI linear
+    index, hold as htslib's left bound."""
+    idx = csi.csi_from_bai(bai.build_bai(sorted_bam))
+    _check_bai(csi.BAMIndexView(idx), sorted_bam)
+    recs = _walk_bam(sorted_bam)
+    names = [n for n, _ in CONTIGS]
+    name_to_id = {n: i for i, n in enumerate(names)}
+    for intervals in _queries(CONTIGS, _last_pos(recs, names)):
+        _check_min_off(idx.refs, recs, name_to_id, intervals)
 
 
 def test_written_bai_spans_hold_every_overlapping_record(spark, tmp_path):
@@ -342,6 +380,9 @@ def _bcf_variants(seed=2):
 
 @pytest.mark.parametrize("scheme", [(14, 5), (12, 4), (16, 6)])
 def test_csi_bcf_spans_hold_every_overlapping_record(tmp_path, scheme):
+    """Through a written .csi: the two-sided spans, and the ``loffset``
+    left bound, which the 1.5 Mb variants reaching into later windows
+    test."""
     min_shift, depth = scheme
     hdr_text = "\n".join(
         ["##fileformat=VCFv4.2"]
@@ -358,7 +399,8 @@ def test_csi_bcf_spans_hold_every_overlapping_record(tmp_path, scheme):
         for r in rows:
             w.write(bcf.encode_record(r, hdr))
         w.close()
-    idx = csi.build_csi(path, min_shift=min_shift, depth=depth)
+    idx = csi.CSIIndex.from_bytes(
+        csi.build_csi(path, min_shift=min_shift, depth=depth).to_bytes())
     names = [n for n, _ in CONTIGS]
     name_to_id = {n: i for i, n in enumerate(names)}
     voffs = []
@@ -378,6 +420,65 @@ def test_csi_bcf_spans_hold_every_overlapping_record(tmp_path, scheme):
         parent = _unbounded_spans(idx.refs, name_to_id, intervals,
                                   min_shift, depth)
         _check_spans(spans, parent, recs, name_to_id, intervals)
+        _check_min_off(idx.refs, recs, name_to_id, intervals, min_shift,
+                       depth)
+
+
+#: a headerless BED: its first line, at voffset 0, is a 100 kb feature
+#: alone in its bin; short features in the same 16 kb window follow
+_LONG_FIRST = ["chr1\t0\t100000\tlong" + "x" * 300] + [
+    f"chr1\t{s}\t{s + 50}\tf{s}" for s in range(2000, 16000, 7)]
+_BED_PRESET = dict(fmt=tabix.FMT_GENERIC | tabix.FMT_ZERO_BASED, col_seq=1,
+                   col_beg=2, col_end=3)
+
+
+def _check_voffset_zero(idx):
+    """Window 0 keeps the first line's voffset 0, and a query over that
+    line's first kilobase plans a span holding it."""
+    assert idx.refs[0].linear[0] == 0
+    spans = idx.span_for_intervals([("chr1", 1, 1000)])
+    assert spans and spans[0][0] == 0, spans
+
+
+def _interval_lines(path, intervals):
+    """Lines the tabix-text planner reads for ``intervals``, one BGZF block
+    per split."""
+    from hadoop_bam_spark.sources import tabix_text
+
+    return [line for part in tabix_text.plan_text_partitions(
+                [path], {"split_size": "64"}, intervals)
+            for chunk in tabix_text.partition_line_chunks(part)
+            for line in chunk]
+
+
+def test_tabix_keeps_a_record_at_voffset_zero(tmp_path):
+    """build_tabix over a headerless BGZF BED whose first line spans
+    several blocks: an interval read over it still returns that line."""
+    path = str(tmp_path / "first.bed.gz")
+    with open(path, "wb") as f:
+        f.write(textgen.bgzf_compress(
+            ("\n".join(_LONG_FIRST) + "\n").encode(), block_payload=64))
+    idx = tabix.build_tabix(path, **_BED_PRESET)
+    _check_voffset_zero(idx)
+    tabix.write_tabix(idx, path + ".tbi")
+    assert _LONG_FIRST[0] in _interval_lines(path, [("chr1", 1, 1000)])
+
+
+def test_written_tbi_keeps_a_record_at_voffset_zero(spark, tmp_path):
+    """write_bed(index_tbi=True) with an empty header over several parts
+    that all reach window 0: the merged .tbi keeps the first line's 0."""
+    from hadoop_bam_spark import sinks
+    from hadoop_bam_spark.formats.bed import BED_SCHEMA
+
+    rows = [(c, int(b) + 1, int(e), n, None, None, None)
+            for c, b, e, n in (ln.split("\t") for ln in _LONG_FIRST)]
+    # in order, four parts
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
+                               BED_SCHEMA)
+    path = str(tmp_path / "w.bed.bgz")
+    sinks.write_bed(df, path, index_tbi=True)
+    _check_voffset_zero(tabix.read_tabix(path + ".tbi"))
+    assert _LONG_FIRST[0] in _interval_lines(path, [("chr1", 1, 1000)])
 
 
 def _blocks(coffsets, spans):

@@ -21,7 +21,6 @@ def write_bam(
     write_header: bool = True,
     write_terminator: bool = True,
     index_granularity: int = 0,
-    stats_out=None,
 ) -> list[int]:
     """Write rows (SAM_SCHEMA order) as BAM. Returns the virtual offsets of
     every ``index_granularity``-th record (a splitting index, reference
@@ -29,8 +28,6 @@ def write_bam(
 
     write_header=False + write_terminator=False produces a concatenatable
     part file (reference KeyIgnoringBAMOutputFormat.java:48-93).
-    ``stats_out`` (a bai.PartIndexStats) accumulates binning-index stats
-    inline so the driver can merge a .bai without re-reading the output.
     """
     if refs is None:
         ordered = sorted(header.sequences.items(), key=lambda kv: kv[1][0])
@@ -43,13 +40,7 @@ def write_bam(
     for i, row in enumerate(rows):
         if index_granularity and i % index_granularity == 0:
             offsets.append(w.tell_voffset())
-        row = tuple(row)
-        if stats_out is not None:
-            at = w.tell_voffset()
-            w.write(bam.encode_record(row, ref_index))
-            stats_out.add_sam_row(row, ref_index, at, w.tell_voffset())
-        else:
-            w.write(bam.encode_record(row, ref_index))
+        w.write(bam.encode_record(tuple(row), ref_index))
     w.close()
     return offsets
 
