@@ -11,6 +11,11 @@ call and every task of a reused worker.
 From 3.13 on, ``invalidate_caches`` only drops the archive's cached table and
 the next lookup re-reads it. :func:`install` backports that to the running
 interpreter when its ``zipimport`` still re-reads eagerly.
+
+The workers' boot hook (``_boot/sitecustomize.py``) drops ``pyspark.zip``
+and the py4j zip where installed copies of the same versions exist. This
+still serves what stays: a zip of another version, and the spark-core jar
+Spark also puts on the workers' path.
 """
 
 from __future__ import annotations

@@ -41,7 +41,7 @@ read like BAI's 37450; reg2bins never queries it.
 from __future__ import annotations
 
 import struct
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional
 
 from hadoop_bam_spark.formats import bgzf
@@ -170,8 +170,7 @@ def csi_from_tabix(tbi) -> CSIIndex:
     )
     blob = b"".join(n.encode() + b"\x00" for n in tbi.names)
     aux += struct.pack("<i", len(blob)) + blob
-    return CSIIndex(aux=aux, refs=[
-        RefIndex(bins=dict(r.bins), loffset=loffsets(r, 5)) for r in tbi.refs])
+    return CSIIndex(aux=aux, refs=_csi_refs(tbi.refs))
 
 
 class BAMIndexView:
@@ -200,9 +199,15 @@ def csi_from_bai(bai_idx) -> CSIIndex:
     """BAI -> CSI(14,5): the binning schemes are identical at that shape,
     so bins/chunks carry over verbatim, and each bin's ``loffset`` comes
     from the BAI linear index."""
-    return CSIIndex(n_no_coor=bai_idx.n_no_coor, refs=[
-        RefIndex(bins=dict(r.bins), loffset=loffsets(r, 5))
-        for r in bai_idx.refs])
+    return CSIIndex(n_no_coor=bai_idx.n_no_coor, refs=_csi_refs(bai_idx.refs))
+
+
+def _csi_refs(refs: list[RefIndex]) -> list[RefIndex]:
+    """BAI or tabix references at CSI(14,5): the same bins and pseudo-bin
+    (voffset span, mapped and unmapped counts), each bin's ``loffset`` from
+    the linear index, which CSI does not carry."""
+    return [replace(r, bins=dict(r.bins), linear=[], loffset=loffsets(r, 5))
+            for r in refs]
 
 
 def read_csi(path: str, open_fn=open) -> CSIIndex:

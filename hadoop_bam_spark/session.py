@@ -20,6 +20,8 @@ from pyspark.sql import SparkSession
 
 #: the directory holding the ``hadoop_bam_spark`` package
 IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: the directory holding the Python workers' ``sitecustomize`` boot hook
+BOOT_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_boot")
 
 UDS_ENABLED = "spark.python.unix.domain.socket.enabled"
 UDS_DIR = "spark.python.unix.domain.socket.dir"
@@ -46,12 +48,19 @@ def default_driver_memory(phys_bytes: int | None = None) -> str:
 
 
 def export_import_root() -> None:
-    """Append :data:`IMPORT_ROOT` to ``PYTHONPATH``. The JVM inherits this
-    environment and passes it to every Python worker, so planner and task
-    workers import the engine from wherever the driver found it."""
+    """Put :data:`IMPORT_ROOT` on ``PYTHONPATH``, with :data:`BOOT_DIR` right
+    after it. The JVM inherits this environment and passes it to every
+    Python worker, so planner and task workers import the engine from
+    wherever the driver found it, and boot through ``_boot/sitecustomize.py``
+    (pyspark and py4j from installed bytecode rather than Spark's zips)."""
     paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
-    if IMPORT_ROOT not in map(os.path.abspath, paths):
-        os.environ["PYTHONPATH"] = os.pathsep.join([*paths, IMPORT_ROOT])
+    at = [os.path.abspath(p) for p in paths]
+    if IMPORT_ROOT not in at:
+        paths.append(IMPORT_ROOT)
+        at.append(IMPORT_ROOT)
+    if BOOT_DIR not in at:
+        paths.insert(at.index(IMPORT_ROOT) + 1, BOOT_DIR)
+    os.environ["PYTHONPATH"] = os.pathsep.join(paths)
 
 
 def socket_parent(

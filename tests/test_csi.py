@@ -277,6 +277,39 @@ class TestBAMWithCSI:
         assert c.n_no_coor == b.n_no_coor
 
 
+def _pseudo_bins(refs):
+    return [(r.off_beg, r.off_end, r.n_mapped, r.n_unmapped) for r in refs]
+
+
+def test_converted_csi_keeps_reference_counts(tmp_path):
+    """``csi_from_bai`` and ``csi_from_tabix`` carry each reference's
+    pseudo-bin (voffset span, mapped and unmapped counts), which htslib
+    readers such as ``samtools idxstats`` and ``bcftools index -s`` read."""
+    from hadoop_bam_spark.formats import tabix
+    from tests.test_bai import _header, _make_bam, _row, _sorted_rows
+    from tests.test_tabix import _vcf_lines, _write_vcf_bgz
+
+    bam = str(tmp_path / "c.bam")
+    # every 50th placed read unmapped (flag 4, keeps its position)
+    rows = [_row(r[0], r[2], r[3], flag=4) if i % 50 == 0 and r[2] else r
+            for i, r in enumerate(_sorted_rows(n=3000))]
+    _make_bam(bam, rows, _header())
+    with open(bam + ".bai", "wb") as f:
+        bai.build_bai(bam).write(f)
+    b = bai.read_bai(bam + ".bai")
+    c = csi.CSIIndex.from_bytes(csi.csi_from_bai(b).to_bytes())
+    assert _pseudo_bins(c.refs) == _pseudo_bins(b.refs)
+    assert all(r.n_mapped > 0 and r.n_unmapped > 0 for r in c.refs)
+
+    vcf = str(tmp_path / "v.vcf.bgz")
+    _write_vcf_bgz(vcf, _vcf_lines(n=2000))
+    tabix.write_tabix(tabix.build_tabix(vcf), vcf + ".tbi")
+    t = tabix.read_tabix(vcf + ".tbi")
+    c = csi.CSIIndex.from_bytes(csi.csi_from_tabix(t).to_bytes())
+    assert _pseudo_bins(c.refs) == _pseudo_bins(t.refs)
+    assert all(r.off_beg >= 0 and r.n_mapped > 0 for r in c.refs)
+
+
 class TestVCFWithCSI:
     """A .vcf.bgz indexed only with tabix-flavored .csi (bcftools index -c)
     must get the same split pruning the .tbi path provides."""

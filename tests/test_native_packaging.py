@@ -121,3 +121,23 @@ def test_c_source_single_file_of_truth():
     # and the wheel ships it (package-data) so installed trees can JIT
     with open(os.path.join(REPO, "pyproject.toml")) as fh:
         assert "rans_kernel.c" in fh.read()
+
+
+def test_build_ships_package_data(tmp_path):
+    """The files a wheel packs beyond the packages' modules: the rANS
+    kernel source, and the Python workers' boot hook, whose ``_boot``
+    directory has no ``__init__.py`` for packages.find to pick up. A wheel
+    packs what ``build_py`` lays out, so this builds that tree, from a
+    copy of the sources so the build leaves nothing in the checkout."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for name in ("pyproject.toml", "setup.py", "README.md"):
+        shutil.copy(os.path.join(REPO, name), src)
+    shutil.copytree(os.path.join(REPO, "hadoop_bam_spark"), src / "hadoop_bam_spark",
+                    ignore=shutil.ignore_patterns("__pycache__", "*.so"))
+    lib = tmp_path / "lib"
+    r = subprocess.run([sys.executable, "setup.py", "build_py", "--build-lib", str(lib)],
+                       cwd=src, capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr
+    assert (lib / "hadoop_bam_spark" / "_boot" / "sitecustomize.py").is_file()
+    assert (lib / "hadoop_bam_spark" / "formats" / "rans_kernel.c").is_file()

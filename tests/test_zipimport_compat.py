@@ -14,6 +14,7 @@ would pass a driver-side check and save nothing.
 
 import gc
 import importlib
+import json
 import os
 import subprocess
 import sys
@@ -198,14 +199,18 @@ def _worker_probe():
     """A function, pickled by value, that reports from the process it runs
     in: the finder classes of the zip entries in ``sys.path_importer_cache``,
     the ``_read_directory`` calls one ``invalidate_caches()`` makes, the
-    frozen object count and the tracked objects a collection would walk
-    (``gc.get_objects()`` does not list frozen ones)."""
+    frozen object count, the tracked objects a collection would walk
+    (``gc.get_objects()`` does not list frozen ones), and the files pyspark
+    and py4j were imported from."""
 
     def probe():
         import gc
         import importlib
         import sys
         import zipimport
+
+        import py4j
+        import pyspark
 
         finders = sorted({
             type(f).__name__
@@ -219,7 +224,8 @@ def _worker_probe():
             importlib.invalidate_caches()
         finally:
             zipimport._read_directory = read_directory
-        return ",".join(finders), len(calls), gc.get_freeze_count(), len(gc.get_objects())
+        return (",".join(finders), len(calls), gc.get_freeze_count(),
+                len(gc.get_objects()), f"{pyspark.__file__},{py4j.__file__}")
 
     return probe
 
@@ -255,8 +261,9 @@ def _probe_source():
         def schema(self):
             return (
                 "n long, plan_finders string, plan_reads int, plan_frozen long,"
-                " plan_young long, task_finders string, task_reads int,"
-                " task_frozen long, task_young long"
+                " plan_young long, plan_files string, task_finders string,"
+                " task_reads int, task_frozen long, task_young long,"
+                " task_files string"
             )
 
         def reader(self, schema):
@@ -268,7 +275,7 @@ def _probe_source():
 def _worker_reports(spark, path, n):
     """One query through ``_probe_source`` and one ``mapInArrow`` job: the
     probe result of every planner, scan-task and plain-task worker, as
-    ``(finders, reads, frozen, young)``."""
+    ``(finders, reads, frozen, young, files)``."""
     import pyarrow as pa
 
     from hadoop_bam_spark.formats import bgzf
@@ -285,29 +292,85 @@ def _worker_reports(spark, path, n):
         size = sum(
             len(bgzf.compress_block(b.column(0).to_numpy().tobytes())) for b in batches
         )
-        finders, calls, frozen, young = probe()
+        finders, calls, frozen, young, files = probe()
         yield pa.RecordBatch.from_pydict({
             "finders": [finders], "reads": [calls], "frozen": [frozen],
-            "young": [young], "size": [size],
+            "young": [young], "files": [files], "size": [size],
         })
 
     tasks = (
         spark.range(4, numPartitions=4)
-        .mapInArrow(report, "finders string, reads long, frozen long, young long, size long")
+        .mapInArrow(report, "finders string, reads long, frozen long, young long,"
+                            " files string, size long")
         .collect()
     )
-    reports = [(r.plan_finders, r.plan_reads, r.plan_frozen, r.plan_young) for r in rows]
-    reports += [(r.task_finders, r.task_reads, r.task_frozen, r.task_young) for r in rows]
-    reports += [(r.finders, r.reads, r.frozen, r.young) for r in tasks]
+    reports = [(r.plan_finders, r.plan_reads, r.plan_frozen, r.plan_young, r.plan_files)
+               for r in rows]
+    reports += [(r.task_finders, r.task_reads, r.task_frozen, r.task_young, r.task_files)
+                for r in rows]
+    reports += [(r.finders, r.reads, r.frozen, r.young, r.files) for r in tasks]
     return reports
 
 
 @eager_interpreter
 def test_engine_workers_invalidate_lazily(spark, tmp_path):
+    """No worker holds an eager ``zipimporter``. The boot hook drops Spark's
+    pyspark and py4j zips where installed copies have the same versions;
+    the importer of what stays (the spark-core jar Spark also puts on the
+    path, or a zip of another version) is lazy."""
     path = str(tmp_path / "probe.bam")
     reports = _worker_reports(spark, path, _small_bam(path))
-    assert all(finders == "LazyZipImporter" for finders, *_ in reports), reports
+    assert all("zipimporter" not in finders.split(",") for finders, *_ in reports), reports
     assert all(calls == 0 for _, calls, *_ in reports), reports
+
+
+def test_workers_import_pyspark_and_py4j_from_installed_copies(spark, tmp_path):
+    """Spark puts ``pyspark.zip`` and ``py4j-*-src.zip`` first on every
+    worker's path; with installed copies of the same versions the boot
+    hook drops them, so planner, scan-task and plain-task workers import
+    them from files, whose bytecode Python caches."""
+    path = str(tmp_path / "probe.bam")
+    reports = _worker_reports(spark, path, _small_bam(path))
+    assert all(os.path.isfile(f) for *_, files in reports for f in files.split(",")), reports
+
+
+def test_workers_keep_a_zip_of_another_version(tmp_path):
+    """A driver whose workers would find a pyspark of another version ahead
+    of ``site-packages``: the workers keep ``pyspark.zip`` and import
+    pyspark from it, and still drop the py4j zip, whose installed copy
+    matches."""
+    fake = tmp_path / "other" / "pyspark"
+    fake.mkdir(parents=True)
+    (fake / "__init__.py").write_text("")
+    (fake / "version.py").write_text("__version__: str = '0.0.0'\n")
+    path = str(tmp_path / "other.bam")
+    script = tmp_path / "other.py"
+    script.write_text(textwrap.dedent(f"""
+        import json, os, sys
+        sys.path.insert(0, {IMPORT_ROOT!r})
+        from hadoop_bam_spark.session import get_spark
+        from tests.test_zipimport_compat import _small_bam, _worker_reports
+        # read by the JVM and its workers; this interpreter's path is set
+        os.environ["PYTHONPATH"] = {str(fake.parent)!r}
+        spark = get_spark("boot_probe", master="local[2]", shuffle_partitions=2,
+                          extra_conf={{"spark.ui.showConsoleProgress": "false"}})
+        reports = _worker_reports(spark, {path!r}, _small_bam({path!r}))
+        spark.stop()
+        print(json.dumps(reports))
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    reports = json.loads(out.stdout.splitlines()[-1])
+    assert len(reports) >= 6, reports
+    for *_, files in reports:
+        pyspark_file, py4j_file = files.split(",")
+        assert pyspark_file.endswith(os.path.join("pyspark.zip", "pyspark", "__init__.py"))
+        assert os.path.isfile(py4j_file)
 
 
 def test_engine_workers_freeze_their_imports(spark, tmp_path):
@@ -318,8 +381,8 @@ def test_engine_workers_freeze_their_imports(spark, tmp_path):
     n = _small_bam(path)
     _worker_reports(spark, path, n)
     reports = _worker_reports(spark, path, n)
-    assert all(frozen > 0 for *_, frozen, _ in reports), reports
-    assert all(young < 5000 for *_, young in reports), reports
+    assert all(frozen > 0 for _, _, frozen, _, _ in reports), reports
+    assert all(young < 5000 for _, _, _, young, _ in reports), reports
 
 
 def test_workers_import_engine_from_any_cwd(tmp_path):
